@@ -131,7 +131,10 @@ def connected_components(
     # identical edge set, so identical union-find labels. Raw edge rows
     # bound the deduped state (|sym| <= 2x raw), so the regime condition
     # `raw_edges*2 + |vertices| <= driver_threshold` implies the old
-    # |sym| + |vertices| <= driver_threshold one.
+    # |sym| + |vertices| <= driver_threshold one. String ids only (as in
+    # pagerank and graph_analytics._probe_small_und): the union-find sorts
+    # ids and builds a string-schema frame, so NULL or non-string ids take
+    # the distributed loop.
     if driver_threshold > 0:
         edge_cap = driver_threshold // 2
         edge_rows = (
@@ -139,14 +142,18 @@ def connected_components(
             .limit(edge_cap + 1)
             .collect()
         )
-        if len(edge_rows) <= edge_cap:
+        if len(edge_rows) <= edge_cap and all(
+            isinstance(r["u"], str) and isinstance(r["v"], str) for r in edge_rows
+        ):
             vert_budget = driver_threshold - 2 * len(edge_rows)
             vert_rows = (
                 vertices.select(F.col(id_col).alias("u"))
                 .limit(max(vert_budget, 0) + 1)
                 .collect()
             )
-            if len(vert_rows) <= vert_budget:
+            if len(vert_rows) <= vert_budget and all(
+                isinstance(r["u"], str) for r in vert_rows
+            ):
                 sym_local = set()
                 for r in edge_rows:
                     sym_local.add((r["u"], r["v"]))

@@ -26,11 +26,23 @@ recursion shape, and the stats formulas replicate the reference exactly:
 Adaptive physical strategy (same stance as Catalyst's broadcast-vs-shuffle
 choice, and as cc.py): the community graph is the DEDUPLICATED entity
 graph — orders of magnitude smaller than the corpus — so when its state
-(vertices + undirected edges) fits under ``driver_threshold`` the ENTIRE
-hierarchy runs driver-locally in one pass (~30 tiny shuffle jobs collapse
-to ~4), byte-identical to the distributed loop (asserted in
+(vertices + undirected edges) fits under ``driver_threshold``
+(``DRIVER_THRESHOLD``) the whole hierarchy runs driver-locally in one pass,
+byte-identical to the distributed loop (asserted in
 tests/test_communities.py). Larger graphs run the distributed DataFrame
 loop, which is the path taken at 10^12-turn scale.
+
+Graph tail (:func:`graph_tail`): under the same valve the pipeline builds
+all four graph tables — communities, stats, summaries and summary
+embeddings — from ONE collect of the entity graph. The hierarchy, member
+degrees, E5 stats, titles/findings/sub-community reports and hash
+embeddings are computed in one Python pass (:func:`graph_tail_py`) and
+handed back as local frames, replacing the ~40 tiny Spark jobs of the
+operator-by-operator path with one collect plus the stage writes. Its
+output equals the Spark operators column for column, including Spark's
+HALF_UP ``round`` and ``Double.toString`` casts (asserted in
+tests/test_communities.py; ``description_length`` may differ in the last
+ulp because Spark's ``log2`` runs on ``StrictMath``).
 
 Divergence (documented): self-loop relationships are excluded from the
 community graph (NetworkX would count them in density's numerator, skewing
@@ -38,6 +50,9 @@ the formula's simple-graph assumption).
 """
 
 from __future__ import annotations
+
+import math
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -47,6 +62,10 @@ from graphrag_litex_spark.operators.iterutils import (
     loop_shuffle_partitions,
     release,
 )
+
+# Cap on graph state (vertices + edges) for the driver-local regime: shared by
+# label_propagation, detect_communities and the pipeline's graph tail.
+DRIVER_THRESHOLD = 100_000
 
 
 def _und_edges(edges: DataFrame) -> DataFrame:
@@ -200,7 +219,7 @@ def label_propagation(
     vertices: DataFrame,
     und_edges: DataFrame,
     iters: int = 8,
-    driver_threshold: int = 100_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
     seed_labels: DataFrame | None = None,
 ) -> DataFrame:
     """Synchronous LPA -> (entity_id, label); deterministic tie-breaking.
@@ -319,7 +338,7 @@ def detect_communities(
     levels: int = 3,
     min_size: int = 3,
     lpa_iters: int = 8,
-    driver_threshold: int = 100_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
     seed_labels: DataFrame | None = None,
 ) -> DataFrame:
     """-> long-form membership (level int, community_id string,
@@ -751,6 +770,243 @@ def summarize_communities(
             "sub_communities", "full_text", "size", "density", "flow",
         )
     )
+
+
+# ---- driver-local graph tail ----------------------------------------------
+
+# Schemas of the four graph tables, exactly as the Spark operators emit them.
+_SUMMARY_DDL = (
+    "level int, community_id string, title string, summary string, rating double, "
+    "findings array<struct<summary:string,explanation:string>>, "
+    "sub_communities array<string>, full_text string, size bigint, density double, "
+    "flow double"
+)
+TAIL_TABLES = {
+    "communities": "level int, community_id string, parent string, entity_id string",
+    "community_stats": "level int, community_id string, size bigint, density double, "
+    "flow double, description_length double, internal_edges double, external_edges double",
+    "summaries": _SUMMARY_DDL,
+    "summary_embeddings": _SUMMARY_DDL + ", embedding array<double>",
+}
+_EDGE_COLS = ["src_id", "dst_id", "src", "dst", "pred", "strength", "n_obs"]
+
+
+def _spark_round(x: float, ndigits: int) -> float:
+    """Spark's ``round`` on a double: HALF_UP on its shortest decimal form
+    (0.8125 -> 0.813, where Python's ``round`` gives 0.812)."""
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-ndigits), ROUND_HALF_UP))
+
+
+def _asc(v):
+    """Sort key for Spark's ascending string order (NULLs first)."""
+    return (v is not None, v if v is not None else "")
+
+
+def graph_tail_py(
+    node_rows: list,
+    edge_rows: list,
+    levels: int,
+    min_size: int,
+    iters: int,
+    *,
+    dim: int,
+    seed: dict | None = None,
+    membership: list | None = None,
+) -> dict[str, list[tuple]]:
+    """The pipeline's four graph tables from driver-held rows, in one pass.
+
+    ``node_rows``: (entity_id, name); ``edge_rows``: (src_id, dst_id, src,
+    dst, pred, strength, n_obs). ``membership`` — (level, community_id,
+    parent, entity_id) rows of an already-built communities stage — skips
+    the hierarchy; otherwise it is :func:`_hierarchy_py` over the entity
+    graph (warm-started from ``seed``). Returns {table: rows} in
+    ``TAIL_TABLES`` column order, equal to :func:`detect_communities`,
+    :func:`member_edge_degrees` + :func:`community_stats`,
+    :func:`summarize_communities` and ``querying.answer.embed_summaries``.
+    """
+    from graphrag_litex_spark.functions.normalize import hash_embed
+
+    names = dict(node_rows)
+    # Community edges: distinct undirected pairs, self-loops dropped
+    # (``_und_edges``).
+    und = {(min(s, d), max(s, d)) for s, d, *_ in edge_rows if s != d}
+    if membership is None:
+        # LPA only sees edges between vertices (the distributed loop's joins
+        # drop the rest).
+        pairs = [(a, b) for a, b in und if a in names and b in names]
+        membership = _hierarchy_py(
+            [e for e, _ in node_rows], pairs, levels, min_size, iters, seed=seed
+        )
+
+    comm: dict = {}  # level -> {entity_id: community_id}
+    members: dict = {}  # (level, community_id) -> [entity_id]
+    parent_of: dict = {}  # (level >= 1, community_id) -> parent
+    for level, cid, parent, u in membership:
+        comm.setdefault(level, {})[u] = cid
+        members.setdefault((level, cid), []).append(u)
+        if parent is not None:
+            parent_of[(level, cid)] = parent
+
+    # member_edge_degrees: per member, edge copies inside / outside its
+    # community at that level, against the full graph.
+    degs: dict = {}  # (level, community_id, entity_id) -> [n_int, n_ext]
+    for level, cof in comm.items():
+        for a, b in und:
+            for u, v in ((a, b), (b, a)):
+                c = cof.get(u)
+                if c is not None:
+                    d = degs.setdefault((level, c, u), [0, 0])
+                    d[0 if cof.get(v) == c else 1] += 1
+
+    # Titles: the member with the most intra edges, ties -> smallest name.
+    totals: dict = {}  # (level, community_id) -> [sum n_int, sum n_ext]
+    best: dict = {}  # (level, community_id) -> (sort key, name)
+    for (level, c, u), (n_int, n_ext) in degs.items():
+        t = totals.setdefault((level, c), [0, 0])
+        t[0] += n_int
+        t[1] += n_ext
+        if n_int > 0:
+            key = (-n_int, _asc(names.get(u)))
+            if (level, c) not in best or key < best[(level, c)][0]:
+                best[(level, c)] = (key, names.get(u))
+    titles = {k: name for k, (_, name) in best.items()}
+
+    # Findings: the 5 strongest edges (self-loops included) inside a
+    # community (summarize_communities' default top_findings).
+    intra: dict = {}
+    for e in edge_rows:
+        for level, cof in comm.items():
+            c = cof.get(e[0])
+            if c is not None and cof.get(e[1]) == c:
+                intra.setdefault((level, c), []).append(e)
+
+    def finding(e):
+        _, _, src, dst, pred, strength, n_obs = e
+        # repr == Java's Double.toString (Spark's cast) on 0 and [1e-3, 1e7),
+        # which holds for strengths (extraction emits them in [0, 1]).
+        return {
+            "summary": " ".join(x for x in (src, pred, dst) if x is not None),
+            "explanation": f"observed {n_obs} times with strength "
+            f"{_spark_round(strength, 3)!r}",
+        }
+
+    def finding_key(e):
+        return (-e[5], _asc(e[2]), _asc(e[3]), _asc(e[4]))
+
+    subs: dict = {}  # (level, community_id) -> child titles
+    for (level, c), parent in parent_of.items():
+        if titles.get((level, c)) is not None:
+            subs.setdefault((level - 1, parent), []).append(titles[(level, c)])
+
+    stats, summaries, embeddings = [], [], []
+    for (level, c), ms in members.items():
+        size = len(ms)
+        n_int, n_ext = totals.get((level, c), (0, 0))
+        internal, external = n_int / 2, float(n_ext)
+        total = internal + external
+        pi = internal / total if total > 0 else 0.0
+        pe = external / total if total > 0 else 0.0
+        ent = -(
+            (pi * (math.log(pi) / math.log(2)) if pi > 0 else 0.0)
+            + (pe * (math.log(pe) / math.log(2)) if pe > 0 else 0.0)
+        )
+        density = 2.0 * internal / (size * (size - 1)) if size > 1 else 0.0
+        flow = pi if size > 1 else 0.0
+        stats.append(
+            (level, c, size, density, flow, ent if size > 1 else 0.0, internal, external)
+        )
+
+        title = titles.get((level, c))
+        nm = sorted(n for n in (names.get(u) for u in ms) if n is not None)
+        summary = f"Community of {len(nm)} entities including {', '.join(nm[:3])}."
+        findings = [
+            finding(e)
+            for e in sorted(intra.get((level, c), ()), key=finding_key)[:5]
+        ]
+        sub = sorted(subs.get((level, c), ()))
+        full_text = " ".join(
+            p
+            for p in (
+                title,
+                summary,
+                " ".join(f["summary"] for f in findings),
+                f"Sub-communities: {'; '.join(sub)}." if sub else None,
+            )
+            if p is not None
+        )
+        rating = _spark_round(min(10.0, size / 3.0 + 5.0 * density), 2)
+        row = (level, c, title, summary, rating, findings, sub, full_text, size, density, flow)
+        summaries.append(row)
+        embeddings.append(row + (hash_embed(full_text, dim),))
+
+    return {
+        "communities": membership,
+        "community_stats": stats,
+        "summaries": summaries,
+        "summary_embeddings": embeddings,
+    }
+
+
+def graph_tail(
+    nodes: DataFrame,
+    edges: DataFrame,
+    levels: int = 3,
+    min_size: int = 3,
+    lpa_iters: int = 8,
+    *,
+    dim: int,
+    seed_labels: DataFrame | None = None,
+    communities: DataFrame | None = None,
+) -> dict[str, DataFrame]:
+    """Driver-local regime for a small entity graph: {table: local frame}
+    for communities, community_stats, summaries and summary_embeddings.
+
+    Nodes (entity_id, name) and edges arrive in ONE collect (a tagged
+    union), :func:`graph_tail_py` computes every table, and each comes back
+    as an Arrow-built local frame. ``seed_labels`` (entity_id, label)
+    warm-starts level-0 LPA; ``communities`` reuses an already-built
+    membership instead of detecting one. Each costs one more collect. The
+    caller owns the valve: use this only when the graph fits under
+    ``DRIVER_THRESHOLD``.
+    """
+    spark = nodes.sparkSession
+    rows = (
+        nodes.select(
+            F.lit(True).alias("_node"),
+            F.col("entity_id").alias("src_id"),
+            F.col("name").alias("src"),
+        )
+        .unionByName(
+            edges.select(F.lit(False).alias("_node"), *_EDGE_COLS),
+            allowMissingColumns=True,
+        )
+        .select("_node", *_EDGE_COLS)
+        .collect()
+    )
+    node_rows = [(r["src_id"], r["src"]) for r in rows if r["_node"]]
+    edge_rows = [tuple(r)[1:] for r in rows if not r["_node"]]
+    seed = None
+    if seed_labels is not None:
+        seed = dict(map(tuple, seed_labels.select("entity_id", "label").collect()))
+    membership = None
+    if communities is not None:
+        membership = list(
+            map(tuple, communities.select("level", "community_id", "parent", "entity_id").collect())
+        )
+    tables = graph_tail_py(
+        node_rows,
+        edge_rows,
+        levels,
+        min_size,
+        lpa_iters,
+        dim=dim,
+        seed=seed,
+        membership=membership,
+    )
+    return {
+        name: _local_df(spark, tables[name], [f.split()[0] for f in ddl.split(", ")], ddl)
+        for name, ddl in TAIL_TABLES.items()
+    }
 
 
 def modularity(membership: DataFrame, edges: DataFrame, level: int = 0) -> float:

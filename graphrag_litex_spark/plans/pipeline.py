@@ -2,7 +2,7 @@
 
 transcripts -> chunks -> extractions -> {mentions, raw_edges, raw_claims}
            -> canon_map (linking + CC) -> nodes / edges / triples / claims
-           -> communities + stats -> summaries
+           -> communities + stats -> summaries -> summary_embeddings
 
 Every stage is materialized to parquet under ``out_dir`` and recorded in a
 ``_manifest.json`` with a fingerprint of (pipeline version, config, input
@@ -13,9 +13,13 @@ round-trip, /root/reference/main.py:105-135). Stage outputs carry
 provenance (source_id, chunk_id) per row = per-partition lineage.
 
 Scale design notes (local[32] is a proxy for a 1000-executor cluster):
-  * the only Python on the hot path is the Arrow-batched extraction UDF and
-    nothing downstream of it — normalization, linking, CC, merges,
-    communities are all Catalyst expressions/joins;
+  * the only Python on the corpus-proportional path is the Arrow-batched
+    extraction UDF — normalization, linking, CC and the merges are Catalyst
+    expressions/joins. Python runs again only on the graph-sized tail: the
+    summary-embedding UDF, or, when the entity graph fits under the
+    community valve, the driver-local tail that builds communities, stats,
+    summaries and embeddings from one collect (operators/communities.py
+    ``graph_tail``);
   * canon_map (distinct normalized names, not mentions) is broadcast into
     the resolution joins (D1) only while its measured parquet size is under
     ``broadcast_threshold_bytes``; above that the joins degrade to
@@ -1117,87 +1121,114 @@ class KGPipeline:
         self, results: dict, manifest: dict, mat, until: str | None, graph_rows: int
     ) -> dict[str, DataFrame]:
         cfg = self.config
+        from graphrag_litex_spark.operators.iterutils import hard_checkpoint, release
+        from graphrag_litex_spark.querying.answer import EMBED_DIM, embed_summaries
 
-        def build_communities() -> DataFrame:
-            seed = None
-            if cfg.community_warm_start:
-                prev = self._stage_path("communities")
-                if os.path.exists(os.path.join(prev, "_SUCCESS")):
-                    # Stale (pre-append) stage -> level-0 labels as the warm
-                    # seed. Eager checkpoint BEFORE the overwrite of the
-                    # same path; community_id = "0_<label>".
-                    from graphrag_litex_spark.operators.iterutils import (
-                        hard_checkpoint as _hc,
-                    )
+        def warm_seed() -> DataFrame | None:
+            # community_warm_start: the stale (pre-append) stage's level-0
+            # labels seed level-0 LPA; community_id = "0_<label>". Both
+            # regimes read it eagerly, before the stage path is overwritten.
+            prev = self._stage_path("communities")
+            if not (
+                cfg.community_warm_start
+                and os.path.exists(os.path.join(prev, "_SUCCESS"))
+            ):
+                return None
+            return (
+                self.spark.read.parquet(prev)
+                .where(F.col("level") == 0)
+                .select("entity_id", F.expr("substring(community_id, 3)").alias("label"))
+            )
 
-                    seed = _hc(
-                        self.spark.read.parquet(prev)
-                        .where(F.col("level") == 0)
-                        .select(
-                            "entity_id",
-                            F.expr("substring(community_id, 3)").alias("label"),
+        # Regime valve, decided from the manifest the build already wrote (no
+        # Spark job): a graph whose nodes + edges fit under the community
+        # valve builds all four tables driver-locally from one collect
+        # (comm_ops.graph_tail); larger graphs run the Spark operators.
+        state_rows = sum(manifest.get(s, {}).get("rows", 0) for s in ("nodes", "edges"))
+        _deg: dict[str, DataFrame] = {}
+        if state_rows <= comm_ops.DRIVER_THRESHOLD:
+            tail: dict[str, DataFrame] = {}
+
+            def local_table(name: str) -> DataFrame:
+                # The first table asked for is "communities" unless that
+                # stage resumed from disk; the others then derive from the
+                # stored membership.
+                if not tail:
+                    fresh = name == "communities"
+                    tail.update(
+                        comm_ops.graph_tail(
+                            results["nodes"],
+                            results["edges"],
+                            levels=cfg.levels,
+                            min_size=cfg.min_community_size,
+                            lpa_iters=cfg.lpa_iters,
+                            dim=EMBED_DIM,
+                            seed_labels=warm_seed() if fresh else None,
+                            communities=None if fresh else results["communities"],
                         )
                     )
-            return comm_ops.detect_communities(
-                results["nodes"],
-                results["edges"],
-                levels=cfg.levels,
-                min_size=cfg.min_community_size,
-                lpa_iters=cfg.lpa_iters,
-                seed_labels=seed,
-            )
+                return tail[name]
 
-        results["communities"] = mat("communities", build_communities, graph_rows)
+            build = {
+                name: (lambda name=name: local_table(name))
+                for name in comm_ops.TAIL_TABLES
+            }
+        else:
 
-        from graphrag_litex_spark.operators.iterutils import hard_checkpoint, release
-
-        _deg: dict[str, DataFrame] = {}
-
-        def member_deg() -> DataFrame:
-            if "d" not in _deg:
-                _deg["d"] = hard_checkpoint(
-                    comm_ops.member_edge_degrees(results["communities"], results["edges"])
+            def build_communities() -> DataFrame:
+                seed = warm_seed()
+                return comm_ops.detect_communities(
+                    results["nodes"],
+                    results["edges"],
+                    levels=cfg.levels,
+                    min_size=cfg.min_community_size,
+                    lpa_iters=cfg.lpa_iters,
+                    seed_labels=None if seed is None else hard_checkpoint(seed),
                 )
-            return _deg["d"]
 
-        try:
-            results["community_stats"] = mat(
-                "community_stats",
-                lambda: comm_ops.community_stats(
+            # The member-degree edge scan is computed ONCE and shared by
+            # stats and summaries.
+            def member_deg() -> DataFrame:
+                if "d" not in _deg:
+                    _deg["d"] = hard_checkpoint(
+                        comm_ops.member_edge_degrees(results["communities"], results["edges"])
+                    )
+                return _deg["d"]
+
+            build = {
+                "communities": build_communities,
+                "community_stats": lambda: comm_ops.community_stats(
                     results["communities"], results["edges"], degrees=member_deg()
                 ),
-                graph_rows,
-            )
-            if until in ("communities", "community_stats"):
-                return results
-
-            # S11 summaries: deterministic pluggable summarizer (reference
-            # indexing/summarizer.py; LLM calls replaced by column
-            # expressions).
-            results["summaries"] = mat(
-                "summaries",
-                lambda: comm_ops.summarize_communities(
+                # S11 summaries: deterministic pluggable summarizer (reference
+                # indexing/summarizer.py; LLM calls replaced by column
+                # expressions).
+                "summaries": lambda: comm_ops.summarize_communities(
                     results["communities"],
                     results["community_stats"],
                     results["nodes"],
                     results["edges"],
                     degrees=member_deg(),
                 ),
-                graph_rows,
+                "summary_embeddings": lambda: embed_summaries(results["summaries"]),
+            }
+
+        try:
+            results["communities"] = mat("communities", build["communities"], graph_rows)
+            results["community_stats"] = mat(
+                "community_stats", build["community_stats"], graph_rows
             )
+            if until in ("communities", "community_stats"):
+                return results
+            results["summaries"] = mat("summaries", build["summaries"], graph_rows)
             if until == "summaries":
                 return results
-
             # S12 summary_embeddings (A5/§4, reference embedding cache
             # utils/embedding_utils.py:52-63): the query path passes this
             # frame to answer_question/answer_questions so the embedding
-            # UDF runs once per BUILD, not once per question served.
-            from graphrag_litex_spark.querying.answer import embed_summaries
-
+            # runs once per BUILD, not once per question served.
             results["summary_embeddings"] = mat(
-                "summary_embeddings",
-                lambda: embed_summaries(results["summaries"]),
-                graph_rows,
+                "summary_embeddings", build["summary_embeddings"], graph_rows
             )
         finally:
             if "d" in _deg:

@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 from graphrag_litex_spark import datagen
@@ -6,6 +8,10 @@ from graphrag_litex_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
+    # session.py's default heap cap (48g) is above the RAM of a 16 GB test
+    # host; G1 then grows the heap past physical memory (12+ GB RSS within
+    # the first ~60 tests) and the kernel OOM-kills the JVM mid-suite.
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
     s = get_spark(
         app_name="graphrag_litex_spark_tests",
         cores=8,

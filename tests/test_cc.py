@@ -95,6 +95,23 @@ def test_driver_local_matches_distributed_path(spark):
     assert local == dist
 
 
+def test_non_string_ids_fall_through_to_distributed_path(spark):
+    """The driver-local union-find sorts ids and emits a string-schema
+    frame, so int ids and NULL ids must skip the probe's valve and run the
+    distributed loop instead of crashing."""
+    vdf = spark.createDataFrame(pd.DataFrame({"norm_name": [1, 2, 3, 4, 9]}))
+    edf = spark.createDataFrame(pd.DataFrame([(1, 2), (3, 2)], columns=["src", "dst"]))
+    labels = {r["norm_name"]: r["label"] for r in connected_components(vdf, edf).collect()}
+    assert labels == {1: 1, 2: 1, 3: 1, 4: 4, 9: 9}
+
+    vdf = spark.createDataFrame([("a",), ("b",), (None,)], "norm_name string")
+    edf = spark.createDataFrame([("b", "a"), ("b", None)], "src string, dst string")
+    got = set(map(tuple, connected_components(vdf, edf).collect()))
+    dist = set(map(tuple, connected_components(vdf, edf, driver_threshold=0).collect()))
+    assert got == dist
+    assert {("a", "a"), ("b", "a")} <= got
+
+
 def test_edge_only_endpoints_identical_across_paths(spark):
     """Ids appearing only in edges propagate labels (a-x, x-b with x not a
     vertex still connects a and b; an edge-only id can be the component

@@ -1,6 +1,8 @@
 """F1/E5/E6 fixtures: two 5-cliques joined by one bridge + isolated dyads
 (FIXTURES.md §5 community set)."""
 
+import math
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -131,10 +133,10 @@ def test_hierarchy_driver_local_matches_distributed(spark, clique_graph):
     assert len(local) > 14  # multiple levels actually emitted
 
 
-def test_hierarchy_identity_random_graph(spark):
-    """Driver-local vs distributed hierarchy on a random sparse graph —
-    exercises big-parent re-clustering, dropped sub-communities, and
-    passthrough at once."""
+@pytest.fixture(scope="module")
+def random_graph(spark):
+    """40 vertices, ~70 random edges: sparse enough to leave big parents,
+    dropped sub-communities and passthrough communities at once."""
     import random
 
     rng = random.Random(7)
@@ -143,9 +145,15 @@ def test_hierarchy_identity_random_graph(spark):
         tuple(sorted((ids[rng.randrange(40)], ids[rng.randrange(40)])))
         for _ in range(70)
     }
-    pairs = [(a, b) for a, b in pairs if a != b]
-    nodes = _nodes_df(spark, ids)
-    edges = _edges_df(spark, pairs)
+    pairs = [(a, b) for a, b in sorted(pairs) if a != b]
+    return _nodes_df(spark, ids), _edges_df(spark, pairs)
+
+
+def test_hierarchy_identity_random_graph(spark, random_graph):
+    """Driver-local vs distributed hierarchy on a random sparse graph —
+    exercises big-parent re-clustering, dropped sub-communities, and
+    passthrough at once."""
+    nodes, edges = random_graph
     kw = dict(levels=3, min_size=3, lpa_iters=8)
     local = set(map(tuple, C.detect_communities(nodes, edges, **kw).collect()))
     dist = set(
@@ -387,3 +395,135 @@ def test_detect_communities_warm_start_on_grown_graph(spark, ring_of_cliques):
     q_warm = C.modularity(warm, edges2, level=0)
     q_cold = C.modularity(cold, edges2, level=0)
     assert q_warm >= 0.8 * q_cold, f"warm Q={q_warm:.4f} vs cold Q={q_cold:.4f}"
+
+
+# ---- driver-local graph tail vs the Spark operators -----------------------
+
+
+def _spark_tail(nodes, edges, **kw):
+    """The operator-by-operator path the pipeline runs above the valve."""
+    from graphrag_litex_spark.querying.answer import embed_summaries
+
+    comms = C.detect_communities(nodes, edges, driver_threshold=0, **kw)
+    stats = C.community_stats(comms, edges)
+    summ = C.summarize_communities(comms, stats, nodes, edges)
+    return {
+        "communities": comms,
+        "community_stats": stats,
+        "summaries": summ,
+        "summary_embeddings": embed_summaries(summ),
+    }
+
+
+def _plain(v):
+    if isinstance(v, (list, tuple)):  # arrays and struct Rows
+        return tuple(_plain(x) for x in v)
+    return v
+
+
+def _keyed(df, key):
+    return {
+        tuple(r[k] for k in key): {c: _plain(r[c]) for c in df.columns}
+        for r in df.collect()
+    }
+
+
+def _assert_tail_matches(nodes, edges, **kw):
+    from graphrag_litex_spark.querying.answer import EMBED_DIM
+
+    want = _spark_tail(nodes, edges, **kw)
+    got = C.graph_tail(nodes, edges, dim=EMBED_DIM, **kw)
+    assert set(got) == set(want)
+    for name, df in want.items():
+        assert got[name].dtypes == df.dtypes, name
+        key = ["level", "entity_id" if name == "communities" else "community_id"]
+        w, g = _keyed(df, key), _keyed(got[name], key)
+        assert g.keys() == w.keys(), name
+        for k, row in w.items():
+            if "description_length" in row:
+                # Spark's log2 runs on StrictMath; libm may differ by an ulp.
+                a, b = row.pop("description_length"), g[k].pop("description_length")
+                assert abs(a - b) <= math.ulp(a), (name, k, a, b)
+            assert g[k] == row, (name, k)
+    return got
+
+
+def test_graph_tail_matches_spark_cliques(spark, clique_graph):
+    nodes, edges = clique_graph
+    got = _assert_tail_matches(nodes, edges, levels=3, min_size=2, lpa_iters=6)
+    assert got["communities"].where("level = 2").count() > 0
+
+
+def test_graph_tail_matches_spark_ring(spark, ring_of_cliques):
+    ids, pairs = ring_of_cliques
+    _assert_tail_matches(
+        _nodes_df(spark, ids), _edges_df(spark, pairs), levels=3, min_size=3, lpa_iters=8
+    )
+
+
+def test_graph_tail_matches_spark_random(spark, random_graph):
+    nodes, edges = random_graph
+    _assert_tail_matches(nodes, edges, levels=3, min_size=3, lpa_iters=8)
+
+
+def test_graph_tail_matches_spark_adversarial(spark):
+    """A 7-clique whose names tie on n_int (the title goes to the smallest
+    name in byte order: "Alpha" < "alpha" < ... < "Émile"), a self-loop (an
+    intra finding, but no community edge), strengths where Spark's HALF_UP
+    round differs from Python's (0.8125 -> 0.813, 0.1235 -> 0.124), a
+    strength tie broken by dst, an edge to a vertex that is not a node, a
+    dyad and an isolated vertex that E6 merges into the clique's community
+    (making it a big parent whose re-clustered child fills
+    sub_communities), and a triangle with a NULL-named member (NULL titles
+    sort first and are skipped in reports)."""
+    k = [f"k{i}" for i in range(7)]
+    kname = ["zed", "Émile", "alpha", "Alpha", "beta", "gamma", "delta"]
+    nodes = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "entity_id": k + ["x0", "x1", "iso", "t0", "t1", "t2"],
+                "name": kname + ["x0", "x1", "iso", "tri", None, "Tri"],
+            }
+        )
+    )
+    name = dict(zip(k, kname)) | {"t0": "tri", "t1": None, "t2": "Tri"}
+    strengths = [0.8125, 0.1235, 2.675, 0.0005, 0.7, 0.7, 0.55]
+    rows = []
+    for i in range(7):
+        for j in range(i + 1, 7):
+            s = strengths[(i + j) % 7]
+            rows.append((k[i], k[j], name[k[i]], name[k[j]], "rel", s, i + j))
+    rows += [
+        ("k1", "k0", name["k1"], name["k0"], "back", 0.8125, 2),  # reverse copy
+        ("k0", "k0", name["k0"], name["k0"], "self", 0.99, 4),  # self-loop
+        ("k2", "ghost", name["k2"], "ghost", "rel", 0.5, 1),  # not a node
+        ("x0", "x1", "x0", "x1", "rel", 0.6, 1),
+        ("t0", "t1", "tri", None, "rel", 0.6, 1),
+        ("t1", "t2", None, "Tri", "rel", 0.6, 1),
+        ("t2", "t0", "Tri", "tri", "rel", 0.6, 1),
+    ]
+    edges = spark.createDataFrame(
+        pd.DataFrame(
+            rows, columns=["src_id", "dst_id", "src", "dst", "pred", "strength", "n_obs"]
+        )
+    )
+    got = _assert_tail_matches(nodes, edges, levels=3, min_size=3, lpa_iters=8)
+    summ = {r["community_id"]: r for r in got["summaries"].collect()}
+    big = summ[next(c for c in summ if c.startswith("0_k"))]
+    assert big["title"] == "Alpha" and big["size"] == 10
+    assert big["sub_communities"] == ["Alpha"]
+    # Ranked after the three 2.675 edges: the self-loop, then 0.8125 edges.
+    assert [f["summary"] for f in big["findings"]][3] == "zed self zed"
+    assert any("strength 0.813" in f["explanation"] for f in big["findings"])
+    assert any(r["title"] is None for r in summ.values())
+
+
+def test_graph_tail_matches_spark_empty(spark):
+    nodes = spark.createDataFrame([], "entity_id string, name string")
+    edges = spark.createDataFrame(
+        [],
+        "src_id string, dst_id string, src string, dst string, pred string, "
+        "strength double, n_obs long",
+    )
+    got = _assert_tail_matches(nodes, edges, levels=3, min_size=3, lpa_iters=8)
+    assert all(df.count() == 0 for df in got.values())

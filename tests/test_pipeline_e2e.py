@@ -435,6 +435,39 @@ def test_community_warm_start_refresh(spark, corpus_sf0001, tmp_path):
     assert q_warm >= 0.8 * q_cold, f"warm Q={q_warm:.4f} vs cold Q={q_cold:.4f}"
 
 
+def test_graph_tail_jobs_and_partial_resume(spark, corpus_sf0001, tmp_path):
+    """Below the community valve the graph tail (communities -> stats ->
+    summaries -> summary_embeddings) submits one collect plus the four
+    stage writes, each a write job and the read-back's schema job — not
+    the ~40 tiny jobs of the operator-by-operator path. Job ids come from
+    the DAGScheduler's counter; the resumed prefix's own jobs are measured
+    by a no-op resume and subtracted. A later stage rebuilt on resume
+    derives from the stored communities stage and reproduces its table."""
+    import os
+    import shutil
+
+    from graphrag_litex_spark.plans.pipeline import KGPipeline, stage_checksums
+
+    out = str(tmp_path / "kg")
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    pipe = KGPipeline(spark, corpus_sf0001["transcripts"], out)
+    pipe.run(resume=False, until="claims")
+    j0 = dag.nextJobId()
+    pipe.run(resume=True, until="claims")
+    j1 = dag.nextJobId()
+    res = pipe.run(resume=True)
+    j2 = dag.nextJobId()
+    tail_jobs = (j2 - j1) - (j1 - j0)
+    assert tail_jobs <= 1 + 4 * 2, tail_jobs
+    assert res["summary_embeddings"].count() == res["summaries"].count() > 0
+
+    tail = ["communities", "community_stats", "summaries", "summary_embeddings"]
+    before = stage_checksums(spark, out, tail)
+    shutil.rmtree(os.path.join(out, "summaries"))
+    pipe.run(resume=True)
+    assert stage_checksums(spark, out, tail) == before
+
+
 def test_concurrent_build_lock(spark, corpus_sf0001, tmp_path):
     """Two drivers building one out_dir interleave overwrite-mode stage
     writes into silent corruption; the advisory _BUILD_LOCK makes the second
