@@ -31,15 +31,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphrag_litex_spark.operators.iterutils import (
+    DRIVER_THRESHOLD,
+    LocalGraph,
     hard_checkpoint,
+    local_frame,
+    local_graph,
     loop_shuffle_partitions,
     release,
 )
 
 
-def _cc_union_find_df(spark, ids: list, pairs: list, id_col: str) -> DataFrame:
+def _cc_union_find_df(spark, g: LocalGraph, id_col: str) -> DataFrame:
     """Small-graph physical strategy: union-find over the probe-collected
-    (ids, pairs), result broadcast back as a local frame.
+    graph, result handed back as a local frame.
 
     Same adaptive stance as Catalyst's broadcast-vs-shuffle join choice: the
     label graph is ALREADY reduced (distinct names, not mentions), so when it
@@ -47,7 +51,7 @@ def _cc_union_find_df(spark, ids: list, pairs: list, id_col: str) -> DataFrame:
     wall. Produces byte-identical output to the distributed loop (label =
     minimum over the component's full id set, rows = vertices) — asserted in
     tests/test_cc.py."""
-    parent: dict = {v: v for v in ids}
+    parent: dict = {v: v for v in g.vertices}
 
     def find(x):
         root = x
@@ -57,11 +61,9 @@ def _cc_union_find_df(spark, ids: list, pairs: list, id_col: str) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in pairs:
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
+    for a, b in g.pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
         ra, rb = find(a), find(b)
         if ra != rb:
             if rb < ra:
@@ -74,15 +76,11 @@ def _cc_union_find_df(spark, ids: list, pairs: list, id_col: str) -> DataFrame:
         r = find(x)
         if r not in comp_min or x < comp_min[r]:
             comp_min[r] = x
-    rows = [(v, comp_min[find(v)]) for v in ids]
-    # pandas/Arrow path: a list-backed createDataFrame is a pickled-rows RDD
-    # that round-trips Python workers on every downstream scan (see
-    # communities._local_df).
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=[id_col, "label"]),
-        schema=f"{id_col} string, label string",
+    return local_frame(
+        spark,
+        [(v, comp_min[find(v)]) for v in g.vertices],
+        [id_col, "label"],
+        f"{id_col} string, label string",
     )
 
 
@@ -93,7 +91,7 @@ def connected_components(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iter: int = 25,
-    driver_threshold: int = 100_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
     algorithm: str = "minlabel",
 ) -> DataFrame:
     """-> (id_col, label) where label = component minimum (over vertices and
@@ -119,52 +117,20 @@ def connected_components(
 
     Both produce byte-identical output (asserted in tests/test_cc.py).
     """
-    sym_plan = (
+    # Driver-local regime (iterutils.local_graph): raw-row limit probes of
+    # the edges, then the vertices, under `2 x raw edges + |vertices| <=
+    # driver_threshold`; the symmetrize+dedup then happens locally. Union-
+    # find over the undirected simple pairs reaches the same components as
+    # the min-label loop over the symmetrized edges (self-loops join
+    # nothing), so the labels are identical.
+    g = local_graph(edges, src_col, dst_col, driver_threshold, vertices, id_col)
+    if g is not None:
+        return _cc_union_find_df(vertices.sparkSession, g, id_col)
+    sym = hard_checkpoint(
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .union(edges.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v")))
         .distinct()
     )
-    # Driver-local regime decided by bounded limit-probes over the RAW
-    # inputs (narrow limits — no shuffle, no eager checkpoints, no count
-    # jobs, and an over-threshold graph pays only a cap-bounded scan before
-    # the distributed loop). The symmetrize+dedup then happens locally —
-    # identical edge set, so identical union-find labels. Raw edge rows
-    # bound the deduped state (|sym| <= 2x raw), so the regime condition
-    # `raw_edges*2 + |vertices| <= driver_threshold` implies the old
-    # |sym| + |vertices| <= driver_threshold one. String ids only (as in
-    # pagerank and graph_analytics._probe_small_und): the union-find sorts
-    # ids and builds a string-schema frame, so NULL or non-string ids take
-    # the distributed loop.
-    if driver_threshold > 0:
-        edge_cap = driver_threshold // 2
-        edge_rows = (
-            edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-            .limit(edge_cap + 1)
-            .collect()
-        )
-        if len(edge_rows) <= edge_cap and all(
-            isinstance(r["u"], str) and isinstance(r["v"], str) for r in edge_rows
-        ):
-            vert_budget = driver_threshold - 2 * len(edge_rows)
-            vert_rows = (
-                vertices.select(F.col(id_col).alias("u"))
-                .limit(max(vert_budget, 0) + 1)
-                .collect()
-            )
-            if len(vert_rows) <= vert_budget and all(
-                isinstance(r["u"], str) for r in vert_rows
-            ):
-                sym_local = set()
-                for r in edge_rows:
-                    sym_local.add((r["u"], r["v"]))
-                    sym_local.add((r["v"], r["u"]))
-                return _cc_union_find_df(
-                    vertices.sparkSession,
-                    [r["u"] for r in vert_rows],
-                    sorted(sym_local),
-                    id_col,
-                )
-    sym = hard_checkpoint(sym_plan)
     verts = hard_checkpoint(vertices.select(F.col(id_col).alias("u")))
     n_state = verts.count() + sym.count()
     if algorithm == "alternating":

@@ -26,10 +26,10 @@ recursion shape, and the stats formulas replicate the reference exactly:
 Adaptive physical strategy (same stance as Catalyst's broadcast-vs-shuffle
 choice, and as cc.py): the community graph is the DEDUPLICATED entity
 graph — orders of magnitude smaller than the corpus — so when its state
-(vertices + undirected edges) fits under ``driver_threshold``
-(``DRIVER_THRESHOLD``) the whole hierarchy runs driver-locally in one pass,
-byte-identical to the distributed loop (asserted in
-tests/test_communities.py). Larger graphs run the distributed DataFrame
+(vertices + 2 x edge rows, ``iterutils.local_graph``) fits under
+``driver_threshold`` (``iterutils.DRIVER_THRESHOLD``) the whole hierarchy
+runs driver-locally in one pass, byte-identical to the distributed loop
+(asserted in tests/test_communities.py). Larger graphs run the distributed DataFrame
 loop, which is the path taken at 10^12-turn scale.
 
 Graph tail (:func:`graph_tail`): under the same valve the pipeline builds
@@ -58,14 +58,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graphrag_litex_spark.operators.iterutils import (
+    DRIVER_THRESHOLD,
     hard_checkpoint,
+    local_frame,
+    local_graph,
     loop_shuffle_partitions,
     release,
 )
-
-# Cap on graph state (vertices + edges) for the driver-local regime: shared by
-# label_propagation, detect_communities and the pipeline's graph tail.
-DRIVER_THRESHOLD = 100_000
 
 
 def _und_edges(edges: DataFrame) -> DataFrame:
@@ -186,30 +185,22 @@ def _hierarchy_py(
     return rows
 
 
-def _local_df(spark, rows: list, columns: list[str], schema: str) -> DataFrame:
-    """Driver rows -> DataFrame via pandas/Arrow. A plain list-of-tuples
-    createDataFrame builds a pickled-Python-rows RDD whose every downstream
-    consumption (count, coalesced write) round-trips Python workers — ~5s
-    for 156 rows under coalesce(1); the Arrow path is JVM-native after
-    conversion (~0.2s) and scans like any local relation."""
-    import pandas as pd
+def _local_seed(seed_labels: DataFrame | None, ids: set) -> dict | None:
+    """Warm-start labels for the driver-local kernels: {vertex: label} over
+    ``ids`` (one collect). NULL labels are skipped — the distributed loop's
+    coalesce falls back to the vertex's own id."""
+    if seed_labels is None:
+        return None
+    return {
+        u: lbl
+        for u, lbl in seed_labels.select("entity_id", "label").collect()
+        if u in ids and lbl is not None
+    } or None
 
-    return spark.createDataFrame(pd.DataFrame(rows, columns=columns), schema=schema)
 
-
-def _lpa_driver_local(
-    spark, ids: list, sym_pairs: list, iters: int, seed: dict | None = None
-) -> DataFrame:
-    """Small-graph physical strategy for a single LPA call."""
-    adj: dict = {}
-    for a, b in sym_pairs:
-        adj.setdefault(a, []).append(b)
-    return _local_df(
-        spark,
-        list(_lpa_py(ids, adj, iters, seed=seed).items()),
-        ["entity_id", "label"],
-        "entity_id string, label string",
-    )
+def _count_rows(a: DataFrame, b: DataFrame) -> int:
+    """|a| + |b| in one job (sizes the distributed loop's shuffles)."""
+    return a.select(F.lit(1)).unionAll(b.select(F.lit(1))).count()
 
 
 # ---- distributed loops ----------------------------------------------------
@@ -223,6 +214,10 @@ def label_propagation(
     seed_labels: DataFrame | None = None,
 ) -> DataFrame:
     """Synchronous LPA -> (entity_id, label); deterministic tie-breaking.
+
+    ``und_edges`` (u, v) is an undirected simple edge set — each pair once,
+    no self-loops (what :func:`_und_edges` produces); edges leaving
+    ``vertices`` carry no label.
 
     Adaptive: state below ``driver_threshold`` rows runs driver-locally
     (identical output, ~5x fewer tiny Spark jobs); larger graphs run the
@@ -242,6 +237,19 @@ def label_propagation(
     downstream quality is gated by the same modularity metric as the
     cold path.
     """
+    # Driver-local regime (iterutils.local_graph): raw-row limit probes of
+    # the edges, then the vertices — no checkpoint, no count.
+    g = local_graph(und_edges, "u", "v", driver_threshold, vertices, "entity_id")
+    if g is not None:
+        ids = set(g.vertices)
+        adj = {u: [v for v in ns if v in ids] for u, ns in g.adj.items() if u in ids}
+        labels = _lpa_py(g.vertices, adj, iters, seed=_local_seed(seed_labels, ids))
+        return local_frame(
+            vertices.sparkSession,
+            list(labels.items()),
+            ["entity_id", "label"],
+            "entity_id string, label string",
+        )
     sym = hard_checkpoint(_sym(und_edges))
     init = vertices.select(F.col("entity_id").alias("u"))
     if seed_labels is not None:
@@ -253,16 +261,7 @@ def label_propagation(
     else:
         init = init.select("u", F.col("u").alias("label"))
     labels = hard_checkpoint(init)
-    n_state = labels.count() + sym.count()
-    if n_state <= driver_threshold:
-        rows = labels.select("u", "label").collect()
-        ids = [r[0] for r in rows]
-        seed = {r[0]: r[1] for r in rows if r[0] != r[1]} or None
-        pairs = [(r[0], r[1]) for r in sym.select("u", "v").collect()]
-        out = _lpa_driver_local(vertices.sparkSession, ids, pairs, iters, seed=seed)
-        release(sym)
-        release(labels)
-        return out
+    n_state = _count_rows(labels, sym)
     # with-block + finally: a mid-loop Spark exception must not leave the
     # session's shuffle-partition count overridden or leak checkpoint RDDs.
     try:
@@ -344,7 +343,7 @@ def detect_communities(
     """-> long-form membership (level int, community_id string,
     parent string, entity_id string); SURVEY.md §1 communities table.
 
-    Adaptive: when vertices + undirected edges fit under
+    Adaptive: when vertices + 2 x edge rows fit under
     ``driver_threshold``, the whole hierarchy runs driver-locally
     (identical output, asserted in tests); larger graphs run the
     distributed per-level loop, with shuffle partitions sized to the
@@ -358,28 +357,29 @@ def detect_communities(
     (they are bounded by their parent community, not the corpus).
     """
     spark = nodes.sparkSession
-    und = hard_checkpoint(_und_edges(edges))
     vertices = nodes.select("entity_id")
-    n_state = und.count() + vertices.count()
-    if n_state <= driver_threshold:
-        ids = [r[0] for r in vertices.collect()]
-        pairs = [(r[0], r[1]) for r in und.collect()]
-        release(und)
-        seed = None
-        if seed_labels is not None:
-            idset = set(ids)
-            seed = {
-                r[0]: r[1]
-                for r in seed_labels.select("entity_id", "label").collect()
-                if r[0] in idset
-            } or None
-        rows = _hierarchy_py(ids, pairs, levels, min_size, lpa_iters, seed=seed)
-        return _local_df(
+    # Driver-local regime (iterutils.local_graph): raw-row limit probes of
+    # the edges, then the vertices — no checkpoint, no count. Edges leaving
+    # the vertex set carry no LPA message, as in the distributed loop.
+    g = local_graph(edges, "src_id", "dst_id", driver_threshold, vertices, "entity_id")
+    if g is not None:
+        ids = set(g.vertices)
+        rows = _hierarchy_py(
+            g.vertices,
+            [(a, b) for a, b in g.pairs if a in ids and b in ids],
+            levels,
+            min_size,
+            lpa_iters,
+            seed=_local_seed(seed_labels, ids),
+        )
+        return local_frame(
             spark,
             rows,
             ["level", "community_id", "parent", "entity_id"],
             "level int, community_id string, parent string, entity_id string",
         )
+    und = hard_checkpoint(_und_edges(edges))
+    n_state = _count_rows(und, vertices)
 
     with loop_shuffle_partitions(spark, n_state):
         l0 = _enforce_min_size(
@@ -967,7 +967,7 @@ def graph_tail(
     warm-starts level-0 LPA; ``communities`` reuses an already-built
     membership instead of detecting one. Each costs one more collect. The
     caller owns the valve: use this only when the graph fits under
-    ``DRIVER_THRESHOLD``.
+    ``iterutils.DRIVER_THRESHOLD``.
     """
     spark = nodes.sparkSession
     rows = (
@@ -1004,7 +1004,9 @@ def graph_tail(
         membership=membership,
     )
     return {
-        name: _local_df(spark, tables[name], [f.split()[0] for f in ddl.split(", ")], ddl)
+        name: local_frame(
+            spark, tables[name], [f.split()[0] for f in ddl.split(", ")], ddl
+        )
         for name, ddl in TAIL_TABLES.items()
     }
 

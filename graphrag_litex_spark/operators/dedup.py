@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphrag_litex_spark.operators.iterutils import DRIVER_THRESHOLD
+
 _NORM_RE = r"[^a-z0-9 ]+"
 
 
@@ -645,7 +647,7 @@ def duplicate_keeper_map(
     pairs: DataFrame | None = None,
     jaccard_threshold: float = 0.6,
     cc_algorithm: str = "minlabel",
-    cc_driver_threshold: int = 100_000,
+    cc_driver_threshold: int = DRIVER_THRESHOLD,
     **lsh_kwargs,
 ) -> DataFrame:
     """Component-level keeper assignment — the artifact a 100 TB dedup

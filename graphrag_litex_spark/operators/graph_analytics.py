@@ -31,10 +31,18 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphrag_litex_spark.operators.iterutils import hard_checkpoint, release
+from graphrag_litex_spark.operators.iterutils import (
+    DRIVER_THRESHOLD,
+    hard_checkpoint,
+    local_frame,
+    local_graph,
+    release,
+)
 
 
 def undirected_simple(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -263,42 +271,7 @@ def k_core(
     raise RuntimeError(f"k_core did not converge in {max_iters} rounds")
 
 
-def _probe_small_und(
-    edges: DataFrame, src: str, dst: str, driver_threshold: int
-) -> set | None:
-    """One bounded collect deciding the driver-local regime: the undirected
-    simple edge set as ``{(a, b)}``, a < b, computed LOCALLY from at most
-    ``driver_threshold // 4`` RAW edge rows, else None.
-
-    Probing the raw rows (a narrow ``limit`` — no shuffle) instead of the
-    distinct-deduped plan means a large graph pays only a cap-bounded scan
-    before falling through to the distributed loop, never a full
-    symmetrize+distinct map pass that the loop then recomputes. A graph
-    whose raw rows exceed the cap but whose deduped set is tiny goes
-    distributed — the threshold is a heuristic, the OUTPUT contract is
-    per-path identity.
-    """
-    cap = driver_threshold // 4
-    if cap <= 0:
-        return None
-    rows = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).limit(
-        cap + 1
-    ).collect()
-    if len(rows) > cap:
-        return None
-    # String ids only: the local replicas build hardcoded string-schema
-    # frames and compare with Python string ordering (== UTF8String byte
-    # order, since UTF-8 preserves code-point order). Non-string ids take
-    # the distributed path unchanged.
-    if any(
-        not (isinstance(r["a"], str) and isinstance(r["b"], str)) for r in rows
-    ):
-        return None
-    return {
-        (min(r["a"], r["b"]), max(r["a"], r["b"]))
-        for r in rows
-        if r["a"] != r["b"]
-    }
+_TRUSS_SCHEMA = "a string, b string, support long"
 
 
 def k_truss(
@@ -307,7 +280,7 @@ def k_truss(
     src: str = "src",
     dst: str = "dst",
     max_iters: int = 100,
-    driver_threshold: int = 100_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """The k-truss of the undirected simple graph: the maximal subgraph in
     which every edge participates in >= k-2 triangles WITHIN the subgraph
@@ -330,21 +303,19 @@ def k_truss(
     """
     spark = edges.sparkSession
     thresh = max(k - 2, 0)
-    empty = spark.createDataFrame([], "a string, b string, support long")
-    # Adaptive driver-local peel (same stance and threshold as cc/pagerank/
-    # communities): below ``driver_threshold`` state rows the dozens of
-    # checkpointed round jobs are pure scheduler overhead; truss peeling is
-    # confluent, so the sequential golden reaches the identical fixpoint
-    # (differentially asserted at threshold 0 in tests). One bounded
-    # limit-probe collect decides the regime — no checkpoint, no count job
-    # on the small-graph path.
-    probe = _probe_small_und(edges, src, dst, driver_threshold)
-    if probe is not None:
+    empty = local_frame(spark, [], ["a", "b", "support"], _TRUSS_SCHEMA)
+    # Adaptive driver-local peel (iterutils.local_graph): below
+    # ``driver_threshold`` state rows the dozens of checkpointed round jobs
+    # are pure scheduler overhead; truss peeling is confluent, so the
+    # sequential peel reaches the identical fixpoint (differentially
+    # asserted at threshold 0 in tests).
+    g = local_graph(edges, src, dst, driver_threshold)
+    if g is not None:
         # Same peel as oracle_graph.k_truss_golden, but honoring max_iters
-        # exactly like the distributed loop (a peel cascade must abort with
-        # the same RuntimeError, not stall the driver unbounded).
-        local = set(probe)
-        supp: dict = {}
+        # exactly like the distributed loop: a round that finds every edge
+        # below threshold returns empty, and a cascade still peeling after
+        # max_iters rounds raises the same RuntimeError.
+        local = set(g.pairs)
         for _ in range(max_iters):
             adj_l: dict[str, set] = {}
             for ea, eb in local:
@@ -352,20 +323,17 @@ def k_truss(
                 adj_l.setdefault(eb, set()).add(ea)
             supp = {(ea, eb): len(adj_l[ea] & adj_l[eb]) for ea, eb in local}
             bad = {e for e, s in supp.items() if s < thresh}
+            if len(bad) == len(supp):
+                return empty
             if not bad:
-                break
+                return local_frame(
+                    spark,
+                    [(a, b, s) for (a, b), s in sorted(supp.items())],
+                    ["a", "b", "support"],
+                    _TRUSS_SCHEMA,
+                )
             local -= bad
-            if not local:
-                supp = {}
-                break
-        else:
-            raise RuntimeError(f"k_truss did not converge in {max_iters} rounds")
-        if not supp:
-            return empty
-        return spark.createDataFrame(
-            [(a, b, int(s)) for (a, b), s in sorted(supp.items())],
-            "a string, b string, support long",
-        )
+        raise RuntimeError(f"k_truss did not converge in {max_iters} rounds")
     und = hard_checkpoint(undirected_simple(edges, src, dst))
     for _ in range(max_iters):
         deg = _degrees(und)
@@ -388,7 +356,9 @@ def k_truss(
             F.count(F.lit(1)).alias("n_all"),
         ).first()
         n_bad, n_all = (row["n_bad"] or 0), row["n_all"]
-        if n_all == 0:
+        if n_bad == n_all:
+            # Every edge is below threshold (or none is left): the truss is
+            # empty now, not one more round later.
             scored.unpersist()
             release(und)
             return empty
@@ -503,6 +473,42 @@ def wl_structure_fingerprint(
     return f"{row['n_roles']}:{row['fp']}"
 
 
+_NF_SCHEMA = "t int, reachable_pairs double"
+
+
+def _bfs(adj: dict[str, list[str]], source: str, max_hops: int) -> dict[str, int]:
+    """{vertex: distance} for every vertex within ``max_hops`` of
+    ``source`` over a driver-local adjacency (``LocalGraph.adj``)."""
+    dist = {source: 0}
+    frontier = [source]
+    for hop in range(1, max_hops + 1):
+        nxt = []
+        for u in frontier:
+            for v in adj.get(u, ()):
+                if v not in dist:
+                    dist[v] = hop
+                    nxt.append(v)
+        if not nxt:
+            break
+        frontier = nxt
+    return dist
+
+
+def _exact_neighborhood(adj: dict[str, list[str]], max_t: int) -> list[tuple[int, float]]:
+    """Exact N(t), t = 0..max_t, from one BFS per vertex (a histogram of
+    distances), with the distributed loop's early exit: stop after the
+    first repeated total, inclusive."""
+    hist = Counter(d for s in adj for d in _bfs(adj, s, max_t).values())
+    out: list[tuple[int, float]] = []
+    total = 0
+    for t in range(max_t + 1):
+        total += hist[t]
+        out.append((t, float(total)))
+        if t and total == out[-2][1]:
+            break
+    return out
+
+
 def neighborhood_function(
     edges: DataFrame,
     max_t: int = 4,
@@ -537,25 +543,20 @@ def neighborhood_function(
     """
     spark = edges.sparkSession
     # Adaptive driver-local exact BFS — the valve is gated on the VERTEX
-    # count (``driver_threshold`` vertices, default 256, deliberately
+    # count, clamped to (1 << lg_k) // 16 (256 at lg_k=12, deliberately
     # tighter than the other graph valves): the sketch estimates equal the
     # exact counts only while every ball stays in the sketches' exact
     # coupon regime (DataSketches HLL leaves the exact SET mode around
-    # k/8 = 512 coupons at lg_k=12, so 256 keeps the largest possible
-    # ball — the whole vertex set — at half that bound). The golden
-    # replicates the same early-exit row set (asserted in tests).
-    probe = (
-        # 100k is the module-wide driver-transfer bound (edge rows); the
-        # exactness gate below is the tighter, vertex-count one.
-        _probe_small_und(edges, src, dst, 100_000)
-        if lg_k >= 12
-        else None
-    )
-    if probe is not None and len({x for p in probe for x in p}) <= driver_threshold:
-        from graphrag_litex_spark.oracle_graph import neighborhood_golden
-
-        totals_local = neighborhood_golden(probe, max_t)
-        return spark.createDataFrame(totals_local, "t int, reachable_pairs double")
+    # k/8 = 512 coupons at lg_k=12, so 256 keeps the largest possible ball
+    # — the whole vertex set — at half that bound, whatever the caller
+    # passes). The edge probe itself is bounded by the module-wide
+    # driver-transfer cap.
+    gate = min(driver_threshold, (1 << lg_k) // 16)
+    g = local_graph(edges, src, dst, DRIVER_THRESHOLD) if gate > 0 and lg_k >= 12 else None
+    if g is not None and len(g.adj) <= gate:
+        return local_frame(
+            spark, _exact_neighborhood(g.adj, max_t), ["t", "reachable_pairs"], _NF_SCHEMA
+        )
     und = undirected_simple(edges, src, dst)
     adj = hard_checkpoint(
         und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
@@ -596,7 +597,7 @@ def neighborhood_function(
             break
     release(adj)
     release(state)
-    return spark.createDataFrame(totals, "t int, reachable_pairs double")
+    return local_frame(spark, totals, ["t", "reachable_pairs"], _NF_SCHEMA)
 
 
 def degree_assortativity_components(
@@ -653,7 +654,7 @@ def hop_distances(
     max_hops: int = 6,
     src: str = "src",
     dst: str = "dst",
-    driver_threshold: int = 100_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """Multi-source BFS over the undirected simple graph -> one row per
     (vertex, source, dist) with dist <= ``max_hops`` (sources themselves at
@@ -669,46 +670,30 @@ def hop_distances(
     PageRank/CC (iterutils.py).
     """
     spark = edges.sparkSession
-    # Adaptive driver-local BFS (same stance and threshold as cc/pagerank):
-    # the per-hop join loop spends one checkpointed job per hop, which is
-    # pure overhead when the whole edge set fits on the driver. BFS has a
-    # unique fixpoint, so the local result is row-identical (source rows at
-    # dist 0 per occurrence, one row per reached (vertex, source), dist <=
-    # max_hops; asserted at threshold 0 in tests).
-    probe = _probe_small_und(edges, src, dst, driver_threshold)
-    if probe is not None:
-        adj: dict[str, list[str]] = {}
-        for a, b in probe:
-            adj.setdefault(a, []).append(b)
-            adj.setdefault(b, []).append(a)
-        rows: list[tuple[str, str, int]] = [(str(s), str(s), 0) for s in sources]
-        for s in {str(s) for s in sources}:
-            dist = {s: 0}
-            frontier = [s]
-            for hop in range(1, max_hops + 1):
-                nxt = []
-                for u in frontier:
-                    for v in adj.get(u, ()):
-                        if v not in dist:
-                            dist[v] = hop
-                            nxt.append(v)
-                            rows.append((v, s, hop))
-                if not nxt:
-                    break
-                frontier = nxt
-        return spark.createDataFrame(rows, "vertex string, source string, dist int")
+    # Adaptive driver-local BFS (iterutils.local_graph): the per-hop join
+    # loop spends one checkpointed job per hop, which is pure overhead when
+    # the whole edge set fits on the driver. BFS has a unique fixpoint, so
+    # the local result is row-identical (source rows at dist 0 per
+    # occurrence, one row per reached (vertex, source), dist <= max_hops;
+    # asserted at threshold 0 in tests). Both paths compare sources as
+    # strings.
+    sources = [str(s) for s in sources]
+    g = local_graph(edges, src, dst, driver_threshold)
+    if g is not None:
+        rows = [(s, s, 0) for s in sources]
+        for s in set(sources):
+            rows += [(v, s, d) for v, d in _bfs(g.adj, s, max_hops).items() if d]
+        return local_frame(
+            spark, rows, ["vertex", "source", "dist"], "vertex string, source string, dist int"
+        )
     und = undirected_simple(edges, src, dst)
     sym = hard_checkpoint(
         und.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
             und.select(F.col("b").alias("u"), F.col("a").alias("v"))
         )
     )
-    import pandas as pd
-
     dist = hard_checkpoint(
-        spark.createDataFrame(
-            pd.DataFrame({"vertex": [str(s) for s in sources]})
-        ).select(
+        local_frame(spark, [(s,) for s in sources], ["vertex"], "vertex string").select(
             F.col("vertex"), F.col("vertex").alias("source"), F.lit(0).alias("dist")
         )
     )
@@ -949,12 +934,8 @@ def betweenness_approx(
     if not sources:
         release(sym)
         return empty
-    import pandas as pd
-
     state = hard_checkpoint(
-        spark.createDataFrame(
-            pd.DataFrame({"source": [str(s) for s in sources]})
-        ).select(
+        local_frame(spark, [(str(s),) for s in sources], ["source"], "source string").select(
             "source",
             F.col("source").alias("vertex"),
             F.lit(0).alias("dist"),

@@ -35,7 +35,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .iterutils import hard_checkpoint, release
+from .iterutils import (
+    DRIVER_THRESHOLD,
+    hard_checkpoint,
+    local_frame,
+    local_graph,
+    release,
+)
 
 
 def _h(*cols) -> F.Column:
@@ -240,40 +246,6 @@ def ppmi_weights(
     )
 
 
-def _probe_small_sym(
-    edges: DataFrame, src_col: str, dst_col: str, driver_threshold: int
-) -> dict[str, list[str]] | None:
-    """One bounded collect deciding the walks' driver-local regime: the
-    symmetric simple adjacency as ``{node: sorted neighbors}``, computed
-    LOCALLY from at most ``driver_threshold // 4`` RAW edge rows, else
-    None. Probing the raw rows (a narrow ``limit``, no shuffle) keeps the
-    over-threshold fall-through free of wasted symmetrize+distinct work."""
-    cap = driver_threshold // 4
-    if cap <= 0:
-        return None
-    rows = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).limit(cap + 1).collect()
-    if len(rows) > cap:
-        return None
-    # String ids only (the local walker builds a string-schema frame and
-    # uses Python string ordering == UTF8String byte order); non-string
-    # ids take the distributed path unchanged.
-    if any(
-        not (isinstance(r["src"], str) and isinstance(r["dst"], str)) for r in rows
-    ):
-        return None
-    sym = set()
-    for r in rows:
-        if r["src"] != r["dst"]:
-            sym.add((r["src"], r["dst"]))
-            sym.add((r["dst"], r["src"]))
-    adj: dict[str, set] = {}
-    for u, v in sym:
-        adj.setdefault(u, set()).add(v)
-    return {v: sorted(ns) for v, ns in adj.items()}
-
-
 def _md5_key(s: str) -> str:
     import hashlib
 
@@ -283,6 +255,7 @@ def _md5_key(s: str) -> str:
 _WALK_SCHEMA = (
     "start string, walk_idx int, nodes array<string>, path string, end_node string"
 )
+_WALK_COLS = ["start", "walk_idx", "nodes", "path", "end_node"]
 
 
 def random_walks(
@@ -294,7 +267,7 @@ def random_walks(
     seed: str = "",
     checkpoint_every: int = 4,
     sep: str = " -> ",
-    driver_threshold: int = 100_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """Deterministic fixed-length walks over the undirected simple graph.
 
@@ -321,21 +294,21 @@ def random_walks(
         # sequence(0, walks_per_node - 1) would DESCEND for 0 (Spark
         # infers step -1), silently emitting walk_idx 0 AND -1.
         raise ValueError("walks_per_node must be >= 1")
-    # Adaptive driver-local walker (same stance as the cc/pagerank/graph
-    # valves): each distributed step is a checkpointed join+agg job, pure
-    # scheduler overhead on a tiny graph. The md5 rank keys are replicated
+    # Adaptive driver-local walker (iterutils.local_graph): each
+    # distributed step is a checkpointed join+agg job, pure scheduler
+    # overhead on a tiny graph. The md5 rank keys are replicated
     # bit-for-bit (lowercase hex compared as ASCII == UTF8String binary
     # order), so the walks are row-identical — asserted at threshold 0 in
     # tests.
-    adj = _probe_small_sym(edges, src_col, dst_col, driver_threshold)
-    if adj is not None:
+    g = local_graph(edges, src_col, dst_col, driver_threshold)
+    if g is not None:
         rows = []
-        for start in adj:
+        for start in g.adj:
             for widx in range(walks_per_node):
                 cur, nodes = start, [start]
                 for step in range(1, length + 1):
                     cur = min(
-                        adj[cur],
+                        g.adj[cur],
                         key=lambda d: (
                             _md5_key(f"{seed}|{start}|{widx}|{step}|{d}"),
                             d,
@@ -343,7 +316,7 @@ def random_walks(
                     )
                     nodes.append(cur)
                 rows.append((start, widx, nodes, sep.join(nodes), cur))
-        return edges.sparkSession.createDataFrame(rows, _WALK_SCHEMA)
+        return local_frame(edges.sparkSession, rows, _WALK_COLS, _WALK_SCHEMA)
     fwd = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     sym = (
         fwd.unionAll(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -431,7 +404,7 @@ def node2vec_walks(
     seed: str = "",
     checkpoint_every: int = 4,
     sep: str = " -> ",
-    driver_threshold: int = 100_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """Deterministic BIASED walks — node2vec's second-order transition
     (Grover & Leskovec 2016) with INTEGER weights, exactly: from (prev,
@@ -466,20 +439,20 @@ def node2vec_walks(
         raise ValueError("walks_per_node must be >= 1")
     if min(w_return, w_common, w_far) < 1:
         raise ValueError("weights must be >= 1 (scale the others up instead)")
-    # Adaptive driver-local walker — replica-argmin replicated exactly
-    # (same md5 draw keys incl. the replica index; step 1 carries replica
-    # 0 like the distributed single-replica explode). Asserted against the
-    # threshold-0 distributed loop in tests.
-    adj_local = _probe_small_sym(edges, src_col, dst_col, driver_threshold)
-    if adj_local is not None:
-        nbr = {v: set(ns) for v, ns in adj_local.items()}
+    # Adaptive driver-local walker (iterutils.local_graph) — replica-argmin
+    # replicated exactly (same md5 draw keys incl. the replica index; step 1
+    # carries replica 0 like the distributed single-replica explode).
+    # Asserted against the threshold-0 distributed loop in tests.
+    g = local_graph(edges, src_col, dst_col, driver_threshold)
+    if g is not None:
+        nbr = {v: set(ns) for v, ns in g.adj.items()}
         rows = []
-        for start in adj_local:
+        for start in g.adj:
             for widx in range(walks_per_node):
                 prev, cur, nodes = None, start, [start]
                 for step in range(1, length + 1):
                     best = None
-                    for d in adj_local[cur]:
+                    for d in g.adj[cur]:
                         if step == 1:
                             w = 1
                         elif d == prev:
@@ -498,7 +471,7 @@ def node2vec_walks(
                     prev, cur = cur, best[1]
                     nodes.append(cur)
                 rows.append((start, widx, nodes, sep.join(nodes), cur))
-        return edges.sparkSession.createDataFrame(rows, _WALK_SCHEMA)
+        return local_frame(edges.sparkSession, rows, _WALK_COLS, _WALK_SCHEMA)
     fwd = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     sym = hard_checkpoint(
         fwd.unionAll(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))

@@ -1,4 +1,5 @@
-"""Iteration-safe checkpointing for DataFrame loops (CC, LPA).
+"""Iteration-safe checkpointing for DataFrame loops (CC, LPA), and the
+small-graph regime shared by every graph operator's driver-local valve.
 
 Iterative DataFrame algorithms (connected components, label propagation)
 re-join each iteration's output with itself. Two failure modes on stock
@@ -21,11 +22,24 @@ LogicalRDD via ``SparkSession.internalCreateDataFrame`` — which carries no
 origin stats, so estimates reset to a constant every iteration. Falls back
 to plain localCheckpoint if the (package-private, but py4j-visible) API is
 unavailable.
+
+Small-graph regime: the graph operators' round jobs are pure scheduler
+overhead when the graph fits on the driver. :func:`local_graph` is their
+one regime probe (bounded raw-row collect, string-id guard, local dedup)
+and :func:`local_frame` hands a driver-computed result back as a local
+relation.
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+# Default cap on graph state (2 x raw edge rows + vertices) for every
+# driver-local valve and for the pipeline's graph tail.
+DRIVER_THRESHOLD = 100_000
 
 
 def hard_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -134,3 +148,79 @@ def release(df: DataFrame) -> None:
             ck.unpersist(blocking=False)
         except Exception:
             pass
+
+
+class LocalGraph(NamedTuple):
+    """A probe-collected graph small enough for the driver.
+
+    ``vertices``: the distinct probed vertex ids, sorted (None when no
+    vertex frame was passed). ``pairs``: the undirected simple edge set,
+    ``(a, b)`` with a < b, self-loops dropped, sorted. ``adj``: every
+    endpoint of ``pairs`` -> its sorted neighbors, keys in sorted order.
+    """
+
+    vertices: list[str] | None
+    pairs: list[tuple[str, str]]
+    adj: dict[str, list[str]]
+
+
+def local_graph(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    driver_threshold: int,
+    vertices: DataFrame | None = None,
+    id_col: str | None = None,
+) -> LocalGraph | None:
+    """Decide a graph operator's regime: the graph as a :class:`LocalGraph`
+    when ``2 x raw edge rows + |vertices|`` (``4 x raw edge rows`` when no
+    vertices are passed) fits under ``driver_threshold``, else None — run
+    the distributed loop. ``driver_threshold <= 0`` never goes local.
+
+    Raw rows bound the deduped state, so the probe needs no dedup: a narrow
+    ``limit(cap + 1).collect()`` over the edges, then — only when they fit —
+    over ``vertices[id_col]`` (default: its first column). No shuffle, no
+    checkpoint, no count; an over-threshold graph pays only a cap-bounded
+    scan before its distributed loop.
+
+    String ids only: the driver-local kernels sort ids with Python string
+    ordering (== UTF8String byte order) and build string-schema frames, so
+    any NULL or non-string id returns None.
+    """
+    if driver_threshold <= 0:
+        return None
+    cap = driver_threshold // (2 if vertices is not None else 4)
+    rows = (
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .limit(cap + 1)
+        .collect()
+    )
+    if len(rows) > cap or not all(isinstance(x, str) for r in rows for x in r):
+        return None
+    ids = None
+    if vertices is not None:
+        budget = driver_threshold - 2 * len(rows)
+        vrows = (
+            vertices.select(F.col(id_col or vertices.columns[0]))
+            .limit(budget + 1)
+            .collect()
+        )
+        if len(vrows) > budget or not all(isinstance(r[0], str) for r in vrows):
+            return None
+        ids = sorted({r[0] for r in vrows})
+    pairs = sorted({(a, b) if a < b else (b, a) for a, b in rows if a != b})
+    adj: dict[str, list[str]] = {}
+    for a, b in pairs:
+        adj.setdefault(a, []).append(b)
+        adj.setdefault(b, []).append(a)
+    return LocalGraph(ids, pairs, {v: sorted(adj[v]) for v in sorted(adj)})
+
+
+def local_frame(spark, rows: list, columns: list[str], schema: str) -> DataFrame:
+    """Driver rows -> DataFrame via pandas/Arrow: a local relation. A plain
+    list-of-tuples ``createDataFrame`` builds a pickled-Python-rows RDD
+    whose every downstream scan (count, coalesced write, a query's
+    ``orderBy().limit().collect()``) round-trips Python workers."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame(rows, columns=columns), schema=schema)

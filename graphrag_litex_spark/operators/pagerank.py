@@ -29,55 +29,48 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphrag_litex_spark.operators.iterutils import hard_checkpoint, release
+from graphrag_litex_spark.operators.iterutils import (
+    DRIVER_THRESHOLD,
+    hard_checkpoint,
+    local_frame,
+    local_graph,
+    release,
+)
+
+_SCHEMA = "vertex string, rank double"
 
 
 def _pagerank_driver_local(
     spark,
-    und_pairs: list[tuple[str, str]],
+    adj: dict[str, list[str]],
     damping: float,
     iters: int,
     seed_set: set | None,
 ) -> DataFrame:
     """Driver-local power iteration for graphs whose edge set fits on the
-    driver — the same adaptive stance as `cc.connected_components`
-    (operators/cc.py:40): below the threshold, 10 distributed rounds are
-    pure scheduler overhead, so run the identical arithmetic locally. The
-    loop mirrors `oracle_graph.pagerank_golden` term for term IN THE SAME
-    SUMMATION ORDER (sorted vertices, sorted neighbors), so driver-local
-    output is bit-identical to the golden and agrees with the distributed
-    loop far inside the 1e-6 rounding both publish (asserted in
-    tests/test_pagerank.py)."""
-    adj: dict[str, set] = {}
-    for x, y in und_pairs:
-        adj.setdefault(x, set()).add(y)
-        adj.setdefault(y, set()).add(x)
-    verts = sorted(adj)
-    n = len(verts)
-    schema = "vertex string, rank double"
-    if n == 0:
-        return spark.createDataFrame([], schema)
-    nbrs = {v: sorted(adj[v]) for v in verts}
-    if seed_set is None:
-        base = dict.fromkeys(verts, (1.0 - damping) / n)
-        r = dict.fromkeys(verts, 1.0 / n)
-    else:
-        present = sorted(seed_set & set(verts))
-        if not present:
-            return spark.createDataFrame([], schema)
-        base = {
-            v: ((1.0 - damping) / len(present) if v in present else 0.0)
-            for v in verts
-        }
+    driver — the same adaptive stance as `cc.connected_components`: below
+    the threshold, 10 distributed rounds are pure scheduler overhead, so
+    run the identical arithmetic locally. The loop mirrors
+    `oracle_graph.pagerank_golden` term for term IN THE SAME SUMMATION
+    ORDER (sorted vertices, sorted neighbors — the order of
+    ``LocalGraph.adj``), so driver-local output is bit-identical to the
+    golden and agrees with the distributed loop far inside the 1e-6
+    rounding both publish (asserted in tests/test_pagerank.py)."""
+    verts = list(adj)
+    rows: list[tuple[str, float]] = []
+    present = set(verts) if seed_set is None else seed_set & set(verts)
+    if present:
+        base = {v: ((1.0 - damping) / len(present) if v in present else 0.0) for v in verts}
         r = {v: (1.0 / len(present) if v in present else 0.0) for v in verts}
-    for _ in range(iters):
-        acc = dict.fromkeys(verts, 0.0)
-        for v in verts:
-            share = r[v] / len(nbrs[v])
-            for u in nbrs[v]:
-                acc[u] += share
-        r = {v: base[v] + damping * acc[v] for v in verts}
-    return spark.createDataFrame([(v, r[v]) for v in verts], schema)
+        for _ in range(iters):
+            acc = dict.fromkeys(verts, 0.0)
+            for v in verts:
+                share = r[v] / len(adj[v])
+                for u in adj[v]:
+                    acc[u] += share
+            r = {v: base[v] + damping * acc[v] for v in verts}
+        rows = [(v, r[v]) for v in verts]
+    return local_frame(spark, rows, ["vertex", "rank"], _SCHEMA)
 
 
 def pagerank(
@@ -87,7 +80,7 @@ def pagerank(
     damping: float = 0.85,
     iters: int = 10,
     seeds: list | DataFrame | None = None,
-    driver_threshold: int = 100_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """-> (vertex, rank) over the undirected simple graph of ``edges``.
 
@@ -105,57 +98,28 @@ def pagerank(
     sets — e.g. DRIFT search — stay distributed: marked via a hash join,
     nothing vertex-proportional ever reaches the driver).
 
-    Adaptive: when the simple-graph edge set is under ``driver_threshold``
-    state rows (edges×2 directions + ≤2 vertices per edge — the same
-    sizing stance as `cc.connected_components`), the 10 checkpointed
+    Adaptive: when the graph is under ``driver_threshold`` state rows
+    (raw edges x 2 directions + <= 2 vertices per edge — the rule of
+    `iterutils.local_graph`, shared by every graph valve), the 10 checkpointed
     distributed rounds are pure scheduler overhead, so the power iteration
     runs driver-local in the golden's exact summation order (bit-identical
     to `oracle_graph.pagerank_golden`; rounded-1e-6 identical to the
     distributed loop, asserted in tests). Larger graphs take the
     one-shuffle-per-round hash-join loop unchanged."""
     spark = edges.sparkSession
-    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
-    und_plan = (
-        edges.select(a.alias("a"), b.alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    # Driver-local regime decided by one bounded limit-probe over the RAW
-    # edges (narrow limit — no shuffle; the eager checkpoint + count this
-    # replaces cost more than the local power iteration itself on a
-    # linking-sized graph, and an over-threshold graph now pays only a
-    # cap-bounded scan). The least/greatest+dedup happens locally —
+    # Driver-local regime (iterutils.local_graph): one raw-row limit probe
+    # of the edges, with the least/greatest+dedup done locally — the
     # identical undirected edge set (Python string ordering == UTF8String
-    # byte order), so bit-identical ranks. Raw rows bound the deduped set,
-    # so raw <= cap implies the old |und|*4 <= driver_threshold condition.
-    cap = driver_threshold // 4
-    probe = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .limit(cap + 1)
-        .collect()
-        if cap > 0
-        else None
-    )
-    if (
-        probe is not None
-        and len(probe) <= cap
-        and all(isinstance(r["a"], str) and isinstance(r["b"], str) for r in probe)
-    ):
-        pairs = sorted(
-            {
-                (min(r["a"], r["b"]), max(r["a"], r["b"]))
-                for r in probe
-                if r["a"] != r["b"]
-            }
-        )
+    # byte order), so bit-identical ranks.
+    g = local_graph(edges, src, dst, driver_threshold)
+    if g is not None:
         if seeds is None:
             seed_set = None
         elif isinstance(seeds, DataFrame):
             # Graph-bounded collect: semi-join the seed column against the
             # (tiny, driver-local-regime) vertex set BEFORE collecting, so
             # an oversized seed frame never ships to the driver.
-            verts_local = sorted({x for p in pairs for x in p})
-            vdf = spark.createDataFrame([(v,) for v in verts_local], "u string")
+            vdf = local_frame(spark, [(v,) for v in g.adj], ["u"], "u string")
             seed_set = {
                 r["u"]
                 for r in seeds.select(F.col(seeds.columns[0]).alias("u"))
@@ -165,11 +129,16 @@ def pagerank(
             }
         else:
             seed_set = set(seeds)
-        return _pagerank_driver_local(spark, pairs, damping, iters, seed_set)
+        return _pagerank_driver_local(spark, g.adj, damping, iters, seed_set)
     # Both directions, partitioned by the join side once and pinned; the
     # per-iteration join then shuffles only the vertex-sized rank state.
-    und = hard_checkpoint(und_plan)
-    n_part = max(edges.sparkSession.sparkContext.defaultParallelism, 8)
+    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
+    und = hard_checkpoint(
+        edges.select(a.alias("a"), b.alias("b"))
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+    )
+    n_part = max(spark.sparkContext.defaultParallelism, 8)
     adj = hard_checkpoint(
         und.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .unionByName(und.select(F.col("b").alias("u"), F.col("a").alias("v")))
@@ -180,7 +149,7 @@ def pagerank(
     deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     n = deg.count()  # one job; N is needed as a literal in the update
     if n == 0:
-        return edges.sparkSession.createDataFrame([], "vertex string, rank double")
+        return local_frame(spark, [], ["vertex", "rank"], _SCHEMA)
 
     if seeds is None:
         base_col = F.lit((1.0 - damping) / n)
@@ -205,9 +174,7 @@ def pagerank(
             marked = deg.withColumn("__s", is_seed.cast("int"))
         n_seed = marked.agg(F.sum("__s")).first()[0] or 0
         if n_seed == 0:
-            return edges.sparkSession.createDataFrame(
-                [], "vertex string, rank double"
-            )
+            return local_frame(spark, [], ["vertex", "rank"], _SCHEMA)
         deg = marked.select(
             "u",
             "deg",

@@ -52,6 +52,7 @@ from graphrag_litex_spark.operators.extraction import (
     items_raw_claims,
     items_raw_edges,
 )
+from graphrag_litex_spark.operators.iterutils import DRIVER_THRESHOLD, local_frame
 from graphrag_litex_spark.operators.linking import candidate_pairs
 from graphrag_litex_spark.operators.normalize_ops import norm_name_col
 
@@ -106,8 +107,6 @@ def build_report(spark: SparkSession, out_dir: str) -> DataFrame:
     The operator dashboard for "which stage cost what, and is any stage's
     output skewed" — read from ``_manifest.json`` only (no Spark job over
     the stage data; the manifest is KB-sized at any corpus scale)."""
-    import pandas as pd
-
     manifest_path = os.path.join(out_dir, "_manifest.json")
     with open(manifest_path) as f:
         manifest = json.load(f)
@@ -123,12 +122,11 @@ def build_report(spark: SparkSession, out_dir: str) -> DataFrame:
         for name, e in manifest.items()
         if isinstance(e, dict) and "fingerprint" in e
     ]
-    return spark.createDataFrame(
-        pd.DataFrame(
-            rows,
-            columns=["stage", "sec", "rows", "files", "bytes", "max_part_rows"],
-        ),
-        schema="stage string, sec double, rows long, files long, bytes long, "
+    return local_frame(
+        spark,
+        rows,
+        ["stage", "sec", "rows", "files", "bytes", "max_part_rows"],
+        "stage string, sec double, rows long, files long, bytes long, "
         "max_part_rows long",
     )
 
@@ -138,8 +136,6 @@ def build_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     row per output file of every completed stage that recorded partition
     detail (stages beyond _LINEAGE_MAX_FILES files keep aggregates only —
     surfaced here as zero rows for that stage, not an error)."""
-    import pandas as pd
-
     with open(os.path.join(out_dir, "_manifest.json")) as f:
         manifest = json.load(f)
     rows = [
@@ -153,9 +149,11 @@ def build_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
         if isinstance(e, dict)
         for p in e.get("partitions", [])
     ]
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["stage", "file", "rows", "bytes"]),
-        schema="stage string, file string, rows long, bytes long",
+    return local_frame(
+        spark,
+        rows,
+        ["stage", "file", "rows", "bytes"],
+        "stage string, file string, rows long, bytes long",
     )
 
 
@@ -1146,7 +1144,7 @@ class KGPipeline:
         # (comm_ops.graph_tail); larger graphs run the Spark operators.
         state_rows = sum(manifest.get(s, {}).get("rows", 0) for s in ("nodes", "edges"))
         _deg: dict[str, DataFrame] = {}
-        if state_rows <= comm_ops.DRIVER_THRESHOLD:
+        if state_rows <= DRIVER_THRESHOLD:
             tail: dict[str, DataFrame] = {}
 
             def local_table(name: str) -> DataFrame:

@@ -137,6 +137,11 @@ def test_hierarchy_driver_local_matches_distributed(spark, clique_graph):
 def random_graph(spark):
     """40 vertices, ~70 random edges: sparse enough to leave big parents,
     dropped sub-communities and passthrough communities at once."""
+    ids, pairs = _random_ids_pairs()
+    return _nodes_df(spark, ids), _edges_df(spark, pairs)
+
+
+def _random_ids_pairs():
     import random
 
     rng = random.Random(7)
@@ -145,8 +150,7 @@ def random_graph(spark):
         tuple(sorted((ids[rng.randrange(40)], ids[rng.randrange(40)])))
         for _ in range(70)
     }
-    pairs = [(a, b) for a, b in sorted(pairs) if a != b]
-    return _nodes_df(spark, ids), _edges_df(spark, pairs)
+    return ids, [(a, b) for a, b in sorted(pairs) if a != b]
 
 
 def test_hierarchy_identity_random_graph(spark, random_graph):
@@ -206,6 +210,35 @@ def test_lpa_driver_local_matches_distributed(spark, clique_graph):
         ).collect()
     }
     assert local == dist
+
+
+@pytest.mark.parametrize("kind", ["int", "null"])
+def test_adversarial_ids_match_distributed(spark, kind):
+    """Int ids, or a NULL vertex with an edge, fail the driver-local valve's
+    string guard: detect_communities and label_propagation then run their
+    distributed loops at the default threshold and equal the threshold-0
+    output. min_size=1 keeps the NULL vertex's singleton community valid."""
+    ids, pairs = _random_ids_pairs()
+    if kind == "int":
+        ids = [int(i[1:]) for i in ids]
+        pairs = [(int(a[1:]), int(b[1:])) for a, b in pairs]
+        typ = "long"
+    else:
+        ids, pairs, typ = ids + [None], pairs + [("n00", None)], "string"
+    nodes = spark.createDataFrame([(i, str(i)) for i in ids], f"entity_id {typ}, name string")
+    edges = spark.createDataFrame(pairs, f"src_id {typ}, dst_id {typ}")
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    kw = dict(levels=3, min_size=1, lpa_iters=8)
+    assert rows(C.detect_communities(nodes, edges, **kw)) == rows(
+        C.detect_communities(nodes, edges, driver_threshold=0, **kw)
+    )
+    verts, und = nodes.select("entity_id"), edges.toDF("u", "v")
+    assert rows(C.label_propagation(verts, und, iters=6)) == rows(
+        C.label_propagation(verts, und, iters=6, driver_threshold=0)
+    )
 
 
 # ---- partition quality vs the reference's Louvain fallback ----------------

@@ -734,6 +734,52 @@ def test_hop_distances_driver_local_matches_distributed(spark):
     )
     assert local == dist and local
 
+    # int sources on a string-id graph compare as their strings on both
+    # paths: 7 matches the vertex "7", 99 matches nothing.
+    e = _edges_df(spark, [(a[1:], b[1:]) for a, b in pairs])
+    srcs = [7, 99, 7]
+    local = sorted(
+        (r["vertex"], r["source"], r["dist"])
+        for r in hop_distances(e, srcs, max_hops=3).collect()
+    )
+    dist = sorted(
+        (r["vertex"], r["source"], r["dist"])
+        for r in hop_distances(e, srcs, max_hops=3, driver_threshold=0).collect()
+    )
+    assert local == dist and ("7", "7", 0) in local and len(local) > 4
+
+
+def test_k_truss_max_iters_boundary_parity(spark):
+    """Each vertex of v0..v7 joined to its next four peels empty under k=6
+    in exactly three rounds: with max_iters=3 both regimes return the empty
+    truss, with max_iters=2 both raise."""
+    from graphrag_litex_spark.operators.graph_analytics import k_truss
+
+    pairs = [(f"v{i}", f"v{j}") for i in range(8) for j in range(i + 1, min(8, i + 5))]
+    e = _edges_df(spark, pairs)
+    for thr in (100_000, 0):
+        assert k_truss(e, 6, max_iters=3, driver_threshold=thr).count() == 0
+        with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+            k_truss(e, 6, max_iters=2, driver_threshold=thr)
+
+
+def test_neighborhood_exact_gate_clamped_to_sketch_exactness(spark):
+    """A 700-leaf star's center ball (701 vertices) leaves the lg_k=12
+    sketches' exact coupon mode, so a caller's large driver_threshold must
+    not switch the result to exact BFS counts: the valve stays at
+    (1 << lg_k) // 16 vertices and both thresholds return sketch estimates.
+    Outside the exact mode the estimates move run to run with the sketch
+    union order (2103 vs 2108 seen at t=1), so the two runs are compared
+    within sketch error, and against the exact counts for inequality."""
+    from graphrag_litex_spark.operators.graph_analytics import neighborhood_function
+
+    e = _edges_df(spark, [("hub", f"leaf{i:03d}") for i in range(700)])
+    big = sorted(tuple(r) for r in neighborhood_function(e, driver_threshold=10_000).collect())
+    dist = sorted(tuple(r) for r in neighborhood_function(e, driver_threshold=0).collect())
+    assert big != [(0, 701.0), (1, 2101.0), (2, 491401.0), (3, 491401.0)]
+    assert [t for t, _ in big[:3]] == [t for t, _ in dist[:3]] == [0, 1, 2]
+    assert [n for _, n in big[:3]] == pytest.approx([n for _, n in dist[:3]], rel=0.05)
+
 
 def test_neighborhood_driver_local_matches_distributed(spark):
     from graphrag_litex_spark.operators.graph_analytics import neighborhood_function
