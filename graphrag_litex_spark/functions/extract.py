@@ -20,7 +20,7 @@ Semantics preserved from the reference:
     (/root/reference/extraction/simple_claim_extractor.py:44-94).
 
 The function is PURE (no I/O, no randomness) so it can be wrapped in an
-Arrow-batched pandas UDF (operators/extraction.py) with bit-identical output.
+Arrow-batched mapInArrow kernel (operators/extraction.py) with bit-identical output.
 """
 
 from __future__ import annotations

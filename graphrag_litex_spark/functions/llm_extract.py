@@ -197,8 +197,8 @@ def make_llm_extractor(
     client: LLMExtractorClient,
     prompt_template: str = DEFAULT_PROMPT_TEMPLATE,
 ) -> Callable[[str], dict]:
-    """-> ``text -> extraction dict`` pluggable into extract_items /
-    extract_chunks (same slot as the deterministic default)."""
+    """-> ``text -> extraction dict`` pluggable into extract_items
+    (same slot as the deterministic default)."""
 
     def extractor(text: str) -> dict:
         if not text:

@@ -3,12 +3,14 @@
 The reference extracts entities/relationships per chunk with one LLM call
 per chunk fanned out by asyncio (/root/reference/extraction/
 simple_entity_extractor.py:47-124) and claims in a second pass
-(simple_claim_extractor.py:44-94). Here extraction is ONE pandas UDF applied
-to the chunk DataFrame: Spark hands the UDF whole Arrow batches, the
-deterministic extractor (functions/extract.py) runs per batch in a tight
-loop, and the result comes back as a single nested struct column that is
-then `explode`d into mentions / raw_edges / raw_claims — zero per-row Python
-bridging, no driver-side loops.
+(simple_claim_extractor.py:44-94). Here extraction is ONE ``mapInArrow``
+kernel over the chunk DataFrame (:func:`extract_items`): Spark hands it
+whole Arrow batches, the deterministic extractor (functions/extract.py)
+runs per batch in a tight loop, and the result comes back as a FLAT item
+stream — one row per extracted entity / relationship / claim — that the
+``items_*`` views below project into mentions / raw_edges / raw_claims.
+Zero per-row Python bridging, no driver-side loops. The batch build, the
+incremental append and the streaming ingest all run this one kernel.
 
 The extractor is pluggable (same stance as the reference's LLMClient): any
 ``text -> {"entities": [...], "relationships": [...], "claims": [...]}``
@@ -17,100 +19,21 @@ registered; an LLM-backed batch implementation would slot in here, with
 retry/backoff inside the batch function (reference analog
 utils/llm_client.py:38-43,94-99).
 """
-
 from __future__ import annotations
 
 from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-EXTRACTION_SCHEMA = T.StructType(
-    [
-        T.StructField(
-            "entities",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("name", T.StringType()),
-                        T.StructField("type", T.StringType()),
-                        T.StructField("description", T.StringType()),
-                    ]
-                )
-            ),
-        ),
-        T.StructField(
-            "relationships",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("source", T.StringType()),
-                        T.StructField("target", T.StringType()),
-                        T.StructField("description", T.StringType()),
-                        T.StructField("strength", T.DoubleType()),
-                    ]
-                )
-            ),
-        ),
-        T.StructField(
-            "claims",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("content", T.StringType()),
-                        T.StructField("entities", T.ArrayType(T.StringType())),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
-
-
-def make_extract_udf(extractor: Callable[[str], dict] | None = None):
-    """Build the Arrow-batched extraction UDF around ``extractor``.
-
-    Per-row failures produce an empty extraction rather than a task failure
-    (the reference logs & skips failed chunks,
-    simple_entity_extractor.py:114-117).
-    """
-    if extractor is None:
-        from graphrag_litex_spark.functions.extract import extract_turn as extractor
-
-    @F.pandas_udf(EXTRACTION_SCHEMA)
-    def extract_udf(texts: pd.Series) -> pd.DataFrame:
-        ents, rels, clms = [], [], []
-        for txt in texts:
-            try:
-                res = extractor(txt) if txt else {"entities": [], "relationships": [], "claims": []}
-            except Exception:
-                res = {"entities": [], "relationships": [], "claims": []}
-            ents.append([(e["name"], e["type"], e["description"]) for e in res["entities"]])
-            rels.append(
-                [
-                    (r["source"], r["target"], r["description"], float(r["strength"]))
-                    for r in res["relationships"]
-                ]
-            )
-            clms.append([(c["content"], list(c["entities"])) for c in res["claims"]])
-        return pd.DataFrame({"entities": ents, "relationships": rels, "claims": clms})
-
-    return extract_udf
-
-
-def extract_chunks(chunks: DataFrame, extractor: Callable[[str], dict] | None = None) -> DataFrame:
-    """chunks(chunk_id, conv_id, turn_idx, text, ...) -> + extraction struct."""
-    return chunks.withColumn("extraction", make_extract_udf(extractor)(F.col("text")))
-
+from graphrag_litex_spark.operators.normalize_ops import norm_name_col
 
 # Flat item-stream schema: one row per extracted entity/relationship/claim.
-# Converting flat string/double columns through Arrow is vectorized; the
-# nested array<struct> roundtrip of EXTRACTION_SCHEMA costs ~8x more Python
-# time per row (measured: 84k rows/s/core raw extractor vs ~10k through the
-# nested UDF). The pipeline hot path uses this; the nested UDF remains as
-# the reference-shaped API.
+# Converting flat string/double columns through Arrow is vectorized; a
+# nested array<struct> result column costs ~8x more Python time per row
+# (measured: 84k rows/s/core raw extractor vs ~10k through a nested-struct
+# pandas UDF).
 #
 # The schema is deliberately NARROW (8 cols, kind-overloaded f1/f2/f3):
 # the item stream is ~4x the row count of the corpus, so every byte shipped
@@ -142,7 +65,12 @@ def chunk_id_col(source_col: str = "source_id", turn_col: str = "turn_idx") -> F
 
 
 def extract_items(chunks: DataFrame, extractor: Callable[[str], dict] | None = None) -> DataFrame:
-    """Arrow-batched flat extraction: chunks -> one row per extracted item.
+    """Arrow-batched flat extraction: chunks(conv_id, turn_idx, text) ->
+    one row per extracted item (ITEM_SCHEMA + ``norm_name``).
+
+    ``norm_name`` (entity rows only) is the Catalyst normalizer over the
+    entity name, computed here once so no downstream stage re-normalizes
+    per mention.
 
     Builds output COLUMNARLY (one Python list per column) from the
     flat-tuple extractor; per-row failures produce no items rather than
@@ -241,7 +169,11 @@ def extract_items(chunks: DataFrame, extractor: Callable[[str], dict] | None = N
                 schema=arrow_schema,
             )
 
-    return chunks.select("conv_id", "turn_idx", "text").mapInArrow(batches, ITEM_SCHEMA)
+    return (
+        chunks.select("conv_id", "turn_idx", "text")
+        .mapInArrow(batches, ITEM_SCHEMA)
+        .withColumn("norm_name", F.when(F.col("kind") == "e", norm_name_col("f1")))
+    )
 
 
 def items_mentions(items: DataFrame) -> DataFrame:
@@ -253,6 +185,7 @@ def items_mentions(items: DataFrame) -> DataFrame:
         F.col("f1").alias("name"),
         F.col("f2").alias("type"),
         F.col("f3").alias("description"),
+        "norm_name",
     )
 
 
@@ -277,60 +210,4 @@ def items_raw_claims(items: DataFrame) -> DataFrame:
         "turn_idx",
         F.col("f3").alias("content"),
         "entity_names",
-    )
-
-
-def explode_mentions(extractions: DataFrame) -> DataFrame:
-    """S3 mentions: one row per extracted entity mention, with provenance.
-
-    Provenance instance = (source_id, chunk_id), mirroring the reference's
-    EntityInstance attach at simple_entity_extractor.py:176-189.
-    """
-    return extractions.select(
-        F.col("conv_id").alias("source_id"),
-        "chunk_id",
-        "turn_idx",
-        F.explode("extraction.entities").alias("e"),
-    ).select(
-        "source_id",
-        "chunk_id",
-        "turn_idx",
-        F.col("e.name").alias("name"),
-        F.col("e.type").alias("type"),
-        F.col("e.description").alias("description"),
-    )
-
-
-def explode_raw_edges(extractions: DataFrame) -> DataFrame:
-    """S4 raw_edges: one row per extracted relationship (names as temp ids,
-    simple_entity_extractor.py:210-211)."""
-    return extractions.select(
-        F.col("conv_id").alias("source_id"),
-        "chunk_id",
-        "turn_idx",
-        F.explode("extraction.relationships").alias("r"),
-    ).select(
-        "source_id",
-        "chunk_id",
-        "turn_idx",
-        F.col("r.source").alias("source"),
-        F.col("r.target").alias("target"),
-        F.col("r.description").alias("pred"),
-        F.col("r.strength").alias("strength"),
-    )
-
-
-def explode_raw_claims(extractions: DataFrame) -> DataFrame:
-    """Raw claims with provenance (simple_claim_extractor.py:83-91)."""
-    return extractions.select(
-        F.col("conv_id").alias("source_id"),
-        "chunk_id",
-        "turn_idx",
-        F.explode("extraction.claims").alias("c"),
-    ).select(
-        "source_id",
-        "chunk_id",
-        "turn_idx",
-        F.col("c.content").alias("content"),
-        F.col("c.entities").alias("entity_names"),
     )

@@ -3,16 +3,15 @@
 The reference normalizes with NFKD -> ASCII-fold -> lower -> non-alnum ->
 space -> strip (/root/reference/extraction/entity_resolver.py:14-20). NFKD
 needs Python in general, but the hot path must stay JVM-side (north rule:
-zero per-row Python), so the default is a pure-column expression:
+zero per-row Python), so normalization is a pure-column expression:
 
     lower() -> translate(<Latin accent fold table>) -> regexp_replace -> trim
 
 which matches the Python normalizer byte-for-byte on all Latin-script input
 (tested against functions/normalize.py on the corpus vocabulary plus a
-Latin-1 sweep in tests/test_normalize.py). For non-Latin scripts the
-Arrow-batched ``normalize_udf`` below is the exact NFKD implementation;
-swap it in via ``exact=True`` when the corpus needs it — it only ever runs
-over DISTINCT names, not per mention, so either path is cheap.
+Latin-1 sweep in tests/test_normalize.py). For non-Latin scripts the exact
+NFKD implementation is the Python normalizer itself
+(functions/normalize.normalize_name).
 
 Known divergence (documented): characters that NFKD cannot decompose to
 ASCII (e.g. ``æ``) are *deleted* by the Python path but become a token break
@@ -21,10 +20,8 @@ in the SQL path; neither occurs in Latin business text.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # Lowercase Latin accent fold (applied after lower()); 1:1 so translate()
 # works. Derived at import time from NFKD itself so the SQL path provably
@@ -55,17 +52,6 @@ def norm_name_col(col: Column | str) -> Column:
     c = F.translate(c, _ACCENT_SRC, _ACCENT_DST)
     c = F.regexp_replace(c, r"[^a-z0-9]+", " ")
     return F.trim(c)
-
-
-def _normalize_batch(names: pd.Series) -> pd.Series:
-    from graphrag_litex_spark.functions.normalize import normalize_name
-
-    return names.map(normalize_name)
-
-
-# Exact NFKD normalizer (Arrow-batched) for non-Latin corpora. Declared with
-# a types object (not a DDL string) so import works without an active session.
-normalize_udf = F.pandas_udf(_normalize_batch, T.StringType())
 
 
 def char_ngrams_col(col: Column | str, n: int = 3) -> Column:

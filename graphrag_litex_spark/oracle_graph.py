@@ -647,10 +647,11 @@ def global_search_golden(
     helpfulness = 100 * Jaccard(question tokens, full_text tokens) rounded
     HALF_UP to 4dp; empty answers dropped (reference map_reduce.py:35).
     Token split replicates Spark's ``split(lower(x), '[^a-z0-9]+')`` with
-    limit=-1 — re.split keeps the same leading/trailing '' fragments."""
+    limit=-1 — re.split keeps the same leading/trailing '' fragments
+    (dropped from the question's tokens, as ``array_remove`` does)."""
     import re
 
-    q_tokens = set(question.lower().split())
+    q_tokens = set(re.split(r"[^a-z0-9]+", question.lower())) - {""}
     by_key = {(s["level"], s["community_id"]): s for s in summaries}
     out = []
     for r in topk:

@@ -562,8 +562,9 @@ class KGPipeline:
         ``run(resume=True)``), while extraction — the corpus-proportional
         hot path that dominates at 10^12 turns — is never recomputed for
         data already ingested. Returns the number of new turns ingested.
-        The streaming analog is streaming/incremental.stream_extract; this
-        is the batch path with manifest bookkeeping.
+        Same ``extract_items`` kernel as the full build and as the
+        streaming analog (streaming/incremental.stream_extract); this is
+        the batch path with manifest bookkeeping.
 
         Crash-safe: the manifest's extractions fingerprint is invalidated
         (set to a ``pending:`` marker) and persisted BEFORE any rows are
@@ -599,10 +600,7 @@ class KGPipeline:
         # Same hygiene as a full rebuild — in particular, an append whose
         # input contains a previously-forgotten conversation must not
         # re-ingest it.
-        new_tr = self._ingest_filters(new_tr, manifest)
-        n_part = max(self.spark.sparkContext.defaultParallelism * 2, 8)
-        if new_tr.rdd.getNumPartitions() < n_part // 2:
-            new_tr = new_tr.repartition(n_part, "conv_id")
+        new_tr = self._fan_out(self._ingest_filters(new_tr, manifest))
         n_new = new_tr.count()
         t0 = time.time()
 
@@ -611,9 +609,7 @@ class KGPipeline:
         manifest["extractions"] = {**entry, "fingerprint": f"pending-append:{new_path}"}
         self._save_manifest(manifest)
 
-        items = extract_items(
-            new_tr.select("conv_id", "turn_idx", "text")
-        ).withColumn("norm_name", F.when(F.col("kind") == "e", norm_name_col("f1")))
+        items = extract_items(new_tr.select("conv_id", "turn_idx", "text"))
         items.write.mode("append").parquet(path)
 
         # Commit: record the new input and the now-valid fingerprint.
@@ -628,6 +624,17 @@ class KGPipeline:
         return n_new
 
     # ---- shared ingest hygiene -------------------------------------------
+    def _fan_out(self, df: DataFrame) -> DataFrame:
+        """Spread transcripts for the extraction hot path, shared by full
+        rebuilds and appends: repartition by conv_id ONLY when the source's
+        file layout under-parallelizes it (a well-partitioned warehouse
+        table needs no shuffle here; a single small parquet file would
+        otherwise pin extraction to one task; SURVEY.md §4)."""
+        n_part = max(self.spark.sparkContext.defaultParallelism * 2, 8)
+        if df.rdd.getNumPartitions() < n_part // 2:
+            return df.repartition(n_part, "conv_id")
+        return df
+
     def _ingest_filters(
         self, df: DataFrame, manifest: dict, redact: bool = True
     ) -> DataFrame:
@@ -820,15 +827,7 @@ class KGPipeline:
         # Turn text is carried through UNMODIFIED (per-turn text equality
         # invariant, BASELINE input_hint). A trivial projection — kept as a
         # VIEW (materializing it re-wrote the whole corpus once for nothing).
-        # Repartition ONLY when the source's file layout under-parallelizes
-        # the hot path (a well-partitioned warehouse table needs no shuffle
-        # here; a single small parquet file would otherwise pin extraction
-        # to one task; SURVEY.md §4).
-        n_part = max(self.spark.sparkContext.defaultParallelism * 2, 8)
-        src = transcripts
-        if transcripts.rdd.getNumPartitions() < n_part // 2:
-            src = transcripts.repartition(n_part, "conv_id")
-        results["chunks"] = src.select(
+        results["chunks"] = self._fan_out(transcripts).select(
             "conv_id",
             "turn_idx",
             "role",
@@ -842,16 +841,13 @@ class KGPipeline:
 
         # S2 extraction (C1/C4): one Arrow-batched mapInArrow pass emitting
         # a FLAT item stream (one row per entity/relationship/claim) — flat
-        # Arrow columns convert ~8x faster than the nested-struct shape.
-        # norm_name is computed at write time (JVM expression) so downstream
-        # stages never touch Python.
+        # Arrow columns convert ~8x faster than a nested-struct shape.
+        # extract_items adds norm_name at write time (JVM expression) so
+        # downstream stages never touch Python.
         results["extractions"] = mat(
             "extractions",
             lambda: extract_items(
                 results["chunks"].select("conv_id", "turn_idx", "text")
-            ).withColumn(
-                "norm_name",
-                F.when(F.col("kind") == "e", norm_name_col("f1")),
             ),
         )
         # NOT cached: five downstream stages each scan it once; zstd-decoding
@@ -869,17 +865,7 @@ class KGPipeline:
         # intermediate 3x for no checkpoint benefit (the kind filter and
         # column pruning reach the parquet scan; shared-disk write bandwidth
         # was the scaling bottleneck).
-        from graphrag_litex_spark.operators.extraction import chunk_id_col
-
-        results["mentions"] = results["extractions"].where(F.col("kind") == "e").select(
-            "source_id",
-            chunk_id_col().alias("chunk_id"),
-            "turn_idx",
-            F.col("f1").alias("name"),
-            F.col("f2").alias("type"),
-            F.col("f3").alias("description"),
-            "norm_name",
-        )
+        results["mentions"] = items_mentions(results["extractions"])
         results["raw_edges"] = items_raw_edges(results["extractions"])
         results["raw_claims"] = items_raw_claims(results["extractions"])
         if until in ("mentions", "raw_edges", "raw_claims"):

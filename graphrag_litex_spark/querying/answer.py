@@ -111,65 +111,56 @@ def select_top_k_batch(
     )
 
 
+def _map_columns(question: F.Column) -> tuple[F.Column, F.Column]:
+    """J1 map scoring for a question COLUMN -> (answer, helpfulness).
+
+    The question and the summary text are tokenized alike, by the
+    ``[^a-z0-9]+`` regex (empty fragments dropped from the question), so
+    the single and batch paths score every question identically. A
+    literal question folds to a constant token array at plan time.
+    """
+    q_tokens = F.array_distinct(
+        F.array_remove(F.split(F.lower(question), r"[^a-z0-9]+"), "")
+    )
+    s_tokens = F.array_distinct(F.split(F.lower(F.col("full_text")), r"[^a-z0-9]+"))
+    inter = F.size(F.array_intersect(s_tokens, q_tokens))
+    union = F.size(F.array_union(s_tokens, q_tokens))
+    helpful = F.when(union > 0, F.round(100.0 * inter / union, 4)).otherwise(F.lit(0.0))
+    relevant = F.filter(
+        F.col("findings"),
+        lambda f: F.size(
+            F.array_intersect(F.split(F.lower(f["summary"]), r"[^a-z0-9]+"), q_tokens)
+        )
+        > 0,
+    )
+    answer = F.concat_ws(" ", F.transform(relevant, lambda f: f["summary"]))
+    return answer.alias("answer"), helpful.alias("helpfulness")
+
+
 def map_answers(selected: DataFrame, question: str) -> DataFrame:
     """J1 map: per-summary answer + helpfulness, as column expressions.
 
     answer = finding summaries sharing >=1 token with the question;
     helpfulness = 100 * Jaccard(question tokens, full_text tokens).
     """
-    q_tokens = F.array(*[F.lit(t) for t in sorted(set(question.lower().split()))])
-    s_tokens = F.array_distinct(F.split(F.lower(F.col("full_text")), r"[^a-z0-9]+"))
-    inter = F.size(F.array_intersect(s_tokens, q_tokens))
-    union = F.size(F.array_union(s_tokens, q_tokens))
-    helpful = F.when(union > 0, F.round(100.0 * inter / union, 4)).otherwise(F.lit(0.0))
-    relevant = F.filter(
-        F.col("findings"),
-        lambda f: F.size(
-            F.array_intersect(F.split(F.lower(f["summary"]), r"[^a-z0-9]+"), q_tokens)
-        )
-        > 0,
-    )
+    answer, helpful = _map_columns(F.lit(question))
     return selected.select(
-        "level",
-        "community_id",
-        F.col("title"),
-        F.concat_ws(" ", F.transform(relevant, lambda f: f["summary"])).alias("answer"),
-        helpful.alias("helpfulness"),
-        F.col("score"),
+        "level", "community_id", F.col("title"), answer, helpful, F.col("score")
     ).where(F.col("answer") != "")  # drop empty map answers (map_reduce.py:35)
 
 
 def map_answers_batch(selected_batch: DataFrame) -> DataFrame:
-    """J1 map over a multi-question selection (``question`` is a COLUMN).
-
-    Same scoring as :func:`map_answers` with the question tokenized by the
-    same ``[^a-z0-9]+`` regex as the summary text (for questions containing
-    punctuation this differs from the single-question path's whitespace
-    split — the regex form is the more principled one; they agree on
-    alphanumeric questions, asserted in tests).
-    """
-    q_tokens = F.array_distinct(
-        F.filter(F.split(F.lower(F.col("question")), r"[^a-z0-9]+"), lambda t: t != "")
-    )
-    s_tokens = F.array_distinct(F.split(F.lower(F.col("full_text")), r"[^a-z0-9]+"))
-    inter = F.size(F.array_intersect(s_tokens, q_tokens))
-    union = F.size(F.array_union(s_tokens, q_tokens))
-    helpful = F.when(union > 0, F.round(100.0 * inter / union, 4)).otherwise(F.lit(0.0))
-    relevant = F.filter(
-        F.col("findings"),
-        lambda f: F.size(
-            F.array_intersect(F.split(F.lower(f["summary"]), r"[^a-z0-9]+"), q_tokens)
-        )
-        > 0,
-    )
+    """J1 map over a multi-question selection (``question`` is a COLUMN);
+    same scoring as :func:`map_answers`."""
+    answer, helpful = _map_columns(F.col("question"))
     return selected_batch.select(
         "question_id",
         "question",
         "level",
         "community_id",
         F.col("title"),
-        F.concat_ws(" ", F.transform(relevant, lambda f: f["summary"])).alias("answer"),
-        helpful.alias("helpfulness"),
+        answer,
+        helpful,
         F.col("score"),
     ).where(F.col("answer") != "")
 

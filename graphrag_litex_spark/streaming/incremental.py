@@ -5,8 +5,9 @@ The reference is a pure batch pipeline (SURVEY.md §I: no streaming anywhere;
 (checkpoint-resumable batch stages). This module adds the piece a
 continuously-fed transcript store needs: a `readStream` file source over
 arriving transcript parquet, per-microbatch extraction with the SAME
-Arrow-batched UDF, and append-only mentions/raw_edges/raw_claims deltas —
-so the expensive extraction runs exactly once per turn, incrementally,
+Arrow-batched ``extract_items`` kernel as the batch build, and append-only
+mentions/raw_edges/raw_claims deltas (the batch build's ``items_*`` views)
+— so the expensive extraction runs exactly once per turn, incrementally,
 while the graph stages (linking/CC/merge) are re-run in batch over the
 accumulated deltas (they are cheap relative to extraction and must see the
 whole corpus anyway for canonicalization).
@@ -24,10 +25,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphrag_litex_spark.operators.extraction import (
-    explode_mentions,
-    explode_raw_claims,
-    explode_raw_edges,
-    extract_chunks,
+    extract_items,
+    items_mentions,
+    items_raw_claims,
+    items_raw_edges,
 )
 from graphrag_litex_spark.sources.tables import TRANSCRIPT_SCHEMA
 
@@ -56,32 +57,24 @@ def stream_extract(
         .option("maxFilesPerTrigger", 8)
         .parquet(input_dir)
     )
-    chunks = stream.select(
-        "conv_id",
-        "turn_idx",
-        "text",
-        F.concat_ws("_", "conv_id", "turn_idx").alias("chunk_id"),
-    )
-    extracted = extract_chunks(chunks).drop("text")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # One pass per microbatch: materialize once, fan out three appends.
-        batch_df.persist()
+        # One extraction pass per microbatch: materialize the item stream
+        # once, fan out three appends.
+        items = extract_items(batch_df).persist()
         try:
-            explode_mentions(batch_df).write.mode("append").parquet(
-                os.path.join(out_dir, "mentions_delta")
-            )
-            explode_raw_edges(batch_df).write.mode("append").parquet(
-                os.path.join(out_dir, "raw_edges_delta")
-            )
-            explode_raw_claims(batch_df).write.mode("append").parquet(
-                os.path.join(out_dir, "raw_claims_delta")
-            )
+            for name, view in (
+                ("mentions_delta", items_mentions),
+                ("raw_edges_delta", items_raw_edges),
+                ("raw_claims_delta", items_raw_claims),
+            ):
+                view(items).write.mode("append").parquet(os.path.join(out_dir, name))
         finally:
-            batch_df.unpersist()
+            items.unpersist()
 
     writer = (
-        extracted.writeStream.foreachBatch(write_batch)
+        stream.select("conv_id", "turn_idx", "text")
+        .writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", os.path.join(out_dir, "_stream_checkpoint"))
     )
     if trigger_once:

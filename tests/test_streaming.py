@@ -1,6 +1,7 @@
 """Structured Streaming incremental ingest (streaming/incremental.py)."""
 
 import os
+import re
 
 import pyarrow.parquet as pq
 import pytest
@@ -36,17 +37,90 @@ def test_incremental_extraction_appends(spark, split_corpus, tmp_path_factory):
     n2 = mentions.count()
     assert n2 > n1
 
-    # The union of streamed deltas equals the batch pipeline's mentions.
-    from graphrag_litex_spark.operators.extraction import explode_mentions, extract_chunks
+    # The union of streamed deltas equals the batch views over the same
+    # input, row for row (multiset equality: exceptAll both ways).
+    from graphrag_litex_spark.operators.extraction import (
+        extract_items,
+        items_mentions,
+        items_raw_claims,
+        items_raw_edges,
+    )
 
-    batch = extract_chunks(
-        spark.read.parquet(input_dir).select(
-            "conv_id", "turn_idx", "text",
-            F.concat_ws("_", "conv_id", "turn_idx").alias("chunk_id"),
+    items = extract_items(spark.read.parquet(input_dir))
+    for name, view in (
+        ("mentions_delta", items_mentions),
+        ("raw_edges_delta", items_raw_edges),
+        ("raw_claims_delta", items_raw_claims),
+    ):
+        got = spark.read.parquet(os.path.join(out, name))
+        want = view(items)
+        assert got.columns == want.columns, name
+        assert got.exceptAll(want).count() == 0, name
+        assert want.exceptAll(got).count() == 0, name
+    assert n2 == items_mentions(items).count()
+
+
+_PY_NODES = re.compile(r"Python|InArrow|InPandas")
+
+
+def _python_nodes(plan) -> list[str]:
+    """Node names of a plan tree string (cached inner plans included)
+    that run Python."""
+    names = []
+    for line in plan.toString().splitlines():
+        m = re.match(r"^[\s:|+-]*(?:\*\(\d+\) )?([A-Za-z]+)", line)
+        if m and _PY_NODES.search(m.group(1)):
+            names.append(m.group(1))
+    return names
+
+
+@pytest.fixture
+def written_plans(monkeypatch):
+    """{parquet path: optimized logical plan} of every DataFrame write."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans = {}
+    orig = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **k):
+        plans[os.path.basename(path.rstrip("/"))] = (
+            self._df._jdf.queryExecution().optimizedPlan()
         )
-    ).drop("text")
-    want = explode_mentions(batch).count()
-    assert n2 == want
+        return orig(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    return plans
+
+
+@pytest.fixture
+def small_input(corpus_sf0001, tmp_path):
+    d = tmp_path / "in"
+    d.mkdir()
+    t = pq.read_table(corpus_sf0001["transcripts"]).slice(0, 40)
+    pq.write_table(t, str(d / "part-0.parquet"))
+    return str(d)
+
+
+def test_pipeline_extraction_plan_one_python_node(spark, small_input, tmp_path, written_plans):
+    """The build's extractions stage runs exactly one Python node: the
+    extract_items MapInArrow kernel (no per-row eval UDF)."""
+    from graphrag_litex_spark.plans.pipeline import run_pipeline
+
+    run_pipeline(spark, small_input, str(tmp_path / "kg"), resume=False, until="extractions")
+    assert _python_nodes(written_plans["extractions"]) == ["MapInArrow"]
+
+
+def test_stream_extract_plan_one_python_node(spark, small_input, tmp_path, written_plans):
+    """Every per-microbatch write of stream_extract runs the same single
+    MapInArrow kernel as the batch build."""
+    from graphrag_litex_spark.streaming.incremental import stream_extract
+
+    q = stream_extract(spark, small_input, str(tmp_path / "out"), trigger_once=True)
+    q.awaitTermination(120)
+    names = ("mentions_delta", "raw_edges_delta", "raw_claims_delta")
+    assert sorted(written_plans) == sorted(names)
+    for name in names:
+        assert _python_nodes(written_plans[name]) == ["MapInArrow"], name
 
 
 def test_windowed_turn_activity_batch_semantics(spark, corpus_sf0001):
