@@ -34,6 +34,55 @@ _DDB_TEXT_NORM = (
     "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]+', ' ', 'g'), "
     "'\\s+', ' ', 'g'))"
 )
+# Gopher n-gram repetition oracle over a ``documents`` view: the relational
+# formulation (explode every n-gram, count per (doc, n, gram), rank, pivot)
+# that operators/scrub.ngram_repetition_stats' Arrow kernel must match.
+NGRAM_REPETITION_SQL = f"""
+    WITH b AS (
+        SELECT doc_id, {_DDB_TEXT_NORM} AS norm FROM documents
+    ), t AS (
+        SELECT doc_id,
+               CASE WHEN norm = '' THEN [] ELSE string_split(norm, ' ') END AS toks,
+               length(norm) AS n_chars
+        FROM b
+    ), g AS (
+        SELECT doc_id, n_chars, n,
+               array_to_string(list_slice(toks, i, i + n - 1), ' ') AS gram
+        FROM (
+            SELECT t.doc_id, t.n_chars, ns.n, t.toks,
+                   unnest(generate_series(1, len(t.toks) - ns.n + 1)) AS i
+            FROM t CROSS JOIN (VALUES (2), (3), (4), (5), (10)) AS ns(n)
+        )
+    ), c AS (
+        SELECT doc_id, n_chars, n, gram, count(*) AS c
+        FROM g GROUP BY ALL
+    ), r AS (
+        SELECT *, row_number() OVER (
+            PARTITION BY doc_id, n ORDER BY c DESC, gram ASC) AS rk
+        FROM c
+    ), a AS (
+        SELECT doc_id, n,
+               max(CASE WHEN rk = 1 THEN c * length(gram) END) AS top_chars,
+               sum((c - 1) * length(gram)) AS dup_chars
+        FROM r GROUP BY ALL
+    ), p AS (
+        SELECT doc_id,
+               max(CASE WHEN n = 2 THEN top_chars END) AS t2,
+               max(CASE WHEN n = 3 THEN top_chars END) AS t3,
+               max(CASE WHEN n = 4 THEN top_chars END) AS t4,
+               max(CASE WHEN n = 5 THEN dup_chars END) AS d5,
+               max(CASE WHEN n = 10 THEN dup_chars END) AS d10
+        FROM a GROUP BY doc_id
+    )
+    SELECT t.doc_id, cast(t.n_chars AS bigint) AS n_chars,
+           coalesce(round(coalesce(t2, 0) * 1.0 / nullif(t.n_chars, 0), 6), 0.0) AS top2gram_char_frac,
+           coalesce(round(coalesce(t3, 0) * 1.0 / nullif(t.n_chars, 0), 6), 0.0) AS top3gram_char_frac,
+           coalesce(round(coalesce(t4, 0) * 1.0 / nullif(t.n_chars, 0), 6), 0.0) AS top4gram_char_frac,
+           coalesce(round(coalesce(d5, 0) * 1.0 / nullif(t.n_chars, 0), 6), 0.0) AS dup5gram_char_frac,
+           coalesce(round(coalesce(d10, 0) * 1.0 / nullif(t.n_chars, 0), 6), 0.0) AS dup10gram_char_frac
+    FROM t LEFT JOIN p USING (doc_id)
+    ORDER BY doc_id
+"""
 # Stopword list literals shared with operators.text_analysis.STOPWORDS:
 from graphrag_litex_spark.operators.text_analysis import BPE_PRETOKEN_RE as _BPE_RE
 from graphrag_litex_spark.operators.text_analysis import STOPWORDS as _SW
@@ -1552,10 +1601,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def ngram_repetition(spark, sf_dir):
         """Gopher n-gram repetition signals (top-2/3/4-gram and dup-5/10-
-        gram character coverage, Rae et al. 2021 §A1.1): every n generated
-        in one projection, one (id, n, gram) hash agg, conditional-agg
-        pivot back to columns. Full value compare vs the same n-gram
-        enumeration in SQL (list_slice + generate_series)."""
+        gram character coverage, Rae et al. 2021 §A1.1): one zero-shuffle
+        Arrow kernel pass, one Counter per document. Full value compare vs
+        the relational n-gram enumeration in SQL (list_slice +
+        generate_series, ``NGRAM_REPETITION_SQL``)."""
         from graphrag_litex_spark.operators.scrub import ngram_repetition_stats
 
         d = spark.read.parquet(_t(sf_dir, "documents"))
@@ -1774,12 +1823,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from graphrag_litex_spark.operators.dedup import duplicate_keeper_map
 
         d = spark.read.parquet(_t(sf_dir, "documents"))
-        return duplicate_keeper_map(
-            d,
-            jaccard_threshold=0.5,
-            cc_algorithm="alternating",
-            cc_driver_threshold=0,
-        )
+        return duplicate_keeper_map(d, jaccard_threshold=0.5, cc_driver_threshold=0)
 
     def dedup_simhash(spark, sf_dir):
         from graphrag_litex_spark.operators.dedup import simhash_duplicates
@@ -3863,52 +3907,7 @@ def oracle_sql() -> dict[str, str]:
                        AS dup_segment_frac
             FROM f LEFT JOIN t USING (doc_id)
         """,
-        "ngram_repetition": f"""
-            WITH b AS (
-                SELECT doc_id, {_DDB_TEXT_NORM} AS norm FROM documents
-            ), t AS (
-                SELECT doc_id,
-                       CASE WHEN norm = '' THEN [] ELSE string_split(norm, ' ') END AS toks,
-                       length(norm) AS n_chars
-                FROM b
-            ), g AS (
-                SELECT doc_id, n_chars, n,
-                       array_to_string(list_slice(toks, i, i + n - 1), ' ') AS gram
-                FROM (
-                    SELECT t.doc_id, t.n_chars, ns.n, t.toks,
-                           unnest(generate_series(1, len(t.toks) - ns.n + 1)) AS i
-                    FROM t CROSS JOIN (VALUES (2), (3), (4), (5), (10)) AS ns(n)
-                )
-            ), c AS (
-                SELECT doc_id, n_chars, n, gram, count(*) AS c
-                FROM g GROUP BY ALL
-            ), r AS (
-                SELECT *, row_number() OVER (
-                    PARTITION BY doc_id, n ORDER BY c DESC, gram ASC) AS rk
-                FROM c
-            ), a AS (
-                SELECT doc_id, n,
-                       max(CASE WHEN rk = 1 THEN c * length(gram) END) AS top_chars,
-                       sum((c - 1) * length(gram)) AS dup_chars
-                FROM r GROUP BY ALL
-            ), p AS (
-                SELECT doc_id,
-                       max(CASE WHEN n = 2 THEN top_chars END) AS t2,
-                       max(CASE WHEN n = 3 THEN top_chars END) AS t3,
-                       max(CASE WHEN n = 4 THEN top_chars END) AS t4,
-                       max(CASE WHEN n = 5 THEN dup_chars END) AS d5,
-                       max(CASE WHEN n = 10 THEN dup_chars END) AS d10
-                FROM a GROUP BY doc_id
-            )
-            SELECT t.doc_id, cast(t.n_chars AS bigint) AS n_chars,
-                   coalesce(round(coalesce(t2, 0) * 1.0 / nullif(t.n_chars, 0), 6), 0.0) AS top2gram_char_frac,
-                   coalesce(round(coalesce(t3, 0) * 1.0 / nullif(t.n_chars, 0), 6), 0.0) AS top3gram_char_frac,
-                   coalesce(round(coalesce(t4, 0) * 1.0 / nullif(t.n_chars, 0), 6), 0.0) AS top4gram_char_frac,
-                   coalesce(round(coalesce(d5, 0) * 1.0 / nullif(t.n_chars, 0), 6), 0.0) AS dup5gram_char_frac,
-                   coalesce(round(coalesce(d10, 0) * 1.0 / nullif(t.n_chars, 0), 6), 0.0) AS dup10gram_char_frac
-            FROM t LEFT JOIN p USING (doc_id)
-            ORDER BY doc_id
-        """,
+        "ngram_repetition": NGRAM_REPETITION_SQL,
         "decontamination": f"""
             WITH t AS (
                 SELECT doc_id, fp FROM read_parquet('{docops["golden_winnow_fps"]}')

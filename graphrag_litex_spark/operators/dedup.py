@@ -495,16 +495,14 @@ def merge_keeper_map(
     so CC over {old stars} ∪ {new pairs} yields exactly the components of
     {old pairs} ∪ {new pairs} (tested against a from-scratch rebuild) at
     the cost of one edge per OLD DOC rather than one per old pair.
-    Alternating-star CC keeps rounds O(log n) even when increments chain
-    components together.
+    duplicate_keeper_map's alternating-star CC keeps rounds O(log n) even
+    when increments chain components together.
     """
     star = old_map.where(F.col("doc_id") != F.col("keeper_id")).select(
         F.col("doc_id").alias("id_a"), F.col("keeper_id").alias("id_b")
     )
     edges = star.unionByName(new_pairs.select("id_a", "id_b"))
-    return duplicate_keeper_map(
-        all_ids, id_col=id_col, pairs=edges, cc_algorithm="alternating"
-    )
+    return duplicate_keeper_map(all_ids, id_col=id_col, pairs=edges)
 
 
 def ngram_jaccard_pairs(
@@ -646,7 +644,6 @@ def duplicate_keeper_map(
     text_col: str = "text",
     pairs: DataFrame | None = None,
     jaccard_threshold: float = 0.6,
-    cc_algorithm: str = "minlabel",
     cc_driver_threshold: int = DRIVER_THRESHOLD,
     **lsh_kwargs,
 ) -> DataFrame:
@@ -680,10 +677,13 @@ def duplicate_keeper_map(
             F.col("id_b").cast("string").alias("dst"),
         ),
         id_col="_id",
-        # Near-dup graphs CHAIN (doc_i ~ doc_{i+1} without doc_0 ~ doc_n),
-        # so the O(log n)-round alternating-star loop is the safe choice
-        # here at corpus scale even though entity linking keeps "minlabel".
-        algorithm=cc_algorithm,
+        # Near-dup graphs CHAIN (doc_i ~ doc_{i+1} without doc_0 ~ doc_n):
+        # min-label needs one round per hop and stops at max_iter with a
+        # chain split into several "components" (several keepers for one
+        # duplicate group). The alternating-star loop converges in O(log n)
+        # rounds on any topology; entity linking keeps "minlabel" because
+        # name-variant clusters are shallow.
+        algorithm="alternating",
         driver_threshold=cc_driver_threshold,
     )
     lab = labels.join(orig, "_id").select(F.col(id_col), F.col("label"))

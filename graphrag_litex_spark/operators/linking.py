@@ -44,6 +44,14 @@ def distinct_norm_names(mentions: DataFrame, name_col: str = "name") -> DataFram
     )
 
 
+# Giant-block valve policy for the KG build: once the distinct-name count
+# exceeds VALVE_NAMES, a single hot first-token block is a quadratic time
+# bomb and the documented recall tradeoff of _block_keyed's refinement is the
+# right default, so blocks over VALVE_BLOCK_SIZE names are refined.
+VALVE_NAMES = 1_000_000
+VALVE_BLOCK_SIZE = 10_000
+
+
 def _block_keyed(
     names: DataFrame, feature: F.Column, max_block_size: int | None
 ) -> DataFrame:

@@ -21,9 +21,11 @@ DuckDB (arg_max), keeping the oracle contract exact.
 
 Skew: hot entities (a few names in >10% of turns, FIXTURES.md §1) make the
 groupBy keys skewed. Spark's hash aggregate already does map-side partial
-aggregation; for the reduce side the ``salted=True`` path pre-aggregates on
-(key, salt) before the final per-key merge, bounding any single reducer's
-input to ~1/salt_partitions of a hot key's data (SURVEY.md §4).
+aggregation; for the reduce side the node and edge merges always pre-aggregate
+on (key, salt) before the final per-key merge, bounding any single reducer's
+input to ~1/salt_buckets of a hot key's data (SURVEY.md §4). The caller owns
+the bucket count (the pipeline scales it with the cluster); one bucket is
+a plain two-phase aggregation with the same result.
 """
 
 from __future__ import annotations
@@ -42,7 +44,6 @@ def _salt(col: str, buckets: int) -> F.Column:
 
 def merge_nodes(
     mentions: DataFrame,
-    salted: bool = True,
     salt_buckets: int = 16,
     max_instances: int | None = 10_000,
 ) -> DataFrame:
@@ -52,67 +53,54 @@ def merge_nodes(
     source_id, chunk_id. Output: one row per canonical entity (E1).
 
     ``n_instances`` is always EXACT; the stored ``instances`` array is
-    capped at ``max_instances`` (sorted prefix) — hot entities at corpus
-    scale would otherwise carry O(corpus) provenance arrays in one row (the
-    full per-mention provenance remains queryable in the mentions stage
-    table). ``max_instances=None`` keeps everything (reference semantics,
-    models/entity.py:55-57).
+    capped at ``max_instances`` (an unordered sample) — hot entities at
+    corpus scale would otherwise carry O(corpus) provenance arrays in one
+    row (the full per-mention provenance remains queryable in the mentions
+    stage table). ``max_instances=None`` keeps everything (reference
+    semantics, models/entity.py:55-57).
     """
     cap = lambda c: F.slice(c, 1, max_instances) if max_instances else c  # noqa: E731
     base = mentions.withColumn("instance", F.struct("source_id", "chunk_id"))
-    if salted:
-        partial = (
-            base.withColumn("_salt", _salt("chunk_id", salt_buckets))
-            .groupBy("entity_id", "canonical", "_salt")
-            .agg(
-                F.min(F.when(F.col("norm_name") == F.col("canonical"), F.col("name"))).alias(
-                    "name"
-                ),
-                F.min("type").alias("type"),
-                F.max_by("description", _desc_key()).alias("description"),
-                F.collect_set("instance").alias("instances"),
-                F.count(F.lit(1)).alias("n_mentions"),
-            )
-            # Cap each bucket's stored sample BEFORE the final shuffle: a
-            # hot entity with millions of mentions would otherwise ship its
-            # entire provenance set through the reduce even though only
-            # max_instances survive the final select. n_in_bucket records
-            # the true distinct count first, keeping n_instances exact
-            # (buckets are globally disjoint — see the final-agg comment).
-            .withColumn("n_in_bucket", F.size("instances"))
-            .withColumn("instances", cap(F.col("instances")))
-        )
-        final = partial.groupBy("entity_id", "canonical").agg(
-            # partial "name" is min over canonical-form mentions in the salt
-            # bucket (NULL when absent); min() skips NULLs on the final pass.
-            F.min("name").alias("name"),
-            F.min("type").alias("type"),
-            F.max_by("description", _desc_key()).alias("description"),
-            # salt = hash(chunk_id), so a given (source_id, chunk_id) instance
-            # lands in exactly one salt bucket: the partial collect_sets are
-            # globally disjoint — exact distinct count by summing bucket set
-            # sizes, and flatten needs NO final distinct (an array_distinct
-            # over struct arrays is O(n²) and dominated the whole pipeline
-            # on hot entities before this was removed). The stored sample is
-            # capped WITHOUT sorting: array_sort over 100k+-element struct
-            # arrays for hot keys tripled the stage cost; instances are set
-            # semantics, sample order unspecified (counts stay exact).
-            F.sum("n_in_bucket").alias("n_instances"),
-            cap(F.flatten(F.collect_list("instances"))).alias("instances"),
-            F.sum("n_mentions").alias("n_mentions"),
-        )
-    else:
-        final = base.groupBy("entity_id", "canonical").agg(
-            F.min(F.when(F.col("norm_name") == F.col("canonical"), F.col("name"))).alias("name"),
+    partial = (
+        base.withColumn("_salt", _salt("chunk_id", salt_buckets))
+        .groupBy("entity_id", "canonical", "_salt")
+        .agg(
+            F.min(F.when(F.col("norm_name") == F.col("canonical"), F.col("name"))).alias(
+                "name"
+            ),
             F.min("type").alias("type"),
             F.max_by("description", _desc_key()).alias("description"),
             F.collect_set("instance").alias("instances"),
             F.count(F.lit(1)).alias("n_mentions"),
         )
-        final = (
-            final.withColumn("n_instances", F.size("instances"))
-            .withColumn("instances", cap(F.array_sort("instances")))
-        )
+        # Cap each bucket's stored sample BEFORE the final shuffle: a
+        # hot entity with millions of mentions would otherwise ship its
+        # entire provenance set through the reduce even though only
+        # max_instances survive the final select. n_in_bucket records
+        # the true distinct count first, keeping n_instances exact
+        # (buckets are globally disjoint — see the final-agg comment).
+        .withColumn("n_in_bucket", F.size("instances"))
+        .withColumn("instances", cap(F.col("instances")))
+    )
+    final = partial.groupBy("entity_id", "canonical").agg(
+        # partial "name" is min over canonical-form mentions in the salt
+        # bucket (NULL when absent); min() skips NULLs on the final pass.
+        F.min("name").alias("name"),
+        F.min("type").alias("type"),
+        F.max_by("description", _desc_key()).alias("description"),
+        # salt = hash(chunk_id), so a given (source_id, chunk_id) instance
+        # lands in exactly one salt bucket: the partial collect_sets are
+        # globally disjoint — exact distinct count by summing bucket set
+        # sizes, and flatten needs NO final distinct (an array_distinct
+        # over struct arrays is O(n²) and dominated the whole pipeline
+        # on hot entities before this was removed). The stored sample is
+        # capped WITHOUT sorting: array_sort over 100k+-element struct
+        # arrays for hot keys tripled the stage cost; instances are set
+        # semantics, sample order unspecified (counts stay exact).
+        F.sum("n_in_bucket").alias("n_instances"),
+        cap(F.flatten(F.collect_list("instances"))).alias("instances"),
+        F.sum("n_mentions").alias("n_mentions"),
+    )
     return final.select(
         "entity_id",
         F.col("canonical").alias("canonical_name"),
@@ -128,7 +116,6 @@ def merge_nodes(
 def merge_edges(
     canon_edges: DataFrame,
     min_strength: float = 0.5,
-    salted: bool = True,
     salt_buckets: int = 16,
     max_instances: int | None = 10_000,
 ) -> DataFrame:
@@ -143,43 +130,31 @@ def merge_edges(
     base = canon_edges.where(F.col("strength") >= min_strength).withColumn(
         "instance", F.struct("source_id", "chunk_id")
     )
-    if salted:
-        partial = (
-            base.withColumn("_salt", _salt("chunk_id", salt_buckets))
-            .groupBy("src_id", "dst_id", "src", "dst", "_salt")
-            .agg(
-                F.max_by("pred", _desc_key("pred")).alias("pred"),
-                F.sum("strength").alias("_s_sum"),
-                F.count(F.lit(1)).alias("_s_cnt"),
-                F.collect_set("instance").alias("instances"),
-            )
-            # Cap BEFORE the final shuffle (same as merge_nodes): a hot edge
-            # would otherwise ship its full provenance set through the
-            # reduce; n_in_bucket keeps n_instances exact (buckets disjoint
-            # by salt = hash(chunk_id)).
-            .withColumn("n_in_bucket", F.size("instances"))
-            .withColumn("instances", cap(F.col("instances")))
-        )
-        final = partial.groupBy("src_id", "dst_id", "src", "dst").agg(
+    partial = (
+        base.withColumn("_salt", _salt("chunk_id", salt_buckets))
+        .groupBy("src_id", "dst_id", "src", "dst", "_salt")
+        .agg(
             F.max_by("pred", _desc_key("pred")).alias("pred"),
-            (F.sum("_s_sum") / F.sum("_s_cnt")).alias("strength"),
-            # disjoint-by-salt: exact distinct count + no final distinct or
-            # sort needed (see merge_nodes).
-            F.sum("n_in_bucket").alias("n_instances"),
-            cap(F.flatten(F.collect_list("instances"))).alias("instances"),
-            F.sum("_s_cnt").alias("n_obs"),
-        )
-    else:
-        final = base.groupBy("src_id", "dst_id", "src", "dst").agg(
-            F.max_by("pred", _desc_key("pred")).alias("pred"),
-            F.avg("strength").alias("strength"),
+            F.sum("strength").alias("_s_sum"),
+            F.count(F.lit(1)).alias("_s_cnt"),
             F.collect_set("instance").alias("instances"),
-            F.count(F.lit(1)).alias("n_obs"),
         )
-        final = (
-            final.withColumn("n_instances", F.size("instances"))
-            .withColumn("instances", cap(F.array_sort("instances")))
-        )
+        # Cap BEFORE the final shuffle (same as merge_nodes): a hot edge
+        # would otherwise ship its full provenance set through the
+        # reduce; n_in_bucket keeps n_instances exact (buckets disjoint
+        # by salt = hash(chunk_id)).
+        .withColumn("n_in_bucket", F.size("instances"))
+        .withColumn("instances", cap(F.col("instances")))
+    )
+    final = partial.groupBy("src_id", "dst_id", "src", "dst").agg(
+        F.max_by("pred", _desc_key("pred")).alias("pred"),
+        (F.sum("_s_sum") / F.sum("_s_cnt")).alias("strength"),
+        # disjoint-by-salt: exact distinct count + no final distinct or
+        # sort needed (see merge_nodes).
+        F.sum("n_in_bucket").alias("n_instances"),
+        cap(F.flatten(F.collect_list("instances"))).alias("instances"),
+        F.sum("_s_cnt").alias("n_obs"),
+    )
     return final.select(
         "src_id",
         "dst_id",

@@ -351,7 +351,6 @@ def ngram_repetition_stats(
     text_col: str = "text",
     top_ns: tuple = (2, 3, 4),
     dup_ns: tuple = (5, 10),
-    engine: str = "arrow",
 ) -> DataFrame:
     """Gopher-style (Rae et al. 2021, §A1.1) n-gram repetition signals —
     the character-coverage complement to :func:`repetition_stats`'s
@@ -365,7 +364,7 @@ def ngram_repetition_stats(
       occurrences BEYOND THE FIRST of every repeated n-gram / normalized
       characters. Overlapping occurrences count independently (a
       documented simplification of the paper's no-double-count coverage —
-      same filtering power, SQL-expressible on both engines). Under
+      same filtering power, and expressible in SQL for the oracle). Under
       occurrence-counting a degenerately repetitive document can exceed
       1.0 (e.g. "q q q ..."); that is a STRONGER repetition signal and
       thresholding semantics are unchanged.
@@ -375,16 +374,17 @@ def ngram_repetition_stats(
     DuckDB oracle is expressible verbatim. Documents with no n-grams for
     some n (or empty text) report 0.0.
 
-    Plan (the 100 TB shape): the whole statistic is PER-DOCUMENT, so the
-    default ``engine="arrow"`` computes it in a single zero-shuffle pass:
-    normalization stays a JVM expression, gram counting runs as an
-    Arrow-batched kernel (one Counter per document — integer-exact, and
-    grams are ASCII-only after normalization so Python/JVM orderings
-    coincide), and the final fractions are exactly-rounded JVM divisions.
-    Measured 24.5s -> 2.0s over 50k docs at local[32] vs the relational
-    formulation (kept verbatim as ``engine="sql"``, differentially tested
-    equal), whose exploded (id, n, gram) hash aggs shuffle every gram
-    occurrence string twice. Both paths fan the scan out first
+    Plan (the 100 TB shape): the whole statistic is PER-DOCUMENT, so it is
+    computed in a single zero-shuffle pass: normalization stays a JVM
+    expression, gram counting runs as an Arrow-batched kernel (one Counter
+    per document — integer-exact, and grams are ASCII-only after
+    normalization so Python/JVM orderings coincide), and the final
+    fractions are exactly-rounded JVM divisions. Measured 24.5s -> 2.0s
+    over 50k docs at local[32] vs the relational formulation (exploded
+    (id, n, gram) hash aggs that shuffle every gram occurrence string
+    twice), which is the DuckDB contract oracle
+    (``__spark_entry__.NGRAM_REPETITION_SQL``) the tests compare this
+    kernel against. The scan is fanned out first
     (iterutils.scale_out) — a one-file corpus otherwise serializes the
     per-row work onto one core.
     """
@@ -393,139 +393,72 @@ def ngram_repetition_stats(
 
     ns = sorted(set(top_ns) | set(dup_ns))
     norm = norm_text_col(text_col)
-    if engine == "arrow":
-        base = scale_out(docs, id_col).select(
-            F.col(id_col).alias("_id"), norm.alias("_norm")
-        )
-        out_fields = [("top", n) for n in ns] + [("dup", n) for n in ns]
-        id_type = dict(docs.dtypes)[id_col]
-        schema_str = f"_id {id_type}, n_chars long, " + ", ".join(
-            f"_{k}{n} long" for k, n in out_fields
-        )
+    base = scale_out(docs, id_col).select(
+        F.col(id_col).alias("_id"), norm.alias("_norm")
+    )
+    out_fields = [("top", n) for n in ns] + [("dup", n) for n in ns]
+    id_type = dict(docs.dtypes)[id_col]
+    schema_str = f"_id {id_type}, n_chars long, " + ", ".join(
+        f"_{k}{n} long" for k, n in out_fields
+    )
 
-        def kernel(it):
-            from collections import Counter
+    def kernel(it):
+        from collections import Counter
 
-            import pyarrow as pa
+        import pyarrow as pa
 
-            for rb in it:
-                ids = rb.column(0)
-                nch: list[int] = []
-                cols: dict[str, list[int]] = {f"_{k}{n}": [] for k, n in out_fields}
-                for s in rb.column(1).to_pylist():
-                    if s is None:
-                        # NULL text: NULL n_chars, zero counts — exactly the
-                        # sql path's row for an all-null normalization.
-                        nch.append(None)
-                        for n in ns:
-                            cols[f"_top{n}"].append(0)
-                            cols[f"_dup{n}"].append(0)
-                        continue
-                    nch.append(len(s))
-                    toks = s.split(" ") if s else []
-                    length = len(toks)
+        for rb in it:
+            ids = rb.column(0)
+            nch: list[int] = []
+            cols: dict[str, list[int]] = {f"_{k}{n}": [] for k, n in out_fields}
+            for s in rb.column(1).to_pylist():
+                if s is None:
+                    # NULL text: NULL n_chars, zero counts — exactly the
+                    # oracle's row for an all-null normalization.
+                    nch.append(None)
                     for n in ns:
-                        if length < n:
-                            cols[f"_top{n}"].append(0)
-                            cols[f"_dup{n}"].append(0)
-                            continue
-                        grams = (
-                            toks
-                            if n == 1
-                            else [
-                                " ".join(toks[i : i + n])
-                                for i in range(length - n + 1)
-                            ]
-                        )
-                        best_c, best_g, dup = 0, "", 0
-                        for g, c in Counter(grams).items():
-                            if c > best_c or (c == best_c and g < best_g):
-                                best_c, best_g = c, g
-                            if c > 1:
-                                dup += (c - 1) * len(g)
-                        cols[f"_top{n}"].append(best_c * len(best_g))
-                        cols[f"_dup{n}"].append(dup)
-                yield pa.RecordBatch.from_arrays(
-                    [ids, pa.array(nch, pa.int64())]
-                    + [pa.array(cols[f"_{k}{n}"], pa.int64()) for k, n in out_fields],
-                    names=["_id", "n_chars"] + [f"_{k}{n}" for k, n in out_fields],
-                )
-
-        raw = base.mapInArrow(kernel, schema_str)
-        # n_chars == 0 (empty normalized text) reports 0.0, and the division
-        # is guarded so ANSI mode never sees a zero divisor.
-        frac = lambda num: F.when(  # noqa: E731
-            F.col("n_chars") > 0, F.round(num / F.col("n_chars"), 6)
-        ).otherwise(F.lit(0.0))
-        return raw.select(
-            F.col("_id").alias(id_col),
-            F.col("n_chars"),
-            *[frac(F.col(f"_top{n}")).alias(f"top{n}gram_char_frac") for n in top_ns],
-            *[frac(F.col(f"_dup{n}")).alias(f"dup{n}gram_char_frac") for n in dup_ns],
-        )
-    if engine != "sql":
-        raise ValueError(f"unknown engine: {engine!r}")
-    docs = scale_out(docs, id_col)
-    toks = F.when(norm == "", F.array().cast("array<string>")).otherwise(
-        F.split(norm, " ")
-    )
-    base = docs.select(
-        F.col(id_col).alias("id"),
-        toks.alias("__t"),
-        F.length(norm).alias("n_chars"),
-    )
-
-    def grams(n: int):
-        g = F.transform(
-            F.sequence(F.lit(1), F.size("__t") - F.lit(n - 1)),
-            lambda i: F.concat_ws(" ", F.slice("__t", i, n)),
-        )
-        tagged = F.transform(
-            g, lambda x: F.struct(F.lit(n).alias("n"), x.alias("gram"))
-        )
-        return F.when(F.size("__t") >= n, tagged).otherwise(
-            F.array().cast("array<struct<n:int,gram:string>>")
-        )
-
-    flat = base.select(
-        "id",
-        "n_chars",
-        F.explode(F.flatten(F.array(*[grams(n) for n in ns]))).alias("g"),
-    ).select("id", "n_chars", F.col("g.n").alias("n"), F.col("g.gram").alias("gram"))
-    per_gram = flat.groupBy("id", "n_chars", "n", "gram").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    per_n = per_gram.groupBy("id", "n_chars", "n").agg(
-        F.min(F.struct((-F.col("c")).alias("nc"), F.col("gram"))).alias("top"),
-        F.sum((F.col("c") - 1) * F.length("gram")).alias("dup_chars"),
-    )
-    top_chars = (-F.col("top.nc")) * F.length(F.col("top.gram"))
-    frac = lambda num: F.round(num / F.col("n_chars"), 6)  # noqa: E731
-    pivoted = per_n.groupBy("id", "n_chars").agg(
-        *[
-            F.max(F.when(F.col("n") == n, frac(top_chars))).alias(
-                f"top{n}gram_char_frac"
+                        cols[f"_top{n}"].append(0)
+                        cols[f"_dup{n}"].append(0)
+                    continue
+                nch.append(len(s))
+                toks = s.split(" ") if s else []
+                length = len(toks)
+                for n in ns:
+                    if length < n:
+                        cols[f"_top{n}"].append(0)
+                        cols[f"_dup{n}"].append(0)
+                        continue
+                    grams = (
+                        toks
+                        if n == 1
+                        else [
+                            " ".join(toks[i : i + n])
+                            for i in range(length - n + 1)
+                        ]
+                    )
+                    best_c, best_g, dup = 0, "", 0
+                    for g, c in Counter(grams).items():
+                        if c > best_c or (c == best_c and g < best_g):
+                            best_c, best_g = c, g
+                        if c > 1:
+                            dup += (c - 1) * len(g)
+                    cols[f"_top{n}"].append(best_c * len(best_g))
+                    cols[f"_dup{n}"].append(dup)
+            yield pa.RecordBatch.from_arrays(
+                [ids, pa.array(nch, pa.int64())]
+                + [pa.array(cols[f"_{k}{n}"], pa.int64()) for k, n in out_fields],
+                names=["_id", "n_chars"] + [f"_{k}{n}" for k, n in out_fields],
             )
-            for n in top_ns
-        ],
-        *[
-            F.max(F.when(F.col("n") == n, frac(F.col("dup_chars")))).alias(
-                f"dup{n}gram_char_frac"
-            )
-            for n in dup_ns
-        ],
-    )
-    # Documents whose text yields no grams at all (empty / shorter than
-    # min(ns) words) vanish at the explode — restore them with zeros.
-    out_cols = [f"top{n}gram_char_frac" for n in top_ns] + [
-        f"dup{n}gram_char_frac" for n in dup_ns
-    ]
-    return (
-        base.select("id", "n_chars")
-        .join(pivoted.drop("n_chars"), "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.col("n_chars").cast("long").alias("n_chars"),
-            *[F.coalesce(c, F.lit(0.0)).alias(c) for c in out_cols],
-        )
+
+    raw = base.mapInArrow(kernel, schema_str)
+    # n_chars == 0 (empty normalized text) reports 0.0, and the division
+    # is guarded so ANSI mode never sees a zero divisor.
+    frac = lambda num: F.when(  # noqa: E731
+        F.col("n_chars") > 0, F.round(num / F.col("n_chars"), 6)
+    ).otherwise(F.lit(0.0))
+    return raw.select(
+        F.col("_id").alias(id_col),
+        F.col("n_chars"),
+        *[frac(F.col(f"_top{n}")).alias(f"top{n}gram_char_frac") for n in top_ns],
+        *[frac(F.col(f"_dup{n}")).alias(f"dup{n}gram_char_frac") for n in dup_ns],
     )

@@ -22,10 +22,11 @@ Scale design notes (local[32] is a proxy for a 1000-executor cluster):
     ``graph_tail``);
   * canon_map (distinct normalized names, not mentions) is broadcast into
     the resolution joins (D1) only while its measured parquet size is under
-    ``broadcast_threshold_bytes``; above that the joins degrade to
+    ``_CANON_BROADCAST_BYTES``; above that the joins degrade to
     AQE-managed shuffle joins instead of hitting the 8 GB broadcast cap;
   * merge aggregations use salted two-phase aggregation for hot keys
-    (operators/merge.py) and AQE handles post-shuffle coalescing/skew;
+    (operators/merge.py), with the salt scaled to the cluster, and AQE
+    handles post-shuffle coalescing/skew;
   * parquet stage materialization doubles as lineage truncation for the
     iterative stages (CC, LPA).
 """
@@ -44,6 +45,7 @@ from pyspark.sql import functions as F
 
 from graphrag_litex_spark.functions.normalize import SIM_THRESHOLD
 from graphrag_litex_spark.operators import communities as comm_ops
+from graphrag_litex_spark.operators import linking
 from graphrag_litex_spark.operators import merge as merge_ops
 from graphrag_litex_spark.operators.cc import connected_components
 from graphrag_litex_spark.operators.extraction import (
@@ -53,7 +55,6 @@ from graphrag_litex_spark.operators.extraction import (
     items_raw_edges,
 )
 from graphrag_litex_spark.operators.iterutils import DRIVER_THRESHOLD, local_frame
-from graphrag_litex_spark.operators.linking import candidate_pairs
 from graphrag_litex_spark.operators.normalize_ops import norm_name_col
 
 PIPELINE_VERSION = 11
@@ -63,6 +64,12 @@ PIPELINE_VERSION = 11
 # files only the aggregate + skew stats are kept (manifest stays KB-sized at
 # 10^5-file stages, where per-file detail belongs in the files themselves).
 _LINEAGE_MAX_FILES = 512
+
+# D1 broadcast valve: hint F.broadcast on the canon-map resolution joins only
+# while the map's measured parquet size (manifest bytes) is at or under this.
+# Above it (10^8+ distinct names at 10^12 turns) the joins fall back to
+# AQE-managed shuffle joins instead of dying at Spark's 8 GB broadcast cap.
+_CANON_BROADCAST_BYTES = 200 * 1024 * 1024
 
 
 def _parquet_stats(path: str) -> dict:
@@ -271,7 +278,17 @@ def resolution_join(raw: DataFrame, canon: DataFrame, *, broadcast: bool) -> Dat
 
 @dataclass(frozen=True)
 class PipelineConfig:
-    """Engine knobs (reference analogs: /root/reference/config.py)."""
+    """What graph to build (reference analogs: /root/reference/config.py).
+
+    Every field enters the checkpoint fingerprint. Physical strategy is the
+    engine's call, owned by the module that makes it: the merge salt scales
+    with the cluster (``KGPipeline.run``), the giant-block linking valve
+    turns on from the distinct-name count (``operators/linking.VALVE_NAMES``),
+    the canon map is broadcast while measured-small
+    (``_CANON_BROADCAST_BYTES``), and linking's CC uses the min-label loop
+    for the shallow name-variant graph. The one scheduling switch kept is
+    ``concurrent_stages``, whose outputs are identical either way.
+    """
 
     min_strength: float = 0.5  # simple_graph_builder.py:83-86
     sim_threshold: float = SIM_THRESHOLD  # entity_resolver.py:10-12
@@ -288,25 +305,8 @@ class PipelineConfig:
     # sentence-transformer slot; only the NAME enters the checkpoint
     # fingerprint, so configs stay JSON-hashable.
     link_embedder: str = "hash"
-    # Giant-block valve (operators/linking._block_keyed): None = decide
-    # automatically — refinement turns ON when the distinct-name count
-    # exceeds ``link_auto_valve_names`` (at that size a single hot
-    # first-token block is a quadratic time bomb and the documented recall
-    # tradeoff is the right default); 0 disables the valve unconditionally;
-    # a positive value forces that block-size cap.
-    link_max_block_size: int | None = None
-    link_auto_valve_names: int = 1_000_000
-    link_auto_block_size: int = 10_000
-    salted: bool = True
-    salt_buckets: int = 16
     max_instances: int | None = 10_000  # provenance-array cap per node/edge
     cc_max_iter: int = 25
-    # CC physical strategy (operators/cc.py): "minlabel" (rounds = component
-    # diameter — right for name-variant clusters, diameter 2-3) or
-    # "alternating" (large-star/small-star, O(log n) rounds on any
-    # topology — the safe choice when the similarity graph can chain, e.g.
-    # near-dup corpora). Identical output either way.
-    cc_algorithm: str = "minlabel"
     # Submit the mutually independent nodes/triples/claims stage builds as
     # concurrent Spark jobs (separate driver threads): overlaps one stage's
     # under-parallelized final reduce + write with the next one's scan,
@@ -314,12 +314,6 @@ class PipelineConfig:
     # scaling on short runs. Purely a scheduling change — stage outputs,
     # fingerprints, and resume semantics are identical either way.
     concurrent_stages: bool = True
-    # D1 broadcast valve: hint F.broadcast on the canon-map resolution
-    # joins only while the map's measured parquet size (manifest bytes) is
-    # at or under this. Above it (10^8+ distinct names at 10^12 turns) the
-    # join falls back to AQE-managed shuffle join. 0 disables the hint
-    # unconditionally.
-    broadcast_threshold_bytes: int = 200 * 1024 * 1024
     lpa_iters: int = 8
     min_community_size: int = 3  # config.py:41
     levels: int = 3  # community_detection.py:35
@@ -858,7 +852,7 @@ class KGPipeline:
 
         # Hot-key stragglers bound the merge stages' reduce time: scale the
         # salt so a hot entity's largest bucket shrinks with the cluster.
-        salt_buckets = max(cfg.salt_buckets, self.spark.sparkContext.defaultParallelism * 2)
+        salt_buckets = max(16, self.spark.sparkContext.defaultParallelism * 2)
 
         # S3/S4 + raw claims: pushdown-filtered VIEWS over the item table —
         # materializing them again would re-write the corpus-sized
@@ -894,32 +888,24 @@ class KGPipeline:
             # first-token block ("the ...") turns the candidate self-join
             # quadratic; below the threshold exact first-token semantics
             # are kept (identical to the single-process oracle).
-            max_block = cfg.link_max_block_size
-            if max_block is None:
-                max_block = (
-                    cfg.link_auto_block_size
-                    if names.count() > cfg.link_auto_valve_names
-                    else 0
-                )
-            max_block = max_block or None  # 0 -> valve off
+            max_block = (
+                linking.VALVE_BLOCK_SIZE
+                if names.count() > linking.VALVE_NAMES
+                else None
+            )
             if cfg.link_scorer == "embedding":
-                from graphrag_litex_spark.operators.linking import (
-                    embedding_candidate_pairs,
-                    resolve_link_embedder,
-                )
-
                 # "hash" / "prefix_ngram" built-ins, or any embedder
                 # registered via linking.register_link_embedder (the
                 # production sentence-transformer slot, C7).
-                embed_udf = resolve_link_embedder(cfg.link_embedder)
-                pairs = embedding_candidate_pairs(
+                embed_udf = linking.resolve_link_embedder(cfg.link_embedder)
+                pairs = linking.embedding_candidate_pairs(
                     names,
                     cfg.embed_sim_threshold,
                     embed_udf=embed_udf,
                     max_block_size=max_block,
                 )
             else:
-                pairs = candidate_pairs(
+                pairs = linking.candidate_pairs(
                     names, cfg.sim_threshold, max_block_size=max_block
                 )
             labels = connected_components(
@@ -927,7 +913,10 @@ class KGPipeline:
                 pairs,
                 id_col="norm_name",
                 max_iter=cfg.cc_max_iter,
-                algorithm=cfg.cc_algorithm,
+                # Name-variant clusters are shallow (diameter 2-3), so the
+                # min-label loop's rounds = diameter beats alternating's
+                # O(log n) large-star/small-star rounds.
+                algorithm="minlabel",
             )
             # CC's output is itself checkpointed (or driver-built), so the
             # names cache can be dropped before the stage write.
@@ -953,7 +942,7 @@ class KGPipeline:
         # the threshold, otherwise leave the strategy to AQE (the warehouse
         # buckets nodes/edges on the join key for the shuffle-join case).
         canon_bytes = manifest.get("canon_map", {}).get("bytes", 0)
-        canon_small = 0 < canon_bytes <= cfg.broadcast_threshold_bytes
+        canon_small = 0 < canon_bytes <= _CANON_BROADCAST_BYTES
         canon = results["canon_map"]
         if canon_small:
             canon = F.broadcast(canon)
@@ -962,7 +951,6 @@ class KGPipeline:
         def build_nodes() -> DataFrame:
             return merge_ops.merge_nodes(
                 results["mentions"].join(canon, "norm_name"),
-                salted=cfg.salted,
                 salt_buckets=salt_buckets,
                 max_instances=cfg.max_instances,
             )
@@ -1041,7 +1029,6 @@ class KGPipeline:
                     "chunk_id",
                 ),
                 min_strength=cfg.min_strength,
-                salted=cfg.salted,
                 salt_buckets=salt_buckets,
                 max_instances=cfg.max_instances,
             )

@@ -5,11 +5,8 @@ results (and a BroadcastExchange-free plan) on the shuffle-join path."""
 import pandas as pd
 from pyspark.sql import functions as F
 
-from graphrag_litex_spark.plans.pipeline import (
-    PipelineConfig,
-    resolution_join,
-    run_pipeline,
-)
+from graphrag_litex_spark.plans import pipeline as P
+from graphrag_litex_spark.plans.pipeline import resolution_join, run_pipeline
 
 
 def _frames(spark):
@@ -71,15 +68,15 @@ def test_valved_join_same_rows(spark):
 
 
 def test_pipeline_non_broadcast_path_matches(
-    spark, corpus_sf0001, pipeline_sf0001, tmp_path
+    spark, corpus_sf0001, pipeline_sf0001, tmp_path, monkeypatch
 ):
     """threshold=0 forces the AQE shuffle-join path end-to-end; every
     canon-consuming stage must match the default (broadcast) run."""
+    monkeypatch.setattr(P, "_CANON_BROADCAST_BYTES", 0)
     res = run_pipeline(
         spark,
         corpus_sf0001["transcripts"],
         str(tmp_path / "kg_novalve"),
-        config=PipelineConfig(broadcast_threshold_bytes=0),
         resume=False,
     )
     for stage, keys in [

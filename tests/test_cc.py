@@ -389,30 +389,6 @@ def test_alternating_no_edges(spark):
     assert alt == {"x": "x", "y": "y"}
 
 
-def test_pipeline_cc_algorithm_knob(spark, corpus_sf0001, tmp_path):
-    """cc_algorithm='alternating' produces the identical canon_map stage
-    (CC output equality end-to-end through the linking graph)."""
-    from graphrag_litex_spark.plans.pipeline import PipelineConfig, run_pipeline
-
-    r1 = run_pipeline(
-        spark,
-        corpus_sf0001["transcripts"],
-        str(tmp_path / "ml"),
-        config=PipelineConfig(),
-        until="canon_map",
-    )
-    r2 = run_pipeline(
-        spark,
-        corpus_sf0001["transcripts"],
-        str(tmp_path / "alt"),
-        config=PipelineConfig(cc_algorithm="alternating"),
-        until="canon_map",
-    )
-    m1 = {r["norm_name"]: r["entity_id"] for r in r1["canon_map"].collect()}
-    m2 = {r["norm_name"]: r["entity_id"] for r in r2["canon_map"].collect()}
-    assert m1 == m2
-
-
 def test_max_iter_exhaustion_warns_not_silent(spark):
     """Exiting either distributed loop via max_iter without convergence must
     warn (ADVICE r4): silent non-minimum labels at scale are undebuggable."""

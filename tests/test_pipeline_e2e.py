@@ -344,30 +344,30 @@ def test_append_crash_leaves_stage_invalidated(spark, corpus_sf0001, tmp_path_fa
     assert pipe.append_transcripts(b_dir) == t.num_rows - half
 
 
-def test_auto_block_valve_pipeline_paths(spark, corpus_sf0001, tmp_path):
+def test_auto_block_valve_pipeline_paths(spark, corpus_sf0001, tmp_path, monkeypatch):
     """The linking valve auto-enables from the distinct-name count: with a
-    tiny auto threshold and a generous block cap the canon map is identical
-    to the exact default; an aggressive explicit cap can only SPLIT
+    tiny name threshold and the default block cap the canon map is
+    identical to the exact default; an aggressive cap can only SPLIT
     components (refinement drops candidate pairs, never invents them)."""
-    from graphrag_litex_spark.plans.pipeline import PipelineConfig, run_pipeline
+    from graphrag_litex_spark.operators import linking
+    from graphrag_litex_spark.plans.pipeline import run_pipeline
 
-    def canon(cfg, name):
+    def canon(name):
         res = run_pipeline(
             spark,
             corpus_sf0001["transcripts"],
             str(tmp_path / name),
-            config=cfg,
             resume=False,
             until="canon_map",
         )
         return {r["norm_name"]: r["canonical"] for r in res["canon_map"].collect()}
 
-    base = canon(PipelineConfig(), "base")
-    auto = canon(
-        PipelineConfig(link_auto_valve_names=5, link_auto_block_size=10_000), "auto"
-    )
+    base = canon("base")
+    monkeypatch.setattr(linking, "VALVE_NAMES", 5)
+    auto = canon("auto")
     assert auto == base  # valve on, blocks under the cap -> exact semantics
-    hard = canon(PipelineConfig(link_max_block_size=1), "hard")
+    monkeypatch.setattr(linking, "VALVE_BLOCK_SIZE", 1)
+    hard = canon("hard")
     assert set(hard) == set(base)
     # every refined component is contained in an exact component
     by_canon_hard: dict = {}

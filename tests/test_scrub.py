@@ -227,11 +227,14 @@ def test_ngram_repetition_partitioning_invariant(spark):
 
 
 def test_ngram_engines_agree_on_adversarial_corpus(spark):
-    """arrow (default kernel) == sql (relational formulation), including
-    NULL text, empty text, unicode junk, whitespace runs, and tie-broken
-    top grams - the differential the docstring promises."""
+    """The Arrow kernel == the contract's DuckDB oracle (the relational
+    formulation) on the same frame, including NULL text, empty text,
+    unicode junk, whitespace runs, and tie-broken top grams - the
+    differential the docstring promises."""
+    import duckdb
     import pandas as pd
 
+    from __spark_entry__ import NGRAM_REPETITION_SQL
     from graphrag_litex_spark.operators.scrub import ngram_repetition_stats
 
     rows = [
@@ -244,13 +247,13 @@ def test_ngram_engines_agree_on_adversarial_corpus(spark):
         (7, "unicode \u00e9\u00e9 junk   here"),
         (8, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"),
     ]
-    docs = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["doc_id", "text"]).astype({"doc_id": "int64"})
-    )
-    a = ngram_repetition_stats(docs)
-    b = ngram_repetition_stats(docs, engine="sql")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert a.count() == len(rows)
+    documents = pd.DataFrame(rows, columns=["doc_id", "text"]).astype({"doc_id": "int64"})
+    got = [tuple(r) for r in ngram_repetition_stats(spark.createDataFrame(documents)).collect()]
+    con = duckdb.connect()
+    con.register("documents", documents)
+    want = con.execute(NGRAM_REPETITION_SQL).fetchall()
+    assert sorted(got) == want
+    assert len(got) == len(rows)
 
 
 def test_norm_text_col_fused_equals_two_pass(spark):

@@ -394,6 +394,30 @@ def test_duplicate_keeper_map_components(spark):
     }
 
 
+def test_duplicate_keeper_map_long_chain_one_keeper(spark):
+    """A 40-document near-dup chain (doc_i ~ doc_{i+1}) on the distributed
+    CC path is ONE duplicate group: exactly one keeper (doc 0) and no
+    max_iter warning. Min-label CC needs a round per hop and would stop at
+    max_iter with the chain split into several keepers."""
+    import warnings
+
+    import pandas as pd
+
+    from graphrag_litex_spark.operators.dedup import duplicate_keeper_map
+
+    n = 40
+    docs = spark.createDataFrame(pd.DataFrame({"doc_id": range(n), "text": ["x"] * n}))
+    pairs = spark.createDataFrame(
+        pd.DataFrame([(i, i + 1) for i in range(n - 1)], columns=["id_a", "id_b"])
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        rows = duplicate_keeper_map(docs, pairs=pairs, cc_driver_threshold=0).collect()
+    assert len(rows) == n
+    assert [r["doc_id"] for r in rows if r["is_keeper"]] == [0]
+    assert {r["keeper_id"] for r in rows} == {0}
+
+
 def test_semantic_dedup_golden_matches_spark(rand_vecs):
     """Differential: pure-Python SemDeDup golden == the distributed plan
     (cluster assignment, in-cluster ranks, pairwise maxima, verdicts)."""

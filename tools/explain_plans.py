@@ -90,9 +90,7 @@ def main() -> int:
     # Salted node merge: two-phase hash aggregate.
     from graphrag_litex_spark.operators.merge import merge_nodes
 
-    nodes_plan = merge_nodes(
-        kg["mentions"].join(F.broadcast(canon), "norm_name"), salted=True
-    )
+    nodes_plan = merge_nodes(kg["mentions"].join(F.broadcast(canon), "norm_name"))
     p = plan_of(nodes_plan)
     assert "HashAggregate" in p
     assert "CartesianProduct" not in p
