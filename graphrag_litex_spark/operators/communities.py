@@ -79,7 +79,11 @@ def _und_edges(edges: DataFrame) -> DataFrame:
 
 
 def _sym(und: DataFrame) -> DataFrame:
-    return und.select("u", "v").union(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    """Both directions of every (u, v) pair, self-loops dropped and each
+    directed pair once: the simple graph the driver-local kernels see, so
+    a parallel edge or a self-loop does not count twice as a neighbor."""
+    pairs = und.select("u", "v").where(F.col("u") != F.col("v"))
+    return pairs.union(pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
 
 
 # ---- pure-Python kernels (driver-local adaptive path) ---------------------
@@ -215,9 +219,9 @@ def label_propagation(
 ) -> DataFrame:
     """Synchronous LPA -> (entity_id, label); deterministic tie-breaking.
 
-    ``und_edges`` (u, v) is an undirected simple edge set — each pair once,
-    no self-loops (what :func:`_und_edges` produces); edges leaving
-    ``vertices`` carry no label.
+    ``und_edges`` (u, v) are undirected edges, read as a simple graph in
+    both regimes: a parallel edge counts once and a self-loop not at all.
+    Edges leaving ``vertices`` carry no label.
 
     Adaptive: state below ``driver_threshold`` rows runs driver-locally
     (identical output, ~5x fewer tiny Spark jobs); larger graphs run the
@@ -463,7 +467,7 @@ def member_edge_degrees(communities: DataFrame, edges: DataFrame) -> DataFrame:
     level, against the FULL graph. Computing this ONCE replaces the two
     sym-x-membership double joins the stats and summaries stages each ran.
     """
-    sym = _sym(_und_edges(edges))
+    sym = _sym(edges.select(F.col("src_id").alias("u"), F.col("dst_id").alias("v")))
     m = communities.select("level", "community_id", "entity_id")
     mx = m.select(
         F.col("level"), F.col("community_id").alias("cx"), F.col("entity_id").alias("u")

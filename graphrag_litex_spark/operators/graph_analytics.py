@@ -530,8 +530,11 @@ def neighborhood_function(
 
     Per round: ball(v, t) = ball(v, t-1) ∪ (∪ over neighbors n of
     ball(n, t-1)) — ONE adjacency hash join + one `hll_union_agg`
-    (map-side-combinable: HLL union is a register max, order-free and
-    partitioning-invariant). State is |V| sketches of 2^lg_k registers —
+    (map-side-combinable). The estimates are partitioning-invariant only
+    while every sketch stays in exact coupon mode; past it, the union's
+    mode promotions make them move with the merge order, i.e. with the
+    partitioning (2103 vs 2108 seen for one ball-size total). State is
+    |V| sketches of 2^lg_k registers —
     the whole point of HyperBall: exact BFS state is O(V^2), sketches make
     it O(V * 2^lg_k) with ~1.6%/sqrt(2^lg_k) relative error. lg_k is the
     accuracy/state knob (12 -> ~2.5% at true scale; at test scale the

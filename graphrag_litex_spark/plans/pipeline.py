@@ -40,8 +40,9 @@ import time
 from contextlib import contextmanager
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from graphrag_litex_spark.functions.normalize import SIM_THRESHOLD
 from graphrag_litex_spark.operators import communities as comm_ops
@@ -237,13 +238,25 @@ def stage_checksums(
         path = os.path.join(out_dir, name)
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
             continue
-        entry = frame_checksum(spark.read.parquet(path))
+        entry = frame_checksum(_read_stage(spark, path, entries.get(name)))
         stage_fp = entries.get(name, {}).get("fingerprint")
         is_pending = isinstance(stage_fp, str) and stage_fp.startswith("pending")
         if is_pending or (fp_ref is not None and stage_fp != fp_ref):
             entry["stale"] = True
         out[name] = entry
     return out
+
+
+def _read_stage(spark: SparkSession, path: str, entry: dict | None) -> DataFrame:
+    """A stage's parquet, read with the schema its manifest ``entry``
+    recorded at write time: a given schema plans with no Spark job, where
+    schema inference costs one job per read. An entry without a schema
+    (written before schemas were recorded) falls back to inference."""
+    schema = (entry or {}).get("schema")
+    reader = spark.read
+    if schema:
+        reader = reader.schema(StructType.fromJson(json.loads(schema)))
+    return reader.parquet(path)
 
 
 def resolution_join(raw: DataFrame, canon: DataFrame, *, broadcast: bool) -> DataFrame:
@@ -512,6 +525,12 @@ class KGPipeline:
     ) -> DataFrame:
         """Run ``build()`` unless a fingerprint-matching checkpoint exists.
 
+        The stage is written, then read back with the schema it was written
+        with, which the manifest entry also records: neither the read-back
+        nor a later resume pays a schema-inference job. A resume trusts
+        only an entry that carries its schema, so an entry from a build
+        that did not record one rebuilds its stage once.
+
         ``est_rows`` sizes the write: graph-shaped stages (communities,
         stats, summaries) are node-proportional, not corpus-proportional, so
         writing them with corpus-sized partitioning produces hundreds of
@@ -522,9 +541,10 @@ class KGPipeline:
             resume
             and entry
             and entry.get("fingerprint") == fingerprint
+            and entry.get("schema")
             and os.path.exists(os.path.join(path, "_SUCCESS"))
         ):
-            return self.spark.read.parquet(path)
+            return _read_stage(self.spark, path, entry)
         t0 = time.time()
         df = build()
         if est_rows is not None:
@@ -533,7 +553,7 @@ class KGPipeline:
             ))
             df = df.coalesce(n_part)
         df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
+        out = self.spark.read.schema(df.schema).parquet(path)
         # Footer metadata — no Spark job. Computed BEFORE taking the lock:
         # at a 10^5-file stage the walk takes seconds, and holding the lock
         # through it would serialize the concurrent stages' commits.
@@ -542,6 +562,7 @@ class KGPipeline:
             "fingerprint": fingerprint,
             "sec": round(time.time() - t0, 2),
             **stats,
+            "schema": df.schema.json(),
         }
         with self._manifest_lock:
             manifest[name] = entry
@@ -613,6 +634,7 @@ class KGPipeline:
             "fingerprint": self._input_fingerprint(extras),
             "sec": round(time.time() - t0, 2),
             **_parquet_stats(path),
+            "schema": items.schema.json(),
         }
         self._save_manifest(manifest)  # downstream entries now stale -> rebuild
         return n_new
@@ -710,7 +732,7 @@ class KGPipeline:
         manifest["forgotten_conv_ids"] = target
         self._save_manifest(manifest)
 
-        items = self.spark.read.parquet(path)
+        items = _read_stage(self.spark, path, entry)
         new_ids = sorted(set(target) - set(old))
         drop = self.spark.createDataFrame([(c,) for c in new_ids], "source_id string")
         n_present = (
@@ -757,6 +779,7 @@ class KGPipeline:
             "fingerprint": new_fp,
             "sec": round(time.time() - t0, 2),
             **_parquet_stats(path),
+            "schema": kept.schema.json(),
         }
         self._save_manifest(manifest)  # downstream entries now stale -> rebuild
         return n_present
@@ -876,21 +899,23 @@ class KGPipeline:
             # symmetrization, CC's initial labels): checkpoint it once so the
             # corpus-sized mentions scan + distinct shuffle run once, not
             # three times (at sf10 that is two full extra corpus scans).
+            n_names = Observation("names")
             names = hard_checkpoint(
                 results["mentions"]
                 .select("norm_name")
                 .where(F.col("norm_name") != "")
                 .distinct()
+                .observe(n_names, F.count(F.lit(1)).alias("n"))
             )
             # Giant-block valve, auto-enabled from the distinct-name count
-            # (cheap: one count over the just-checkpointed names RDD). At
-            # 10^12 turns the name table is the one place a single hot
-            # first-token block ("the ...") turns the candidate self-join
-            # quadratic; below the threshold exact first-token semantics
-            # are kept (identical to the single-process oracle).
+            # (free: the checkpoint job itself reports it through the
+            # observation). At 10^12 turns the name table is the one place a
+            # single hot first-token block ("the ...") turns the candidate
+            # self-join quadratic; below the threshold exact first-token
+            # semantics are kept (identical to the single-process oracle).
             max_block = (
                 linking.VALVE_BLOCK_SIZE
-                if names.count() > linking.VALVE_NAMES
+                if n_names.get["n"] > linking.VALVE_NAMES
                 else None
             )
             if cfg.link_scorer == "embedding":
@@ -1106,7 +1131,7 @@ class KGPipeline:
             ):
                 return None
             return (
-                self.spark.read.parquet(prev)
+                _read_stage(self.spark, prev, manifest.get("communities"))
                 .where(F.col("level") == 0)
                 .select("entity_id", F.expr("substring(community_id, 3)").alias("label"))
             )

@@ -212,6 +212,28 @@ def test_lpa_driver_local_matches_distributed(spark, clique_graph):
     assert local == dist
 
 
+def test_lpa_multigraph_distributed_matches_driver_local(spark):
+    """Both regimes read a multigraph as the simple graph: x-b twice and
+    x-a once is a tie that x breaks to "a" (a parallel edge counted twice
+    would win it for "b"), and a's self-loop is not a vote for itself."""
+    verts = spark.createDataFrame([("a",), ("b",), ("x",)], "entity_id string")
+    und = spark.createDataFrame(
+        [("x", "b"), ("b", "x"), ("x", "a"), ("a", "a")], "u string, v string"
+    )
+
+    def labels(threshold):
+        return {
+            r["entity_id"]: r["label"]
+            for r in C.label_propagation(
+                verts, und, iters=1, driver_threshold=threshold
+            ).collect()
+        }
+
+    local = labels(100_000)
+    assert local == {"a": "x", "b": "x", "x": "a"}
+    assert labels(0) == local
+
+
 @pytest.mark.parametrize("kind", ["int", "null"])
 def test_adversarial_ids_match_distributed(spark, kind):
     """Int ids, or a NULL vertex with an edge, fail the driver-local valve's

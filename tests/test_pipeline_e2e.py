@@ -16,6 +16,19 @@ def _triple_set(rows):
     return {(r[0], r[1], r[2]) for r in rows}
 
 
+def _write_halves(transcripts: str, d) -> tuple[str, str, int]:
+    """Split the transcripts into two one-file parquet dirs ``d/a`` and
+    ``d/b`` -> (a_dir, b_dir, rows in b)."""
+    import os
+
+    t = pq.read_table(transcripts)
+    half = t.num_rows // 2
+    for name, part in (("a", t.slice(0, half)), ("b", t.slice(half))):
+        os.makedirs(d / name)
+        pq.write_table(part, str(d / name / "part-0.parquet"))
+    return str(d / "a"), str(d / "b"), t.num_rows - half
+
+
 def test_triples_match_golden_pr(pipeline_sf0001, corpus_sf0001):
     got = _triple_set(
         pipeline_sf0001["triples"].select("subj", "pred", "obj").distinct().collect()
@@ -159,25 +172,16 @@ def test_resume_is_noop(spark, corpus_sf0001, tmp_path):
 def test_incremental_append_equals_full_rebuild(spark, corpus_sf0001, tmp_path_factory):
     """Batch incrementality: pipeline(half A) + append(half B) must produce
     the SAME graph as pipeline(A+B), with extraction never recomputed for A."""
-    import pyarrow.parquet as pq
-
     from graphrag_litex_spark.plans.pipeline import KGPipeline, run_pipeline
 
     d = tmp_path_factory.mktemp("incr")
-    t = pq.read_table(corpus_sf0001["transcripts"])
-    half = t.num_rows // 2
-    a_dir, b_dir = str(d / "a"), str(d / "b")
-    import os
-
-    os.makedirs(a_dir), os.makedirs(b_dir)
-    pq.write_table(t.slice(0, half), os.path.join(a_dir, "part-0.parquet"))
-    pq.write_table(t.slice(half), os.path.join(b_dir, "part-0.parquet"))
+    a_dir, b_dir, n_b = _write_halves(corpus_sf0001["transcripts"], d)
 
     out = str(d / "kg_incr")
     run_pipeline(spark, a_dir, out, resume=False, until="claims")
     pipe = KGPipeline(spark, a_dir, out)
     n_new = pipe.append_transcripts(b_dir)
-    assert n_new == t.num_rows - half
+    assert n_new == n_b
     assert pipe.append_transcripts(b_dir) == 0  # idempotent
 
     res = pipe.run(resume=True, until="claims")
@@ -197,17 +201,10 @@ def test_append_cli_flag(spark, corpus_sf0001, tmp_path_factory):
     the CLI surface: build on half A, append half B, triples == golden."""
     import os
 
-    import pyarrow.parquet as pq
-
     from jobs import build_graph
 
     d = tmp_path_factory.mktemp("incr_cli")
-    t = pq.read_table(corpus_sf0001["transcripts"])
-    half = t.num_rows // 2
-    a_dir, b_dir = str(d / "a"), str(d / "b")
-    os.makedirs(a_dir), os.makedirs(b_dir)
-    pq.write_table(t.slice(0, half), os.path.join(a_dir, "part-0.parquet"))
-    pq.write_table(t.slice(half), os.path.join(b_dir, "part-0.parquet"))
+    a_dir, b_dir, _ = _write_halves(corpus_sf0001["transcripts"], d)
     out = str(d / "kg")
 
     rc = build_graph.main(
@@ -295,17 +292,10 @@ def test_append_crash_leaves_stage_invalidated(spark, corpus_sf0001, tmp_path_fa
     import json
     import os
 
-    import pyarrow.parquet as pq
-
     from graphrag_litex_spark.plans.pipeline import KGPipeline, run_pipeline
 
     d = tmp_path_factory.mktemp("crash")
-    t = pq.read_table(corpus_sf0001["transcripts"])
-    half = t.num_rows // 2
-    a_dir, b_dir = str(d / "a"), str(d / "b")
-    os.makedirs(a_dir), os.makedirs(b_dir)
-    pq.write_table(t.slice(0, half), os.path.join(a_dir, "part-0.parquet"))
-    pq.write_table(t.slice(half), os.path.join(b_dir, "part-0.parquet"))
+    a_dir, b_dir, n_b = _write_halves(corpus_sf0001["transcripts"], d)
 
     out = str(d / "kg")
     run_pipeline(spark, a_dir, out, resume=False, until="extractions")
@@ -341,7 +331,7 @@ def test_append_crash_leaves_stage_invalidated(spark, corpus_sf0001, tmp_path_fa
     )
     assert n_after == clean["extractions"].count()
     # ...and the append path works again afterwards.
-    assert pipe.append_transcripts(b_dir) == t.num_rows - half
+    assert pipe.append_transcripts(b_dir) == n_b
 
 
 def test_auto_block_valve_pipeline_paths(spark, corpus_sf0001, tmp_path, monkeypatch):
@@ -351,6 +341,18 @@ def test_auto_block_valve_pipeline_paths(spark, corpus_sf0001, tmp_path, monkeyp
     components (refinement drops candidate pairs, never invents them)."""
     from graphrag_litex_spark.operators import linking
     from graphrag_litex_spark.plans.pipeline import run_pipeline
+
+    # The block cap each build's candidate-pair pass ran with: the valve's
+    # decision, taken from the names checkpoint's observed count.
+    caps = []
+    pairs = linking.candidate_pairs
+
+    def recorded(*args, max_block_size=None, **kwargs):
+        caps.append(max_block_size)
+        return pairs(*args, max_block_size=max_block_size, **kwargs)
+
+    monkeypatch.setattr(linking, "candidate_pairs", recorded)
+    block = linking.VALVE_BLOCK_SIZE
 
     def canon(name):
         res = run_pipeline(
@@ -375,6 +377,7 @@ def test_auto_block_valve_pipeline_paths(spark, corpus_sf0001, tmp_path, monkeyp
         by_canon_hard.setdefault(c, set()).add(n)
     for members in by_canon_hard.values():
         assert len({base[m] for m in members}) == 1
+    assert caps == [None, block, 1]
 
 
 def test_parquet_stats_lineage_truncation(tmp_path, monkeypatch):
@@ -438,10 +441,9 @@ def test_community_warm_start_refresh(spark, corpus_sf0001, tmp_path):
 def test_graph_tail_jobs_and_partial_resume(spark, corpus_sf0001, tmp_path):
     """Below the community valve the graph tail (communities -> stats ->
     summaries -> summary_embeddings) submits one collect plus the four
-    stage writes, each a write job and the read-back's schema job — not
-    the ~40 tiny jobs of the operator-by-operator path. Job ids come from
-    the DAGScheduler's counter; the resumed prefix's own jobs are measured
-    by a no-op resume and subtracted. A later stage rebuilt on resume
+    stage writes — not the ~40 tiny jobs of the operator-by-operator
+    path. Job ids come from the DAGScheduler's counter; the resumed
+    prefix's own jobs are measured by a no-op resume and subtracted. A later stage rebuilt on resume
     derives from the stored communities stage and reproduces its table."""
     import os
     import shutil
@@ -458,7 +460,7 @@ def test_graph_tail_jobs_and_partial_resume(spark, corpus_sf0001, tmp_path):
     res = pipe.run(resume=True)
     j2 = dag.nextJobId()
     tail_jobs = (j2 - j1) - (j1 - j0)
-    assert tail_jobs <= 1 + 4 * 2, tail_jobs
+    assert tail_jobs <= 1 + 4, tail_jobs
     assert res["summary_embeddings"].count() == res["summaries"].count() > 0
 
     tail = ["communities", "community_stats", "summaries", "summary_embeddings"]
@@ -466,6 +468,94 @@ def test_graph_tail_jobs_and_partial_resume(spark, corpus_sf0001, tmp_path):
     shutil.rmtree(os.path.join(out, "summaries"))
     pipe.run(resume=True)
     assert stage_checksums(spark, out, tail) == before
+
+
+# Spark jobs per stage of a sequential build of corpus_sf0001: the stage
+# write and its AQE query stages, canon_map's candidate-pair and CC probes,
+# and the graph tail's one collect (in communities). The read-back and the
+# link valve's name count run no job of their own.
+_STAGE_JOBS = {
+    "extractions": 2,
+    "canon_map": 7,
+    "nodes": 4,
+    "triples": 2,
+    "claims": 4,
+    "edges": 3,
+    "communities": 2,
+    "community_stats": 1,
+    "summaries": 1,
+    "summary_embeddings": 1,
+}
+
+
+def test_build_job_budget(spark, corpus_sf0001, tmp_path, monkeypatch):
+    """Job-budget guard: each stage of a sequential build submits exactly
+    its pinned number of Spark jobs (counted from the DAGScheduler's job
+    id around ``_materialize``), and a no-op resume submits at most one —
+    the input's schema read — because every stage reads back with the
+    schema its manifest entry recorded."""
+    from graphrag_litex_spark.plans.pipeline import KGPipeline, PipelineConfig
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs: dict[str, int] = {}
+    materialize = KGPipeline._materialize
+
+    def counted(self, name, *args, **kwargs):
+        j0 = dag.nextJobId()
+        out = materialize(self, name, *args, **kwargs)
+        jobs[name] = dag.nextJobId() - j0
+        return out
+
+    monkeypatch.setattr(KGPipeline, "_materialize", counted)
+    pipe = KGPipeline(
+        spark,
+        corpus_sf0001["transcripts"],
+        str(tmp_path / "kg"),
+        PipelineConfig(concurrent_stages=False),
+    )
+    pipe.run(resume=False)
+    assert jobs == _STAGE_JOBS
+
+    j0 = dag.nextJobId()
+    pipe.run(resume=True)
+    assert dag.nextJobId() - j0 <= 1
+
+
+def test_stage_schemas_survive_resume_and_append(spark, corpus_sf0001, tmp_path):
+    """Every stage frame run() returns has the schema that an inferring
+    read of its parquet gives, nullability included — after a fresh
+    build, a resume, and an append + resume. A manifest entry with no
+    recorded schema (written before entries carried one) is not trusted:
+    resume rebuilds that stage once, and only that stage."""
+    import json
+    import os
+
+    from graphrag_litex_spark.plans.pipeline import KGPipeline
+
+    a_dir, b_dir, n_b = _write_halves(corpus_sf0001["transcripts"], tmp_path)
+    out = str(tmp_path / "kg")
+    pipe = KGPipeline(spark, a_dir, out)
+
+    def check(res):
+        for name in _STAGE_JOBS:
+            inferred = spark.read.parquet(os.path.join(out, name)).schema
+            assert res[name].schema == inferred, name
+
+    check(pipe.run(resume=False))
+    check(pipe.run(resume=True))
+    assert pipe.append_transcripts(b_dir) == n_b
+    check(pipe.run(resume=True))
+
+    mpath = os.path.join(out, "_manifest.json")
+    before = json.load(open(mpath))
+    stripped = json.loads(json.dumps(before))
+    del stripped["nodes"]["schema"]
+    json.dump(stripped, open(mpath, "w"))
+    check(pipe.run(resume=True))
+    after = json.load(open(mpath))
+    assert after["nodes"]["schema"] == before["nodes"]["schema"]
+    del after["nodes"], before["nodes"]
+    assert after == before
 
 
 def test_concurrent_build_lock(spark, corpus_sf0001, tmp_path):
