@@ -7,13 +7,14 @@ components. No GraphX/GraphFrames: a pure DataFrame loop —
 
     label(v) := min(label(v), min over neighbors u of label(u))
 
-iterated to fixpoint over the symmetrized edge list. Each round is ONE
-eager checkpoint job (a join + aggregation; the convergence check is a
-scan of the cached result with the previous label carried alongside, not a
-separate join job); lineage is truncated per round with localCheckpoint so
-plans stay O(1) deep. Diameter of linking components is tiny (name-variant
-clusters), so rounds ≈ 2-3; the loop is still correct for arbitrary graphs
-and bounded by max_iter.
+iterated to fixpoint over the symmetrized edge list. Each round is one
+eager checkpoint (a join + aggregation) whose changed-label count rides
+the checkpoint job itself (``iterutils.observed_checkpoint``); under AQE
+that checkpoint runs as 7 Spark jobs (one per query stage), measured at
+``driver_threshold=0`` on local[8] over tests/test_graph_loops.py's graph.
+Lineage is truncated per round so plans stay O(1) deep. Diameter of
+linking components is tiny (name-variant clusters), so rounds ≈ 2-3; the
+loop is still correct for arbitrary graphs and bounded by max_iter.
 
 Semantics for ids appearing only in ``edges`` (not in ``vertices``): they
 PROPAGATE labels (two vertices joined through an edge-only intermediate
@@ -37,7 +38,10 @@ from graphrag_litex_spark.operators.iterutils import (
     local_frame,
     local_graph,
     loop_shuffle_partitions,
+    observed_checkpoint,
     release,
+    symmetric,
+    undirected_simple,
 )
 
 
@@ -104,16 +108,17 @@ def connected_components(
     rows runs the driver-local union-find (identical output); larger graphs
     run a distributed loop chosen by ``algorithm``:
 
-    * ``"minlabel"`` — neighbor-min propagation, one checkpoint job per
-      round, rounds = component diameter. The right default for entity
-      linking, where components are name-variant clusters of diameter 2-3.
+    * ``"minlabel"`` — neighbor-min propagation, one observed checkpoint
+      per round (7 jobs under AQE), rounds = component diameter. The
+      right default for entity linking, where components are name-variant
+      clusters of diameter 2-3.
     * ``"alternating"`` — large-star/small-star edge rewriting (Kiveris et
       al. 2014, "Connected Components in MapReduce and Beyond"): rounds =
       O(log n) REGARDLESS of diameter, so a 10^6-hop chain (adversarial
       near-dup corpora produce exactly these — each doc similar only to its
-      neighbor) finishes in ~20 rounds instead of 10^6. Costs ~2x the
-      shuffles per round, so it loses on tiny-diameter graphs and wins
-      unboundedly on long ones.
+      neighbor) finishes in ~20 rounds instead of 10^6. Costs two
+      checkpoints per round (~2x the shuffles), so it loses on
+      tiny-diameter graphs and wins unboundedly on long ones.
 
     Both produce byte-identical output (asserted in tests/test_cc.py).
     """
@@ -126,17 +131,18 @@ def connected_components(
     g = local_graph(edges, src_col, dst_col, driver_threshold, vertices, id_col)
     if g is not None:
         return _cc_union_find_df(vertices.sparkSession, g, id_col)
-    sym = hard_checkpoint(
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .union(edges.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v")))
-        .distinct()
-    )
-    verts = hard_checkpoint(vertices.select(F.col(id_col).alias("u")))
-    n_state = verts.count() + sym.count()
-    if algorithm == "alternating":
-        return _cc_alternating(verts, sym, id_col, max_iter, n_state)
-    if algorithm != "minlabel":
+    if algorithm not in ("minlabel", "alternating"):
         raise ValueError(f"unknown CC algorithm: {algorithm!r}")
+    # Self-loops join nothing, so both loops read the undirected simple
+    # graph; its size (and the vertex count) ride the checkpoint jobs.
+    und = undirected_simple(edges, src_col, dst_col)
+    verts, vm = observed_checkpoint(
+        vertices.select(F.col(id_col).alias("u")), n=F.count(F.lit(1))
+    )
+    if algorithm == "alternating":
+        return _cc_alternating(verts, und, id_col, max_iter, vm["n"])
+    sym, sm = observed_checkpoint(symmetric(und), n=F.count(F.lit(1)))
+    n_state = vm["n"] + sm["n"]
     # with-block + finally: a mid-loop Spark exception must not leave the
     # session's shuffle-partition count overridden or leak checkpoint RDDs.
     try:
@@ -160,7 +166,7 @@ def connected_components(
                     .agg(F.min("label").alias("_msg"))
                     .withColumnRenamed("v", "u")
                 )
-                ck = hard_checkpoint(
+                new_labels, m = observed_checkpoint(
                     labels.select("u", F.col("label").alias("_old"))
                     .join(msg, "u", "left")
                     .select(
@@ -169,16 +175,16 @@ def connected_components(
                             F.col("_old"), F.coalesce(F.col("_msg"), F.col("_old"))
                         ).alias("label"),
                         "_old",
-                    )
+                    ),
+                    "u",
+                    "label",
+                    changed=F.count_if(F.col("label") != F.col("_old")),
                 )
-                changed = ck.where(F.col("label") != F.col("_old")).limit(1).count()
-                new_labels = ck.select("u", "label")
-                new_labels._graft_ckpt = ck._graft_ckpt  # type: ignore[attr-defined]
                 # Release the superseded checkpoint immediately — waiting for
                 # Python GC + ContextCleaner lets cached RDDs pile up.
                 release(labels)
                 labels = new_labels
-                if changed == 0:
+                if m["changed"] == 0:
                     break
             else:
                 # Exhausting max_iter without a zero-change round means the
@@ -202,46 +208,34 @@ def connected_components(
     )
 
 
-def _canon_edges(e: DataFrame) -> DataFrame:
-    """Undirected edge set in canonical (a<b) form, self-loops dropped."""
-    return (
-        e.select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-
-def _edge_stats(e: DataFrame) -> tuple:
-    """(count, xxhash64 sum) — an order-independent edge-set checksum; one
-    aggregate job, no join, so the convergence check costs a scan instead
-    of a set-difference shuffle."""
-    row = e.agg(
-        F.count("*").alias("n"),
+def _stars_checkpoint(e: DataFrame) -> tuple[DataFrame, tuple]:
+    """Checkpoint a canonical edge set with its (count, xxhash64 sum) — an
+    order-independent edge-set checksum observed by the checkpoint job
+    itself, so the convergence check costs no job of its own."""
+    ck, m = observed_checkpoint(
+        e,
+        n=F.count(F.lit(1)),
         # decimal sum: ANSI mode (Spark 4 default) would raise on bigint
         # overflow, and hash sums overflow by design.
-        F.coalesce(
-            F.sum(F.xxhash64("a", "b").cast("decimal(20,0)")), F.lit(0)
-        ).alias("h"),
-    ).first()
-    return (row["n"], row["h"])
+        h=F.sum(F.xxhash64("a", "b").cast("decimal(20,0)")),
+    )
+    return ck, (m["n"], m["h"])
 
 
 def _large_star(e: DataFrame) -> DataFrame:
     """Connect every neighbor LARGER than u to min(N(u) ∪ {u})."""
-    sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
+    sym = symmetric(e)
     mins = (
         sym.groupBy("u")
         .agg(F.min("v").alias("_mn"))
         .select("u", F.least("_mn", "u").alias("m"))
     )
-    return _canon_edges(
+    return undirected_simple(
         sym.join(mins, "u")
         .where(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("a"), F.col("m").alias("b"))
+        .select(F.col("v").alias("a"), F.col("m").alias("b")),
+        "a",
+        "b",
     )
 
 
@@ -256,41 +250,36 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
     linked = dird.join(mins, "u").select(F.col("v").alias("a"), F.col("m").alias("b"))
     hubs = mins.select(F.col("u").alias("a"), F.col("m").alias("b"))
-    return _canon_edges(linked.union(hubs))
+    return undirected_simple(linked.union(hubs), "a", "b")
 
 
 def _cc_alternating(
-    verts: DataFrame, sym: DataFrame, id_col: str, max_iter: int, n_state: int
+    verts: DataFrame, und: DataFrame, id_col: str, max_iter: int, n_verts: int
 ) -> DataFrame:
     """Large-star/small-star alternation (Kiveris et al. 2014, §3): each
     round rewrites the edge set toward a forest of depth-1 stars rooted at
     the component minimum; O(log n) rounds on ANY topology vs. the
-    min-label loop's O(diameter). Per round: two groupBy+join jobs plus a
-    checksum scan, lineage truncated per star with ``hard_checkpoint``.
+    min-label loop's O(diameter). Per round: two groupBy+join checkpoints,
+    the small-star one observing the edge-set checksum (11 jobs per round
+    under AQE), lineage truncated per star.
 
-    ``verts``/``sym`` arrive checkpointed from ``connected_components``
-    (sym is symmetrized + distinct). Output contract is identical to the
-    min-label loop: rows = vertex set, label = component min over vertices
-    AND edge-only endpoints.
+    ``verts`` arrives checkpointed from ``connected_components``, ``und``
+    is the lazy undirected simple graph. Output contract is identical to
+    the min-label loop: rows = vertex set, label = component min over
+    vertices AND edge-only endpoints.
     """
     spark = verts.sparkSession
+    e, prev = _stars_checkpoint(und)
     try:
-        with loop_shuffle_partitions(spark, n_state):
-            e = hard_checkpoint(
-                _canon_edges(
-                    sym.select(F.col("u").alias("a"), F.col("v").alias("b"))
-                )
-            )
-            prev = _edge_stats(e)
+        with loop_shuffle_partitions(spark, n_verts + 2 * prev[0]):
             rounds = 0
             for _ in range(max_iter):
                 if prev[0] == 0:
                     break  # no edges left: every vertex is its own star
                 e1 = hard_checkpoint(_large_star(e))
-                e2 = hard_checkpoint(_small_star(e1))
+                e2, cur = _stars_checkpoint(_small_star(e1))
                 release(e1)
                 rounds += 1
-                cur = _edge_stats(e2)
                 release(e)
                 e = e2
                 if cur == prev:
@@ -331,6 +320,5 @@ def _cc_alternating(
             out._graft_cc_rounds = rounds  # type: ignore[attr-defined]
             release(e)
     finally:
-        release(sym)
         release(verts)
     return out

@@ -63,27 +63,12 @@ from graphrag_litex_spark.operators.iterutils import (
     local_frame,
     local_graph,
     loop_shuffle_partitions,
+    observed_checkpoint,
     release,
+    symmetric,
+    undirected_simple,
+    with_checkpoint_of,
 )
-
-
-def _und_edges(edges: DataFrame) -> DataFrame:
-    """Distinct undirected pairs (u < v), self-loops dropped."""
-    return (
-        edges.select(
-            F.least("src_id", "dst_id").alias("u"), F.greatest("src_id", "dst_id").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _sym(und: DataFrame) -> DataFrame:
-    """Both directions of every (u, v) pair, self-loops dropped and each
-    directed pair once: the simple graph the driver-local kernels see, so
-    a parallel edge or a self-loop does not count twice as a neighbor."""
-    pairs = und.select("u", "v").where(F.col("u") != F.col("v"))
-    return pairs.union(pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
 
 
 # ---- pure-Python kernels (driver-local adaptive path) ---------------------
@@ -202,11 +187,6 @@ def _local_seed(seed_labels: DataFrame | None, ids: set) -> dict | None:
     } or None
 
 
-def _count_rows(a: DataFrame, b: DataFrame) -> int:
-    """|a| + |b| in one job (sizes the distributed loop's shuffles)."""
-    return a.select(F.lit(1)).unionAll(b.select(F.lit(1))).count()
-
-
 # ---- distributed loops ----------------------------------------------------
 
 
@@ -225,9 +205,12 @@ def label_propagation(
 
     Adaptive: state below ``driver_threshold`` rows runs driver-locally
     (identical output, ~5x fewer tiny Spark jobs); larger graphs run the
-    distributed loop below. Each distributed round is ONE eager checkpoint
-    job (the changed-count is folded into a scan of the cached result, not
-    a separate join job).
+    distributed loop below. Each distributed round is one observed
+    checkpoint whose changed-label count rides the checkpoint job
+    (``iterutils.observed_checkpoint``); under AQE that is 8 Spark jobs
+    per round (join, count and window stages), measured at
+    ``driver_threshold=0`` on local[8] over tests/test_graph_loops.py's
+    graph.
 
     ``seed_labels`` (entity_id, label) WARM-STARTS the loop: vertices
     found there initialize to the seeded label instead of their own id
@@ -254,7 +237,9 @@ def label_propagation(
             ["entity_id", "label"],
             "entity_id string, label string",
         )
-    sym = hard_checkpoint(_sym(und_edges))
+    sym, sm = observed_checkpoint(
+        symmetric(undirected_simple(und_edges, "u", "v")), n=F.count(F.lit(1))
+    )
     init = vertices.select(F.col("entity_id").alias("u"))
     if seed_labels is not None:
         init = init.join(
@@ -264,8 +249,8 @@ def label_propagation(
         ).select("u", F.coalesce("_seed", F.col("u")).alias("label"))
     else:
         init = init.select("u", F.col("u").alias("label"))
-    labels = hard_checkpoint(init)
-    n_state = _count_rows(labels, sym)
+    labels, lm = observed_checkpoint(init, n=F.count(F.lit(1)))
+    n_state = lm["n"] + sm["n"]
     # with-block + finally: a mid-loop Spark exception must not leave the
     # session's shuffle-partition count overridden or leak checkpoint RDDs.
     try:
@@ -287,22 +272,24 @@ def label_propagation(
                     .select("u", "label")
                 )
                 # Isolated vertices keep their own label; the old label is
-                # carried so convergence is a cheap cached scan, not a join.
-                ck = hard_checkpoint(
+                # carried so convergence is observed by the checkpoint job.
+                new_labels, m = observed_checkpoint(
                     labels.select("u", F.col("label").alias("_old"))
                     .join(new, "u", "left")
-                    .select("u", F.coalesce("label", F.col("u")).alias("label"), "_old")
+                    .select("u", F.coalesce("label", F.col("u")).alias("label"), "_old"),
+                    "u",
+                    "label",
+                    changed=F.count_if(F.col("label") != F.col("_old")),
                 )
-                changed = ck.where(F.col("label") != F.col("_old")).limit(1).count()
-                new_labels = ck.select("u", "label")
-                new_labels._graft_ckpt = ck._graft_ckpt  # type: ignore[attr-defined]
                 release(labels)
                 labels = new_labels
-                if changed == 0:
+                if m["changed"] == 0:
                     break
     finally:
         release(sym)
-    return labels.select(F.col("u").alias("entity_id"), "label")
+    return with_checkpoint_of(
+        labels.select(F.col("u").alias("entity_id"), "label"), labels
+    )
 
 
 def _enforce_min_size(membership: DataFrame, min_size: int) -> DataFrame:
@@ -382,24 +369,25 @@ def detect_communities(
             ["level", "community_id", "parent", "entity_id"],
             "level int, community_id string, parent string, entity_id string",
         )
-    und = hard_checkpoint(_und_edges(edges))
-    n_state = _count_rows(und, vertices)
+    und, um = observed_checkpoint(
+        undirected_simple(edges, "src_id", "dst_id").toDF("u", "v"), n=F.count(F.lit(1))
+    )
+    vertices, vm = observed_checkpoint(vertices, n=F.count(F.lit(1)))
+    n_state = um["n"] + vm["n"]
 
     with loop_shuffle_partitions(spark, n_state):
-        l0 = _enforce_min_size(
-            label_propagation(
-                vertices, und, lpa_iters, driver_threshold, seed_labels=seed_labels
-            ),
-            min_size,
+        lpa = label_propagation(
+            vertices, und, lpa_iters, driver_threshold, seed_labels=seed_labels
         )
         membership = hard_checkpoint(
-            l0.select(
+            _enforce_min_size(lpa, min_size).select(
                 F.lit(0).alias("level"),
                 F.concat(F.lit("0_"), F.col("label")).alias("community_id"),
                 F.lit(None).cast("string").alias("parent"),
                 "entity_id",
             )
         )
+        release(lpa)
 
         prev = membership
         for level in range(1, levels):
@@ -454,9 +442,13 @@ def detect_communities(
                 "entity_id",
             )
             cur = hard_checkpoint(passthrough.unionByName(sub_kept))
+            for df in (big_members, sub_edges, sub_labels):
+                release(df)
             membership = membership.unionByName(cur)
             prev = cur
 
+    release(und)
+    release(vertices)
     return membership
 
 
@@ -467,7 +459,7 @@ def member_edge_degrees(communities: DataFrame, edges: DataFrame) -> DataFrame:
     level, against the FULL graph. Computing this ONCE replaces the two
     sym-x-membership double joins the stats and summaries stages each ran.
     """
-    sym = _sym(edges.select(F.col("src_id").alias("u"), F.col("dst_id").alias("v")))
+    sym = symmetric(undirected_simple(edges, "src_id", "dst_id"))
     m = communities.select("level", "community_id", "entity_id")
     mx = m.select(
         F.col("level"), F.col("community_id").alias("cx"), F.col("entity_id").alias("u")
@@ -832,7 +824,7 @@ def graph_tail_py(
 
     names = dict(node_rows)
     # Community edges: distinct undirected pairs, self-loops dropped
-    # (``_und_edges``).
+    # (``iterutils.undirected_simple``).
     und = {(min(s, d), max(s, d)) for s, d, *_ in edge_rows if s != d}
     if membership is None:
         # LPA only sees edges between vertices (the distributed loop's joins
@@ -1027,7 +1019,7 @@ def modularity(membership: DataFrame, edges: DataFrame, level: int = 0) -> float
     (community_detection.py:59-100); computed relationally (joins + one
     aggregate), collected as a single scalar.
     """
-    und = _und_edges(edges)
+    und = undirected_simple(edges, "src_id", "dst_id")
     m = und.count()
     if m == 0:
         return 0.0
@@ -1038,13 +1030,14 @@ def modularity(membership: DataFrame, edges: DataFrame, level: int = 0) -> float
     pv = part.select(F.col("entity_id").alias("v"), F.col("community_id").alias("cv"))
     # degree per member (each undirected edge contributes to both endpoints)
     deg = (
-        _sym(und)
+        symmetric(und)
         .groupBy("u")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
     d_c = deg.join(pu, "u").groupBy("cu").agg(F.sum("deg").alias("d_c"))
     e_c = (
-        und.join(pu, "u")
+        und.toDF("u", "v")
+        .join(pu, "u")
         .join(pv, "v")
         .where(F.col("cu") == F.col("cv"))
         .groupBy("cu")

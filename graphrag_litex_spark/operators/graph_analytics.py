@@ -25,8 +25,13 @@ Scale notes (100 TB):
   centers from candidate generation; standard LP practice since hub
   co-citation carries little signal). Everything else is hash joins.
 - `k_core` is iterative peeling: each round one degree aggregation + two
-  anti joins, lineage reset via hard_checkpoint (O(1) plan across rounds),
-  convergence check folded into one cached-scan aggregate per round.
+  anti joins, lineage reset per round (O(1) plan across rounds), the
+  convergence counts observed by the degree checkpoint's own job.
+
+Every distributed loop here ends its rounds in
+``iterutils.observed_checkpoint``, so its convergence test rides the
+checkpoint job. Jobs per round were measured under AQE at
+``driver_threshold=0`` on local[8] over tests/test_graph_loops.py's graph.
 """
 
 from __future__ import annotations
@@ -41,26 +46,19 @@ from graphrag_litex_spark.operators.iterutils import (
     hard_checkpoint,
     local_frame,
     local_graph,
+    observed_checkpoint,
     release,
+    symmetric,
+    undirected_simple,
+    with_checkpoint_of,
 )
-
-
-def undirected_simple(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """-> (a, b) with a < b, distinct, self-loops dropped."""
-    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
-    return (
-        edges.select(a.alias("a"), b.alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
 
 
 def _degrees(und: DataFrame) -> DataFrame:
     """-> (vertex, degree) over the undirected simple graph."""
     return (
-        und.select(F.col("a").alias("vertex"))
-        .unionAll(und.select(F.col("b").alias("vertex")))
-        .groupBy("vertex")
+        symmetric(und)
+        .groupBy(F.col("u").alias("vertex"))
         .agg(F.count(F.lit(1)).alias("degree"))
     )
 
@@ -168,9 +166,7 @@ def link_prediction(
     """
     und = undirected_simple(edges, src, dst)
     deg = _degrees(und)
-    adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
+    adj = symmetric(und)
     if max_center_degree is not None:
         centers_ok = deg.where(F.col("degree") <= max_center_degree).select(
             F.col("vertex").alias("u")
@@ -228,44 +224,38 @@ def k_core(
     to the same fixpoint as any sequential peel.
 
     Per round: one degree agg + two anti joins against the (typically
-    small, AQE-broadcastable) removal set; hard_checkpoint keeps lineage
-    O(1); the convergence check is one aggregate over the cached degree
-    frame (no extra scan of the adjacency).
+    small, AQE-broadcastable) removal set; the degree frame is an observed
+    checkpoint whose job also counts the under-degree vertices. 8 jobs per
+    round.
     """
     spark = edges.sparkSession
     und = undirected_simple(edges, src, dst)
     n_part = max(spark.sparkContext.defaultParallelism, 8)
-    adj = hard_checkpoint(
-        und.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(und.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .repartition(n_part, "u")
-    )
+    adj = hard_checkpoint(symmetric(und).repartition(n_part, "u"))
     empty = spark.createDataFrame([], "vertex string, core_degree long")
     for _ in range(max_iters):
-        deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("degree")).cache()
-        row = deg.agg(
-            F.sum(F.when(F.col("degree") < k, 1).otherwise(0)).alias("n_bad"),
-            F.count(F.lit(1)).alias("n_all"),
-        ).first()
-        n_bad, n_all = (row["n_bad"] or 0), row["n_all"]
-        if n_all == 0:
-            deg.unpersist()
+        deg, m = observed_checkpoint(
+            adj.groupBy("u").agg(F.count(F.lit(1)).alias("degree")),
+            n_bad=F.count_if(F.col("degree") < k),
+            n_all=F.count(F.lit(1)),
+        )
+        if m["n_all"] == 0:
+            release(deg)
             release(adj)
             return empty
-        if n_bad == 0:
-            out = deg.select(F.col("u").alias("vertex"), F.col("degree").alias("core_degree"))
-            # Materialize before dropping the cache/checkpoint under it.
-            out = out.localCheckpoint(eager=True)
-            deg.unpersist()
+        if m["n_bad"] == 0:
             release(adj)
-            return out
+            return with_checkpoint_of(
+                deg.select(F.col("u").alias("vertex"), F.col("degree").alias("core_degree")),
+                deg,
+            )
         bad = deg.where(F.col("degree") < k).select("u")
         new_adj = hard_checkpoint(
             adj.join(bad, "u", "left_anti").join(
                 bad.withColumnRenamed("u", "v"), "v", "left_anti"
             )
         )
-        deg.unpersist()
+        release(deg)
         release(adj)
         adj = new_adj
     raise RuntimeError(f"k_core did not converge in {max_iters} rounds")
@@ -297,9 +287,9 @@ def k_truss(
 
     Per round: one triangle enumeration over the CURRENT edge set
     (`_triangles` — degree-ordered, hub-proof, 3 hash joins), one per-edge
-    support agg, one filter; `hard_checkpoint` resets lineage so the plan
-    stays O(1) across rounds; the convergence check is folded into one
-    aggregate over the cached support frame (no extra scan).
+    support agg, one filter; lineage resets each round so the plan stays
+    O(1) across rounds; the support frame is an observed checkpoint whose
+    job also counts the below-threshold edges. 14 jobs per round.
     """
     spark = edges.sparkSession
     thresh = max(k - 2, 0)
@@ -348,29 +338,26 @@ def k_truss(
         support = sides.select(
             F.least("p", "q").alias("a"), F.greatest("p", "q").alias("b")
         ).groupBy("a", "b").agg(F.count(F.lit(1)).alias("support"))
-        scored = und.join(support, ["a", "b"], "left").select(
-            "a", "b", F.coalesce("support", F.lit(0)).alias("support")
-        ).cache()
-        row = scored.agg(
-            F.sum(F.when(F.col("support") < thresh, 1).otherwise(0)).alias("n_bad"),
-            F.count(F.lit(1)).alias("n_all"),
-        ).first()
-        n_bad, n_all = (row["n_bad"] or 0), row["n_all"]
-        if n_bad == n_all:
+        scored, m = observed_checkpoint(
+            und.join(support, ["a", "b"], "left").select(
+                "a", "b", F.coalesce("support", F.lit(0)).alias("support")
+            ),
+            n_bad=F.count_if(F.col("support") < thresh),
+            n_all=F.count(F.lit(1)),
+        )
+        if m["n_bad"] == m["n_all"]:
             # Every edge is below threshold (or none is left): the truss is
             # empty now, not one more round later.
-            scored.unpersist()
+            release(scored)
             release(und)
             return empty
-        if n_bad == 0:
-            out = scored.localCheckpoint(eager=True)
-            scored.unpersist()
+        if m["n_bad"] == 0:
             release(und)
-            return out
+            return scored
         new_und = hard_checkpoint(
             scored.where(F.col("support") >= thresh).select("a", "b")
         )
-        scored.unpersist()
+        release(scored)
         release(und)
         und = new_und
     raise RuntimeError(f"k_truss did not converge in {max_iters} rounds")
@@ -405,12 +392,7 @@ def wl_signatures(
     degree the sorted multiset itself is the cost, and WL roles for such
     hubs are degenerate anyway.
     """
-    und = undirected_simple(edges, src, dst)
-    adj = hard_checkpoint(
-        und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-            und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-    )
+    adj = hard_checkpoint(symmetric(undirected_simple(edges, src, dst)))
     labels = hard_checkpoint(
         adj.groupBy(F.col("u").alias("vertex"))
         .agg(F.count(F.lit(1)).alias("degree"))
@@ -530,11 +512,12 @@ def neighborhood_function(
 
     Per round: ball(v, t) = ball(v, t-1) ∪ (∪ over neighbors n of
     ball(n, t-1)) — ONE adjacency hash join + one `hll_union_agg`
-    (map-side-combinable). The estimates are partitioning-invariant only
-    while every sketch stays in exact coupon mode; past it, the union's
-    mode promotions make them move with the merge order, i.e. with the
-    partitioning (2103 vs 2108 seen for one ball-size total). State is
-    |V| sketches of 2^lg_k registers —
+    (map-side-combinable), whose checkpoint job also observes the
+    ball-size total: 5 jobs per round. The estimates are
+    partitioning-invariant only while every sketch stays in exact coupon
+    mode; past it, the union's mode promotions make them move with the
+    merge order, i.e. with the partitioning (2103 vs 2108 seen for one
+    ball-size total). State is |V| sketches of 2^lg_k registers —
     the whole point of HyperBall: exact BFS state is O(V^2), sketches make
     it O(V * 2^lg_k) with ~1.6%/sqrt(2^lg_k) relative error. lg_k is the
     accuracy/state knob (12 -> ~2.5% at true scale; at test scale the
@@ -560,38 +543,33 @@ def neighborhood_function(
         return local_frame(
             spark, _exact_neighborhood(g.adj, max_t), ["t", "reachable_pairs"], _NF_SCHEMA
         )
-    und = undirected_simple(edges, src, dst)
-    adj = hard_checkpoint(
-        und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-            und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-    )
+    adj = hard_checkpoint(symmetric(undirected_simple(edges, src, dst)))
     lgk = F.lit(lg_k)
-    state = hard_checkpoint(
+    # The ball-size total is observed by each state checkpoint's own job.
+    ball_total = F.sum(F.hll_sketch_estimate("sk"))
+    state, m = observed_checkpoint(
         adj.select(F.col("u").alias("vertex"))
         .distinct()
         .groupBy("vertex")
-        .agg(F.hll_sketch_agg("vertex", lgk).alias("sk"))
+        .agg(F.hll_sketch_agg("vertex", lgk).alias("sk")),
+        n=ball_total,
     )
-    n0 = state.agg(
-        F.sum(F.hll_sketch_estimate("sk")).alias("n")
-    ).first()["n"]
-    totals = [(0, float(n0 or 0.0))]
+    totals = [(0, float(m["n"]))]
     for t in range(1, max_t + 1):
         nb = adj.join(
             state.select(F.col("vertex").alias("v"), "sk"), "v"
         ).select(F.col("u").alias("vertex"), "sk")
-        new_state = hard_checkpoint(
+        new_state, m = observed_checkpoint(
             state.unionByName(nb)
             .groupBy("vertex")
             # (lg_k rides inside each sketch; the union's second parameter
             # is allowDifferentLgConfigK, not a config)
-            .agg(F.hll_union_agg("sk").alias("sk"))
+            .agg(F.hll_union_agg("sk").alias("sk")),
+            n=ball_total,
         )
         release(state)
         state = new_state
-        row = state.agg(F.sum(F.hll_sketch_estimate("sk")).alias("n")).first()
-        total = float(row["n"] or 0.0)
+        total = float(m["n"])
         totals.append((t, total))
         if total == totals[-2][1]:
             # No ball grew this round (register states are monotone, so an
@@ -620,10 +598,7 @@ def degree_assortativity_components(
     Plan: degrees = one agg; each edge joins the degree map twice (degree
     map is vertex-cardinality — AQE/broadcast); one final 1-row aggregate.
     """
-    und = undirected_simple(edges, src, dst)
-    sym = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
+    sym = symmetric(undirected_simple(edges, src, dst))
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     du = deg.select(F.col("u"), F.col("d").alias("dx"))
     dv = deg.select(F.col("u").alias("v"), F.col("d").alias("dy"))
@@ -651,6 +626,17 @@ def degree_assortativity(edges: DataFrame, src: str = "src", dst: str = "dst") -
     return (row["s_xy"] / m2 - mean * mean) / var
 
 
+def _settle(settled: DataFrame, frontier: DataFrame, new: DataFrame) -> DataFrame:
+    """A BFS hop's state step: checkpoint ``settled`` ∪ ``new`` and release
+    the superseded settled set and frontier (the first frontier is the
+    seed state itself)."""
+    nxt = hard_checkpoint(settled.union(new))
+    release(settled)
+    if frontier is not settled:
+        release(frontier)
+    return nxt
+
+
 def hop_distances(
     edges: DataFrame,
     sources: list,
@@ -669,8 +655,9 @@ def hop_distances(
     a (vertex, source) dedupe, and an anti-join against settled
     distances — so per-hop work is frontier-proportional and total state
     is O(V x |sources|), never edge-proportional. Early-exits when a
-    frontier empties. Same hard_checkpoint-per-round discipline as
-    PageRank/CC (iterutils.py).
+    frontier empties; the frontier's size is observed by its own
+    checkpoint job (``iterutils.observed_checkpoint``), so a hop is two
+    checkpoints (frontier, settled state) and no other action: 8 jobs.
     """
     spark = edges.sparkSession
     # Adaptive driver-local BFS (iterutils.local_graph): the per-hop join
@@ -689,12 +676,7 @@ def hop_distances(
         return local_frame(
             spark, rows, ["vertex", "source", "dist"], "vertex string, source string, dist int"
         )
-    und = undirected_simple(edges, src, dst)
-    sym = hard_checkpoint(
-        und.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-            und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-    )
+    sym = hard_checkpoint(symmetric(undirected_simple(edges, src, dst)))
     dist = hard_checkpoint(
         local_frame(spark, [(s,) for s in sources], ["vertex"], "vertex string").select(
             F.col("vertex"), F.col("vertex").alias("source"), F.lit(0).alias("dist")
@@ -708,17 +690,17 @@ def hop_distances(
                 .select(F.col("v").alias("vertex"), "source", F.lit(hop).alias("dist"))
                 .distinct()
             )
-            new = hard_checkpoint(cand.join(dist, ["vertex", "source"], "left_anti"))
-            if new.limit(1).count() == 0:
+            new, m = observed_checkpoint(
+                cand.join(dist, ["vertex", "source"], "left_anti"), n=F.count(F.lit(1))
+            )
+            if m["n"] == 0:
                 release(new)
                 break
-            nxt = hard_checkpoint(dist.union(new))
-            release(dist)
-            if frontier is not dist:
-                release(frontier)
-            dist, frontier = nxt, new
+            dist, frontier = _settle(dist, frontier, new), new
     finally:
         release(sym)
+        if frontier is not dist:
+            release(frontier)
     return dist
 
 
@@ -744,19 +726,15 @@ def shortest_path(
 
     Plan: the standard frontier BFS loop (per hop: one frontier-sized
     adjacency join + a min-parent agg + an anti-join against settled
-    vertices; hard_checkpoint lineage, early exit on empty frontier or on
-    settling the target). Backtracking then walks parent pointers with
-    <= hops single-row lookups against the settled frame — driver work
-    bounded by the path length, never by V (the same "<= k rows reach the
-    driver" budget as the query-path reduce).
+    vertices; each frontier an observed checkpoint whose job also reports
+    its size and whether it settled the target, so the early exits cost no
+    action of their own; 8 jobs per hop). Backtracking then walks parent
+    pointers with <= hops single-row lookups against the settled frame —
+    driver work bounded by the path length, never by V (the same "<= k
+    rows reach the driver" budget as the query-path reduce).
     """
     spark = edges.sparkSession
-    und = undirected_simple(edges, src, dst)
-    sym = hard_checkpoint(
-        und.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-            und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-    )
+    sym = hard_checkpoint(symmetric(undirected_simple(edges, src, dst)))
     out_schema = "found boolean, hops int, path array<string>, path_str string"
 
     def _miss():
@@ -764,16 +742,17 @@ def shortest_path(
             [(False, -1, [], "")], out_schema
         )
 
-    settled = hard_checkpoint(
+    settled, m = observed_checkpoint(
         spark.createDataFrame([(str(source), None, 0)], "vertex string, parent string, dist int")
         .join(
             sym.select(F.col("u").alias("vertex")).distinct(), "vertex", "left_semi"
-        )
+        ),
+        n=F.count(F.lit(1)),
     )
     frontier = settled
     found_dist = 0 if source == target else None
     try:
-        if settled.limit(1).count() == 0:  # source not in the graph
+        if m["n"] == 0:  # source not in the graph
             return _miss()
         if found_dist is None:
             for hop in range(1, max_hops + 1):
@@ -786,22 +765,20 @@ def shortest_path(
                         F.lit(hop).alias("dist"),
                     )
                 )
-                new = hard_checkpoint(
+                new, m = observed_checkpoint(
                     cand.join(settled, "vertex", "left_anti")
                     .groupBy("vertex", "dist")
                     .agg(F.min("parent").alias("parent"))
-                    .select("vertex", "parent", "dist")
+                    .select("vertex", "parent", "dist"),
+                    n=F.count(F.lit(1)),
+                    # Unsettled before this hop, so settled now iff new.
+                    target=F.count_if(F.col("vertex") == str(target)),
                 )
-                n_new = new.count()
-                if n_new == 0:
+                if m["n"] == 0:
                     release(new)
                     break
-                nxt = hard_checkpoint(settled.union(new))
-                release(settled)
-                if frontier is not settled:
-                    release(frontier)
-                settled, frontier = nxt, new
-                if settled.where(F.col("vertex") == target).limit(1).count() > 0:
+                settled, frontier = _settle(settled, frontier, new), new
+                if m["target"] > 0:
                     found_dist = hop
                     break
         if found_dist is None:
@@ -846,10 +823,11 @@ def harmonic_closeness(
     """
     if max_hops > 6:
         raise ValueError("max_hops > 6 breaks the exact-60 arithmetic; raise the LCM")
-    und = undirected_simple(edges, src, dst)
-    verts = und.select(F.col("a").alias("vertex")).union(
-        und.select(F.col("b").alias("vertex"))
-    ).distinct()
+    verts = (
+        symmetric(undirected_simple(edges, src, dst))
+        .select(F.col("u").alias("vertex"))
+        .distinct()
+    )
     pivots = [
         r["vertex"]
         for r in verts.orderBy(F.xxhash64("vertex").asc(), F.col("vertex").asc())
@@ -902,7 +880,8 @@ def betweenness_approx(
       * forward: level-synchronous multi-source BFS carrying sigma
         (shortest-path counts) — sigma(w, level d+1) = SUM of sigma over
         w's level-d in-frontier neighbors, one join + one map-side-combined
-        agg + one anti-join per level; state O(V x k), never edge-bound.
+        agg + one anti-join per level (8 jobs, the level's size observed
+        by its checkpoint job); state O(V x k), never edge-bound.
       * successor relation: one join of the settled state into the
         adjacency filtered to dist_w = dist_v + 1, checkpointed once.
       * backward: levels walked max_d -> 1; per level one equi-join of the
@@ -915,19 +894,10 @@ def betweenness_approx(
     golden replicates the same truncation.
     """
     spark = edges.sparkSession
-    und = undirected_simple(edges, src, dst)
     empty = spark.createDataFrame([], "name string, betweenness double")
-    sym = hard_checkpoint(
-        und.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-            und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-    )
+    sym = hard_checkpoint(symmetric(undirected_simple(edges, src, dst)))
     if sources is None:
-        verts = (
-            und.select(F.col("a").alias("vertex"))
-            .union(und.select(F.col("b").alias("vertex")))
-            .distinct()
-        )
+        verts = sym.select(F.col("u").alias("vertex")).distinct()
         sources = [
             r["vertex"]
             for r in verts.orderBy(F.xxhash64("vertex").asc(), F.col("vertex").asc())
@@ -956,19 +926,16 @@ def betweenness_approx(
                 .agg(F.sum("sigma").alias("sigma"))
                 .withColumnRenamed("vx", "vertex")
             )
-            new = hard_checkpoint(
+            new, m = observed_checkpoint(
                 cand.join(state, ["source", "vertex"], "left_anti").select(
                     "source", "vertex", F.lit(hop).alias("dist"), "sigma"
-                )
+                ),
+                n=F.count(F.lit(1)),
             )
-            if new.limit(1).count() == 0:
+            if m["n"] == 0:
                 release(new)
                 break
-            nxt = hard_checkpoint(state.union(new))
-            release(state)
-            if frontier is not state:
-                release(frontier)
-            state, frontier = nxt, new
+            state, frontier = _settle(state, frontier, new), new
             max_d = hop
         if max_d == 0:
             return empty
@@ -1103,10 +1070,7 @@ def related_entities_rrf(
     )
 
     # s2: common-neighbor count over the undirected simple graph.
-    und = undirected_simple(triples.select(F.col("subj").alias("src"), F.col("obj").alias("dst")))
-    adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
+    adj = symmetric(undirected_simple(triples, "subj", "obj"))
     na = adj.where(F.col("u") == a).select(F.col("v").alias("n"))
     s2 = (
         na.join(adj, na.n == adj.u)

@@ -23,6 +23,12 @@ origin stats, so estimates reset to a constant every iteration. Falls back
 to plain localCheckpoint if the (package-private, but py4j-visible) API is
 unavailable.
 
+Every distributed graph loop ends its rounds in :func:`observed_checkpoint`,
+so a round's convergence test and the loop's state sizing ride the
+checkpoint job (a separate ``limit(1).count()`` is two jobs under AQE), and
+reads one graph: :func:`undirected_simple` and its two directions,
+:func:`symmetric`.
+
 Small-graph regime: the graph operators' round jobs are pure scheduler
 overhead when the graph fits on the driver. :func:`local_graph` is their
 one regime probe (bounded raw-row collect, string-id guard, local dedup)
@@ -34,7 +40,7 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 # Default cap on graph state (2 x raw edge rows + vertices) for every
@@ -63,6 +69,51 @@ def hard_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
         out = ck
     out._graft_ckpt = ck  # type: ignore[attr-defined]
     return out
+
+
+def observed_checkpoint(
+    df: DataFrame, *columns: str, **metrics: Column
+) -> tuple[DataFrame, dict]:
+    """``hard_checkpoint`` of ``df`` -> ``(frame, values)``: ``metrics``
+    (name -> aggregate Column over ``df``) are observed by the checkpoint
+    job itself, a fresh ``Observation`` per call (an empty input the
+    optimizer prunes runs no job and still reports them); a NULL aggregate
+    (a sum over no rows) reads as 0. ``columns`` (default: all) are the state
+    columns kept, so a column only a metric reads (a round's previous
+    label) is dropped before the data is pinned.
+    """
+    obs = Observation()
+    observed = df.observe(obs, *(m.alias(k) for k, m in metrics.items()))
+    out = hard_checkpoint(observed.select(*columns) if columns else observed)
+    return out, {k: 0 if v is None else v for k, v in obs.get.items()}
+
+
+def undirected_simple(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """The undirected simple graph of an edge list: (a, b) with a < b,
+    distinct, self-loops dropped — the one graph every graph loop reads
+    (driver-local: ``LocalGraph.pairs``)."""
+    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
+    return (
+        edges.select(a.alias("a"), b.alias("b"))
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def symmetric(und: DataFrame) -> DataFrame:
+    """Both directions (u, v) of every (a, b) pair of
+    :func:`undirected_simple`: each directed pair once, so a parallel edge
+    or a self-loop never counts twice as a neighbor (``LocalGraph.adj``)."""
+    return und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
+        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    )
+
+
+def with_checkpoint_of(df: DataFrame, ckpt: DataFrame) -> DataFrame:
+    """``df`` (a lazy frame reading ``ckpt``), made releasable:
+    ``release(df)`` unpins the checkpoint backing ``ckpt``."""
+    df._graft_ckpt = getattr(ckpt, "_graft_ckpt", None)  # type: ignore[attr-defined]
+    return df
 
 
 class loop_shuffle_partitions:

@@ -12,12 +12,15 @@ update is the pure two-term form
     r'(v) = (1 - d) / N  +  d * sum_{u ~ v} r(u) / deg(u)
 
 Scale shape: the adjacency is materialized once (hash-partitioned by src
-and checkpointed); each iteration is ONE shuffle — join ranks (one row per
-vertex, deg rides along) into the adjacency on src, then re-aggregate on
-dst. Rank state is vertex-proportional, never edge-proportional. Each round
-goes through `hard_checkpoint` so the plan/lineage (and the optimizer's
-sizeInBytes estimate) stays O(1) across iterations — see iterutils.py for
-why plain localCheckpoint is not enough.
+and checkpointed), and so is the degree table, whose checkpoint job also
+observes N and the seed count; each iteration is ONE shuffle — join ranks
+(one row per vertex, deg rides along) into the adjacency on src, then
+re-aggregate on dst (7 jobs per round under AQE, measured at
+``driver_threshold=0`` on local[8] over tests/test_graph_loops.py's
+graph). Rank state is vertex-proportional, never edge-proportional. Each
+round goes through `hard_checkpoint` so the plan/lineage (and the
+optimizer's sizeInBytes estimate) stays O(1) across iterations — see
+iterutils.py for why plain localCheckpoint is not enough.
 
 Differential oracle: `oracle_graph.pagerank_golden` replicates this
 bit-for-bit-modulo-FP-order in pure Python; the driver value-compares the
@@ -34,7 +37,11 @@ from graphrag_litex_spark.operators.iterutils import (
     hard_checkpoint,
     local_frame,
     local_graph,
+    observed_checkpoint,
     release,
+    symmetric,
+    undirected_simple,
+    with_checkpoint_of,
 )
 
 _SCHEMA = "vertex string, rank double"
@@ -132,57 +139,42 @@ def pagerank(
         return _pagerank_driver_local(spark, g.adj, damping, iters, seed_set)
     # Both directions, partitioned by the join side once and pinned; the
     # per-iteration join then shuffles only the vertex-sized rank state.
-    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
-    und = hard_checkpoint(
-        edges.select(a.alias("a"), b.alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
     n_part = max(spark.sparkContext.defaultParallelism, 8)
     adj = hard_checkpoint(
-        und.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(und.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .repartition(n_part, "u")
+        symmetric(undirected_simple(edges, src, dst)).repartition(n_part, "u")
     )
-    release(und)
-
     deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    n = deg.count()  # one job; N is needed as a literal in the update
-    if n == 0:
-        return local_frame(spark, [], ["vertex", "rank"], _SCHEMA)
-
+    # Personalized reset: uniform over the seeds that exist in the graph.
+    # List seeds -> tiny broadcast in-list; DataFrame seeds -> hash join
+    # (AQE broadcasts when small). Unseeded, every vertex is a seed.
     if seeds is None:
-        base_col = F.lit((1.0 - damping) / n)
-        init_col = F.lit(1.0 / n)
-        deg = deg.select("u", "deg", base_col.alias("__base"), init_col.alias("__init"))
-    else:
-        # Personalized reset: uniform over the seeds that exist in the
-        # graph. List seeds -> tiny broadcast in-list; DataFrame seeds ->
-        # hash join (AQE broadcasts when small).
-        if isinstance(seeds, DataFrame):
-            sdf = (
-                seeds.select(F.col(seeds.columns[0]).alias("u"))
-                .distinct()
-                .withColumn("__s", F.lit(1))
-            )
-            marked = deg.join(sdf, "u", "left").withColumn(
-                "__s", F.coalesce("__s", F.lit(0))
-            )
-        else:
-            seed_set = sorted(set(seeds))
-            is_seed = F.col("u").isin(seed_set) if seed_set else F.lit(False)
-            marked = deg.withColumn("__s", is_seed.cast("int"))
-        n_seed = marked.agg(F.sum("__s")).first()[0] or 0
-        if n_seed == 0:
-            return local_frame(spark, [], ["vertex", "rank"], _SCHEMA)
-        deg = marked.select(
-            "u",
-            "deg",
-            (F.col("__s") * F.lit((1.0 - damping) / n_seed)).alias("__base"),
-            (F.col("__s") * F.lit(1.0 / n_seed)).alias("__init"),
+        deg = deg.withColumn("__s", F.lit(1))
+    elif isinstance(seeds, DataFrame):
+        sdf = (
+            seeds.select(F.col(seeds.columns[0]).alias("u"))
+            .distinct()
+            .withColumn("__s", F.lit(1))
         )
-
-    ranks = hard_checkpoint(deg.select("u", "deg", F.col("__init").alias("rank")))
+        deg = deg.join(sdf, "u", "left").withColumn("__s", F.coalesce("__s", F.lit(0)))
+    else:
+        seed_set = sorted(set(seeds))
+        is_seed = F.col("u").isin(seed_set) if seed_set else F.lit(False)
+        deg = deg.withColumn("__s", is_seed.cast("int"))
+    # The degree table is read every round: pin it once, with N and the
+    # seed count (literals of the update) observed by its checkpoint job.
+    pinned, m = observed_checkpoint(deg, n=F.count(F.lit(1)), n_seed=F.sum("__s"))
+    if m["n_seed"] == 0:
+        release(adj)
+        release(pinned)
+        return local_frame(spark, [], ["vertex", "rank"], _SCHEMA)
+    if seeds is None:
+        base_col = F.lit((1.0 - damping) / m["n"])
+        init_col = F.lit(1.0 / m["n"])
+    else:
+        base_col = F.col("__s") * F.lit((1.0 - damping) / m["n_seed"])
+        init_col = F.col("__s") * F.lit(1.0 / m["n_seed"])
+    deg = pinned.select("u", "deg", base_col.alias("__base"))
+    ranks = hard_checkpoint(pinned.select("u", "deg", init_col.alias("rank")))
     for _ in range(iters):
         contrib = (
             adj.join(ranks, "u")
@@ -202,5 +194,6 @@ def pagerank(
         )
         release(ranks)
         ranks = new_ranks
-    out = ranks.select(F.col("u").alias("vertex"), "rank")
-    return out
+    release(adj)
+    release(pinned)
+    return with_checkpoint_of(ranks.select(F.col("u").alias("vertex"), "rank"), ranks)

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphrag_litex_spark.operators.iterutils import hard_checkpoint
+from graphrag_litex_spark.operators.iterutils import hard_checkpoint, with_checkpoint_of
 
 
 def key_skew_profile(
@@ -69,5 +69,4 @@ def key_skew_profile(
     )
     # Hand the checkpoint handle to the caller: release(result) after the
     # profile is consumed unpersists the cached aggregate.
-    out._graft_ckpt = counts._graft_ckpt  # type: ignore[attr-defined]
-    return out
+    return with_checkpoint_of(out, counts)

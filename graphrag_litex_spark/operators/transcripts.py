@@ -325,7 +325,7 @@ def related_conversations(
     checkpoint blocks (long-lived sessions; same convention as
     `top_related_conversations` and the export jobs).
     """
-    from graphrag_litex_spark.operators.iterutils import hard_checkpoint
+    from graphrag_litex_spark.operators.iterutils import hard_checkpoint, with_checkpoint_of
 
     ents = hard_checkpoint(
         mentions_canon.select("conv_id", "canonical").distinct()
@@ -367,8 +367,7 @@ def related_conversations(
     # consumed (the repo's checkpoint hygiene convention — see
     # jobs/export_sft.py) instead of pinning executor storage for the
     # session lifetime.
-    out._graft_ckpt = getattr(ents, "_graft_ckpt", None)
-    return out
+    return with_checkpoint_of(out, ents)
 
 
 def top_related_conversations(
@@ -387,7 +386,11 @@ def top_related_conversations(
     124,750/124,750 pairs). Same valves as the pair operator; the ranking
     window partitions by conv_id (neighbor lists are conv-bounded after
     ``min_shared``/``max_entity_df``, never corpus-proportional)."""
-    from graphrag_litex_spark.operators.iterutils import hard_checkpoint, release
+    from graphrag_litex_spark.operators.iterutils import (
+        hard_checkpoint,
+        release,
+        with_checkpoint_of,
+    )
 
     # The pair table feeds both union branches; checkpoint so the
     # inverted-index self-join runs once, not once per direction. The
@@ -427,8 +430,7 @@ def top_related_conversations(
         )
     )
     # Callers release(result) once consumed — unpins the pair checkpoint.
-    out._graft_ckpt = getattr(pairs, "_graft_ckpt", None)
-    return out
+    return with_checkpoint_of(out, pairs)
 
 
 # ---- SFT export: chat-template rendering + loss-span masks -----------------

@@ -40,7 +40,7 @@ import time
 from contextlib import contextmanager
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -890,7 +890,10 @@ class KGPipeline:
 
         # S5/S6 linking + connected-components canonicalization (D6 + E3).
         def build_canon() -> DataFrame:
-            from graphrag_litex_spark.operators.iterutils import hard_checkpoint, release
+            from graphrag_litex_spark.operators.iterutils import (
+                observed_checkpoint,
+                release,
+            )
 
             # norm_name was computed once at extraction-write time (JVM
             # expression); reuse it — recomputing normalization over every
@@ -899,13 +902,12 @@ class KGPipeline:
             # symmetrization, CC's initial labels): checkpoint it once so the
             # corpus-sized mentions scan + distinct shuffle run once, not
             # three times (at sf10 that is two full extra corpus scans).
-            n_names = Observation("names")
-            names = hard_checkpoint(
+            names, n_names = observed_checkpoint(
                 results["mentions"]
                 .select("norm_name")
                 .where(F.col("norm_name") != "")
-                .distinct()
-                .observe(n_names, F.count(F.lit(1)).alias("n"))
+                .distinct(),
+                n=F.count(F.lit(1)),
             )
             # Giant-block valve, auto-enabled from the distinct-name count
             # (free: the checkpoint job itself reports it through the
@@ -915,7 +917,7 @@ class KGPipeline:
             # semantics are kept (identical to the single-process oracle).
             max_block = (
                 linking.VALVE_BLOCK_SIZE
-                if n_names.get["n"] > linking.VALVE_NAMES
+                if n_names["n"] > linking.VALVE_NAMES
                 else None
             )
             if cfg.link_scorer == "embedding":

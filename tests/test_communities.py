@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from graphrag_litex_spark.operators import communities as C
+from graphrag_litex_spark.operators.iterutils import undirected_simple
 
 
 def _edges_df(spark, pairs):
@@ -196,7 +197,7 @@ def test_stats_and_summaries_with_shared_degrees(spark, clique_graph):
 def test_lpa_driver_local_matches_distributed(spark, clique_graph):
     """Adaptive small-graph LPA must equal the distributed loop exactly."""
     nodes, edges = clique_graph
-    und = C._und_edges(edges)
+    und = undirected_simple(edges, "src_id", "dst_id").toDF("u", "v")
     local = {
         r["entity_id"]: r["label"]
         for r in C.label_propagation(
@@ -389,7 +390,7 @@ def test_modularity_spark_matches_python(spark, clique_graph):
     nodes, edges = clique_graph
     comms = C.detect_communities(nodes, edges, levels=1, min_size=3, lpa_iters=6)
     part = {r["entity_id"]: r["community_id"] for r in comms.collect()}
-    und = {(r["u"], r["v"]) for r in C._und_edges(edges).collect()}
+    und = {tuple(r) for r in undirected_simple(edges, "src_id", "dst_id").collect()}
     q_spark = C.modularity(comms, edges, level=0)
     q_py = _modularity_py(part, list(und))
     assert abs(q_spark - q_py) < 1e-9

@@ -448,13 +448,14 @@ def main() -> int:
 
     # Alternating-star CC: one large-star round — groupBy min + self join,
     # all JVM-side.
-    from graphrag_litex_spark.operators.cc import _canon_edges, _large_star
+    from graphrag_litex_spark.operators.cc import _large_star
+    from graphrag_litex_spark.operators.iterutils import undirected_simple
 
     edges_df = d.select(
         (F.col("doc_id") % 97).cast("string").alias("a"),
         (F.col("doc_id") % 89).cast("string").alias("b"),
     )
-    p = plan_of(_large_star(_canon_edges(edges_df)))
+    p = plan_of(_large_star(undirected_simple(edges_df, "a", "b")))
     assert "CartesianProduct" not in p and "BatchEvalPython" not in p
     sections.append(
         (
