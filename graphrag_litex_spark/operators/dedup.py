@@ -414,10 +414,13 @@ def incremental_dedup_pairs(
     Equivalence contract (tested): old-batch pairs ∪ incremental pairs ==
     ``minhash_lsh_candidates(all, verify="estimate")`` at the same
     threshold.
+
+    The result is lazy over the increment's signature checkpoint: pass it
+    to ``iterutils.release`` once consumed.
     """
     import os
 
-    from graphrag_litex_spark.operators.iterutils import hard_checkpoint, release
+    from graphrag_litex_spark.operators.iterutils import hard_checkpoint, with_checkpoint_of
 
     spark = new_docs.sparkSession
     meta = _read_index_meta(index_dir)
@@ -479,8 +482,7 @@ def incremental_dedup_pairs(
     out = _estimate_verified_pairs(
         cand, sigs, meta["num_hashes"], est_threshold
     ).dropDuplicates(["id_a", "id_b"])
-    release(base)
-    return out
+    return with_checkpoint_of(out, base)
 
 
 def merge_keeper_map(

@@ -27,6 +27,11 @@ Scale notes (100 TB):
 - `k_core` is iterative peeling: each round one degree aggregation + two
   anti joins, lineage reset per round (O(1) plan across rounds), the
   convergence counts observed by the degree checkpoint's own job.
+- `hop_distances`, `shortest_path` and `betweenness_approx` run one BFS
+  level loop (`_bfs_levels`) whose state is its list of per-level
+  checkpoints: each hop anti-joins its candidates against the two previous
+  levels only (the graph is symmetric), never against an accumulated
+  settled set, so a hop's one eager action is its level's checkpoint.
 
 Every distributed loop here ends its rounds in
 ``iterutils.observed_checkpoint``, so its convergence test rides the
@@ -37,6 +42,7 @@ checkpoint job. Jobs per round were measured under AQE at
 from __future__ import annotations
 
 from collections import Counter
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -626,15 +632,52 @@ def degree_assortativity(edges: DataFrame, src: str = "src", dst: str = "dst") -
     return (row["s_xy"] / m2 - mean * mean) / var
 
 
-def _settle(settled: DataFrame, frontier: DataFrame, new: DataFrame) -> DataFrame:
-    """A BFS hop's state step: checkpoint ``settled`` ∪ ``new`` and release
-    the superseded settled set and frontier (the first frontier is the
-    seed state itself)."""
-    nxt = hard_checkpoint(settled.union(new))
-    release(settled)
-    if frontier is not settled:
-        release(frontier)
-    return nxt
+def _bfs_levels(
+    seed: DataFrame, expand, keys: list[str], max_hops: int, **metrics
+) -> tuple[list[DataFrame], dict]:
+    """Level-synchronous BFS over a SYMMETRIC adjacency -> ``(levels,
+    m)``: ``levels[d]`` is the observed checkpoint of the rows at hop d
+    (``levels[0]`` the seed, kept even when empty), ``m`` the last
+    observed level's metrics.
+
+    Hop d is ``expand(levels[d - 1], d)`` (candidate rows keyed by
+    ``keys``) anti-joined against levels d-1 and d-2 only: every neighbor
+    of a vertex at distance d-1 lies at distance d-2, d-1 or d, so in a
+    symmetric graph no earlier level can be re-reached and no accumulated
+    settled set is needed. The level's checkpoint job observes its size
+    ``n`` and ``metrics`` (name -> aggregate Column) — the hop's only
+    eager action. The loop ends after ``max_hops``, at the first empty
+    level (released, not kept) or after a level with a nonzero metric.
+    """
+    count = F.count(F.lit(1))
+    level, m = observed_checkpoint(seed, n=count, **metrics)
+    levels = [level]
+    for hop in range(1, max_hops + 1):
+        if m["n"] == 0 or any(m[k] for k in metrics):
+            break
+        seen = reduce(DataFrame.union, [lv.select(*keys) for lv in levels[-2:]])
+        level, m = observed_checkpoint(
+            expand(levels[-1], hop).join(seen, keys, "left_anti"), n=count, **metrics
+        )
+        if m["n"] == 0:
+            release(level)
+            break
+        levels.append(level)
+    return levels, m
+
+
+def _pivots(sym: DataFrame, n: int) -> list[str]:
+    """The ``n`` vertices of ``sym`` with the smallest (xxhash64(name),
+    name): the deterministic, engine-portable pivot sample of
+    harmonic_closeness and betweenness_approx, replicated by the
+    pure-Python goldens."""
+    verts = sym.select(F.col("u").alias("vertex")).distinct()
+    return [
+        r["vertex"]
+        for r in verts.orderBy(F.xxhash64("vertex").asc(), F.col("vertex").asc())
+        .limit(n)
+        .collect()
+    ]
 
 
 def hop_distances(
@@ -650,14 +693,13 @@ def hop_distances(
     dist 0) — the frontier-expansion iterative primitive (shortest paths,
     reachability, closeness) as a hash-join loop, no GraphX.
 
-    Plan shape: adjacency symmetrized + checkpointed once; each hop is one
-    join of the CURRENT FRONTIER (not the full state) into the adjacency,
-    a (vertex, source) dedupe, and an anti-join against settled
-    distances — so per-hop work is frontier-proportional and total state
-    is O(V x |sources|), never edge-proportional. Early-exits when a
-    frontier empties; the frontier's size is observed by its own
-    checkpoint job (``iterutils.observed_checkpoint``), so a hop is two
-    checkpoints (frontier, settled state) and no other action: 8 jobs.
+    Plan shape: adjacency symmetrized + checkpointed once; each hop
+    (:func:`_bfs_levels`) is one join of the CURRENT FRONTIER into the
+    adjacency, a (vertex, source) dedupe, and an anti-join against the
+    two previous levels — so per-hop work is frontier-proportional and
+    total state is O(V x |sources|), never edge-proportional. A hop is one
+    observed checkpoint and no other action (7 jobs with its AQE query
+    stages); the result is one checkpoint of the union of the levels.
     """
     spark = edges.sparkSession
     # Adaptive driver-local BFS (iterutils.local_graph): the per-hop join
@@ -677,31 +719,24 @@ def hop_distances(
             spark, rows, ["vertex", "source", "dist"], "vertex string, source string, dist int"
         )
     sym = hard_checkpoint(symmetric(undirected_simple(edges, src, dst)))
-    dist = hard_checkpoint(
-        local_frame(spark, [(s,) for s in sources], ["vertex"], "vertex string").select(
-            F.col("vertex"), F.col("vertex").alias("source"), F.lit(0).alias("dist")
-        )
+    seed = local_frame(spark, [(s,) for s in sources], ["vertex"], "vertex string").select(
+        F.col("vertex"), F.col("vertex").alias("source"), F.lit(0).alias("dist")
     )
-    frontier = dist
+
+    def expand(frontier: DataFrame, hop: int) -> DataFrame:
+        return (
+            frontier.join(sym, frontier["vertex"] == sym["u"])
+            .select(F.col("v").alias("vertex"), "source", F.lit(hop).alias("dist"))
+            .distinct()
+        )
+
+    levels = []
     try:
-        for hop in range(1, max_hops + 1):
-            cand = (
-                frontier.join(sym, frontier["vertex"] == sym["u"])
-                .select(F.col("v").alias("vertex"), "source", F.lit(hop).alias("dist"))
-                .distinct()
-            )
-            new, m = observed_checkpoint(
-                cand.join(dist, ["vertex", "source"], "left_anti"), n=F.count(F.lit(1))
-            )
-            if m["n"] == 0:
-                release(new)
-                break
-            dist, frontier = _settle(dist, frontier, new), new
+        levels, _ = _bfs_levels(seed, expand, ["vertex", "source"], max_hops)
+        return hard_checkpoint(reduce(DataFrame.union, levels))
     finally:
-        release(sym)
-        if frontier is not dist:
-            release(frontier)
-    return dist
+        for df in [sym, *levels]:
+            release(df)
 
 
 def shortest_path(
@@ -724,80 +759,56 @@ def shortest_path(
     found=false (hops=-1, empty path) when target is unreachable within
     ``max_hops`` or either endpoint is absent.
 
-    Plan: the standard frontier BFS loop (per hop: one frontier-sized
-    adjacency join + a min-parent agg + an anti-join against settled
-    vertices; each frontier an observed checkpoint whose job also reports
-    its size and whether it settled the target, so the early exits cost no
-    action of their own; 8 jobs per hop). Backtracking then walks parent
-    pointers with <= hops single-row lookups against the settled frame —
-    driver work bounded by the path length, never by V (the same "<= k
-    rows reach the driver" budget as the query-path reduce).
+    Plan: the frontier BFS loop (:func:`_bfs_levels`; per hop one
+    frontier-sized adjacency join + a min-parent agg + an anti-join
+    against the two previous levels). Each level is an observed
+    checkpoint whose job also reports its size and whether it holds the
+    target, so the early exits cost no action of their own (7 jobs per
+    hop). Backtracking then looks each parent up in the level above it:
+    <= hops single-row lookups — driver work bounded by the path length,
+    never by V (the same "<= k rows reach the driver" budget as the
+    query-path reduce).
     """
     spark = edges.sparkSession
     sym = hard_checkpoint(symmetric(undirected_simple(edges, src, dst)))
     out_schema = "found boolean, hops int, path array<string>, path_str string"
+    # The source, if it is in the graph.
+    seed = spark.createDataFrame(
+        [(str(source), None, 0)], "vertex string, parent string, dist int"
+    ).join(sym.select(F.col("u").alias("vertex")).distinct(), "vertex", "left_semi")
 
-    def _miss():
-        return spark.createDataFrame(
-            [(False, -1, [], "")], out_schema
+    def expand(frontier: DataFrame, hop: int) -> DataFrame:
+        return (
+            frontier.select("vertex")
+            .join(sym, frontier["vertex"] == sym["u"])
+            .groupBy(F.col("v").alias("vertex"))
+            .agg(F.min("u").alias("parent"))
+            .select("vertex", "parent", F.lit(hop).alias("dist"))
         )
 
-    settled, m = observed_checkpoint(
-        spark.createDataFrame([(str(source), None, 0)], "vertex string, parent string, dist int")
-        .join(
-            sym.select(F.col("u").alias("vertex")).distinct(), "vertex", "left_semi"
-        ),
-        n=F.count(F.lit(1)),
-    )
-    frontier = settled
-    found_dist = 0 if source == target else None
+    levels = []
     try:
-        if m["n"] == 0:  # source not in the graph
-            return _miss()
-        if found_dist is None:
-            for hop in range(1, max_hops + 1):
-                cand = (
-                    frontier.select("vertex")
-                    .join(sym, frontier["vertex"] == sym["u"])
-                    .select(
-                        F.col("v").alias("vertex"),
-                        F.col("u").alias("parent"),
-                        F.lit(hop).alias("dist"),
-                    )
-                )
-                new, m = observed_checkpoint(
-                    cand.join(settled, "vertex", "left_anti")
-                    .groupBy("vertex", "dist")
-                    .agg(F.min("parent").alias("parent"))
-                    .select("vertex", "parent", "dist"),
-                    n=F.count(F.lit(1)),
-                    # Unsettled before this hop, so settled now iff new.
-                    target=F.count_if(F.col("vertex") == str(target)),
-                )
-                if m["n"] == 0:
-                    release(new)
-                    break
-                settled, frontier = _settle(settled, frontier, new), new
-                if m["target"] > 0:
-                    found_dist = hop
-                    break
-        if found_dist is None:
-            return _miss()
-        # Backtrack: <= found_dist one-row lookups over the settled frame.
+        levels, m = _bfs_levels(
+            seed,
+            expand,
+            ["vertex"],
+            max_hops,
+            # Unsettled before its level, so settled there iff present.
+            target=F.count_if(F.col("vertex") == str(target)),
+        )
+        if m["target"] == 0:
+            return spark.createDataFrame([(False, -1, [], "")], out_schema)
+        # Backtrack: one one-row lookup per level, deepest first.
         path = [str(target)]
-        cur = str(target)
-        for _ in range(found_dist):
-            cur = settled.where(F.col("vertex") == cur).first()["parent"]
-            path.append(cur)
+        for level in reversed(levels[1:]):
+            path.append(level.where(F.col("vertex") == path[-1]).first()["parent"])
         path.reverse()
         return spark.createDataFrame(
-            [(True, found_dist, path, " -> ".join(path))], out_schema
+            [(True, len(levels) - 1, path, " -> ".join(path))], out_schema
         )
     finally:
-        release(sym)
-        release(settled)
-        if frontier is not settled:
-            release(frontier)
+        for df in [sym, *levels]:
+            release(df)
 
 
 def harmonic_closeness(
@@ -808,8 +819,7 @@ def harmonic_closeness(
     dst: str = "dst",
 ) -> DataFrame:
     """Approximate harmonic centrality (Eppstein-Wang sampling): BFS from
-    ``n_sources`` deterministically-sampled pivots (smallest
-    (xxhash64(name), name) — reproducible by the pure-Python golden), then
+    ``n_sources`` deterministically-sampled pivots (:func:`_pivots`), then
     per vertex sum 1/dist over the pivots that reach it.
 
     Exact-arithmetic form: with max_hops <= 6, 60/dist is an INTEGER for
@@ -823,17 +833,7 @@ def harmonic_closeness(
     """
     if max_hops > 6:
         raise ValueError("max_hops > 6 breaks the exact-60 arithmetic; raise the LCM")
-    verts = (
-        symmetric(undirected_simple(edges, src, dst))
-        .select(F.col("u").alias("vertex"))
-        .distinct()
-    )
-    pivots = [
-        r["vertex"]
-        for r in verts.orderBy(F.xxhash64("vertex").asc(), F.col("vertex").asc())
-        .limit(n_sources)
-        .collect()
-    ]
+    pivots = _pivots(symmetric(undirected_simple(edges, src, dst)), n_sources)
     if not pivots:  # empty graph
         return edges.sparkSession.createDataFrame(
             [], "name string, n_reached bigint, harmonic60 bigint, closeness double"
@@ -871,24 +871,26 @@ def betweenness_approx(
     raw estimator is published and the normalization documented, since the
     sampled sum is the engine-comparable quantity.
 
-    Pivots: smallest (xxhash64(name), name) — the same deterministic,
-    engine-portable sampling rule as harmonic_closeness, replicated by the
-    pure-Python golden. ``sources`` overrides sampling for tests.
+    Pivots: :func:`_pivots`, the same deterministic, engine-portable
+    sampling rule as harmonic_closeness, replicated by the pure-Python
+    golden. ``sources`` overrides sampling for tests.
 
     Plan shape (everything hash joins + aggregates, hard_checkpoint per
     round like CC/PageRank):
-      * forward: level-synchronous multi-source BFS carrying sigma
-        (shortest-path counts) — sigma(w, level d+1) = SUM of sigma over
-        w's level-d in-frontier neighbors, one join + one map-side-combined
-        agg + one anti-join per level (8 jobs, the level's size observed
-        by its checkpoint job); state O(V x k), never edge-bound.
-      * successor relation: one join of the settled state into the
+      * forward: level-synchronous multi-source BFS (:func:`_bfs_levels`)
+        carrying sigma (shortest-path counts) — sigma(w, level d+1) = SUM
+        of sigma over w's level-d in-frontier neighbors, one join + one
+        map-side-combined agg + one anti-join against the two previous
+        levels per level (7 jobs, the level's observed checkpoint); state
+        O(V x k), never edge-bound.
+      * successor relation: one join of the levels' union into the
         adjacency filtered to dist_w = dist_v + 1, checkpointed once.
       * backward: levels walked max_d -> 1; per level one equi-join of the
         level's successor slice with the deeper level's deltas + one agg.
         delta(v) = sum_w sigma_v/sigma_w * (1 + delta_w). sigma stays
         integer; delta is double, rounded at publication (same 6dp
-        determinism stance as avg-strength oracles).
+        determinism stance as avg-strength oracles). The deepest level's
+        deltas are all 0 and stay lazy.
     ``max_hops`` truncates the BFS DAG (paths longer than max_hops
     contribute nothing — the standard bounded-radius approximation); the
     golden replicates the same truncation.
@@ -897,48 +899,33 @@ def betweenness_approx(
     empty = spark.createDataFrame([], "name string, betweenness double")
     sym = hard_checkpoint(symmetric(undirected_simple(edges, src, dst)))
     if sources is None:
-        verts = sym.select(F.col("u").alias("vertex")).distinct()
-        sources = [
-            r["vertex"]
-            for r in verts.orderBy(F.xxhash64("vertex").asc(), F.col("vertex").asc())
-            .limit(n_sources)
-            .collect()
-        ]
+        sources = _pivots(sym, n_sources)
     if not sources:
         release(sym)
         return empty
-    state = hard_checkpoint(
-        local_frame(spark, [(str(s),) for s in sources], ["source"], "source string").select(
-            "source",
-            F.col("source").alias("vertex"),
-            F.lit(0).alias("dist"),
-            F.lit(1).cast("long").alias("sigma"),
-        )
+    seed = local_frame(spark, [(str(s),) for s in sources], ["source"], "source string").select(
+        "source",
+        F.col("source").alias("vertex"),
+        F.lit(0).alias("dist"),
+        F.lit(1).cast("long").alias("sigma"),
     )
-    frontier = state
-    max_d = 0
+
+    def expand(frontier: DataFrame, hop: int) -> DataFrame:
+        return (
+            frontier.join(sym, frontier["vertex"] == sym["u"])
+            .groupBy("source", F.col("v").alias("vertex"))
+            .agg(F.sum("sigma").alias("sigma"))
+            .select("source", "vertex", F.lit(hop).alias("dist"), "sigma")
+        )
+
+    levels, level_deltas, succ = [], [], None
     try:
         # Forward: BFS levels with path counting.
-        for hop in range(1, max_hops + 1):
-            cand = (
-                frontier.join(sym, frontier["vertex"] == sym["u"])
-                .groupBy("source", F.col("v").alias("vx"))
-                .agg(F.sum("sigma").alias("sigma"))
-                .withColumnRenamed("vx", "vertex")
-            )
-            new, m = observed_checkpoint(
-                cand.join(state, ["source", "vertex"], "left_anti").select(
-                    "source", "vertex", F.lit(hop).alias("dist"), "sigma"
-                ),
-                n=F.count(F.lit(1)),
-            )
-            if m["n"] == 0:
-                release(new)
-                break
-            state, frontier = _settle(state, frontier, new), new
-            max_d = hop
+        levels, _ = _bfs_levels(seed, expand, ["source", "vertex"], max_hops)
+        max_d = len(levels) - 1
         if max_d == 0:
             return empty
+        state = reduce(DataFrame.union, levels)
         # Successor relation: (source, v at dist d) -> (w at dist d+1).
         succ = hard_checkpoint(
             state.alias("sv")
@@ -962,12 +949,8 @@ def betweenness_approx(
             .where(F.col("dist_w") == F.col("dist") + 1)
         )
         # Backward: deepest level has no successors -> delta 0.
-        delta = hard_checkpoint(
-            state.where(F.col("dist") == max_d).select(
-                "source", "vertex", F.lit(0.0).alias("delta")
-            )
-        )
-        level_deltas = [delta]
+        delta = levels[max_d].select("source", "vertex", F.lit(0.0).alias("delta"))
+        level_deltas.append(delta)
         for d in range(max_d - 1, 0, -1):
             contrib = (
                 succ.where(F.col("dist") == d)
@@ -987,35 +970,25 @@ def betweenness_approx(
                 )
                 .withColumnRenamed("v", "vertex")
             )
-            lvl = hard_checkpoint(
-                state.where(F.col("dist") == d)
+            delta = hard_checkpoint(
+                levels[d]
                 .select("source", "vertex")
                 .join(contrib, ["source", "vertex"], "left")
                 .select(
                     "source", "vertex", F.coalesce("delta", F.lit(0.0)).alias("delta")
                 )
             )
-            level_deltas.append(lvl)
-            delta = lvl
-        from functools import reduce
-
-        all_deltas = reduce(DataFrame.union, level_deltas)
-        out = (
-            all_deltas.groupBy("vertex")
+            level_deltas.append(delta)
+        # Materialized before the finally releases the checkpoints it reads.
+        return hard_checkpoint(
+            reduce(DataFrame.union, level_deltas)
+            .groupBy("vertex")
             .agg(F.round(F.sum("delta"), 6).alias("betweenness"))
             .select(F.col("vertex").alias("name"), "betweenness")
         )
-        # Materialize before releasing the checkpoints the plan reads.
-        out = hard_checkpoint(out)
-        for df in level_deltas:
-            release(df)
-        release(succ)
-        return out
     finally:
-        release(sym)
-        if frontier is not state:
-            release(frontier)
-        release(state)
+        for df in [sym, succ, *levels, *level_deltas]:
+            release(df)
 
 
 def related_entities_rrf(

@@ -41,7 +41,19 @@ from .iterutils import (
     local_frame,
     local_graph,
     release,
+    symmetric,
+    undirected_simple,
 )
+
+
+def _walk_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """The walkers' step relation, checkpointed once: both directions
+    (src, dst) of every edge of the undirected simple graph."""
+    return hard_checkpoint(
+        symmetric(undirected_simple(edges, src_col, dst_col)).select(
+            F.col("u").alias("src"), F.col("v").alias("dst")
+        )
+    )
 
 
 def _h(*cols) -> F.Column:
@@ -317,12 +329,8 @@ def random_walks(
                     nodes.append(cur)
                 rows.append((start, widx, nodes, sep.join(nodes), cur))
         return local_frame(edges.sparkSession, rows, _WALK_COLS, _WALK_SCHEMA)
-    fwd = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    sym = (
-        fwd.unionAll(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    # sym is re-joined every step, and seeds the state: checkpoint it first.
+    sym = _walk_edges(edges, src_col, dst_col)
     state = (
         sym.select(F.col("src").alias("start"))
         .distinct()
@@ -339,10 +347,9 @@ def random_walks(
             F.array("start").alias("nodes"),
         )
     )
-    # sym is re-joined every step: checkpoint once up front; superseded
-    # STATE checkpoints are released as the loop advances — each eager
-    # checkpoint materializes, so its predecessor's blocks are dead weight.
-    sym = hard_checkpoint(sym)
+    # Superseded STATE checkpoints are released as the loop advances —
+    # each eager checkpoint materializes, so its predecessor's blocks are
+    # dead weight.
     prev_state = None
     for step in range(1, length + 1):
         cand = state.join(sym.withColumnRenamed("src", "cur"), "cur")
@@ -472,12 +479,7 @@ def node2vec_walks(
                     nodes.append(cur)
                 rows.append((start, widx, nodes, sep.join(nodes), cur))
         return local_frame(edges.sparkSession, rows, _WALK_COLS, _WALK_SCHEMA)
-    fwd = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    sym = hard_checkpoint(
-        fwd.unionAll(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    sym = _walk_edges(edges, src_col, dst_col)
     state = (
         sym.select(F.col("src").alias("start"))
         .distinct()

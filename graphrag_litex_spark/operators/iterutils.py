@@ -192,13 +192,18 @@ def scale_out(df: DataFrame, key_col: str | None = None, factor: int = 2) -> Dat
 
 
 def release(df: DataFrame) -> None:
-    """Unpersist the checkpoint backing a ``hard_checkpoint`` result."""
+    """Free the blocks of the checkpoint backing a ``hard_checkpoint``
+    result: unpersist the checkpointed RDD its LogicalRDD reads (the
+    ``localCheckpoint`` Dataset is not in the CacheManager, so
+    ``Dataset.unpersist`` frees nothing). Any later read of a frame over
+    that checkpoint fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``, so
+    release only what nothing reads any more."""
     ck = getattr(df, "_graft_ckpt", None)
     if ck is not None:
         try:
-            ck.unpersist(blocking=False)
+            ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
         except Exception:
-            pass
+            pass  # private API unavailable (e.g. Spark Connect), as in hard_checkpoint
 
 
 class LocalGraph(NamedTuple):

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from graphrag_litex_spark.operators import cc, iterutils
 from graphrag_litex_spark.operators import communities as C
 from graphrag_litex_spark.operators import graph_analytics as G
+from graphrag_litex_spark.operators import graph_ml as M
 from graphrag_litex_spark.operators import pagerank as P
 from graphrag_litex_spark.operators.iterutils import local_frame
 
@@ -73,6 +74,8 @@ def _loops(edges, nodes):
         "pagerank_seeded": lambda: P.pagerank(
             edges, seeds=["a0", "v05"], driver_threshold=0
         ),
+        "random_walks": lambda: M.random_walks(edges, length=6, driver_threshold=0),
+        "node2vec_walks": lambda: M.node2vec_walks(edges, length=6, driver_threshold=0),
     }
 
 
@@ -80,7 +83,8 @@ def _loops(edges, nodes):
 # local[8]: the most jobs seen over repeated runs, plus one. AQE submits
 # concurrent query stages, and which of them a re-optimization still finds
 # unsubmitted varies from run to run, so a join-heavy loop's count moves
-# by one or two (k_truss 29-31, detect_communities 161-162).
+# by one to three (k_truss 29-31, detect_communities 161-162,
+# random_walks 12-15, node2vec_walks 16-19).
 _LOOP_JOBS = {
     "cc_minlabel": 101,
     "cc_alternating": 64,
@@ -89,11 +93,13 @@ _LOOP_JOBS = {
     "k_core": 15,
     "k_truss": 32,
     "neighborhood_function": 25,
-    "hop_distances": 53,
-    "shortest_path": 87,
-    "betweenness_approx": 122,
+    "hop_distances": 48,
+    "shortest_path": 77,
+    "betweenness_approx": 114,
     "pagerank": 78,
     "pagerank_seeded": 78,
+    "random_walks": 16,
+    "node2vec_walks": 20,
 }
 
 
@@ -110,7 +116,13 @@ def test_graph_loop_job_budget(spark, graph, loop):
     ``count()`` jobs to size the state): cc_minlabel 130, cc_alternating
     81, label_propagation 86, detect_communities 198, k_core 16, k_truss
     36, neighborhood_function 34, hop_distances 64, shortest_path 128,
-    betweenness_approx 137, pagerank 80, pagerank_seeded 83."""
+    betweenness_approx 137, pagerank 80, pagerank_seeded 83.
+
+    BFS loops before their level list (a second checkpoint of the settled
+    set ∪ the new level every hop): hop_distances 52, shortest_path 86,
+    betweenness_approx 121. Walkers before they read the checkpointed
+    undirected builder (the walk state seeded from the lazy edge list):
+    random_walks 14-15."""
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     run = _loops(*graph)[loop]
     j0 = dag.nextJobId()
@@ -120,6 +132,11 @@ def test_graph_loop_job_budget(spark, graph, loop):
     assert dag.nextJobId() - j0 <= _LOOP_JOBS[loop]
 
 
+def _ckpt_rdd(df):
+    """The id of the checkpointed RDD a ``hard_checkpoint`` result reads."""
+    return df._graft_ckpt._jdf.queryExecution().analyzed().rdd().id()
+
+
 @pytest.mark.parametrize(
     "name, call",
     [
@@ -127,28 +144,34 @@ def test_graph_loop_job_budget(spark, graph, loop):
         ("betweenness_approx", lambda e: G.betweenness_approx(e, sources=["v00", "a0"])),
         # A source outside the graph: the BFS stops at hop 0 (max_d == 0).
         ("betweenness_approx_no_reach", lambda e: G.betweenness_approx(e, sources=["zz"])),
+        ("shortest_path", lambda e: G.shortest_path(e, "v00", "v09")),
+        # Another component: the BFS runs until its frontier empties.
+        ("shortest_path_unreachable", lambda e: G.shortest_path(e, "v00", "a0")),
+        ("shortest_path_absent_source", lambda e: G.shortest_path(e, "zz", "a0")),
     ],
 )
 def test_bfs_loops_release_every_checkpoint(spark, graph, monkeypatch, name, call):
-    """Every checkpoint a BFS loop takes is released, except the one its
-    result reads (the early-exit result reads none)."""
-    taken, released = [], []
-    checkpoint, release = iterutils.hard_checkpoint, iterutils.release
+    """Every checkpoint a BFS loop takes has its blocks freed, except the
+    one its result reads (shortest_path's driver-built row and the
+    early-exit result read none): after the call, no other checkpointed
+    RDD is still in the SparkContext's persistent RDDs."""
+    taken = []  # held, so no checkpoint is garbage-collected mid-test
+    checkpoint = iterutils.hard_checkpoint
 
     def tracked_checkpoint(df, eager=True):
         out = checkpoint(df, eager)
         taken.append(out)
         return out
 
-    def tracked_release(df):
-        released.append(df)
-        release(df)
-
     for mod in (iterutils, G):
         monkeypatch.setattr(mod, "hard_checkpoint", tracked_checkpoint)
-    monkeypatch.setattr(G, "release", tracked_release)
     result = call(graph[0])
     result.collect()
-    kept = [df for df in taken if not any(df is r for r in released)]
+    pinned = set(spark.sparkContext._jsc.getPersistentRDDs())
+    kept = {_ckpt_rdd(df) for df in taken} & pinned
     assert len(taken) > 1
-    assert kept == ([] if name.endswith("no_reach") else [result])
+    assert kept == ({_ckpt_rdd(result)} if hasattr(result, "_graft_ckpt") else set())
+    if name == "shortest_path":
+        assert result.first()["path_str"] == " -> ".join(f"v{i:02d}" for i in range(10))
+    elif name.startswith("shortest_path"):
+        assert result.first()["found"] is False
