@@ -42,6 +42,7 @@ from graphrag_litex_spark.operators.iterutils import (
     release,
     symmetric,
     undirected_simple,
+    with_checkpoint_of,
 )
 
 
@@ -201,10 +202,12 @@ def connected_components(
                 )
     finally:
         release(sym)
-    # verts stays cached until the returned plan is consumed (lineage is
-    # truncated, so an early unpersist would make the semi-join unreadable).
-    return labels.join(verts, "u", "left_semi").select(
-        F.col("u").alias(id_col), "label"
+    # The result reads both checkpoints (lineage is truncated, so an early
+    # release would make the semi-join unreadable): release(result) frees both.
+    return with_checkpoint_of(
+        labels.join(verts, "u", "left_semi").select(F.col("u").alias(id_col), "label"),
+        labels,
+        verts,
     )
 
 

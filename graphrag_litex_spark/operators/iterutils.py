@@ -52,8 +52,9 @@ def hard_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """localCheckpoint + strip preserved origin statistics.
 
     Returns a DataFrame whose logical plan is a bare LogicalRDD over the
-    checkpointed data. The underlying checkpoint RDD is kept on the
-    returned object as ``_graft_ckpt`` so callers may ``release()`` it.
+    checkpointed data. The underlying checkpoint is kept on the returned
+    object as ``_graft_ckpt`` (a tuple of the checkpoints a frame reads) so
+    callers may ``release()`` it.
     """
     ck = df.localCheckpoint(eager=eager)
     try:
@@ -67,7 +68,7 @@ def hard_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
         # checkpoint — correct, but subject to failure mode (2) above for
         # very long loops.
         out = ck
-    out._graft_ckpt = ck  # type: ignore[attr-defined]
+    out._graft_ckpt = (ck,)  # type: ignore[attr-defined]
     return out
 
 
@@ -109,10 +110,12 @@ def symmetric(und: DataFrame) -> DataFrame:
     )
 
 
-def with_checkpoint_of(df: DataFrame, ckpt: DataFrame) -> DataFrame:
-    """``df`` (a lazy frame reading ``ckpt``), made releasable:
-    ``release(df)`` unpins the checkpoint backing ``ckpt``."""
-    df._graft_ckpt = getattr(ckpt, "_graft_ckpt", None)  # type: ignore[attr-defined]
+def with_checkpoint_of(df: DataFrame, *ckpts: DataFrame) -> DataFrame:
+    """``df`` (a lazy frame reading ``ckpts``), made releasable:
+    ``release(df)`` unpins the checkpoints backing every one of ``ckpts``."""
+    df._graft_ckpt = tuple(  # type: ignore[attr-defined]
+        ck for c in ckpts for ck in getattr(c, "_graft_ckpt", ())
+    )
     return df
 
 
@@ -192,14 +195,14 @@ def scale_out(df: DataFrame, key_col: str | None = None, factor: int = 2) -> Dat
 
 
 def release(df: DataFrame) -> None:
-    """Free the blocks of the checkpoint backing a ``hard_checkpoint``
-    result: unpersist the checkpointed RDD its LogicalRDD reads (the
-    ``localCheckpoint`` Dataset is not in the CacheManager, so
-    ``Dataset.unpersist`` frees nothing). Any later read of a frame over
-    that checkpoint fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``, so
-    release only what nothing reads any more."""
-    ck = getattr(df, "_graft_ckpt", None)
-    if ck is not None:
+    """Free the blocks of the checkpoints backing a ``hard_checkpoint`` or
+    ``with_checkpoint_of`` result: unpersist the checkpointed RDD each
+    LogicalRDD reads (the ``localCheckpoint`` Dataset is not in the
+    CacheManager, so ``Dataset.unpersist`` frees nothing). Any later read
+    of a frame over those checkpoints fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``, so release only what nothing
+    reads any more."""
+    for ck in getattr(df, "_graft_ckpt", ()):
         try:
             ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
         except Exception:

@@ -5,6 +5,16 @@ every setting below is the one we'd ship on a 1000-executor cluster:
 AQE for runtime re-planning (post-shuffle coalescing + skew-join splitting,
 which defuses hot-entity skew, SURVEY.md §4), Arrow for the pandas-UDF
 extraction hot path, and shuffle partitions sized to the parallelism level.
+
+Python workers start from ``graphrag_litex_spark.pydaemon``
+(``spark.python.daemon.module``): it takes Spark's zip archives off the
+workers' ``sys.path`` before pyspark is imported, because each task's
+``importlib.invalidate_caches()`` makes every zip importer re-read its
+archive (250-360 ms per task). It falls back to the stock path unless the
+same pyspark version is installed as a plain directory. The package's
+parent directory is appended to ``spark.executorEnv.PYTHONPATH``, so the
+daemon (and every kernel pickled by reference) resolves on the workers
+from any working directory.
 """
 
 from __future__ import annotations
@@ -20,6 +30,11 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    extra_conf = dict(extra_conf or {})
+    package_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    extra_conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (extra_conf.get("spark.executorEnv.PYTHONPATH"), package_root) if p
+    )
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = (
@@ -41,8 +56,9 @@ def get_spark(
         # bandwidth is the scarcest resource in local mode (and often on
         # clusters too).
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.python.daemon.module", "graphrag_litex_spark.pydaemon")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,7 +1,8 @@
 """The distributed graph loops' round discipline, on one fixed graph: each
 loop stays within its Spark job budget (a round is its checkpoint jobs and
 no separate convergence action), and the BFS loops release every
-checkpoint they took except the one their result reads."""
+checkpoint they took except the one their result reads; a distributed
+CC result's ``release`` frees every checkpoint it reads."""
 
 import warnings
 
@@ -132,9 +133,12 @@ def test_graph_loop_job_budget(spark, graph, loop):
     assert dag.nextJobId() - j0 <= _LOOP_JOBS[loop]
 
 
-def _ckpt_rdd(df):
-    """The id of the checkpointed RDD a ``hard_checkpoint`` result reads."""
-    return df._graft_ckpt._jdf.queryExecution().analyzed().rdd().id()
+def _ckpt_rdds(df):
+    """The ids of the checkpointed RDDs a releasable result reads."""
+    return {
+        ck._jdf.queryExecution().analyzed().rdd().id()
+        for ck in getattr(df, "_graft_ckpt", ())
+    }
 
 
 @pytest.mark.parametrize(
@@ -168,10 +172,32 @@ def test_bfs_loops_release_every_checkpoint(spark, graph, monkeypatch, name, cal
     result = call(graph[0])
     result.collect()
     pinned = set(spark.sparkContext._jsc.getPersistentRDDs())
-    kept = {_ckpt_rdd(df) for df in taken} & pinned
+    kept = set().union(*map(_ckpt_rdds, taken)) & pinned
     assert len(taken) > 1
-    assert kept == ({_ckpt_rdd(result)} if hasattr(result, "_graft_ckpt") else set())
+    assert kept == _ckpt_rdds(result)
     if name == "shortest_path":
         assert result.first()["path_str"] == " -> ".join(f"v{i:02d}" for i in range(10))
     elif name.startswith("shortest_path"):
         assert result.first()["found"] is False
+
+
+@pytest.mark.parametrize("algorithm", ["minlabel", "alternating"])
+def test_cc_release_frees_every_checkpoint(spark, algorithm):
+    """Distributed CC on the 13-vertex chain: after the call and a
+    collect, only the checkpoints its result reads are still pinned, and
+    ``release(result)`` frees them all (min-label's lazy semi-join reads
+    two: the labels and the vertices)."""
+    chain = [p for p in _PAIRS if p[0].startswith("v")]
+    edges = local_frame(spark, chain, ["src", "dst"], "src string, dst string")
+    verts = local_frame(
+        spark, [(f"v{i:02d}",) for i in range(13)], ["norm_name"], "norm_name string"
+    )
+    before = set(spark.sparkContext._jsc.getPersistentRDDs())
+    result = cc.connected_components(
+        verts, edges, driver_threshold=0, algorithm=algorithm
+    )
+    assert {r["label"] for r in result.collect()} == {"v00"}
+    pinned = set(spark.sparkContext._jsc.getPersistentRDDs()) - before
+    assert pinned and pinned == _ckpt_rdds(result)
+    iterutils.release(result)
+    assert not set(spark.sparkContext._jsc.getPersistentRDDs()) & pinned
