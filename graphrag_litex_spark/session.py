@@ -15,6 +15,21 @@ same pyspark version is installed as a plain directory. The package's
 parent directory is appended to ``spark.executorEnv.PYTHONPATH``, so the
 daemon (and every kernel pickled by reference) resolves on the workers
 from any working directory.
+
+Spark keeps the classes it generates for a plan in one LRU cache per JVM
+(``spark.sql.codegen.cache.maxEntries``, 100 by default). One build
+compiles 121-123 distinct classes, so rerunning the same plans in order
+missed on almost every class: a steady build recompiled 89-108 of them
+(up to 1.1 s of Janino compile on the driver), and appends, resumes and
+distributed graph loops repeated plans the cache had already evicted.
+``CODEGEN_CACHE_ENTRIES`` is sized from a whole benchmark session (cold
+and steady builds, single and batch questions, four query leaves, append,
+resume and two forced distributed LPA calls): 327-338 distinct classes.
+A bound stays, so a long-lived server's cache cannot grow without limit.
+
+The driver heap defaults to half the host's physical memory, capped at
+48g (``SPARK_DRIVER_MEMORY`` overrides it): a heap cap above RAM lets G1
+grow the JVM until the kernel kills it.
 """
 
 from __future__ import annotations
@@ -22,6 +37,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Distinct generated classes, measured: 121-123 per build, 327-338 for a
+# whole benchmark session. About 3x the session's working set.
+CODEGEN_CACHE_ENTRIES = 1000
+_CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Half of physical memory in whole GiB, at least 1g and at most 48g."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, phys_bytes // 2 // 2**30))}g"
 
 
 def get_spark(
@@ -49,7 +76,7 @@ def get_spark(
         # extraction UDF (default 10k; 20k measured best at 150-byte rows).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # zstd halves stage-table size vs snappy; shared-disk write
@@ -57,9 +84,27 @@ def get_spark(
         # clusters too).
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.python.daemon.module", "graphrag_litex_spark.pydaemon")
+        .config(_CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def job_session(app_name: str) -> SparkSession:
+    """The session for a ``jobs/`` script: the active one, else the
+    ``spark-submit`` builder (it inherits the submitted master), else
+    ``get_spark``."""
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
+    try:
+        return (
+            SparkSession.builder.appName(app_name)
+            .config(_CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
+            .getOrCreate()
+        )
+    except Exception:
+        return get_spark(app_name)

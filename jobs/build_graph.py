@@ -83,18 +83,9 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from graphrag_litex_spark.session import job_session
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        spark = active
-    else:
-        try:  # under spark-submit the session builder inherits the master
-            spark = SparkSession.builder.appName("kgx_build_graph").getOrCreate()
-        except Exception:
-            from graphrag_litex_spark.session import get_spark
-
-            spark = get_spark("kgx_build_graph")
+    spark = job_session("kgx_build_graph")
 
     from graphrag_litex_spark.plans.pipeline import PipelineConfig, run_pipeline
 

@@ -592,18 +592,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--text-col", default="text")
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from graphrag_litex_spark.session import job_session
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        spark = active
-    else:
-        try:  # under spark-submit the session builder inherits the master
-            spark = SparkSession.builder.appName("kgx_curate").getOrCreate()
-        except Exception:
-            from graphrag_litex_spark.session import get_spark
-
-            spark = get_spark("kgx_curate")
+    spark = job_session("kgx_curate")
 
     docs = spark.read.parquet(args.docs)
     curated, report = curate(

@@ -251,16 +251,9 @@ def main(argv: list[str] | None = None) -> int:
                         "fused per conversation) in N shard files")
     args = p.parse_args(argv)
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        spark = active
-    else:
-        try:
-            spark = SparkSession.builder.appName("kgx_sft").getOrCreate()
-        except Exception:
-            from graphrag_litex_spark.session import get_spark
+    from graphrag_litex_spark.session import job_session
 
-            spark = get_spark("kgx_sft")
+    spark = job_session("kgx_sft")
 
     os.makedirs(args.out, exist_ok=True)
     report = export_sft(

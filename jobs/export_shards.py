@@ -113,18 +113,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--text-col", default="text")
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from graphrag_litex_spark.session import job_session
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        spark = active
-    else:
-        try:  # under spark-submit the session builder inherits the master
-            spark = SparkSession.builder.appName("kgx_export_shards").getOrCreate()
-        except Exception:
-            from graphrag_litex_spark.session import get_spark
-
-            spark = get_spark("kgx_export_shards")
+    spark = job_session("kgx_export_shards")
 
     docs = spark.read.parquet(args.docs)
     report = export_shards(

@@ -308,16 +308,9 @@ def main(argv: list[str] | None = None) -> int:
     q.add_argument("--rerank", type=int, default=0)
     args = p.parse_args(argv)
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        spark = active
-    else:
-        try:
-            spark = SparkSession.builder.appName("kgx_index").getOrCreate()
-        except Exception:
-            from graphrag_litex_spark.session import get_spark
+    from graphrag_litex_spark.session import job_session
 
-            spark = get_spark("kgx_index")
+    spark = job_session("kgx_index")
 
     if args.cmd == "build":
         emb = spark.read.parquet(args.embeddings)

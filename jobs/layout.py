@@ -35,8 +35,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description="Parquet layout maintenance")
@@ -54,16 +52,9 @@ def main(argv: list[str] | None = None) -> int:
     z.add_argument("--bits", type=int, default=16)
     args = p.parse_args(argv)
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        spark = active
-    else:
-        try:
-            spark = SparkSession.builder.appName("kgx_layout").getOrCreate()
-        except Exception:
-            from graphrag_litex_spark.session import get_spark
+    from graphrag_litex_spark.session import job_session
 
-            spark = get_spark("kgx_layout")
+    spark = job_session("kgx_layout")
 
     if args.cmd == "compact":
         from graphrag_litex_spark.sinks.compact import compact_parquet

@@ -39,16 +39,9 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from graphrag_litex_spark.session import job_session
 
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        try:
-            spark = SparkSession.builder.appName("kgx_publish_warehouse").getOrCreate()
-        except Exception:
-            from graphrag_litex_spark.session import get_spark
-
-            spark = get_spark("kgx_publish_warehouse")
+    spark = job_session("kgx_publish_warehouse")
 
     from graphrag_litex_spark.sinks.warehouse import save_graph_tables
     from graphrag_litex_spark.sources.tables import open_graph

@@ -521,6 +521,23 @@ def test_build_job_budget(spark, corpus_sf0001, tmp_path, monkeypatch):
     assert dag.nextJobId() - j0 <= 1
 
 
+def test_repeated_build_reuses_generated_classes(spark, corpus_sf0001, tmp_path):
+    """A second identical build compiles no generated class: every one the
+    first build used (about 120) is still in Spark's codegen cache, which
+    ``get_spark`` sizes above a whole session's working set. At the stock
+    100 entries the LRU cache evicted them in build order, and the second
+    build recompiled 89 of them."""
+    from graphrag_litex_spark.plans.pipeline import run_pipeline
+    from graphrag_litex_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    run_pipeline(spark, corpus_sf0001["transcripts"], str(tmp_path / "a"), resume=False)
+    c0 = compiles.getCount()
+    run_pipeline(spark, corpus_sf0001["transcripts"], str(tmp_path / "b"), resume=False)
+    assert compiles.getCount() - c0 == 0
+
+
 def test_stage_schemas_survive_resume_and_append(spark, corpus_sf0001, tmp_path):
     """Every stage frame run() returns has the schema that an inferring
     read of its parquet gives, nullability included — after a fresh
