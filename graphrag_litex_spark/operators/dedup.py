@@ -98,23 +98,6 @@ def word_shingles(text_col="text", k: int = 3):
     return F.when(n < k, F.array(F.concat_ws(" ", toks))).otherwise(F.array_distinct(full))
 
 
-def minhash_signature(shingles_col, num_hashes: int = 32):
-    """k minhash values as one array column: min over shingles of
-    xxhash64(shingle, seed). NOTE: as a single nested expression this can
-    exceed codegen limits for large k — minhash_signatures (plural, below)
-    is the scalable row-oriented formulation used by the LSH pipeline."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    shingles_col, lambda s, i=i: F.xxhash64(s, F.lit(i))
-                )
-            ).alias(f"mh_{i}")
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def shingle_rows(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -497,7 +480,7 @@ def merge_keeper_map(
     so CC over {old stars} ∪ {new pairs} yields exactly the components of
     {old pairs} ∪ {new pairs} (tested against a from-scratch rebuild) at
     the cost of one edge per OLD DOC rather than one per old pair.
-    duplicate_keeper_map's alternating-star CC keeps rounds O(log n) even
+    duplicate_keeper_map's star-contraction CC keeps rounds O(log n) even
     when increments chain components together.
     """
     star = old_map.where(F.col("doc_id") != F.col("keeper_id")).select(
@@ -679,13 +662,6 @@ def duplicate_keeper_map(
             F.col("id_b").cast("string").alias("dst"),
         ),
         id_col="_id",
-        # Near-dup graphs CHAIN (doc_i ~ doc_{i+1} without doc_0 ~ doc_n):
-        # min-label needs one round per hop and stops at max_iter with a
-        # chain split into several "components" (several keepers for one
-        # duplicate group). The alternating-star loop converges in O(log n)
-        # rounds on any topology; entity linking keeps "minlabel" because
-        # name-variant clusters are shallow.
-        algorithm="alternating",
         driver_threshold=cc_driver_threshold,
     )
     lab = labels.join(orig, "_id").select(F.col(id_col), F.col("label"))

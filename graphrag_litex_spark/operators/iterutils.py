@@ -48,15 +48,14 @@ from pyspark.sql import functions as F
 DRIVER_THRESHOLD = 100_000
 
 
-def hard_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """localCheckpoint + strip preserved origin statistics.
+def hard_checkpoint(df: DataFrame) -> DataFrame:
+    """Eager localCheckpoint + strip preserved origin statistics.
 
     Returns a DataFrame whose logical plan is a bare LogicalRDD over the
     checkpointed data. The underlying checkpoint is kept on the returned
-    object as ``_graft_ckpt`` (a tuple of the checkpoints a frame reads) so
-    callers may ``release()`` it.
+    object as ``_graft_ckpt`` so callers may ``release()`` it.
     """
-    ck = df.localCheckpoint(eager=eager)
+    ck = df.localCheckpoint(eager=True)
     try:
         jdf = ck._jdf
         jrdd = jdf.queryExecution().toRdd()
@@ -68,7 +67,7 @@ def hard_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
         # checkpoint — correct, but subject to failure mode (2) above for
         # very long loops.
         out = ck
-    out._graft_ckpt = (ck,)  # type: ignore[attr-defined]
+    out._graft_ckpt = ck  # type: ignore[attr-defined]
     return out
 
 
@@ -110,12 +109,10 @@ def symmetric(und: DataFrame) -> DataFrame:
     )
 
 
-def with_checkpoint_of(df: DataFrame, *ckpts: DataFrame) -> DataFrame:
-    """``df`` (a lazy frame reading ``ckpts``), made releasable:
-    ``release(df)`` unpins the checkpoints backing every one of ``ckpts``."""
-    df._graft_ckpt = tuple(  # type: ignore[attr-defined]
-        ck for c in ckpts for ck in getattr(c, "_graft_ckpt", ())
-    )
+def with_checkpoint_of(df: DataFrame, ckpt: DataFrame) -> DataFrame:
+    """``df`` (a lazy frame reading the ``hard_checkpoint`` result
+    ``ckpt``), made releasable: ``release(df)`` unpins ``ckpt``."""
+    df._graft_ckpt = ckpt._graft_ckpt  # type: ignore[attr-defined]
     return df
 
 
@@ -148,7 +145,7 @@ class loop_shuffle_partitions:
         return False
 
 
-def scale_out(df: DataFrame, key_col: str | None = None, factor: int = 2) -> DataFrame:
+def scale_out(df: DataFrame, key_col: str | None = None) -> DataFrame:
     """Fan a narrow input out to cluster parallelism before expensive
     per-row work.
 
@@ -172,7 +169,7 @@ def scale_out(df: DataFrame, key_col: str | None = None, factor: int = 2) -> Dat
     a window+agg input, more than the fan-out could save.
     """
     sc = df.sparkSession.sparkContext
-    target = max(sc.defaultParallelism * factor, 8)
+    target = max(sc.defaultParallelism * 2, 8)
     try:
         node = df._jdf.queryExecution().analyzed()
         for _ in range(8):
@@ -195,18 +192,20 @@ def scale_out(df: DataFrame, key_col: str | None = None, factor: int = 2) -> Dat
 
 
 def release(df: DataFrame) -> None:
-    """Free the blocks of the checkpoints backing a ``hard_checkpoint`` or
-    ``with_checkpoint_of`` result: unpersist the checkpointed RDD each
+    """Free the blocks of the checkpoint backing a ``hard_checkpoint`` or
+    ``with_checkpoint_of`` result: unpersist the checkpointed RDD its
     LogicalRDD reads (the ``localCheckpoint`` Dataset is not in the
     CacheManager, so ``Dataset.unpersist`` frees nothing). Any later read
-    of a frame over those checkpoints fails with
+    of a frame over that checkpoint fails with
     ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``, so release only what nothing
     reads any more."""
-    for ck in getattr(df, "_graft_ckpt", ()):
-        try:
-            ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass  # private API unavailable (e.g. Spark Connect), as in hard_checkpoint
+    ck = getattr(df, "_graft_ckpt", None)
+    if ck is None:
+        return
+    try:
+        ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:
+        pass  # private API unavailable (e.g. Spark Connect), as in hard_checkpoint
 
 
 class LocalGraph(NamedTuple):

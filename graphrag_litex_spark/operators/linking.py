@@ -28,21 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphrag_litex_spark.functions.normalize import SIM_THRESHOLD
-from graphrag_litex_spark.operators.normalize_ops import (
-    char_ngrams_col,
-    jaccard_col,
-    norm_name_col,
-)
-
-
-def distinct_norm_names(mentions: DataFrame, name_col: str = "name") -> DataFrame:
-    """Distinct normalized names observed in mentions -> (norm_name)."""
-    return (
-        mentions.select(norm_name_col(name_col).alias("norm_name"))
-        .where(F.col("norm_name") != "")
-        .distinct()
-    )
-
+from graphrag_litex_spark.operators.normalize_ops import char_ngrams_col, jaccard_col
 
 # Giant-block valve policy for the KG build: once the distinct-name count
 # exceeds VALVE_NAMES, a single hot first-token block is a quadratic time

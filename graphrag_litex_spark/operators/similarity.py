@@ -429,14 +429,6 @@ def _subspaces(dim: int, m: int) -> list[tuple[int, int]]:
     return [(j * d + 1, d) for j in range(m)]
 
 
-def _l2sq_col(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
-    )
-
-
 def pq_codebooks(
     embeddings: DataFrame,
     m: int = 8,

@@ -52,7 +52,8 @@ def link_names(norm_names: set[str]) -> dict[str, str]:
 
     Returns {normalized_name -> canonical_name} where the canonical is the
     lexicographically smallest member of the connected component (matches
-    the distributed min-label propagation of operators/cc.py).
+    both paths of operators/cc.py: the driver-local union-find and the
+    distributed star contraction).
     """
     uf = UnionFind()
     blocks: dict[str, list[str]] = {}

@@ -298,8 +298,10 @@ class PipelineConfig:
     with the cluster (``KGPipeline.run``), the giant-block linking valve
     turns on from the distinct-name count (``operators/linking.VALVE_NAMES``),
     the canon map is broadcast while measured-small
-    (``_CANON_BROADCAST_BYTES``), and linking's CC uses the min-label loop
-    for the shallow name-variant graph. The one scheduling switch kept is
+    (``_CANON_BROADCAST_BYTES``), and linking's CC labels the name graph
+    on the driver while it fits under ``iterutils.DRIVER_THRESHOLD``, else
+    with the distributed star-contraction loop (``cc_max_iter`` rounds at
+    most, O(log n) needed on any name chain). The one scheduling switch kept is
     ``concurrent_stages``, whose outputs are identical either way.
     """
 
@@ -940,10 +942,6 @@ class KGPipeline:
                 pairs,
                 id_col="norm_name",
                 max_iter=cfg.cc_max_iter,
-                # Name-variant clusters are shallow (diameter 2-3), so the
-                # min-label loop's rounds = diameter beats alternating's
-                # O(log n) large-star/small-star rounds.
-                algorithm="minlabel",
             )
             # CC's output is itself checkpointed (or driver-built), so the
             # names cache can be dropped before the stage write.

@@ -94,17 +94,19 @@ def get_spark(
 
 
 def job_session(app_name: str) -> SparkSession:
-    """The session for a ``jobs/`` script: the active one, else the
-    ``spark-submit`` builder (it inherits the submitted master), else
-    ``get_spark``."""
+    """The session for a ``jobs/`` script: the active one; else, in a
+    process started by ``spark-submit`` (its launcher hands pyspark the JVM
+    through ``PYSPARK_GATEWAY_PORT``), the builder, which inherits the
+    submitted master and conf; else ``get_spark``. Under a plain
+    ``python3`` the builder would start its own JVM with Spark's stock
+    settings."""
     active = SparkSession.getActiveSession()
     if active is not None:
         return active
-    try:
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
         return (
             SparkSession.builder.appName(app_name)
             .config(_CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
             .getOrCreate()
         )
-    except Exception:
-        return get_spark(app_name)
+    return get_spark(app_name)

@@ -142,13 +142,9 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from graphrag_litex_spark.session import job_session
 
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        from graphrag_litex_spark.session import get_spark
-
-        spark = get_spark(app_name="diff_graphs")
+    spark = job_session("diff_graphs")
 
     stages = (
         [s.strip() for s in args.stages.split(",") if s.strip()] if args.stages else None

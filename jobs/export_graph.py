@@ -102,15 +102,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--shard-files", type=int, default=16)
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from graphrag_litex_spark.session import job_session
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        spark = active
-    else:
-        from graphrag_litex_spark.session import get_spark
-
-        spark = get_spark(app_name="export_graph")
+    spark = job_session("export_graph")
 
     from graphrag_litex_spark.sources.tables import open_graph
 

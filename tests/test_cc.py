@@ -74,7 +74,7 @@ def test_permutation_invariance(spark):
 
 def test_driver_local_matches_distributed_path(spark):
     """The adaptive small-graph union-find must be byte-identical to the
-    distributed min-label loop on the same input."""
+    distributed star-contraction loop on the same input."""
     import random
 
     rng = random.Random(13)
@@ -98,7 +98,8 @@ def test_driver_local_matches_distributed_path(spark):
 def test_non_string_ids_fall_through_to_distributed_path(spark):
     """The driver-local union-find sorts ids and emits a string-schema
     frame, so int ids and NULL ids must skip the probe's valve and run the
-    distributed loop instead of crashing."""
+    distributed loop instead of crashing. A NULL vertex id emits no row and
+    an edge with a NULL endpoint joins nothing."""
     vdf = spark.createDataFrame(pd.DataFrame({"norm_name": [1, 2, 3, 4, 9]}))
     edf = spark.createDataFrame(pd.DataFrame([(1, 2), (3, 2)], columns=["src", "dst"]))
     labels = {r["norm_name"]: r["label"] for r in connected_components(vdf, edf).collect()}
@@ -108,8 +109,7 @@ def test_non_string_ids_fall_through_to_distributed_path(spark):
     edf = spark.createDataFrame([("b", "a"), ("b", None)], "src string, dst string")
     got = set(map(tuple, connected_components(vdf, edf).collect()))
     dist = set(map(tuple, connected_components(vdf, edf, driver_threshold=0).collect()))
-    assert got == dist
-    assert {("a", "a"), ("b", "a")} <= got
+    assert got == dist == {("a", "a"), ("b", "a")}
 
 
 def test_edge_only_endpoints_identical_across_paths(spark):
@@ -330,7 +330,7 @@ def _cc_map(spark, verts, edges, **kw):
     return {r["norm_name"]: r["label"] for r in out.collect()}, out
 
 
-def test_alternating_matches_union_find_random_graphs(spark):
+def test_distributed_matches_union_find_random_graphs(spark):
     """Large-star/small-star output is byte-identical to the union-find on
     seeded random graphs (several densities, including forests and a
     near-complete blob)."""
@@ -343,54 +343,59 @@ def test_alternating_matches_union_find_random_graphs(spark):
             (verts[rng.randrange(n)], verts[rng.randrange(n)]) for _ in range(m)
         ]
         ref, _ = _cc_map(spark, verts, edges, driver_threshold=100_000)
-        alt, _ = _cc_map(
-            spark, verts, edges, driver_threshold=0, algorithm="alternating"
-        )
-        assert alt == ref, f"seed={seed}"
+        dist, _ = _cc_map(spark, verts, edges, driver_threshold=0)
+        assert dist == ref, f"seed={seed}"
 
 
-def test_alternating_logarithmic_rounds_on_chain(spark):
+def test_distributed_logarithmic_rounds_on_chain(spark):
     """The scale property that motivates the algorithm: a 256-hop chain
     (the adversarial near-dup topology) converges in O(log n) rounds —
-    the min-label loop would need 255."""
+    label propagation would need 255."""
     verts = [f"c{i:04d}" for i in range(256)]
     edges = [(verts[i], verts[i + 1]) for i in range(255)]
     ref, _ = _cc_map(spark, verts, edges, driver_threshold=100_000)
-    alt, out = _cc_map(
-        spark,
-        verts,
-        edges,
-        driver_threshold=0,
-        algorithm="alternating",
-        max_iter=20,
-    )
-    assert alt == ref
-    assert set(alt.values()) == {"c0000"}
+    dist, out = _cc_map(spark, verts, edges, driver_threshold=0, max_iter=20)
+    assert dist == ref
+    assert set(dist.values()) == {"c0000"}
     rounds = out._graft_cc_rounds
     assert rounds <= 12, rounds  # ~log2(256)+terminal check, not 255
 
 
+def test_default_distributed_cc_joins_a_long_shuffled_chain(spark):
+    """At the default ``max_iter`` (the pipeline's ``cc_max_iter``), a
+    40-hop name chain whose ids are shuffled along it is one component,
+    labelled without a max_iter warning."""
+    import random
+    import warnings
+
+    verts = [f"name {i:02d}" for i in range(41)]
+    chain = verts[:]
+    random.Random(7).shuffle(chain)
+    edges = list(zip(chain, chain[1:]))
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        labels, _ = _cc_map(spark, verts, edges, driver_threshold=0)
+    assert labels == {v: "name 00" for v in verts}
+
+
 def test_alternating_edge_only_and_isolated(spark):
-    """Edge-only intermediates propagate (and can be the min) but emit no
-    rows; isolated vertices label themselves — same contract as the other
-    two paths."""
+    """Through the large-star/small-star loop, edge-only intermediates
+    propagate (and can be the min) but emit no rows; isolated vertices
+    label themselves."""
     verts = ["b", "c", "z"]
     edges = [("b", "x"), ("x", "c"), ("a", "b")]
-    alt, _ = _cc_map(
-        spark, verts, edges, driver_threshold=0, algorithm="alternating"
-    )
-    assert alt == {"b": "a", "c": "a", "z": "z"}
+    labels, out = _cc_map(spark, verts, edges, driver_threshold=0)
+    assert labels == {"b": "a", "c": "a", "z": "z"}
+    assert out.count() == len(verts)
 
 
-def test_alternating_no_edges(spark):
-    alt, _ = _cc_map(
-        spark, ["x", "y"], [], driver_threshold=0, algorithm="alternating"
-    )
-    assert alt == {"x": "x", "y": "y"}
+def test_distributed_no_edges(spark):
+    labels, _ = _cc_map(spark, ["x", "y"], [], driver_threshold=0)
+    assert labels == {"x": "x", "y": "y"}
 
 
 def test_max_iter_exhaustion_warns_not_silent(spark):
-    """Exiting either distributed loop via max_iter without convergence must
+    """Exiting the distributed loop via max_iter without convergence must
     warn (ADVICE r4): silent non-minimum labels at scale are undebuggable."""
     import warnings as _w
 
@@ -398,21 +403,15 @@ def test_max_iter_exhaustion_warns_not_silent(spark):
     edges = [(f"p{i:02d}", f"p{i+1:02d}") for i in range(9)]
     vdf = spark.createDataFrame(pd.DataFrame({"norm_name": verts}))
     edf = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
-    for algo in ("minlabel", "alternating"):
-        with pytest.warns(RuntimeWarning, match="max_iter"):
-            connected_components(
-                vdf, edf, max_iter=1, driver_threshold=0, algorithm=algo
-            ).collect()
+    with pytest.warns(RuntimeWarning, match="max_iter"):
+        connected_components(vdf, edf, max_iter=1, driver_threshold=0).collect()
     # Converged runs stay silent.
-    for algo in ("minlabel", "alternating"):
-        with _w.catch_warnings():
-            _w.simplefilter("error", RuntimeWarning)
-            got = {
-                r["norm_name"]: r["label"]
-                for r in connected_components(
-                    vdf, edf, driver_threshold=0, algorithm=algo
-                ).collect()
-            }
+    with _w.catch_warnings():
+        _w.simplefilter("error", RuntimeWarning)
+        got = {
+            r["norm_name"]: r["label"]
+            for r in connected_components(vdf, edf, driver_threshold=0).collect()
+        }
     assert set(got.values()) == {"p00"}
 
 

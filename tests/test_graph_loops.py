@@ -2,7 +2,7 @@
 loop stays within its Spark job budget (a round is its checkpoint jobs and
 no separate convergence action), and the BFS loops release every
 checkpoint they took except the one their result reads; a distributed
-CC result's ``release`` frees every checkpoint it reads."""
+CC result's ``release`` frees the checkpoint it reads."""
 
 import warnings
 
@@ -47,10 +47,7 @@ def graph(spark):
 def _loops(edges, nodes):
     verts = nodes.select(F.col("entity_id").alias("norm_name"))
     return {
-        "cc_minlabel": lambda: cc.connected_components(verts, edges, driver_threshold=0),
-        "cc_alternating": lambda: cc.connected_components(
-            verts, edges, driver_threshold=0, algorithm="alternating"
-        ),
+        "cc": lambda: cc.connected_components(verts, edges, driver_threshold=0),
         "label_propagation": lambda: C.label_propagation(
             nodes.select("entity_id"),
             edges.select(F.col("src").alias("u"), F.col("dst").alias("v")),
@@ -87,8 +84,7 @@ def _loops(edges, nodes):
 # by one to three (k_truss 29-31, detect_communities 161-162,
 # random_walks 12-15, node2vec_walks 16-19).
 _LOOP_JOBS = {
-    "cc_minlabel": 101,
-    "cc_alternating": 64,
+    "cc": 64,
     "label_propagation": 69,
     "detect_communities": 163,
     "k_core": 15,
@@ -114,16 +110,18 @@ def test_graph_loop_job_budget(spark, graph, loop):
 
     Jobs before the observed checkpoint (a ``limit(1).count()``,
     ``cache()`` + ``agg().first()`` or a separate aggregate per round, and
-    ``count()`` jobs to size the state): cc_minlabel 130, cc_alternating
-    81, label_propagation 86, detect_communities 198, k_core 16, k_truss
-    36, neighborhood_function 34, hop_distances 64, shortest_path 128,
-    betweenness_approx 137, pagerank 80, pagerank_seeded 83.
+    ``count()`` jobs to size the state): cc 81, label_propagation 86,
+    detect_communities 198, k_core 16, k_truss 36, neighborhood_function
+    34, hop_distances 64, shortest_path 128, betweenness_approx 137,
+    pagerank 80, pagerank_seeded 83.
 
     BFS loops before their level list (a second checkpoint of the settled
     set ∪ the new level every hop): hop_distances 52, shortest_path 86,
     betweenness_approx 121. Walkers before they read the checkpointed
     undirected builder (the walk state seeded from the lazy edge list):
-    random_walks 14-15."""
+    random_walks 14-15. The min-label CC loop, which the star loop
+    replaced as the one distributed CC, ran 100 (130 before its observed
+    checkpoint); the star loop runs 63."""
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     run = _loops(*graph)[loop]
     j0 = dag.nextJobId()
@@ -135,10 +133,8 @@ def test_graph_loop_job_budget(spark, graph, loop):
 
 def _ckpt_rdds(df):
     """The ids of the checkpointed RDDs a releasable result reads."""
-    return {
-        ck._jdf.queryExecution().analyzed().rdd().id()
-        for ck in getattr(df, "_graft_ckpt", ())
-    }
+    ck = getattr(df, "_graft_ckpt", None)
+    return set() if ck is None else {ck._jdf.queryExecution().analyzed().rdd().id()}
 
 
 @pytest.mark.parametrize(
@@ -162,8 +158,8 @@ def test_bfs_loops_release_every_checkpoint(spark, graph, monkeypatch, name, cal
     taken = []  # held, so no checkpoint is garbage-collected mid-test
     checkpoint = iterutils.hard_checkpoint
 
-    def tracked_checkpoint(df, eager=True):
-        out = checkpoint(df, eager)
+    def tracked_checkpoint(df):
+        out = checkpoint(df)
         taken.append(out)
         return out
 
@@ -181,21 +177,17 @@ def test_bfs_loops_release_every_checkpoint(spark, graph, monkeypatch, name, cal
         assert result.first()["found"] is False
 
 
-@pytest.mark.parametrize("algorithm", ["minlabel", "alternating"])
-def test_cc_release_frees_every_checkpoint(spark, algorithm):
+def test_cc_release_frees_every_checkpoint(spark):
     """Distributed CC on the 13-vertex chain: after the call and a
-    collect, only the checkpoints its result reads are still pinned, and
-    ``release(result)`` frees them all (min-label's lazy semi-join reads
-    two: the labels and the vertices)."""
+    collect, only the checkpoint its result reads is still pinned, and
+    ``release(result)`` frees it."""
     chain = [p for p in _PAIRS if p[0].startswith("v")]
     edges = local_frame(spark, chain, ["src", "dst"], "src string, dst string")
     verts = local_frame(
         spark, [(f"v{i:02d}",) for i in range(13)], ["norm_name"], "norm_name string"
     )
     before = set(spark.sparkContext._jsc.getPersistentRDDs())
-    result = cc.connected_components(
-        verts, edges, driver_threshold=0, algorithm=algorithm
-    )
+    result = cc.connected_components(verts, edges, driver_threshold=0)
     assert {r["label"] for r in result.collect()} == {"v00"}
     pinned = set(spark.sparkContext._jsc.getPersistentRDDs()) - before
     assert pinned and pinned == _ckpt_rdds(result)

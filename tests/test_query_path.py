@@ -70,6 +70,22 @@ def test_documents_as_transcripts_adapter(spark):
     assert tr.count() == 2
 
 
+def test_read_text_documents_one_row_per_file(spark, tmp_path):
+    """A1: each file is one row whose text is the whole file, line breaks
+    included."""
+    from graphrag_litex_spark.sources.tables import read_text_documents
+
+    texts = {
+        "a.txt": "Acme Corp acquired Globex Inc.",
+        "b.md": "# Notes\n\nAlice Johnson uses QuantumDB.\nBob Smithers does not.\n",
+    }
+    for name, text in texts.items():
+        (tmp_path / name).write_text(text)
+    rows = read_text_documents(spark, str(tmp_path)).collect()
+    assert len(rows) == 2
+    assert {r["doc_id"].rsplit("/", 1)[-1]: r["text"] for r in rows} == texts
+
+
 def test_read_transcripts_validates_schema(spark, corpus_sf0001, tmp_path):
     from graphrag_litex_spark.sources.tables import read_transcripts
 

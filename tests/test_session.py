@@ -22,3 +22,43 @@ def test_default_driver_memory_reads_this_host():
 
 def test_job_session_joins_the_running_context(spark):
     assert job_session("kgx_test").sparkContext is spark.sparkContext
+
+
+class _FakeBuilder:
+    def appName(self, name):
+        return self
+
+    def config(self, key, value):
+        return self
+
+    def getOrCreate(self):
+        return "builder-session"
+
+
+class _NoActiveSession:
+    builder = _FakeBuilder()
+
+    @staticmethod
+    def getActiveSession():
+        return None
+
+
+def _fake_spark_classes(monkeypatch):
+    from graphrag_litex_spark import session
+
+    monkeypatch.setattr(session, "SparkSession", _NoActiveSession)
+    monkeypatch.setattr(session, "get_spark", lambda app_name: "get-spark-session")
+
+
+def test_job_session_outside_spark_submit_uses_get_spark(monkeypatch):
+    """Under a plain ``python3`` (no gateway handed over by spark-submit)
+    the builder would start a stock-settings JVM, so ``get_spark`` runs."""
+    _fake_spark_classes(monkeypatch)
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    assert job_session("kgx_test") == "get-spark-session"
+
+
+def test_job_session_under_spark_submit_uses_the_builder(monkeypatch):
+    _fake_spark_classes(monkeypatch)
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
+    assert job_session("kgx_test") == "builder-session"

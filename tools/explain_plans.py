@@ -461,7 +461,7 @@ def main() -> int:
         (
             "Alternating-star CC round (large-star)",
             "neighborhood-min aggregate + hash join per round; O(log n) rounds "
-            "on any topology (vs diameter for min-label)",
+            "on any topology (vs diameter for label propagation)",
             p,
         )
     )
