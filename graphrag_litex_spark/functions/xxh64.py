@@ -1,14 +1,22 @@
-"""Pure-Python XXH64 (public-domain algorithm, Yann Collet) matching
-Spark's ``F.xxhash64`` semantics (seed 42, and the specialized int/long
-paths Spark's XxHash64 expression uses for numeric children).
+"""XXH64 (public-domain algorithm, Yann Collet) matching Spark's
+``F.xxhash64`` semantics (seed 42, and the specialized int/long paths
+Spark's XxHash64 expression uses for numeric children), in two forms:
 
-Used ONLY by the single-process golden oracle (oracle_docops.py) so that
-MinHash/SimHash/hyperplane-LSH goldens are computed independently of any
-Spark plan while agreeing bit-for-bit with the JVM ``xxhash64`` values.
-Unit-tested against ``F.xxhash64`` in tests/test_toolbox.py.
+* scalar Python ints (``hash_bytes``, ``hash_int``, ``xxhash64_*``) — the
+  single-process golden oracle (oracle_docops.py) computes its MinHash /
+  SimHash / hyperplane-LSH goldens with them, independently of any Spark
+  plan; ``operators/similarity.py`` uses them for driver-side literals;
+* numpy uint64 lanes (``hash_spans``, ``hash_int_lanes``) — the same
+  functions over a whole Arrow batch at once, for the MinHash signature
+  kernel (``operators/dedup.minhash_signatures``).
+
+Both agree bit-for-bit with the JVM ``xxhash64`` values
+(tests/test_scale_valves.py) and with each other (tests/test_minhash_kernel.py).
 """
 
 from __future__ import annotations
+
+import numpy as np
 
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -113,3 +121,104 @@ def xxhash64_int(i: int) -> int:
 def xxhash64_long(i: int) -> int:
     """Equivalent of ``F.xxhash64(long_col)`` (LongType lane, 8 bytes)."""
     return _signed(hash_long(i, SPARK_SEED))
+
+
+# ---- numpy uint64 lanes: one lane per input, arithmetic wraps mod 2**64 ----
+
+
+def _u64(x: int) -> np.uint64:
+    return np.uint64(x & _M)
+
+
+def _rotl_lanes(x, r: int):
+    return (x << _u64(r)) | (x >> _u64(64 - r))
+
+
+def _fmix_lanes(h):
+    h = h ^ (h >> _u64(33))
+    h = h * _u64(_P2)
+    h = h ^ (h >> _u64(29))
+    h = h * _u64(_P3)
+    return h ^ (h >> _u64(32))
+
+
+def _round_lanes(acc, word):
+    return _rotl_lanes(acc + word * _u64(_P2), 31) * _u64(_P1)
+
+
+def hash_spans(data, starts, lengths):
+    """``hash_bytes(data[s:s + n])`` for every (s, n) in
+    ``zip(starts, lengths)``, as a uint64 array: the byte spans of one
+    buffer (an Arrow string column's data) hashed in numpy lanes. Lanes of
+    32 bytes or more first run the 4-accumulator stripe loop (one numpy
+    step per stripe index, over the lanes that still have that stripe);
+    then every lane takes its 8-, 4- and 1-byte tail steps."""
+    buf = np.asarray(data, dtype=np.uint8)
+    starts = np.asarray(starts, dtype=np.int64)
+    lengths = np.asarray(lengths, dtype=np.int64)
+    # Unaligned little-endian words at every byte offset (views, no copy);
+    # a read at pos only happens when pos + width <= span end <= len(buf).
+    w64 = np.ndarray((max(len(buf) - 7, 0),), "<u8", buf, 0, (1,))
+    w32 = np.ndarray((max(len(buf) - 3, 0),), "<u4", buf, 0, (1,))
+    h = np.full(len(starts), _u64(SPARK_SEED + _P5), dtype=np.uint64)
+    big = np.flatnonzero(lengths >= 32)
+    if big.size:
+        # Most-stripes-first, so the lanes still striping at step i are a
+        # prefix: each step updates slices, not gathered copies.
+        stripes = lengths[big] // 32
+        order = np.argsort(-stripes, kind="stable")
+        big, stripes = big[order], stripes[order]
+        p = starts[big]
+        v1 = np.full(big.size, _u64(SPARK_SEED + _P1 + _P2), dtype=np.uint64)
+        v2 = np.full(big.size, _u64(SPARK_SEED + _P2), dtype=np.uint64)
+        v3 = np.full(big.size, _u64(SPARK_SEED), dtype=np.uint64)
+        v4 = np.full(big.size, _u64(SPARK_SEED - _P1), dtype=np.uint64)
+        active = np.searchsorted(-stripes, -np.arange(1, stripes[0] + 1), side="right")
+        for c in active:
+            q = p[:c]
+            v1[:c] = _round_lanes(v1[:c], w64[q])
+            v2[:c] = _round_lanes(v2[:c], w64[q + 8])
+            v3[:c] = _round_lanes(v3[:c], w64[q + 16])
+            v4[:c] = _round_lanes(v4[:c], w64[q + 24])
+            p[:c] += 32
+        acc = (
+            _rotl_lanes(v1, 1) + _rotl_lanes(v2, 7)
+            + _rotl_lanes(v3, 12) + _rotl_lanes(v4, 18)
+        )
+        for v in (v1, v2, v3, v4):
+            acc = (acc ^ _round_lanes(_u64(0), v)) * _u64(_P1) + _u64(_P4)
+        h[big] = acc
+    h += lengths.astype(np.uint64)
+    rem = lengths % 32  # the tail after the stripes
+    pos = starts + lengths - rem
+    for _ in range(3):  # at most three 8-byte words
+        a = np.flatnonzero(rem >= 8)
+        if not a.size:
+            break
+        k1 = _round_lanes(_u64(0), w64[pos[a]])
+        h[a] = _rotl_lanes(h[a] ^ k1, 27) * _u64(_P1) + _u64(_P4)
+        pos[a] += 8
+        rem[a] -= 8
+    a = np.flatnonzero(rem >= 4)
+    if a.size:
+        k = w32[pos[a]].astype(np.uint64) * _u64(_P1)
+        h[a] = _rotl_lanes(h[a] ^ k, 23) * _u64(_P2) + _u64(_P3)
+        pos[a] += 4
+        rem[a] -= 4
+    for _ in range(3):
+        a = np.flatnonzero(rem >= 1)
+        if not a.size:
+            break
+        k = buf[pos[a]].astype(np.uint64) * _u64(_P5)
+        h[a] = _rotl_lanes(h[a] ^ k, 11) * _u64(_P1)
+        pos[a] += 1
+        rem[a] -= 1
+    return _fmix_lanes(h)
+
+
+def hash_int_lanes(value: int, seeds):
+    """``hash_int(value, seed)`` for every seed of a uint64 array — the
+    lane form of ``F.xxhash64(s, F.lit(value))`` given the ``s`` hashes."""
+    h = seeds + _u64(_P5 + 4)
+    h = h ^ _u64((value & 0xFFFFFFFF) * _P1)
+    return _fmix_lanes(_rotl_lanes(h, 23) * _u64(_P2) + _u64(_P3))

@@ -1,15 +1,19 @@
 """Deduplication toolbox for large-scale corpus curation.
 
 Beyond the reference's entity/claim dedup (E1/E4), a 100 TB training-data
-pipeline needs document-level dedup. All variants below are pure DataFrame
-ops (JVM-side; no Python on the hot path):
+pipeline needs document-level dedup. Every variant is DataFrame ops,
+with text normalization always a JVM expression; the one Python step is
+the MinHash signature kernel, a whole-batch ``mapInArrow`` (no per-row
+Python):
 
   * exact          — hash-groupBy on the raw text (md5)
   * normalized     — hash-groupBy on whitespace/case/punct-normalized text
-  * minhash + LSH  — word-shingle -> k minhashes (xxhash64 with per-seed
-                     salt) -> bands -> bucket join -> candidate pairs;
-                     the scalable near-dup path (candidates verified with
-                     exact Jaccard, all in one plan)
+  * minhash + LSH  — one Arrow kernel per batch: word shingles -> k
+                     minhashes (numpy XXH64, bit-equal to ``xxhash64``
+                     with per-seed salt) -> band keys; then band rows ->
+                     bucket join -> candidate pairs; the scalable
+                     near-dup path (candidates verified with exact
+                     Jaccard)
   * simhash        — 64-bit bitwise-majority signature over token hashes;
                      near-dups = equal signatures (or equal bands of it)
   * embedding cosine — near-dup pairs above a cosine threshold (brute
@@ -19,8 +23,7 @@ Scale notes: exact/normalized dedup are single-shuffle groupBys with
 map-side partial agg. MinHash-LSH is the designed 100 TB path: the only
 quadratic step is within an LSH bucket, whose expected size is O(1) for
 well-chosen (bands, rows); everything else is hash-partitioned. Skewed
-buckets (boilerplate shingles) are handled by AQE skew-join + an optional
-bucket-size cap.
+buckets (boilerplate shingles) are left to AQE's skew join.
 """
 
 from __future__ import annotations
@@ -30,7 +33,7 @@ from pyspark.sql import functions as F
 
 from graphrag_litex_spark.operators.iterutils import DRIVER_THRESHOLD
 
-_NORM_RE = r"[^a-z0-9 ]+"
+_KERNEL_TEXT_BYTES = 1 << 20
 
 
 def norm_text_col(col="text"):
@@ -76,35 +79,12 @@ def normalized_duplicates(
     )
 
 
-def word_shingles(text_col="text", k: int = 3):
-    """Distinct k-word shingles of a text column (array<string>), JVM-side.
-
-    Built by zipping the token array with its own 1..k-1 shifted slices —
-    NOT with a positional ``transform(sequence(...), i -> slice(toks, i))``
-    lambda: Catalyst inlines the full tokenize expression into the lambda
-    body, re-evaluating normalization+split PER ELEMENT (observed 35s for
-    5k docs). With zip_with each slice is evaluated once per row.
-    """
-    toks = F.split(norm_text_col(text_col), " ")
-    n = F.size(toks)
-    shifted = lambda off: F.slice(  # noqa: E731
-        toks, off + 1, F.greatest(n - off, F.lit(0))
-    )
-    grams = toks
-    for off in range(1, k):
-        # concat null-propagates, so trailing partial shingles become null.
-        grams = F.zip_with(grams, shifted(off), lambda a, b: F.concat(a, F.lit(" "), b))
-    full = F.filter(grams, lambda g: g.isNotNull())
-    return F.when(n < k, F.array(F.concat_ws(" ", toks))).otherwise(F.array_distinct(full))
-
-
 def shingle_rows(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 3,
     extra_cols: list[str] | None = None,
-    distinct: bool = True,
 ) -> DataFrame:
     """Distinct k-word shingles as ROWS: (id, [extra_cols...], s).
 
@@ -113,7 +93,7 @@ def shingle_rows(
     higher-order functions (which drop out of codegen and/or go quadratic
     on string arrays), every step a codegen'd projection or one shuffle.
     Docs shorter than k tokens contribute their whole normalized text as a
-    single shingle (same semantics as word_shingles).
+    single shingle (same semantics as minhash_signatures).
     """
     from pyspark.sql import Window
 
@@ -137,12 +117,131 @@ def shingle_rows(
     short = base.where(F.size(F.split("norm", " ")) < k).select(
         "id", *extra, F.col("norm").alias("s")
     )
-    out = full.unionByName(short)
-    # distinct=False skips the global (id, s) dedup shuffle for consumers
-    # whose aggregates are duplicate-invariant (min-hash, collect_set) —
-    # the signature pipeline; counting consumers (ngram_jaccard_pairs)
-    # keep the default.
-    return out.distinct() if distinct else out
+    return full.unionByName(short).distinct()
+
+
+def _string_spans(arr):
+    """(data, starts, lengths) of an Arrow string array: its values as byte
+    spans of the shared uint8 data buffer (a view, no copy)."""
+    import numpy as np
+    import pyarrow as pa
+
+    if len(arr) == 0:
+        empty = np.zeros(0, np.int64)
+        return np.zeros(0, np.uint8), empty, empty
+    _, offsets, data = arr.buffers()[:3]
+    width = np.int64 if pa.types.is_large_string(arr.type) else np.int32
+    off = np.frombuffer(offsets, width)[arr.offset : arr.offset + len(arr) + 1]
+    off = off.astype(np.int64)
+    buf = np.frombuffer(data, np.uint8) if data is not None else np.zeros(0, np.uint8)
+    return buf, off[:-1], np.diff(off)
+
+
+def _distinct_shingles(norm, k: int):
+    """(doc, shingles): the distinct k-shingles of every value of the
+    non-NULL string array ``norm``, as a string array sorted by document,
+    then shingle (``doc[j]`` is the index of the value shingle j came
+    from; every value has at least one shingle).
+
+    Values are tokens joined by single spaces (``""`` is one empty token),
+    exactly ``split(norm, " ")``: a k-shingle is the byte span from a
+    token's start to the end of the token k-1 further on, and a value of
+    fewer than k tokens is one shingle, its whole text.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    data, start, length = _string_spans(norm)
+    end = start + length
+    lo, hi = (start[0], end[-1]) if len(norm) else (0, 0)
+    spaces = lo + np.flatnonzero(data[lo:hi] == 32)
+    # A value's first token starts at its start, the others one past a
+    # space; its last token ends at its end, the others at a space.
+    ntok = np.diff(np.searchsorted(spaces, np.append(start, hi))) + 1
+    first = np.cumsum(ntok) - ntok
+    last = first + ntok - 1
+    not_first = np.ones(int(ntok.sum()), bool)
+    not_first[first] = False
+    not_last = np.roll(not_first, -1)  # token t is last iff t + 1 is first
+    tok_start = np.empty(not_first.size, np.int64)
+    tok_start[not_first] = spaces + 1
+    tok_start[first] = start
+    tok_end = np.empty_like(tok_start)
+    tok_end[not_last] = spaces
+    tok_end[last] = end
+
+    nsh = np.maximum(ntok - k + 1, 1)
+    doc = np.repeat(np.arange(len(norm), dtype=np.int32), nsh)
+    j = np.arange(doc.size) - np.repeat(np.cumsum(nsh) - nsh, nsh)
+    t0 = np.repeat(first, nsh) + j
+    s0 = tok_start[t0]
+    s_len = tok_end[np.minimum(t0 + k - 1, np.repeat(last, nsh))] - s0
+    offsets = np.zeros(doc.size + 1, np.int64)
+    np.cumsum(s_len, out=offsets[1:])
+    gather = np.repeat(s0 - offsets[:-1], s_len) + np.arange(offsets[-1])
+    shingles = pa.StringArray.from_buffers(
+        doc.size, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data[gather])
+    )
+    # Sorted by (doc, shingle), a repeated shingle follows its first copy.
+    # (A hash group_by would load pyarrow.acero: ~40 MB more per worker.)
+    order = pc.sort_indices(
+        pa.table({"d": doc, "s": shingles}), [("d", "ascending"), ("s", "ascending")]
+    )
+    doc, shingles = doc[order.to_numpy()], shingles.take(order)
+    keep = np.ones(doc.size, bool)
+    keep[1:] = pc.not_equal(shingles[1:], shingles[:-1]).to_numpy(zero_copy_only=False)
+    keep[1:] |= doc[1:] != doc[:-1]
+    return doc[keep], shingles.filter(pa.array(keep))
+
+
+def _minhash_batch(ids, norm, k: int, num_hashes: int, bands: int):
+    """One Arrow batch of (id, normalized text) -> (id, shingles, sig,
+    buckets) in numpy lanes, bit-equal to the relational formulation.
+
+    Every distinct shingle (``_distinct_shingles``) is hashed once with
+    ``hash_spans``; hash i of the signature is ``hash_int(i, seed=shingle
+    hash)`` — what ``F.xxhash64(s, F.lit(i))`` computes — and ``sig[i]``
+    its signed minimum over the document. ``buckets[b]`` is the LSH band
+    key: ``xxhash64`` of the comma-joined decimal slice
+    ``sig[b*r:(b+1)*r]``, r = num_hashes // bands. NULL text has no
+    shingles and yields no row (as ``size(NULL)`` under ANSI did).
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from graphrag_litex_spark.functions.xxh64 import hash_int_lanes, hash_spans
+
+    if norm.null_count:
+        keep = norm.is_valid()
+        ids, norm = ids.filter(keep), norm.filter(keep)
+    n_docs = len(norm)
+    doc, shingles = _distinct_shingles(norm, k)
+    seg = np.flatnonzero(np.diff(doc, prepend=-1))
+    h = hash_spans(*_string_spans(shingles))
+    sig = np.empty((n_docs, num_hashes), np.int64)
+    for i in range(num_hashes):
+        sig[:, i] = np.minimum.reduceat(hash_int_lanes(i, h).view(np.int64), seg)
+    rows = num_hashes // bands
+    dec = [pc.cast(pa.array(sig[:, i]), pa.string()) for i in range(bands * rows)]
+    buckets = np.empty((n_docs, bands), np.int64)
+    for b in range(bands):
+        keys = pc.binary_join_element_wise(*dec[b * rows : (b + 1) * rows], ",")
+        buckets[:, b] = hash_spans(*_string_spans(keys)).view(np.int64)
+
+    def lists(offsets, values):
+        return pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)), values)
+
+    return pa.RecordBatch.from_arrays(
+        [
+            ids,
+            lists(np.append(seg, doc.size), shingles),
+            lists(np.arange(n_docs + 1) * num_hashes, pa.array(sig.ravel())),
+            lists(np.arange(n_docs + 1) * bands, pa.array(buckets.ravel())),
+        ],
+        names=["id", "shingles", "sig", "buckets"],
+    )
 
 
 def minhash_signatures(
@@ -151,52 +250,54 @@ def minhash_signatures(
     text_col: str = "text",
     shingle_k: int = 3,
     num_hashes: int = 32,
+    bands: int = 8,
 ) -> DataFrame:
-    """-> (id, shingles array, sig array<long>) via shingle rows + one
-    groupBy with k min-aggregations + collect_set. Single shuffle after the
-    shingle window; everything stays in whole-stage codegen."""
-    # distinct=False: min() and collect_set() are duplicate-invariant, so
-    # the per-(id, s) dedup shuffle bought nothing on this path.
-    rows = shingle_rows(docs, id_col, text_col, shingle_k, distinct=False)
-    agg = rows.groupBy("id").agg(
-        F.collect_set("s").alias("shingles"),
-        *[F.min(F.xxhash64(F.col("s"), F.lit(i))).alias(f"mh_{i}") for i in range(num_hashes)],
-    )
-    return agg.select(
-        "id",
-        "shingles",
-        F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)]).alias("sig"),
+    """-> (id, shingles array<string>, sig array<long>, buckets
+    array<long>): one row per document with non-NULL text — its distinct
+    k-word shingles, its ``num_hashes`` MinHash values and its ``bands``
+    LSH bucket keys (see ``_minhash_batch``).
+
+    Normalization is the JVM expression ``norm_text_col``; everything after
+    it is ONE ``mapInArrow`` kernel over the scan (fanned out by
+    ``scale_out`` when it under-parallelizes) — no window, no aggregate,
+    no shuffle of its own. Its values are bit-equal
+    to the relational formulation (shingle window, 32 ``min(xxhash64(s,
+    i))`` aggregates, ``concat_ws`` band keys), which the tests keep as the
+    reference. Document ids are expected unique: each input row is signed
+    on its own.
+    """
+    from graphrag_litex_spark.operators.iterutils import scale_out
+
+    id_type = dict(docs.dtypes)[id_col]
+
+    def kernel(batches):
+        for rb in batches:
+            # Shingles hold ~k bytes per text byte and the kernel indexes
+            # them per byte: slices of ~_KERNEL_TEXT_BYTES of text bound
+            # its memory whatever the Arrow batch size (a 1 MB slice peaks
+            # ~57 MB above the worker's baseline, a 4 MB one ~230 MB).
+            step = max(1, len(rb) * _KERNEL_TEXT_BYTES // max(rb.column(1).nbytes, 1))
+            for i in range(0, len(rb), step):
+                part = rb.slice(i, step)
+                yield _minhash_batch(part.column(0), part.column(1), shingle_k, num_hashes, bands)
+
+    return (
+        scale_out(docs, id_col)
+        .select(F.col(id_col).alias("id"), norm_text_col(text_col).alias("norm"))
+        .mapInArrow(
+            kernel,
+            f"id {id_type}, shingles array<string>, sig array<bigint>, "
+            "buckets array<bigint>",
+        )
     )
 
 
-def _band_rows(base: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(id, sig) -> one (id, band, bucket) row per band: the LSH bucket key
-    is xxhash64 of the band's signature slice. Shared by the batch
-    candidate join and the persisted incremental index so a batch-built
-    index and an incrementally-probed one can never disagree on bucketing."""
-    rows_per_band = num_hashes // bands
-    return base.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col("sig")[b * rows_per_band + r].cast("string")
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+def _band_rows(base: DataFrame) -> DataFrame:
+    """(id, buckets) -> one (id, band, bucket) row per band. Shared by the
+    batch candidate join and the persisted incremental index so a
+    batch-built index and an incrementally-probed one can never disagree
+    on bucketing."""
+    return base.select("id", F.posexplode("buckets").alias("band", "bucket"))
 
 
 def minhash_lsh_candidates(
@@ -219,17 +320,21 @@ def minhash_lsh_candidates(
     pair instead of O(|shingles|), and the mode a persisted signature index
     supports (``incremental_dedup_pairs`` verifies the same way, so a batch
     "estimate" run is the equivalence baseline for incremental runs).
-    """
-    from graphrag_litex_spark.operators.iterutils import hard_checkpoint
 
-    # Materialize the signature stage: without a barrier, CollapseProject
-    # would inline the signature expression into every downstream band
-    # reference (num_hashes× recomputation per row). At cluster scale this
-    # would be a persisted stage table anyway.
+    The result is lazy over the signature checkpoint: pass it to
+    ``iterutils.release`` once consumed.
+    """
+    from graphrag_litex_spark.operators.iterutils import hard_checkpoint, with_checkpoint_of
+
+    if verify not in ("exact", "estimate"):
+        raise ValueError(f"unknown verify mode: {verify!r}")
+    # The result reads the signatures four times (both sides of the band
+    # self-join, both sides of the verify join): checkpointed, the kernel
+    # runs once. At cluster scale this would be a persisted stage table.
     base = hard_checkpoint(
-        minhash_signatures(docs, id_col, text_col, shingle_k, num_hashes)
+        minhash_signatures(docs, id_col, text_col, shingle_k, num_hashes, bands)
     )
-    banded = _band_rows(base, num_hashes, bands)
+    banded = _band_rows(base)
 
     # Candidate ids only through the join+dedup shuffle (no array payloads);
     # shingles re-attached once per UNIQUE pair for verification.
@@ -247,21 +352,21 @@ def minhash_lsh_candidates(
     )
     if verify == "estimate":
         sigs = base.select("id", "sig")
-        return _estimate_verified_pairs(
+        out = _estimate_verified_pairs(
             cand, sigs, num_hashes, jaccard_threshold
         ).withColumnRenamed("est_jaccard", "jaccard")
-    if verify != "exact":
-        raise ValueError(f"unknown verify mode: {verify!r}")
-    sh_a = base.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    sh_b = base.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    pairs = cand.join(sh_a, "id_a").join(sh_b, "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        pairs.withColumn("jaccard", F.when(union == 0, F.lit(1.0)).otherwise(inter / union))
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    else:
+        sh_a = base.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
+        sh_b = base.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
+        pairs = cand.join(sh_a, "id_a").join(sh_b, "id_b")
+        inter = F.size(F.array_intersect("sh_a", "sh_b"))
+        union = F.size(F.array_union("sh_a", "sh_b"))
+        out = (
+            pairs.withColumn("jaccard", F.when(union == 0, F.lit(1.0)).otherwise(inter / union))
+            .where(F.col("jaccard") >= jaccard_threshold)
+            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+        )
+    return with_checkpoint_of(out, base)
 
 
 def _estimate_verified_pairs(
@@ -316,11 +421,13 @@ def build_dedup_index(
     from graphrag_litex_spark.operators.iterutils import hard_checkpoint, release
 
     base = hard_checkpoint(
-        minhash_signatures(docs, id_col, text_col, shingle_k, num_hashes)
+        minhash_signatures(docs, id_col, text_col, shingle_k, num_hashes, bands)
+        .select("id", "sig", "buckets")
     )
-    sigs = base.select("id", "sig")
-    sigs.write.mode("overwrite").parquet(os.path.join(index_dir, "signatures"))
-    _band_rows(base, num_hashes, bands).write.mode("overwrite").partitionBy(
+    base.select("id", "sig").write.mode("overwrite").parquet(
+        os.path.join(index_dir, "signatures")
+    )
+    _band_rows(base).write.mode("overwrite").partitionBy(
         "band"
     ).parquet(os.path.join(index_dir, "bands"))
     release(base)
@@ -366,13 +473,13 @@ def append_dedup_index(docs: DataFrame, index_dir: str, text_col: str = "text") 
     meta = _read_index_meta(index_dir)
     base = hard_checkpoint(
         minhash_signatures(
-            docs, meta["id_col"], text_col, meta["shingle_k"], meta["num_hashes"]
-        )
+            docs, meta["id_col"], text_col, meta["shingle_k"], meta["num_hashes"], meta["bands"]
+        ).select("id", "sig", "buckets")
     )
     base.select("id", "sig").write.mode("append").parquet(
         os.path.join(index_dir, "signatures")
     )
-    _band_rows(base, meta["num_hashes"], meta["bands"]).write.mode(
+    _band_rows(base).write.mode(
         "append"
     ).partitionBy("band").parquet(os.path.join(index_dir, "bands"))
     release(base)
@@ -412,10 +519,11 @@ def incremental_dedup_pairs(
     # join ships them (the batch path keeps shingles for exact-Jaccard).
     base = hard_checkpoint(
         minhash_signatures(
-            new_docs, meta["id_col"], text_col, meta["shingle_k"], meta["num_hashes"]
-        ).select("id", "sig")
+            new_docs, meta["id_col"], text_col, meta["shingle_k"], meta["num_hashes"],
+            meta["bands"],
+        ).select("id", "sig", "buckets")
     )
-    banded_new = _band_rows(base, meta["num_hashes"], meta["bands"])
+    banded_new = _band_rows(base)
     bands_old = spark.read.parquet(os.path.join(index_dir, "bands")).select(
         "id", "band", "bucket"
     )
@@ -645,25 +753,36 @@ def duplicate_keeper_map(
     minimum of the ORIGINAL id type within the component (CC's internal
     string labels are only used for grouping, so integer ids don't get
     lexicographic-min surprises).
+
+    The MinHash candidates it computes itself are released before it
+    returns; a caller's ``pairs`` are left to the caller.
     """
     from graphrag_litex_spark.operators.cc import connected_components
+    from graphrag_litex_spark.operators.iterutils import release
 
-    if pairs is None:
+    own_pairs = pairs is None
+    if own_pairs:
         pairs = minhash_lsh_candidates(
             docs, id_col, text_col, jaccard_threshold=jaccard_threshold, **lsh_kwargs
         )
     orig = docs.select(
         F.col(id_col), F.col(id_col).cast("string").alias("_id")
     ).distinct()
-    labels = connected_components(
-        orig.select("_id"),
-        pairs.select(
-            F.col("id_a").cast("string").alias("src"),
-            F.col("id_b").cast("string").alias("dst"),
-        ),
-        id_col="_id",
-        driver_threshold=cc_driver_threshold,
-    )
+    try:
+        # Both CC regimes return materialized labels (a driver-local frame
+        # or the loop's own checkpoint), so nothing reads `pairs` after.
+        labels = connected_components(
+            orig.select("_id"),
+            pairs.select(
+                F.col("id_a").cast("string").alias("src"),
+                F.col("id_b").cast("string").alias("dst"),
+            ),
+            id_col="_id",
+            driver_threshold=cc_driver_threshold,
+        )
+    finally:
+        if own_pairs:
+            release(pairs)
     lab = labels.join(orig, "_id").select(F.col(id_col), F.col("label"))
     keepers = lab.groupBy("label").agg(F.min(id_col).alias("keeper_id"))
     return (

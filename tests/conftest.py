@@ -1,4 +1,5 @@
 import os
+import re
 
 import pytest
 
@@ -33,3 +34,21 @@ def pipeline_sf0001(spark, corpus_sf0001, tmp_path_factory):
 
     out = str(tmp_path_factory.mktemp("kg_out"))
     return run_pipeline(spark, corpus_sf0001["transcripts"], out, resume=False)
+
+
+_PY_NODES = re.compile(r"Python|InArrow|InPandas")
+
+
+def plan_nodes(plan) -> list[str]:
+    """Node names of a plan tree string (cached inner plans included)."""
+    names = []
+    for line in plan.toString().splitlines():
+        m = re.match(r"^[\s:|+-]*(?:\*\(\d+\) )?([A-Za-z]+)", line)
+        if m:
+            names.append(m.group(1))
+    return names
+
+
+def python_nodes(plan) -> list[str]:
+    """Node names of a plan that run Python."""
+    return [n for n in plan_nodes(plan) if _PY_NODES.search(n)]

@@ -143,3 +143,42 @@ def test_estimate_verify_mode_batch(spark, frames):
     assert all(abs(v * 32 - round(v * 32)) < 1e-9 for v in vals)
     with pytest.raises(ValueError):
         minhash_lsh_candidates(frames["all"], verify="nope").collect()
+
+
+def test_unknown_verify_mode_submits_no_job(spark, frames):
+    """The mode is checked before the signature checkpoint runs."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.nextJobId()
+    with pytest.raises(ValueError):
+        minhash_lsh_candidates(frames["all"], verify="nope")
+    assert scheduler.nextJobId() == before
+
+
+@pytest.mark.parametrize("verify", ["exact", "estimate"])
+def test_release_frees_candidates_checkpoint(spark, frames, verify):
+    """The pair frame carries its signature checkpoint: releasing it
+    unpins every RDD the call persisted."""
+    from graphrag_litex_spark.operators.iterutils import release
+
+    persisted = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())  # noqa: E731
+    before = persisted()
+    pairs = minhash_lsh_candidates(frames["all"], jaccard_threshold=0.5, verify=verify)
+    assert pairs.count() > 0
+    assert persisted() - before
+    release(pairs)
+    assert not persisted() - before
+
+
+def test_keeper_map_releases_its_candidates_checkpoint(spark, frames):
+    """``duplicate_keeper_map`` frees the MinHash checkpoint of the pairs it
+    computes itself: with driver-local CC nothing stays pinned, and the
+    distributed-CC map (which reads only its own label checkpoint) still
+    reads back the same rows after the release."""
+    persisted = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())  # noqa: E731
+    before = persisted()
+    local = duplicate_keeper_map(frames["all"], jaccard_threshold=0.5)
+    rows = sorted(local.collect())
+    assert not persisted() - before
+    assert sum(not r.is_keeper for r in rows) > 0
+    dist = duplicate_keeper_map(frames["all"], jaccard_threshold=0.5, cc_driver_threshold=0)
+    assert sorted(dist.collect()) == rows

@@ -1,5 +1,6 @@
 """Scale valves: LSH kNN recall, shingle frequency cap, linking block cap,
-and the pure-Python XXH64 the golden oracles rely on."""
+and the XXH64 replicas (scalar for the golden oracles, numpy lanes for the
+MinHash kernel)."""
 
 import pandas as pd
 import pytest
@@ -11,7 +12,11 @@ from graphrag_litex_spark.operators.linking import candidate_pairs
 
 
 def test_xxh64_matches_spark(spark):
+    import numpy as np
+
     from graphrag_litex_spark.functions.xxh64 import (
+        hash_int_lanes,
+        hash_spans,
         xxhash64_int,
         xxhash64_long,
         xxhash64_str,
@@ -27,9 +32,16 @@ def test_xxh64_matches_spark(spark):
         F.xxhash64(F.lit(123456).cast("long")).alias("l0"),
         F.xxhash64(F.lit(-42).cast("long")).alias("l1"),
     ).collect()[0]
+    encoded = [s.encode("utf-8") for s in samples]
+    lengths = np.array([len(b) for b in encoded])
+    lanes = hash_spans(
+        np.frombuffer(b"".join(encoded), np.uint8), np.cumsum(lengths) - lengths, lengths
+    )
     for i, s in enumerate(samples):
         assert row[f"s{i}"] == xxhash64_str(s)
         assert row[f"p{i}"] == xxhash64_str_int(s, i * 7)
+        assert row[f"s{i}"] == lanes.view(np.int64)[i]
+        assert row[f"p{i}"] == hash_int_lanes(i * 7, lanes).view(np.int64)[i]
     assert row["i0"] == xxhash64_int(123456)
     assert row["i1"] == xxhash64_int(-42)
     assert row["l0"] == xxhash64_long(123456)

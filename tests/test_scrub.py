@@ -226,6 +226,16 @@ def test_ngram_repetition_partitioning_invariant(spark):
     assert a == b
 
 
+def test_ngram_plan_is_one_kernel(spark):
+    """Normalization is JVM-side; the gram counting is ONE MapInArrow."""
+    from conftest import python_nodes
+    from graphrag_litex_spark.operators.scrub import ngram_repetition_stats
+
+    df = spark.createDataFrame([(1, "a b a b c")], "doc_id long, text string")
+    plan = ngram_repetition_stats(df)._jdf.queryExecution().optimizedPlan()
+    assert python_nodes(plan) == ["MapInArrow"]
+
+
 def test_ngram_engines_agree_on_adversarial_corpus(spark):
     """The Arrow kernel == the contract's DuckDB oracle (the relational
     formulation) on the same frame, including NULL text, empty text,

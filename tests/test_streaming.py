@@ -1,11 +1,12 @@
 """Structured Streaming incremental ingest (streaming/incremental.py)."""
 
 import os
-import re
 
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+
+from conftest import python_nodes
 
 
 @pytest.fixture(scope="module")
@@ -60,20 +61,6 @@ def test_incremental_extraction_appends(spark, split_corpus, tmp_path_factory):
     assert n2 == items_mentions(items).count()
 
 
-_PY_NODES = re.compile(r"Python|InArrow|InPandas")
-
-
-def _python_nodes(plan) -> list[str]:
-    """Node names of a plan tree string (cached inner plans included)
-    that run Python."""
-    names = []
-    for line in plan.toString().splitlines():
-        m = re.match(r"^[\s:|+-]*(?:\*\(\d+\) )?([A-Za-z]+)", line)
-        if m and _PY_NODES.search(m.group(1)):
-            names.append(m.group(1))
-    return names
-
-
 @pytest.fixture
 def written_plans(monkeypatch):
     """{parquet path: optimized logical plan} of every DataFrame write."""
@@ -107,7 +94,7 @@ def test_pipeline_extraction_plan_one_python_node(spark, small_input, tmp_path, 
     from graphrag_litex_spark.plans.pipeline import run_pipeline
 
     run_pipeline(spark, small_input, str(tmp_path / "kg"), resume=False, until="extractions")
-    assert _python_nodes(written_plans["extractions"]) == ["MapInArrow"]
+    assert python_nodes(written_plans["extractions"]) == ["MapInArrow"]
 
 
 def test_stream_extract_plan_one_python_node(spark, small_input, tmp_path, written_plans):
@@ -120,7 +107,7 @@ def test_stream_extract_plan_one_python_node(spark, small_input, tmp_path, writt
     names = ("mentions_delta", "raw_edges_delta", "raw_claims_delta")
     assert sorted(written_plans) == sorted(names)
     for name in names:
-        assert _python_nodes(written_plans[name]) == ["MapInArrow"], name
+        assert python_nodes(written_plans[name]) == ["MapInArrow"], name
 
 
 def test_windowed_turn_activity_batch_semantics(spark, corpus_sf0001):

@@ -39,17 +39,19 @@ def test_normalized_duplicates(docs):
 
 
 def test_shingle_rows_match_word_shingles(docs, spark):
-    """Row formulation == array formulation (same distinct shingle sets)."""
+    """Row formulation == the oracle's word_shingle_set (same distinct
+    shingle sets)."""
+    from graphrag_litex_spark.oracle_docops import word_shingle_set
+
     via_rows = {
         (r["id"], r["s"]) for r in D.shingle_rows(docs, "doc_id", "text", 3).collect()
     }
-    via_arrays = set()
-    for r in docs.select(
-        F.col("doc_id").alias("id"), D.word_shingles("text", 3).alias("sh")
-    ).collect():
-        for s in r["sh"]:
-            via_arrays.add((r["id"], s))
-    assert via_rows == via_arrays
+    via_oracle = {
+        (r["doc_id"], s)
+        for r in docs.collect()
+        for s in word_shingle_set(r["text"], 3)
+    }
+    assert via_rows == via_oracle
 
 
 def test_ngram_jaccard_pairs(docs):

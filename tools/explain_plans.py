@@ -107,11 +107,31 @@ def main() -> int:
     assert "TakeOrderedAndProject" in p, "top-k must avoid a global sort"
     sections.append(("G1 top-k cosine", "TakeOrderedAndProject: per-partition heaps", p))
 
-    # LSH candidate join is an equi (shuffle/broadcast hash) join.
-    from graphrag_litex_spark.operators.dedup import minhash_lsh_candidates
+    # MinHash signatures: one Arrow kernel after the JVM normalizer; the LSH
+    # candidate join over their checkpoint is an equi (shuffle/broadcast
+    # hash) join.
+    from graphrag_litex_spark.operators.dedup import (
+        minhash_lsh_candidates,
+        minhash_signatures,
+    )
+    from graphrag_litex_spark.operators.iterutils import release
 
     d = spark.read.parquet(os.path.join(TESTDATA, "documents.parquet"))
-    p = plan_of(minhash_lsh_candidates(d))
+    p = plan_of(minhash_signatures(d))
+    assert "MapInArrow" in p, "signatures must run via mapInArrow"
+    assert "Window" not in p and "Aggregate" not in p, "signatures are map-only"
+    sections.append(
+        (
+            "MinHash signatures",
+            "JVM normalizer, then ONE mapInArrow kernel (numpy XXH64 shingle "
+            "hashes, 32 minimums and 8 band keys per document); no window, "
+            "no aggregate",
+            p,
+        )
+    )
+    pairs = minhash_lsh_candidates(d)
+    p = plan_of(pairs)
+    release(pairs)
     assert "CartesianProduct" not in p and "NestedLoop" not in p
     sections.append(("MinHash-LSH candidates", "banded bucket equi-join, no cross product", p))
 
@@ -720,17 +740,17 @@ def main() -> int:
         [(1, "a b a b c"), (2, "x y z")], "doc_id long, text string"
     )
     p = plan_of(ngram_repetition_stats(docs_df))
+    assert "MapInArrow" in p, "gram counting must run via mapInArrow"
     assert "CartesianProduct" not in p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-    # formatted explain names each node twice (tree + details): 2 scan
-    # nodes (gram side + zero-fill side of the restore join) = 4 mentions.
-    assert p.count("Scan ") <= 4, "one scan per side of the zero-fill join"
+    assert "Aggregate" not in p and "Join" not in p, "per-document: no agg, no join"
+    # formatted explain names each node twice (tree + details): one scan.
+    assert p.count("Scan ") <= 2, "one scan, no restore join"
     sections.append(
         (
             "Gopher n-gram repetition signals",
-            "all n values from ONE projection (flatten of tagged per-n gram "
-            "arrays); (id,n,gram) + (id,n) hash aggs, conditional-agg pivot; "
-            "gram state doc-length-bounded",
+            "JVM normalizer, then ONE mapInArrow kernel counting every n per "
+            "document; fractions are JVM divisions; no aggregate, no join",
             p,
         )
     )
