@@ -15,8 +15,8 @@ the component minimum in O(log n) rounds on ANY topology — a long name
 chain or a chained near-dup corpus (doc_i ~ doc_{i+1}) needs no round per
 hop. A round is two groupBy+join checkpoints; the small-star one observes
 the edge set's (count, xxhash64 sum) on its checkpoint job
-(``iterutils.observed_checkpoint``), and the loop stops when that checksum
-repeats. Lineage is truncated per star, so plans stay O(1) deep.
+(``iterutils.checkpoint_scope.observed``), and the loop stops when that
+checksum repeats. Lineage is truncated per star, so plans stay O(1) deep.
 
 Below ``driver_threshold`` the graph is collected and a driver-local
 union-find labels it (identical output), so at bench scale the linking
@@ -40,12 +40,10 @@ from pyspark.sql import functions as F
 from graphrag_litex_spark.operators.iterutils import (
     DRIVER_THRESHOLD,
     LocalGraph,
-    hard_checkpoint,
+    checkpoint_scope,
     local_frame,
     local_graph,
     loop_shuffle_partitions,
-    observed_checkpoint,
-    release,
     symmetric,
     undirected_simple,
 )
@@ -114,7 +112,7 @@ def connected_components(
     the driver-local union-find; larger graphs run the large-star/small-star
     loop (module docstring), at most ``max_iter`` rounds (11 jobs per round
     under AQE). Both produce byte-identical output (asserted in
-    tests/test_cc.py). The result is one checkpoint, freed by
+    tests/test_cc.py). The distributed result is one checkpoint, freed by
     ``iterutils.release``; its ``_graft_cc_rounds`` is the loop's round count.
     """
     # Driver-local regime (iterutils.local_graph): raw-row limit probes of
@@ -125,25 +123,22 @@ def connected_components(
         return _cc_union_find_df(vertices.sparkSession, g, id_col)
     # Self-loops join nothing, so the loop reads the undirected simple
     # graph; its size (and the vertex count) ride the checkpoint jobs.
-    verts, vm = observed_checkpoint(
-        vertices.select(F.col(id_col).alias("u")).where(F.col("u").isNotNull()),
-        n=F.count(F.lit(1)),
-    )
-    e, prev = _stars_checkpoint(undirected_simple(edges, src_col, dst_col))
-    # with-block + finally: a mid-loop Spark exception must not leave the
-    # session's shuffle-partition count overridden or leak checkpoint RDDs.
-    try:
+    with checkpoint_scope() as scope:
+        verts, vm = scope.observed(
+            vertices.select(F.col(id_col).alias("u")).where(F.col("u").isNotNull()),
+            n=F.count(F.lit(1)),
+        )
+        e, prev = _stars_checkpoint(scope, undirected_simple(edges, src_col, dst_col))
         with loop_shuffle_partitions(vertices.sparkSession, vm["n"] + 2 * prev[0]):
             rounds = 0
             for _ in range(max_iter):
                 if prev[0] == 0:
                     break  # no edges left: every vertex is its own star
-                e1 = hard_checkpoint(_large_star(e))
-                e2, cur = _stars_checkpoint(_small_star(e1))
-                # Release each superseded checkpoint immediately — waiting
+                e1 = scope.checkpoint(_large_star(e))
+                e2, cur = _stars_checkpoint(scope, _small_star(e1))
+                # Drop each superseded checkpoint immediately — waiting
                 # for Python GC + ContextCleaner lets cached RDDs pile up.
-                release(e1)
-                release(e)
+                scope.drop(e1, e)
                 e = e2
                 rounds += 1
                 if cur == prev:
@@ -174,24 +169,21 @@ def connected_components(
                 .groupBy("u")
                 .agg(F.min("label").alias("label"))
             )
-            out = hard_checkpoint(
+            out = scope.checkpoint(
                 verts.join(lbl, "u", "left").select(
                     F.col("u").alias(id_col),
                     F.coalesce("label", "u").alias("label"),
                 )
             )
-            out._graft_cc_rounds = rounds  # type: ignore[attr-defined]
-    finally:
-        release(e)
-        release(verts)
-    return out
+        out._graft_cc_rounds = rounds  # type: ignore[attr-defined]
+        return scope.result(out)
 
 
-def _stars_checkpoint(e: DataFrame) -> tuple[DataFrame, tuple]:
-    """Checkpoint a canonical edge set with its (count, xxhash64 sum) — an
-    order-independent edge-set checksum observed by the checkpoint job
-    itself, so the convergence check costs no job of its own."""
-    ck, m = observed_checkpoint(
+def _stars_checkpoint(scope: checkpoint_scope, e: DataFrame) -> tuple[DataFrame, tuple]:
+    """Checkpoint a canonical edge set in ``scope`` with its (count, xxhash64
+    sum) — an order-independent edge-set checksum observed by the checkpoint
+    job itself, so the convergence check costs no job of its own."""
+    ck, m = scope.observed(
         e,
         n=F.count(F.lit(1)),
         # decimal sum: ANSI mode (Spark 4 default) would raise on bigint

@@ -53,22 +53,24 @@ from __future__ import annotations
 
 import math
 from decimal import ROUND_HALF_UP, Decimal
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graphrag_litex_spark.operators.iterutils import (
     DRIVER_THRESHOLD,
-    hard_checkpoint,
+    checkpoint_scope,
     local_frame,
     local_graph,
     loop_shuffle_partitions,
-    observed_checkpoint,
-    release,
     symmetric,
     undirected_simple,
-    with_checkpoint_of,
 )
+
+
+# Findings per community report: its strongest intra-community edges.
+TOP_FINDINGS = 5
 
 
 # ---- pure-Python kernels (driver-local adaptive path) ---------------------
@@ -207,8 +209,8 @@ def label_propagation(
     (identical output, ~5x fewer tiny Spark jobs); larger graphs run the
     distributed loop below. Each distributed round is one observed
     checkpoint whose changed-label count rides the checkpoint job
-    (``iterutils.observed_checkpoint``); under AQE that is 8 Spark jobs
-    per round (join, count and window stages), measured at
+    (``iterutils.checkpoint_scope.observed``); under AQE that is 8 Spark
+    jobs per round (join, count and window stages), measured at
     ``driver_threshold=0`` on local[8] over tests/test_graph_loops.py's
     graph.
 
@@ -237,24 +239,21 @@ def label_propagation(
             ["entity_id", "label"],
             "entity_id string, label string",
         )
-    sym, sm = observed_checkpoint(
-        symmetric(undirected_simple(und_edges, "u", "v")), n=F.count(F.lit(1))
-    )
-    init = vertices.select(F.col("entity_id").alias("u"))
-    if seed_labels is not None:
-        init = init.join(
-            seed_labels.select(F.col("entity_id").alias("u"), F.col("label").alias("_seed")),
-            "u",
-            "left",
-        ).select("u", F.coalesce("_seed", F.col("u")).alias("label"))
-    else:
-        init = init.select("u", F.col("u").alias("label"))
-    labels, lm = observed_checkpoint(init, n=F.count(F.lit(1)))
-    n_state = lm["n"] + sm["n"]
-    # with-block + finally: a mid-loop Spark exception must not leave the
-    # session's shuffle-partition count overridden or leak checkpoint RDDs.
-    try:
-        with loop_shuffle_partitions(vertices.sparkSession, n_state):
+    with checkpoint_scope() as scope:
+        sym, sm = scope.observed(
+            symmetric(undirected_simple(und_edges, "u", "v")), n=F.count(F.lit(1))
+        )
+        init = vertices.select(F.col("entity_id").alias("u"))
+        if seed_labels is not None:
+            init = init.join(
+                seed_labels.select(F.col("entity_id").alias("u"), F.col("label").alias("_seed")),
+                "u",
+                "left",
+            ).select("u", F.coalesce("_seed", F.col("u")).alias("label"))
+        else:
+            init = init.select("u", F.col("u").alias("label"))
+        labels, lm = scope.observed(init, n=F.count(F.lit(1)))
+        with loop_shuffle_partitions(vertices.sparkSession, lm["n"] + sm["n"]):
             for _ in range(iters):
                 msgs = sym.join(
                     labels.select(F.col("u").alias("v"), "label"), "v"
@@ -273,7 +272,7 @@ def label_propagation(
                 )
                 # Isolated vertices keep their own label; the old label is
                 # carried so convergence is observed by the checkpoint job.
-                new_labels, m = observed_checkpoint(
+                new_labels, m = scope.observed(
                     labels.select("u", F.col("label").alias("_old"))
                     .join(new, "u", "left")
                     .select("u", F.coalesce("label", F.col("u")).alias("label"), "_old"),
@@ -281,15 +280,11 @@ def label_propagation(
                     "label",
                     changed=F.count_if(F.col("label") != F.col("_old")),
                 )
-                release(labels)
+                scope.drop(labels)
                 labels = new_labels
                 if m["changed"] == 0:
                     break
-    finally:
-        release(sym)
-    return with_checkpoint_of(
-        labels.select(F.col("u").alias("entity_id"), "label"), labels
-    )
+        return scope.result(labels.select(F.col("u").alias("entity_id"), "label"), labels)
 
 
 def _enforce_min_size(membership: DataFrame, min_size: int) -> DataFrame:
@@ -369,87 +364,79 @@ def detect_communities(
             ["level", "community_id", "parent", "entity_id"],
             "level int, community_id string, parent string, entity_id string",
         )
-    und, um = observed_checkpoint(
-        undirected_simple(edges, "src_id", "dst_id").toDF("u", "v"), n=F.count(F.lit(1))
-    )
-    vertices, vm = observed_checkpoint(vertices, n=F.count(F.lit(1)))
-    n_state = um["n"] + vm["n"]
-
-    with loop_shuffle_partitions(spark, n_state):
-        lpa = label_propagation(
-            vertices, und, lpa_iters, driver_threshold, seed_labels=seed_labels
+    with checkpoint_scope() as scope:
+        und, um = scope.observed(
+            undirected_simple(edges, "src_id", "dst_id").toDF("u", "v"), n=F.count(F.lit(1))
         )
-        membership = hard_checkpoint(
-            _enforce_min_size(lpa, min_size).select(
-                F.lit(0).alias("level"),
-                F.concat(F.lit("0_"), F.col("label")).alias("community_id"),
-                F.lit(None).cast("string").alias("parent"),
-                "entity_id",
+        vertices, vm = scope.observed(vertices, n=F.count(F.lit(1)))
+        with loop_shuffle_partitions(spark, um["n"] + vm["n"]):
+            lpa = label_propagation(
+                vertices, und, lpa_iters, driver_threshold, seed_labels=seed_labels
             )
-        )
-        release(lpa)
-
-        prev = membership
-        for level in range(1, levels):
-            sizes = prev.groupBy("community_id").agg(F.count(F.lit(1)).alias("sz"))
-            small = sizes.where(F.col("sz") <= 2 * min_size).select("community_id")
-            big = sizes.where(F.col("sz") > 2 * min_size).select("community_id")
-
-            # Pass-through: small parents copied with a parent pointer
-            # (community_detection.py:170-177).
-            passthrough = prev.join(F.broadcast(small), "community_id").select(
-                F.lit(level).alias("level"),
-                F.concat(F.lit(f"{level}_"), F.col("community_id")).alias("community_id"),
-                F.col("community_id").alias("parent"),
-                "entity_id",
-            )
-
-            # Re-cluster big parents on their induced subgraphs, all in one
-            # pass: restrict edges to intra-parent pairs, then LPA.
-            big_members = hard_checkpoint(
-                prev.join(F.broadcast(big), "community_id").select("community_id", "entity_id")
-            )
-            mu = big_members.select(
-                F.col("entity_id").alias("u"), F.col("community_id").alias("cu")
-            )
-            mv = big_members.select(
-                F.col("entity_id").alias("v"), F.col("community_id").alias("cv")
-            )
-            sub_edges = hard_checkpoint(
-                und.join(mu, "u")
-                .join(mv, "v")
-                .where(F.col("cu") == F.col("cv"))
-                .select("u", "v")
-            )
-            sub_labels = label_propagation(
-                big_members.select("entity_id"), sub_edges, lpa_iters, driver_threshold
-            )
-            sub = (
-                sub_labels.join(big_members, "entity_id")
-                .withColumn(
-                    "child_id", F.concat(F.lit(f"{level}_"), F.col("label"))
+            scope.own(lpa)
+            prev = scope.checkpoint(
+                _enforce_min_size(lpa, min_size).select(
+                    F.lit(0).alias("level"),
+                    F.concat(F.lit("0_"), F.col("label")).alias("community_id"),
+                    F.lit(None).cast("string").alias("parent"),
+                    "entity_id",
                 )
             )
-            # Drop sub-communities below min_size (community_detection.py:184).
-            child_sizes = sub.groupBy("child_id").agg(F.count(F.lit(1)).alias("csz"))
-            sub_kept = sub.join(
-                F.broadcast(child_sizes.where(F.col("csz") >= min_size).select("child_id")),
-                "child_id",
-            ).select(
-                F.lit(level).alias("level"),
-                F.col("child_id").alias("community_id"),
-                F.col("community_id").alias("parent"),
-                "entity_id",
-            )
-            cur = hard_checkpoint(passthrough.unionByName(sub_kept))
-            for df in (big_members, sub_edges, sub_labels):
-                release(df)
-            membership = membership.unionByName(cur)
-            prev = cur
+            scope.drop(lpa)
+            tables = [prev]  # one checkpoint per level, all read by the result
+            for level in range(1, levels):
+                sizes = prev.groupBy("community_id").agg(F.count(F.lit(1)).alias("sz"))
+                small = sizes.where(F.col("sz") <= 2 * min_size).select("community_id")
+                big = sizes.where(F.col("sz") > 2 * min_size).select("community_id")
 
-    release(und)
-    release(vertices)
-    return membership
+                # Pass-through: small parents copied with a parent pointer
+                # (community_detection.py:170-177).
+                passthrough = prev.join(F.broadcast(small), "community_id").select(
+                    F.lit(level).alias("level"),
+                    F.concat(F.lit(f"{level}_"), F.col("community_id")).alias("community_id"),
+                    F.col("community_id").alias("parent"),
+                    "entity_id",
+                )
+
+                # Re-cluster big parents on their induced subgraphs, all in
+                # one pass: restrict edges to intra-parent pairs, then LPA.
+                big_members = scope.checkpoint(
+                    prev.join(F.broadcast(big), "community_id").select("community_id", "entity_id")
+                )
+                mu = big_members.select(
+                    F.col("entity_id").alias("u"), F.col("community_id").alias("cu")
+                )
+                mv = big_members.select(
+                    F.col("entity_id").alias("v"), F.col("community_id").alias("cv")
+                )
+                sub_edges = scope.checkpoint(
+                    und.join(mu, "u")
+                    .join(mv, "v")
+                    .where(F.col("cu") == F.col("cv"))
+                    .select("u", "v")
+                )
+                sub_labels = label_propagation(
+                    big_members.select("entity_id"), sub_edges, lpa_iters, driver_threshold
+                )
+                scope.own(sub_labels)
+                sub = sub_labels.join(big_members, "entity_id").withColumn(
+                    "child_id", F.concat(F.lit(f"{level}_"), F.col("label"))
+                )
+                # Drop sub-communities below min_size (community_detection.py:184).
+                child_sizes = sub.groupBy("child_id").agg(F.count(F.lit(1)).alias("csz"))
+                sub_kept = sub.join(
+                    F.broadcast(child_sizes.where(F.col("csz") >= min_size).select("child_id")),
+                    "child_id",
+                ).select(
+                    F.lit(level).alias("level"),
+                    F.col("child_id").alias("community_id"),
+                    F.col("community_id").alias("parent"),
+                    "entity_id",
+                )
+                prev = scope.checkpoint(passthrough.unionByName(sub_kept))
+                scope.drop(big_members, sub_edges, sub_labels)
+                tables.append(prev)
+        return scope.result(reduce(DataFrame.unionByName, tables), *tables)
 
 
 def member_edge_degrees(communities: DataFrame, edges: DataFrame) -> DataFrame:
@@ -538,7 +525,6 @@ def summarize_communities(
     stats: DataFrame,
     nodes: DataFrame,
     edges: DataFrame,
-    top_findings: int = 5,
     degrees: DataFrame | None = None,
     summarizer=None,
 ) -> DataFrame:
@@ -547,10 +533,10 @@ def summarize_communities(
     Shape mirrors the reference's LLM summary dict {title, summary, rating,
     findings: [{summary, explanation}]} (indexing/summarizer.py:31-38,
     181-208) with the LLM replaced by column expressions: title = highest-
-    degree member entity; findings = strongest intra-community edges;
-    rating clamped to [0, 10] (H9). ``full_text`` concatenates title +
-    summary + finding summaries for embedding, mirroring
-    utils/embedding_utils.py:42-50. Pass a precomputed
+    degree member entity; findings = the ``TOP_FINDINGS`` strongest
+    intra-community edges; rating clamped to [0, 10] (H9). ``full_text``
+    concatenates title + summary + finding summaries for embedding,
+    mirroring utils/embedding_utils.py:42-50. Pass a precomputed
     ``member_edge_degrees`` to share its edge scan with the stats stage.
 
     ``summarizer``: optional ``(community_id, input_text, n_entities) ->
@@ -602,7 +588,7 @@ def summarize_communities(
     )
     findings = (
         intra.withColumn("_rn", F.row_number().over(w_find))
-        .where(F.col("_rn") <= top_findings)
+        .where(F.col("_rn") <= TOP_FINDINGS)
         .withColumn(
             "finding",
             F.struct(
@@ -867,8 +853,8 @@ def graph_tail_py(
                 best[(level, c)] = (key, names.get(u))
     titles = {k: name for k, (_, name) in best.items()}
 
-    # Findings: the 5 strongest edges (self-loops included) inside a
-    # community (summarize_communities' default top_findings).
+    # Findings: the TOP_FINDINGS strongest edges (self-loops included)
+    # inside a community, as in summarize_communities.
     intra: dict = {}
     for e in edge_rows:
         for level, cof in comm.items():
@@ -917,7 +903,7 @@ def graph_tail_py(
         summary = f"Community of {len(nm)} entities including {', '.join(nm[:3])}."
         findings = [
             finding(e)
-            for e in sorted(intra.get((level, c), ()), key=finding_key)[:5]
+            for e in sorted(intra.get((level, c), ()), key=finding_key)[:TOP_FINDINGS]
         ]
         sub = sorted(subs.get((level, c), ()))
         full_text = " ".join(

@@ -324,49 +324,50 @@ def minhash_lsh_candidates(
     The result is lazy over the signature checkpoint: pass it to
     ``iterutils.release`` once consumed.
     """
-    from graphrag_litex_spark.operators.iterutils import hard_checkpoint, with_checkpoint_of
+    from graphrag_litex_spark.operators.iterutils import checkpoint_scope
 
     if verify not in ("exact", "estimate"):
         raise ValueError(f"unknown verify mode: {verify!r}")
-    # The result reads the signatures four times (both sides of the band
-    # self-join, both sides of the verify join): checkpointed, the kernel
-    # runs once. At cluster scale this would be a persisted stage table.
-    base = hard_checkpoint(
-        minhash_signatures(docs, id_col, text_col, shingle_k, num_hashes, bands)
-    )
-    banded = _band_rows(base)
+    with checkpoint_scope() as scope:
+        # The result reads the signatures four times (both sides of the band
+        # self-join, both sides of the verify join): checkpointed, the kernel
+        # runs once. At cluster scale this would be a persisted stage table.
+        base = scope.checkpoint(
+            minhash_signatures(docs, id_col, text_col, shingle_k, num_hashes, bands)
+        )
+        banded = _band_rows(base)
 
-    # Candidate ids only through the join+dedup shuffle (no array payloads);
-    # shingles re-attached once per UNIQUE pair for verification.
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
+        # Candidate ids only through the join+dedup shuffle (no array
+        # payloads); shingles re-attached once per UNIQUE pair for verification.
+        a = banded.alias("a")
+        b = banded.alias("b")
+        cand = (
+            a.join(
+                b,
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.bucket") == F.col("b.bucket"))
+                & (F.col("a.id") < F.col("b.id")),
+            )
+            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .distinct()
         )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    if verify == "estimate":
-        sigs = base.select("id", "sig")
-        out = _estimate_verified_pairs(
-            cand, sigs, num_hashes, jaccard_threshold
-        ).withColumnRenamed("est_jaccard", "jaccard")
-    else:
-        sh_a = base.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-        sh_b = base.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-        pairs = cand.join(sh_a, "id_a").join(sh_b, "id_b")
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size(F.array_union("sh_a", "sh_b"))
-        out = (
-            pairs.withColumn("jaccard", F.when(union == 0, F.lit(1.0)).otherwise(inter / union))
-            .where(F.col("jaccard") >= jaccard_threshold)
-            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-        )
-    return with_checkpoint_of(out, base)
+        if verify == "estimate":
+            sigs = base.select("id", "sig")
+            out = _estimate_verified_pairs(
+                cand, sigs, num_hashes, jaccard_threshold
+            ).withColumnRenamed("est_jaccard", "jaccard")
+        else:
+            sh_a = base.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
+            sh_b = base.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
+            pairs = cand.join(sh_a, "id_a").join(sh_b, "id_b")
+            inter = F.size(F.array_intersect("sh_a", "sh_b"))
+            union = F.size(F.array_union("sh_a", "sh_b"))
+            out = (
+                pairs.withColumn("jaccard", F.when(union == 0, F.lit(1.0)).otherwise(inter / union))
+                .where(F.col("jaccard") >= jaccard_threshold)
+                .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+            )
+        return scope.result(out, base)
 
 
 def _estimate_verified_pairs(
@@ -418,19 +419,11 @@ def build_dedup_index(
     import json
     import os
 
-    from graphrag_litex_spark.operators.iterutils import hard_checkpoint, release
-
-    base = hard_checkpoint(
-        minhash_signatures(docs, id_col, text_col, shingle_k, num_hashes, bands)
-        .select("id", "sig", "buckets")
+    _write_index(
+        minhash_signatures(docs, id_col, text_col, shingle_k, num_hashes, bands),
+        index_dir,
+        "overwrite",
     )
-    base.select("id", "sig").write.mode("overwrite").parquet(
-        os.path.join(index_dir, "signatures")
-    )
-    _band_rows(base).write.mode("overwrite").partitionBy(
-        "band"
-    ).parquet(os.path.join(index_dir, "bands"))
-    release(base)
     meta = {
         "version": 1,
         "shingle_k": shingle_k,
@@ -441,6 +434,22 @@ def build_dedup_index(
     with open(os.path.join(index_dir, "_meta.json"), "w") as f:
         json.dump(meta, f)
     return meta
+
+
+def _write_index(signatures: DataFrame, index_dir: str, mode: str) -> None:
+    """Write ``signatures/`` and ``bands/`` of an index (``mode``
+    "overwrite" or "append") from one checkpoint of ``signatures``, freed
+    once both writes are done."""
+    import os
+
+    from graphrag_litex_spark.operators.iterutils import checkpoint_scope
+
+    with checkpoint_scope() as scope:
+        base = scope.checkpoint(signatures.select("id", "sig", "buckets"))
+        base.select("id", "sig").write.mode(mode).parquet(os.path.join(index_dir, "signatures"))
+        _band_rows(base).write.mode(mode).partitionBy("band").parquet(
+            os.path.join(index_dir, "bands")
+        )
 
 
 def _read_index_meta(index_dir: str) -> dict:
@@ -466,23 +475,14 @@ def append_dedup_index(docs: DataFrame, index_dir: str, text_col: str = "text") 
     index scale. No compensation log needed; re-running a failed append
     to completion restores the contract exactly.
     """
-    import os
-
-    from graphrag_litex_spark.operators.iterutils import hard_checkpoint, release
-
     meta = _read_index_meta(index_dir)
-    base = hard_checkpoint(
+    _write_index(
         minhash_signatures(
             docs, meta["id_col"], text_col, meta["shingle_k"], meta["num_hashes"], meta["bands"]
-        ).select("id", "sig", "buckets")
+        ),
+        index_dir,
+        "append",
     )
-    base.select("id", "sig").write.mode("append").parquet(
-        os.path.join(index_dir, "signatures")
-    )
-    _band_rows(base).write.mode(
-        "append"
-    ).partitionBy("band").parquet(os.path.join(index_dir, "bands"))
-    release(base)
     return meta
 
 
@@ -491,14 +491,13 @@ def incremental_dedup_pairs(
     index_dir: str,
     text_col: str = "text",
     est_threshold: float = 0.6,
-    include_new_new: bool = True,
 ) -> DataFrame:
     """Near-dup pairs for an INCREMENT against a persisted index, without
     touching old documents' text: new docs are shingled/signed once, their
-    band rows probe the index's band table (plus each other when
-    ``include_new_new``), and candidates are verified with the MinHash
-    estimator over signatures from the index — the only scan of old data
-    is the ids-only band join and a semi-joined signature fetch.
+    band rows probe the index's band table and each other, and candidates
+    are verified with the MinHash estimator over signatures from the index
+    — the only scan of old data is the ids-only band join and a
+    semi-joined signature fetch.
 
     -> (id_a, id_b, est_jaccard), id_a < id_b, est >= ``est_threshold``.
     Equivalence contract (tested): old-batch pairs ∪ incremental pairs ==
@@ -510,42 +509,41 @@ def incremental_dedup_pairs(
     """
     import os
 
-    from graphrag_litex_spark.operators.iterutils import hard_checkpoint, with_checkpoint_of
+    from graphrag_litex_spark.operators.iterutils import checkpoint_scope
 
     spark = new_docs.sparkSession
     meta = _read_index_meta(index_dir)
-    # The estimator verify needs only signatures — drop the shingle arrays
-    # BEFORE the checkpoint so neither the checkpoint write nor any probe
-    # join ships them (the batch path keeps shingles for exact-Jaccard).
-    base = hard_checkpoint(
-        minhash_signatures(
-            new_docs, meta["id_col"], text_col, meta["shingle_k"], meta["num_hashes"],
-            meta["bands"],
-        ).select("id", "sig", "buckets")
-    )
-    banded_new = _band_rows(base)
-    bands_old = spark.read.parquet(os.path.join(index_dir, "bands")).select(
-        "id", "band", "bucket"
-    )
-    a = banded_new.alias("a")
-    # new × indexed (either orientation — the increment's ids need not all
-    # sort above the index's).
-    cand_old = (
-        a.join(
-            bands_old.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") != F.col("b.id")),
+    with checkpoint_scope() as scope:
+        # The estimator verify needs only signatures — drop the shingle arrays
+        # BEFORE the checkpoint so neither the checkpoint write nor any probe
+        # join ships them (the batch path keeps shingles for exact-Jaccard).
+        base = scope.checkpoint(
+            minhash_signatures(
+                new_docs, meta["id_col"], text_col, meta["shingle_k"], meta["num_hashes"],
+                meta["bands"],
+            ).select("id", "sig", "buckets")
         )
-        .select(
-            F.least("a.id", "b.id").alias("id_a"),
-            F.greatest("a.id", "b.id").alias("id_b"),
+        banded_new = _band_rows(base)
+        bands_old = spark.read.parquet(os.path.join(index_dir, "bands")).select(
+            "id", "band", "bucket"
         )
-        .distinct()
-    )
-    cands = [cand_old]
-    if include_new_new:
-        cands.append(
+        a = banded_new.alias("a")
+        # new × indexed (either orientation — the increment's ids need not
+        # all sort above the index's), and new × new.
+        cand_old = (
+            a.join(
+                bands_old.alias("b"),
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.bucket") == F.col("b.bucket"))
+                & (F.col("a.id") != F.col("b.id")),
+            )
+            .select(
+                F.least("a.id", "b.id").alias("id_a"),
+                F.greatest("a.id", "b.id").alias("id_b"),
+            )
+            .distinct()
+        )
+        cand_new = (
             a.join(
                 banded_new.alias("c"),
                 (F.col("a.band") == F.col("c.band"))
@@ -555,25 +553,25 @@ def incremental_dedup_pairs(
             .select(F.col("a.id").alias("id_a"), F.col("c.id").alias("id_b"))
             .distinct()
         )
-    cand = cands[0] if len(cands) == 1 else cands[0].unionByName(cands[1]).distinct()
-    # Increment signatures win over (identical) indexed ones for ids present
-    # in both; the anti join is map-side (small increment id set broadcasts)
-    # vs. a groupBy-dedup that would re-shuffle EVERY indexed signature.
-    sig_old = spark.read.parquet(os.path.join(index_dir, "signatures"))
-    sigs = sig_old.join(
-        base.select("id"), "id", "left_anti"
-    ).unionByName(base.select("id", "sig"))
-    # dropDuplicates on the PAIR key, not distinct on all columns: a
-    # crash-retried append_dedup_index leaves duplicate signature rows per
-    # old id (see its docstring), which would otherwise fan each candidate
-    # out once per copy. Signatures for one id are byte-identical (same
-    # hash params over the same text), so any surviving row carries the
-    # same est_jaccard; the dedup runs over the post-threshold candidate
-    # set — tiny next to the index — never over the signatures themselves.
-    out = _estimate_verified_pairs(
-        cand, sigs, meta["num_hashes"], est_threshold
-    ).dropDuplicates(["id_a", "id_b"])
-    return with_checkpoint_of(out, base)
+        cand = cand_old.unionByName(cand_new).distinct()
+        # Increment signatures win over (identical) indexed ones for ids present
+        # in both; the anti join is map-side (small increment id set broadcasts)
+        # vs. a groupBy-dedup that would re-shuffle EVERY indexed signature.
+        sig_old = spark.read.parquet(os.path.join(index_dir, "signatures"))
+        sigs = sig_old.join(
+            base.select("id"), "id", "left_anti"
+        ).unionByName(base.select("id", "sig"))
+        # dropDuplicates on the PAIR key, not distinct on all columns: a
+        # crash-retried append_dedup_index leaves duplicate signature rows per
+        # old id (see its docstring), which would otherwise fan each candidate
+        # out once per copy. Signatures for one id are byte-identical (same
+        # hash params over the same text), so any surviving row carries the
+        # same est_jaccard; the dedup runs over the post-threshold candidate
+        # set — tiny next to the index — never over the signatures themselves.
+        out = _estimate_verified_pairs(
+            cand, sigs, meta["num_hashes"], est_threshold
+        ).dropDuplicates(["id_a", "id_b"])
+        return scope.result(out, base)
 
 
 def merge_keeper_map(
@@ -754,21 +752,23 @@ def duplicate_keeper_map(
     string labels are only used for grouping, so integer ids don't get
     lexicographic-min surprises).
 
-    The MinHash candidates it computes itself are released before it
-    returns; a caller's ``pairs`` are left to the caller.
+    The result reads connected components' labels (a checkpoint under
+    distributed CC): pass it to ``iterutils.release`` once consumed. The
+    MinHash candidates it computes itself are freed before it returns; a
+    caller's ``pairs`` are left to the caller.
     """
     from graphrag_litex_spark.operators.cc import connected_components
-    from graphrag_litex_spark.operators.iterutils import release
+    from graphrag_litex_spark.operators.iterutils import checkpoint_scope
 
-    own_pairs = pairs is None
-    if own_pairs:
-        pairs = minhash_lsh_candidates(
-            docs, id_col, text_col, jaccard_threshold=jaccard_threshold, **lsh_kwargs
-        )
     orig = docs.select(
         F.col(id_col), F.col(id_col).cast("string").alias("_id")
     ).distinct()
-    try:
+    with checkpoint_scope() as scope:
+        if pairs is None:
+            pairs = minhash_lsh_candidates(
+                docs, id_col, text_col, jaccard_threshold=jaccard_threshold, **lsh_kwargs
+            )
+            scope.own(pairs)
         # Both CC regimes return materialized labels (a driver-local frame
         # or the loop's own checkpoint), so nothing reads `pairs` after.
         labels = connected_components(
@@ -780,19 +780,15 @@ def duplicate_keeper_map(
             id_col="_id",
             driver_threshold=cc_driver_threshold,
         )
-    finally:
-        if own_pairs:
-            release(pairs)
-    lab = labels.join(orig, "_id").select(F.col(id_col), F.col("label"))
-    keepers = lab.groupBy("label").agg(F.min(id_col).alias("keeper_id"))
-    return (
-        lab.join(keepers, "label")
-        .select(
+        scope.own(labels)
+        lab = labels.join(orig, "_id").select(F.col(id_col), F.col("label"))
+        keepers = lab.groupBy("label").agg(F.min(id_col).alias("keeper_id"))
+        out = lab.join(keepers, "label").select(
             F.col(id_col).alias("doc_id"),
             "keeper_id",
             (F.col(id_col) == F.col("keeper_id")).alias("is_keeper"),
         )
-    )
+        return scope.result(out, labels)
 
 
 def semantic_dedup(

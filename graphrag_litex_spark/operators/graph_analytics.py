@@ -34,7 +34,7 @@ Scale notes (100 TB):
   settled set, so a hop's one eager action is its level's checkpoint.
 
 Every distributed loop here ends its rounds in
-``iterutils.observed_checkpoint``, so its convergence test rides the
+``iterutils.checkpoint_scope.observed``, so its convergence test rides the
 checkpoint job. Jobs per round were measured under AQE at
 ``driver_threshold=0`` on local[8] over tests/test_graph_loops.py's graph.
 """
@@ -49,14 +49,11 @@ from pyspark.sql import functions as F
 
 from graphrag_litex_spark.operators.iterutils import (
     DRIVER_THRESHOLD,
-    hard_checkpoint,
+    checkpoint_scope,
     local_frame,
     local_graph,
-    observed_checkpoint,
-    release,
     symmetric,
     undirected_simple,
-    with_checkpoint_of,
 )
 
 
@@ -237,34 +234,30 @@ def k_core(
     spark = edges.sparkSession
     und = undirected_simple(edges, src, dst)
     n_part = max(spark.sparkContext.defaultParallelism, 8)
-    adj = hard_checkpoint(symmetric(und).repartition(n_part, "u"))
-    empty = spark.createDataFrame([], "vertex string, core_degree long")
-    for _ in range(max_iters):
-        deg, m = observed_checkpoint(
-            adj.groupBy("u").agg(F.count(F.lit(1)).alias("degree")),
-            n_bad=F.count_if(F.col("degree") < k),
-            n_all=F.count(F.lit(1)),
-        )
-        if m["n_all"] == 0:
-            release(deg)
-            release(adj)
-            return empty
-        if m["n_bad"] == 0:
-            release(adj)
-            return with_checkpoint_of(
-                deg.select(F.col("u").alias("vertex"), F.col("degree").alias("core_degree")),
-                deg,
+    with checkpoint_scope() as scope:
+        adj = scope.checkpoint(symmetric(und).repartition(n_part, "u"))
+        for _ in range(max_iters):
+            deg, m = scope.observed(
+                adj.groupBy("u").agg(F.count(F.lit(1)).alias("degree")),
+                n_bad=F.count_if(F.col("degree") < k),
+                n_all=F.count(F.lit(1)),
             )
-        bad = deg.where(F.col("degree") < k).select("u")
-        new_adj = hard_checkpoint(
-            adj.join(bad, "u", "left_anti").join(
-                bad.withColumnRenamed("u", "v"), "v", "left_anti"
+            if m["n_all"] == 0:
+                return spark.createDataFrame([], "vertex string, core_degree long")
+            if m["n_bad"] == 0:
+                return scope.result(
+                    deg.select(F.col("u").alias("vertex"), F.col("degree").alias("core_degree")),
+                    deg,
+                )
+            bad = deg.where(F.col("degree") < k).select("u")
+            new_adj = scope.checkpoint(
+                adj.join(bad, "u", "left_anti").join(
+                    bad.withColumnRenamed("u", "v"), "v", "left_anti"
+                )
             )
-        )
-        release(deg)
-        release(adj)
-        adj = new_adj
-    raise RuntimeError(f"k_core did not converge in {max_iters} rounds")
+            scope.drop(deg, adj)
+            adj = new_adj
+        raise RuntimeError(f"k_core did not converge in {max_iters} rounds")
 
 
 _TRUSS_SCHEMA = "a string, b string, support long"
@@ -330,43 +323,40 @@ def k_truss(
                 )
             local -= bad
         raise RuntimeError(f"k_truss did not converge in {max_iters} rounds")
-    und = hard_checkpoint(undirected_simple(edges, src, dst))
-    for _ in range(max_iters):
-        deg = _degrees(und)
-        tri = _triangles(und, deg)
-        # Each triangle credits its three edges; corners arrive in key
-        # order, not value order, so re-canonicalize each pair.
-        sides = (
-            tri.select(F.col("u").alias("p"), F.col("x").alias("q"))
-            .unionAll(tri.select(F.col("u").alias("p"), F.col("y").alias("q")))
-            .unionAll(tri.select(F.col("x").alias("p"), F.col("y").alias("q")))
-        )
-        support = sides.select(
-            F.least("p", "q").alias("a"), F.greatest("p", "q").alias("b")
-        ).groupBy("a", "b").agg(F.count(F.lit(1)).alias("support"))
-        scored, m = observed_checkpoint(
-            und.join(support, ["a", "b"], "left").select(
-                "a", "b", F.coalesce("support", F.lit(0)).alias("support")
-            ),
-            n_bad=F.count_if(F.col("support") < thresh),
-            n_all=F.count(F.lit(1)),
-        )
-        if m["n_bad"] == m["n_all"]:
-            # Every edge is below threshold (or none is left): the truss is
-            # empty now, not one more round later.
-            release(scored)
-            release(und)
-            return empty
-        if m["n_bad"] == 0:
-            release(und)
-            return scored
-        new_und = hard_checkpoint(
-            scored.where(F.col("support") >= thresh).select("a", "b")
-        )
-        release(scored)
-        release(und)
-        und = new_und
-    raise RuntimeError(f"k_truss did not converge in {max_iters} rounds")
+    with checkpoint_scope() as scope:
+        und = scope.checkpoint(undirected_simple(edges, src, dst))
+        for _ in range(max_iters):
+            deg = _degrees(und)
+            tri = _triangles(und, deg)
+            # Each triangle credits its three edges; corners arrive in key
+            # order, not value order, so re-canonicalize each pair.
+            sides = (
+                tri.select(F.col("u").alias("p"), F.col("x").alias("q"))
+                .unionAll(tri.select(F.col("u").alias("p"), F.col("y").alias("q")))
+                .unionAll(tri.select(F.col("x").alias("p"), F.col("y").alias("q")))
+            )
+            support = sides.select(
+                F.least("p", "q").alias("a"), F.greatest("p", "q").alias("b")
+            ).groupBy("a", "b").agg(F.count(F.lit(1)).alias("support"))
+            scored, m = scope.observed(
+                und.join(support, ["a", "b"], "left").select(
+                    "a", "b", F.coalesce("support", F.lit(0)).alias("support")
+                ),
+                n_bad=F.count_if(F.col("support") < thresh),
+                n_all=F.count(F.lit(1)),
+            )
+            if m["n_bad"] == m["n_all"]:
+                # Every edge is below threshold (or none is left): the truss
+                # is empty now, not one more round later.
+                return empty
+            if m["n_bad"] == 0:
+                return scope.result(scored)
+            new_und = scope.checkpoint(
+                scored.where(F.col("support") >= thresh).select("a", "b")
+            )
+            scope.drop(scored, und)
+            und = new_und
+        raise RuntimeError(f"k_truss did not converge in {max_iters} rounds")
 
 
 def wl_signatures(
@@ -398,37 +388,37 @@ def wl_signatures(
     degree the sorted multiset itself is the cost, and WL roles for such
     hubs are degenerate anyway.
     """
-    adj = hard_checkpoint(symmetric(undirected_simple(edges, src, dst)))
-    labels = hard_checkpoint(
-        adj.groupBy(F.col("u").alias("vertex"))
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .select("vertex", F.col("degree").cast("string").alias("wl_label"))
-    )
-    for _ in range(max(rounds, 0)):
-        nb = (
-            adj.join(
-                labels.select(
-                    F.col("vertex").alias("v"), F.col("wl_label").alias("nl")
-                ),
-                "v",
-            )
-            .groupBy(F.col("u").alias("vertex"))
-            .agg(
-                F.concat_ws(",", F.sort_array(F.collect_list("nl"))).alias("nls")
-            )
+    with checkpoint_scope() as scope:
+        adj = scope.checkpoint(symmetric(undirected_simple(edges, src, dst)))
+        labels = scope.checkpoint(
+            adj.groupBy(F.col("u").alias("vertex"))
+            .agg(F.count(F.lit(1)).alias("degree"))
+            .select("vertex", F.col("degree").cast("string").alias("wl_label"))
         )
-        new_labels = hard_checkpoint(
-            labels.join(nb, "vertex").select(
-                "vertex",
-                F.xxhash64(F.concat_ws("|", "wl_label", "nls"))
-                .cast("string")
-                .alias("wl_label"),
+        for _ in range(max(rounds, 0)):
+            nb = (
+                adj.join(
+                    labels.select(
+                        F.col("vertex").alias("v"), F.col("wl_label").alias("nl")
+                    ),
+                    "v",
+                )
+                .groupBy(F.col("u").alias("vertex"))
+                .agg(
+                    F.concat_ws(",", F.sort_array(F.collect_list("nl"))).alias("nls")
+                )
             )
-        )
-        release(labels)
-        labels = new_labels
-    release(adj)
-    return labels
+            new_labels = scope.checkpoint(
+                labels.join(nb, "vertex").select(
+                    "vertex",
+                    F.xxhash64(F.concat_ws("|", "wl_label", "nls"))
+                    .cast("string")
+                    .alias("wl_label"),
+                )
+            )
+            scope.drop(labels)
+            labels = new_labels
+        return scope.result(labels)
 
 
 def wl_structure_fingerprint(
@@ -446,18 +436,19 @@ def wl_structure_fingerprint(
     (which hashes names and so sees every rename as a change); one graph
     pass + two scalar aggs, nothing histogram-sized reaches the driver.
     """
-    hist = (
-        wl_signatures(edges, rounds=rounds, src=src, dst=dst)
-        .groupBy("wl_label")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    row = hist.agg(
-        F.count(F.lit(1)).alias("n_roles"),
-        # decimal sum: hash sums overflow bigint by design (ANSI would raise)
-        F.coalesce(
-            F.sum(F.xxhash64("wl_label", "n").cast("decimal(20,0)")), F.lit(0)
-        ).alias("fp"),
-    ).first()
+    with checkpoint_scope() as scope:
+        hist = (
+            scope.own(wl_signatures(edges, rounds=rounds, src=src, dst=dst))
+            .groupBy("wl_label")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+        row = hist.agg(
+            F.count(F.lit(1)).alias("n_roles"),
+            # decimal sum: hash sums overflow bigint by design (ANSI would raise)
+            F.coalesce(
+                F.sum(F.xxhash64("wl_label", "n").cast("decimal(20,0)")), F.lit(0)
+            ).alias("fp"),
+        ).first()
     return f"{row['n_roles']}:{row['fp']}"
 
 
@@ -549,41 +540,40 @@ def neighborhood_function(
         return local_frame(
             spark, _exact_neighborhood(g.adj, max_t), ["t", "reachable_pairs"], _NF_SCHEMA
         )
-    adj = hard_checkpoint(symmetric(undirected_simple(edges, src, dst)))
     lgk = F.lit(lg_k)
     # The ball-size total is observed by each state checkpoint's own job.
     ball_total = F.sum(F.hll_sketch_estimate("sk"))
-    state, m = observed_checkpoint(
-        adj.select(F.col("u").alias("vertex"))
-        .distinct()
-        .groupBy("vertex")
-        .agg(F.hll_sketch_agg("vertex", lgk).alias("sk")),
-        n=ball_total,
-    )
-    totals = [(0, float(m["n"]))]
-    for t in range(1, max_t + 1):
-        nb = adj.join(
-            state.select(F.col("vertex").alias("v"), "sk"), "v"
-        ).select(F.col("u").alias("vertex"), "sk")
-        new_state, m = observed_checkpoint(
-            state.unionByName(nb)
+    with checkpoint_scope() as scope:
+        adj = scope.checkpoint(symmetric(undirected_simple(edges, src, dst)))
+        state, m = scope.observed(
+            adj.select(F.col("u").alias("vertex"))
+            .distinct()
             .groupBy("vertex")
-            # (lg_k rides inside each sketch; the union's second parameter
-            # is allowDifferentLgConfigK, not a config)
-            .agg(F.hll_union_agg("sk").alias("sk")),
+            .agg(F.hll_sketch_agg("vertex", lgk).alias("sk")),
             n=ball_total,
         )
-        release(state)
-        state = new_state
-        total = float(m["n"])
-        totals.append((t, total))
-        if total == totals[-2][1]:
-            # No ball grew this round (register states are monotone, so an
-            # unchanged total means a fixpoint up to estimate resolution):
-            # every later N(t) equals this one; stop spending rounds.
-            break
-    release(adj)
-    release(state)
+        totals = [(0, float(m["n"]))]
+        for t in range(1, max_t + 1):
+            nb = adj.join(
+                state.select(F.col("vertex").alias("v"), "sk"), "v"
+            ).select(F.col("u").alias("vertex"), "sk")
+            new_state, m = scope.observed(
+                state.unionByName(nb)
+                .groupBy("vertex")
+                # (lg_k rides inside each sketch; the union's second
+                # parameter is allowDifferentLgConfigK, not a config)
+                .agg(F.hll_union_agg("sk").alias("sk")),
+                n=ball_total,
+            )
+            scope.drop(state)
+            state = new_state
+            total = float(m["n"])
+            totals.append((t, total))
+            if total == totals[-2][1]:
+                # No ball grew this round (register states are monotone, so an
+                # unchanged total means a fixpoint up to estimate resolution):
+                # every later N(t) equals this one; stop spending rounds.
+                break
     return local_frame(spark, totals, ["t", "reachable_pairs"], _NF_SCHEMA)
 
 
@@ -633,12 +623,12 @@ def degree_assortativity(edges: DataFrame, src: str = "src", dst: str = "dst") -
 
 
 def _bfs_levels(
-    seed: DataFrame, expand, keys: list[str], max_hops: int, **metrics
+    scope: checkpoint_scope, seed: DataFrame, expand, keys: list[str], max_hops: int, **metrics
 ) -> tuple[list[DataFrame], dict]:
     """Level-synchronous BFS over a SYMMETRIC adjacency -> ``(levels,
-    m)``: ``levels[d]`` is the observed checkpoint of the rows at hop d
-    (``levels[0]`` the seed, kept even when empty), ``m`` the last
-    observed level's metrics.
+    m)``: ``levels[d]`` is the observed checkpoint, held by ``scope``, of
+    the rows at hop d (``levels[0]`` the seed, kept even when empty), ``m``
+    the last observed level's metrics.
 
     Hop d is ``expand(levels[d - 1], d)`` (candidate rows keyed by
     ``keys``) anti-joined against levels d-1 and d-2 only: every neighbor
@@ -650,17 +640,17 @@ def _bfs_levels(
     level (released, not kept) or after a level with a nonzero metric.
     """
     count = F.count(F.lit(1))
-    level, m = observed_checkpoint(seed, n=count, **metrics)
+    level, m = scope.observed(seed, n=count, **metrics)
     levels = [level]
     for hop in range(1, max_hops + 1):
         if m["n"] == 0 or any(m[k] for k in metrics):
             break
         seen = reduce(DataFrame.union, [lv.select(*keys) for lv in levels[-2:]])
-        level, m = observed_checkpoint(
+        level, m = scope.observed(
             expand(levels[-1], hop).join(seen, keys, "left_anti"), n=count, **metrics
         )
         if m["n"] == 0:
-            release(level)
+            scope.drop(level)
             break
         levels.append(level)
     return levels, m
@@ -718,25 +708,21 @@ def hop_distances(
         return local_frame(
             spark, rows, ["vertex", "source", "dist"], "vertex string, source string, dist int"
         )
-    sym = hard_checkpoint(symmetric(undirected_simple(edges, src, dst)))
     seed = local_frame(spark, [(s,) for s in sources], ["vertex"], "vertex string").select(
         F.col("vertex"), F.col("vertex").alias("source"), F.lit(0).alias("dist")
     )
+    with checkpoint_scope() as scope:
+        sym = scope.checkpoint(symmetric(undirected_simple(edges, src, dst)))
 
-    def expand(frontier: DataFrame, hop: int) -> DataFrame:
-        return (
-            frontier.join(sym, frontier["vertex"] == sym["u"])
-            .select(F.col("v").alias("vertex"), "source", F.lit(hop).alias("dist"))
-            .distinct()
-        )
+        def expand(frontier: DataFrame, hop: int) -> DataFrame:
+            return (
+                frontier.join(sym, frontier["vertex"] == sym["u"])
+                .select(F.col("v").alias("vertex"), "source", F.lit(hop).alias("dist"))
+                .distinct()
+            )
 
-    levels = []
-    try:
-        levels, _ = _bfs_levels(seed, expand, ["vertex", "source"], max_hops)
-        return hard_checkpoint(reduce(DataFrame.union, levels))
-    finally:
-        for df in [sym, *levels]:
-            release(df)
+        levels, _ = _bfs_levels(scope, seed, expand, ["vertex", "source"], max_hops)
+        return scope.result(scope.checkpoint(reduce(DataFrame.union, levels)))
 
 
 def shortest_path(
@@ -770,25 +756,25 @@ def shortest_path(
     query-path reduce).
     """
     spark = edges.sparkSession
-    sym = hard_checkpoint(symmetric(undirected_simple(edges, src, dst)))
     out_schema = "found boolean, hops int, path array<string>, path_str string"
-    # The source, if it is in the graph.
-    seed = spark.createDataFrame(
-        [(str(source), None, 0)], "vertex string, parent string, dist int"
-    ).join(sym.select(F.col("u").alias("vertex")).distinct(), "vertex", "left_semi")
+    with checkpoint_scope() as scope:
+        sym = scope.checkpoint(symmetric(undirected_simple(edges, src, dst)))
+        # The source, if it is in the graph.
+        seed = spark.createDataFrame(
+            [(str(source), None, 0)], "vertex string, parent string, dist int"
+        ).join(sym.select(F.col("u").alias("vertex")).distinct(), "vertex", "left_semi")
 
-    def expand(frontier: DataFrame, hop: int) -> DataFrame:
-        return (
-            frontier.select("vertex")
-            .join(sym, frontier["vertex"] == sym["u"])
-            .groupBy(F.col("v").alias("vertex"))
-            .agg(F.min("u").alias("parent"))
-            .select("vertex", "parent", F.lit(hop).alias("dist"))
-        )
+        def expand(frontier: DataFrame, hop: int) -> DataFrame:
+            return (
+                frontier.select("vertex")
+                .join(sym, frontier["vertex"] == sym["u"])
+                .groupBy(F.col("v").alias("vertex"))
+                .agg(F.min("u").alias("parent"))
+                .select("vertex", "parent", F.lit(hop).alias("dist"))
+            )
 
-    levels = []
-    try:
         levels, m = _bfs_levels(
+            scope,
             seed,
             expand,
             ["vertex"],
@@ -802,13 +788,8 @@ def shortest_path(
         path = [str(target)]
         for level in reversed(levels[1:]):
             path.append(level.where(F.col("vertex") == path[-1]).first()["parent"])
-        path.reverse()
-        return spark.createDataFrame(
-            [(True, len(levels) - 1, path, " -> ".join(path))], out_schema
-        )
-    finally:
-        for df in [sym, *levels]:
-            release(df)
+    path.reverse()
+    return spark.createDataFrame([(True, len(levels) - 1, path, " -> ".join(path))], out_schema)
 
 
 def harmonic_closeness(
@@ -830,6 +811,8 @@ def harmonic_closeness(
     (N-1) for the unbiased absolute estimate). Cost: n_sources
     frontier-bounded BFS sweeps in ONE shared loop — the standard trade
     against the O(V*E) exact computation, which does not exist at 100 TB.
+    The result reads the distances' checkpoint: pass it to
+    ``iterutils.release`` once consumed.
     """
     if max_hops > 6:
         raise ValueError("max_hops > 6 breaks the exact-60 arithmetic; raise the LCM")
@@ -838,21 +821,23 @@ def harmonic_closeness(
         return edges.sparkSession.createDataFrame(
             [], "name string, n_reached bigint, harmonic60 bigint, closeness double"
         )
-    d = hop_distances(edges, pivots, max_hops, src, dst)
-    return (
-        d.where(F.col("dist") > 0)
-        .groupBy("vertex")
-        .agg(
-            F.count(F.lit(1)).alias("n_reached"),
-            F.sum((F.lit(60) / F.col("dist")).cast("long")).alias("harmonic60"),
+    with checkpoint_scope() as scope:
+        d = scope.own(hop_distances(edges, pivots, max_hops, src, dst))
+        out = (
+            d.where(F.col("dist") > 0)
+            .groupBy("vertex")
+            .agg(
+                F.count(F.lit(1)).alias("n_reached"),
+                F.sum((F.lit(60) / F.col("dist")).cast("long")).alias("harmonic60"),
+            )
+            .select(
+                F.col("vertex").alias("name"),
+                "n_reached",
+                "harmonic60",
+                F.round(F.col("harmonic60") / F.lit(60 * len(pivots)), 6).alias("closeness"),
+            )
         )
-        .select(
-            F.col("vertex").alias("name"),
-            "n_reached",
-            "harmonic60",
-            F.round(F.col("harmonic60") / F.lit(60 * len(pivots)), 6).alias("closeness"),
-        )
-    )
+        return scope.result(out, d)
 
 
 def betweenness_approx(
@@ -897,37 +882,35 @@ def betweenness_approx(
     """
     spark = edges.sparkSession
     empty = spark.createDataFrame([], "name string, betweenness double")
-    sym = hard_checkpoint(symmetric(undirected_simple(edges, src, dst)))
-    if sources is None:
-        sources = _pivots(sym, n_sources)
-    if not sources:
-        release(sym)
-        return empty
-    seed = local_frame(spark, [(str(s),) for s in sources], ["source"], "source string").select(
-        "source",
-        F.col("source").alias("vertex"),
-        F.lit(0).alias("dist"),
-        F.lit(1).cast("long").alias("sigma"),
-    )
-
-    def expand(frontier: DataFrame, hop: int) -> DataFrame:
-        return (
-            frontier.join(sym, frontier["vertex"] == sym["u"])
-            .groupBy("source", F.col("v").alias("vertex"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .select("source", "vertex", F.lit(hop).alias("dist"), "sigma")
+    with checkpoint_scope() as scope:
+        sym = scope.checkpoint(symmetric(undirected_simple(edges, src, dst)))
+        if sources is None:
+            sources = _pivots(sym, n_sources)
+        if not sources:
+            return empty
+        seed = local_frame(spark, [(str(s),) for s in sources], ["source"], "source string").select(
+            "source",
+            F.col("source").alias("vertex"),
+            F.lit(0).alias("dist"),
+            F.lit(1).cast("long").alias("sigma"),
         )
 
-    levels, level_deltas, succ = [], [], None
-    try:
+        def expand(frontier: DataFrame, hop: int) -> DataFrame:
+            return (
+                frontier.join(sym, frontier["vertex"] == sym["u"])
+                .groupBy("source", F.col("v").alias("vertex"))
+                .agg(F.sum("sigma").alias("sigma"))
+                .select("source", "vertex", F.lit(hop).alias("dist"), "sigma")
+            )
+
         # Forward: BFS levels with path counting.
-        levels, _ = _bfs_levels(seed, expand, ["source", "vertex"], max_hops)
+        levels, _ = _bfs_levels(scope, seed, expand, ["source", "vertex"], max_hops)
         max_d = len(levels) - 1
         if max_d == 0:
             return empty
         state = reduce(DataFrame.union, levels)
         # Successor relation: (source, v at dist d) -> (w at dist d+1).
-        succ = hard_checkpoint(
+        succ = scope.checkpoint(
             state.alias("sv")
             .join(sym, F.col("sv.vertex") == F.col("u"))
             .select(
@@ -950,7 +933,7 @@ def betweenness_approx(
         )
         # Backward: deepest level has no successors -> delta 0.
         delta = levels[max_d].select("source", "vertex", F.lit(0.0).alias("delta"))
-        level_deltas.append(delta)
+        level_deltas = [delta]
         for d in range(max_d - 1, 0, -1):
             contrib = (
                 succ.where(F.col("dist") == d)
@@ -970,7 +953,7 @@ def betweenness_approx(
                 )
                 .withColumnRenamed("v", "vertex")
             )
-            delta = hard_checkpoint(
+            delta = scope.checkpoint(
                 levels[d]
                 .select("source", "vertex")
                 .join(contrib, ["source", "vertex"], "left")
@@ -979,16 +962,15 @@ def betweenness_approx(
                 )
             )
             level_deltas.append(delta)
-        # Materialized before the finally releases the checkpoints it reads.
-        return hard_checkpoint(
-            reduce(DataFrame.union, level_deltas)
-            .groupBy("vertex")
-            .agg(F.round(F.sum("delta"), 6).alias("betweenness"))
-            .select(F.col("vertex").alias("name"), "betweenness")
+        # Materialized: the scope frees every checkpoint it reads on exit.
+        return scope.result(
+            scope.checkpoint(
+                reduce(DataFrame.union, level_deltas)
+                .groupBy("vertex")
+                .agg(F.round(F.sum("delta"), 6).alias("betweenness"))
+                .select(F.col("vertex").alias("name"), "betweenness")
+            )
         )
-    finally:
-        for df in [sym, succ, *levels, *level_deltas]:
-            release(df)
 
 
 def related_entities_rrf(

@@ -37,19 +37,18 @@ from pyspark.sql.window import Window
 
 from .iterutils import (
     DRIVER_THRESHOLD,
-    hard_checkpoint,
+    checkpoint_scope,
     local_frame,
     local_graph,
-    release,
     symmetric,
     undirected_simple,
 )
 
 
-def _walk_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
-    """The walkers' step relation, checkpointed once: both directions
-    (src, dst) of every edge of the undirected simple graph."""
-    return hard_checkpoint(
+def _walk_edges(scope: checkpoint_scope, edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """The walkers' step relation, checkpointed once in ``scope``: both
+    directions (src, dst) of every edge of the undirected simple graph."""
+    return scope.checkpoint(
         symmetric(undirected_simple(edges, src_col, dst_col)).select(
             F.col("u").alias("src"), F.col("v").alias("dst")
         )
@@ -222,40 +221,42 @@ def ppmi_weights(
     walk + co-occurrence pipeline would recompute per branch. Pass the
     result to ``iterutils.release`` after consuming it.
     """
-    pairs = hard_checkpoint(
-        cooc.select(
-            F.col(a_col).alias("node_a"),
-            F.col(b_col).alias("node_b"),
-            F.col(n_col).alias("n_cooc"),
+    with checkpoint_scope() as scope:
+        pairs = scope.checkpoint(
+            cooc.select(
+                F.col(a_col).alias("node_a"),
+                F.col(b_col).alias("node_b"),
+                F.col(n_col).alias("n_cooc"),
+            )
         )
-    )
-    marg = (
-        pairs.select(F.col("node_a").alias("node"), "n_cooc")
-        .unionAll(pairs.select(F.col("node_b").alias("node"), "n_cooc"))
-        .groupBy("node")
-        .agg(F.sum("n_cooc").alias("m"))
-    )
-    total = pairs.agg(F.sum("n_cooc").alias("T"))
-    return (
-        pairs.crossJoin(F.broadcast(total))
-        .join(marg.select(F.col("node").alias("node_a"), F.col("m").alias("m_a")), "node_a")
-        .join(marg.select(F.col("node").alias("node_b"), F.col("m").alias("m_b")), "node_b")
-        .select(
-            "node_a",
-            "node_b",
-            "n_cooc",
-            F.greatest(
-                F.lit(0.0),
-                F.log(
-                    # doubles throughout: m_a * m_b overflows int64 once
-                    # marginals pass ~3e9 (guaranteed at corpus scale)
-                    F.col("n_cooc").cast("double")
-                    * F.col("T").cast("double")
-                    / (F.col("m_a").cast("double") * F.col("m_b").cast("double"))
-                ),
-            ).alias("ppmi"),
+        marg = (
+            pairs.select(F.col("node_a").alias("node"), "n_cooc")
+            .unionAll(pairs.select(F.col("node_b").alias("node"), "n_cooc"))
+            .groupBy("node")
+            .agg(F.sum("n_cooc").alias("m"))
         )
-    )
+        total = pairs.agg(F.sum("n_cooc").alias("T"))
+        out = (
+            pairs.crossJoin(F.broadcast(total))
+            .join(marg.select(F.col("node").alias("node_a"), F.col("m").alias("m_a")), "node_a")
+            .join(marg.select(F.col("node").alias("node_b"), F.col("m").alias("m_b")), "node_b")
+            .select(
+                "node_a",
+                "node_b",
+                "n_cooc",
+                F.greatest(
+                    F.lit(0.0),
+                    F.log(
+                        # doubles throughout: m_a * m_b overflows int64 once
+                        # marginals pass ~3e9 (guaranteed at corpus scale)
+                        F.col("n_cooc").cast("double")
+                        * F.col("T").cast("double")
+                        / (F.col("m_a").cast("double") * F.col("m_b").cast("double"))
+                    ),
+                ).alias("ppmi"),
+            )
+        )
+        return scope.result(out, pairs)
 
 
 def _md5_key(s: str) -> str:
@@ -330,73 +331,70 @@ def random_walks(
                 rows.append((start, widx, nodes, sep.join(nodes), cur))
         return local_frame(edges.sparkSession, rows, _WALK_COLS, _WALK_SCHEMA)
     # sym is re-joined every step, and seeds the state: checkpoint it first.
-    sym = _walk_edges(edges, src_col, dst_col)
-    state = (
-        sym.select(F.col("src").alias("start"))
-        .distinct()
-        .select(
-            "start",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(walks_per_node - 1))
-            ).alias("walk_idx"),
-        )
-        .select(
-            "start",
-            F.col("walk_idx").cast("int"),
-            F.col("start").alias("cur"),
-            F.array("start").alias("nodes"),
-        )
-    )
-    # Superseded STATE checkpoints are released as the loop advances —
-    # each eager checkpoint materializes, so its predecessor's blocks are
-    # dead weight.
-    prev_state = None
-    for step in range(1, length + 1):
-        cand = state.join(sym.withColumnRenamed("src", "cur"), "cur")
-        pick = _h(
-            F.lit(seed),
-            "start",
-            F.col("walk_idx").cast("string"),
-            F.lit(str(step)),
-            "dst",
-        )
+    with checkpoint_scope() as scope:
+        sym = _walk_edges(scope, edges, src_col, dst_col)
         state = (
-            cand.groupBy("start", "walk_idx")
-            .agg(
-                F.min_by("dst", pick).alias("cur"),
-                # nodes is functionally determined by (start, walk_idx) at
-                # every step — all rows in the group agree, max is just a
-                # deterministic way to say "the" value.
-                F.max("nodes").alias("nodes"),
+            sym.select(F.col("src").alias("start"))
+            .distinct()
+            .select(
+                "start",
+                F.explode(
+                    F.sequence(F.lit(0), F.lit(walks_per_node - 1))
+                ).alias("walk_idx"),
             )
             .select(
                 "start",
-                "walk_idx",
-                "cur",
-                F.concat("nodes", F.array("cur")).alias("nodes"),
+                F.col("walk_idx").cast("int"),
+                F.col("start").alias("cur"),
+                F.array("start").alias("nodes"),
             )
         )
-        if step % checkpoint_every == 0 and step < length:
-            state = hard_checkpoint(state)
-            if prev_state is not None:
-                release(prev_state)
-            prev_state = state
-    # Materialize the result, then free every loop intermediate: without
-    # this, each call pins an edge-sized checkpoint for the session's
-    # lifetime (the leak the other iterative operators already avoid).
-    out = hard_checkpoint(
-        state.select(
-            "start",
-            "walk_idx",
-            "nodes",
-            F.array_join("nodes", sep).alias("path"),
-            F.col("cur").alias("end_node"),
+        # Superseded STATE checkpoints are dropped as the loop advances —
+        # each eager checkpoint materializes, so its predecessor's blocks
+        # are dead weight.
+        prev_state = None
+        for step in range(1, length + 1):
+            cand = state.join(sym.withColumnRenamed("src", "cur"), "cur")
+            pick = _h(
+                F.lit(seed),
+                "start",
+                F.col("walk_idx").cast("string"),
+                F.lit(str(step)),
+                "dst",
+            )
+            state = (
+                cand.groupBy("start", "walk_idx")
+                .agg(
+                    F.min_by("dst", pick).alias("cur"),
+                    # nodes is functionally determined by (start, walk_idx) at
+                    # every step — all rows in the group agree, max is just a
+                    # deterministic way to say "the" value.
+                    F.max("nodes").alias("nodes"),
+                )
+                .select(
+                    "start",
+                    "walk_idx",
+                    "cur",
+                    F.concat("nodes", F.array("cur")).alias("nodes"),
+                )
+            )
+            if step % checkpoint_every == 0 and step < length:
+                state = scope.checkpoint(state)
+                scope.drop(prev_state)
+                prev_state = state
+        # Materialize the result; the scope then frees every loop intermediate
+        # (an edge-sized adjacency among them).
+        return scope.result(
+            scope.checkpoint(
+                state.select(
+                    "start",
+                    "walk_idx",
+                    "nodes",
+                    F.array_join("nodes", sep).alias("path"),
+                    F.col("cur").alias("end_node"),
+                )
+            )
         )
-    )
-    release(sym)
-    if prev_state is not None:
-        release(prev_state)
-    return out
 
 
 def node2vec_walks(
@@ -479,87 +477,85 @@ def node2vec_walks(
                     nodes.append(cur)
                 rows.append((start, widx, nodes, sep.join(nodes), cur))
         return local_frame(edges.sparkSession, rows, _WALK_COLS, _WALK_SCHEMA)
-    sym = _walk_edges(edges, src_col, dst_col)
-    state = (
-        sym.select(F.col("src").alias("start"))
-        .distinct()
-        .select(
-            "start",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(walks_per_node - 1))
-            ).alias("walk_idx"),
-        )
-        .select(
-            "start",
-            F.col("walk_idx").cast("int"),
-            F.lit(None).cast("string").alias("prev"),
-            F.col("start").alias("cur"),
-            F.array("start").alias("nodes"),
-        )
-    )
-    # prev's neighborhood, keyed for the distance-1 probe.
-    prev_adj = sym.select(
-        F.col("src").alias("prev"), F.col("dst").alias("dst"), F.lit(True).alias("_d1")
-    )
-    prev_state = None
-    for step in range(1, length + 1):
-        cand = state.join(sym.withColumnRenamed("src", "cur"), "cur")
-        if step == 1:
-            w = F.lit(1)
-        else:
-            cand = cand.join(prev_adj, ["prev", "dst"], "left")
-            w = (
-                F.when(F.col("dst") == F.col("prev"), F.lit(w_return))
-                .when(F.col("_d1"), F.lit(w_common))
-                .otherwise(F.lit(w_far))
-            )
-        cand = cand.select(
-            "start",
-            "walk_idx",
-            "cur",
-            "dst",
-            "nodes",
-            F.explode(F.sequence(F.lit(0), w - 1)).alias("_r"),
-        )
-        pick = _h(
-            F.lit(seed),
-            "start",
-            F.col("walk_idx").cast("string"),
-            F.lit(str(step)),
-            "dst",
-            F.col("_r").cast("string"),
-        )
+    with checkpoint_scope() as scope:
+        sym = _walk_edges(scope, edges, src_col, dst_col)
         state = (
-            cand.groupBy("start", "walk_idx")
-            .agg(
-                F.min_by("dst", pick).alias("cur"),
-                # cur/nodes are functionally determined by the group key.
-                F.max("cur").alias("prev"),
-                F.max("nodes").alias("nodes"),
+            sym.select(F.col("src").alias("start"))
+            .distinct()
+            .select(
+                "start",
+                F.explode(
+                    F.sequence(F.lit(0), F.lit(walks_per_node - 1))
+                ).alias("walk_idx"),
             )
             .select(
                 "start",
-                "walk_idx",
-                "prev",
-                "cur",
-                F.concat("nodes", F.array("cur")).alias("nodes"),
+                F.col("walk_idx").cast("int"),
+                F.lit(None).cast("string").alias("prev"),
+                F.col("start").alias("cur"),
+                F.array("start").alias("nodes"),
             )
         )
-        if step % checkpoint_every == 0 and step < length:
-            state = hard_checkpoint(state)
-            if prev_state is not None:
-                release(prev_state)
-            prev_state = state
-    out = hard_checkpoint(
-        state.select(
-            "start",
-            "walk_idx",
-            "nodes",
-            F.array_join("nodes", sep).alias("path"),
-            F.col("cur").alias("end_node"),
+        # prev's neighborhood, keyed for the distance-1 probe.
+        prev_adj = sym.select(
+            F.col("src").alias("prev"), F.col("dst").alias("dst"), F.lit(True).alias("_d1")
         )
-    )
-    release(sym)
-    if prev_state is not None:
-        release(prev_state)
-    return out
+        prev_state = None
+        for step in range(1, length + 1):
+            cand = state.join(sym.withColumnRenamed("src", "cur"), "cur")
+            if step == 1:
+                w = F.lit(1)
+            else:
+                cand = cand.join(prev_adj, ["prev", "dst"], "left")
+                w = (
+                    F.when(F.col("dst") == F.col("prev"), F.lit(w_return))
+                    .when(F.col("_d1"), F.lit(w_common))
+                    .otherwise(F.lit(w_far))
+                )
+            cand = cand.select(
+                "start",
+                "walk_idx",
+                "cur",
+                "dst",
+                "nodes",
+                F.explode(F.sequence(F.lit(0), w - 1)).alias("_r"),
+            )
+            pick = _h(
+                F.lit(seed),
+                "start",
+                F.col("walk_idx").cast("string"),
+                F.lit(str(step)),
+                "dst",
+                F.col("_r").cast("string"),
+            )
+            state = (
+                cand.groupBy("start", "walk_idx")
+                .agg(
+                    F.min_by("dst", pick).alias("cur"),
+                    # cur/nodes are functionally determined by the group key.
+                    F.max("cur").alias("prev"),
+                    F.max("nodes").alias("nodes"),
+                )
+                .select(
+                    "start",
+                    "walk_idx",
+                    "prev",
+                    "cur",
+                    F.concat("nodes", F.array("cur")).alias("nodes"),
+                )
+            )
+            if step % checkpoint_every == 0 and step < length:
+                state = scope.checkpoint(state)
+                scope.drop(prev_state)
+                prev_state = state
+        return scope.result(
+            scope.checkpoint(
+                state.select(
+                    "start",
+                    "walk_idx",
+                    "nodes",
+                    F.array_join("nodes", sep).alias("path"),
+                    F.col("cur").alias("end_node"),
+                )
+            )
+        )

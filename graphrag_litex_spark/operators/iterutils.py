@@ -1,5 +1,6 @@
-"""Iteration-safe checkpointing for DataFrame loops (CC, LPA), and the
-small-graph regime shared by every graph operator's driver-local valve.
+"""Iteration-safe checkpointing for DataFrame loops (CC, LPA), the one
+owner of checkpoint lifetimes, and the small-graph regime shared by every
+graph operator's driver-local valve.
 
 Iterative DataFrame algorithms (connected components, label propagation)
 re-join each iteration's output with itself. Two failure modes on stock
@@ -23,8 +24,16 @@ origin stats, so estimates reset to a constant every iteration. Falls back
 to plain localCheckpoint if the (package-private, but py4j-visible) API is
 unavailable.
 
-Every distributed graph loop ends its rounds in :func:`observed_checkpoint`,
-so a round's convergence test and the loop's state sizing ride the
+Checkpoint lifetime has one owner, :class:`checkpoint_scope`: every
+operator that checkpoints takes its checkpoints through a scope, drops
+superseded round state through it, and hands its result every checkpoint
+the result reads — the result's ``_graft_ckpt`` tuple, which
+:func:`release` frees once consumed. The scope frees everything else on
+any exit: return, ``RuntimeError`` or a Spark exception.
+
+Every distributed graph loop ends its rounds in
+:meth:`checkpoint_scope.observed`, so a round's convergence test and the
+loop's state sizing ride the
 checkpoint job (a separate ``limit(1).count()`` is two jobs under AQE), and
 reads one graph: :func:`undirected_simple` and its two directions,
 :func:`symmetric`.
@@ -53,7 +62,7 @@ def hard_checkpoint(df: DataFrame) -> DataFrame:
 
     Returns a DataFrame whose logical plan is a bare LogicalRDD over the
     checkpointed data. The underlying checkpoint is kept on the returned
-    object as ``_graft_ckpt`` so callers may ``release()`` it.
+    object as ``_graft_ckpt``, a one-handle tuple, so callers may ``release()`` it.
     """
     ck = df.localCheckpoint(eager=True)
     try:
@@ -67,25 +76,8 @@ def hard_checkpoint(df: DataFrame) -> DataFrame:
         # checkpoint — correct, but subject to failure mode (2) above for
         # very long loops.
         out = ck
-    out._graft_ckpt = ck  # type: ignore[attr-defined]
+    out._graft_ckpt = (ck,)  # type: ignore[attr-defined]
     return out
-
-
-def observed_checkpoint(
-    df: DataFrame, *columns: str, **metrics: Column
-) -> tuple[DataFrame, dict]:
-    """``hard_checkpoint`` of ``df`` -> ``(frame, values)``: ``metrics``
-    (name -> aggregate Column over ``df``) are observed by the checkpoint
-    job itself, a fresh ``Observation`` per call (an empty input the
-    optimizer prunes runs no job and still reports them); a NULL aggregate
-    (a sum over no rows) reads as 0. ``columns`` (default: all) are the state
-    columns kept, so a column only a metric reads (a round's previous
-    label) is dropped before the data is pinned.
-    """
-    obs = Observation()
-    observed = df.observe(obs, *(m.alias(k) for k, m in metrics.items()))
-    out = hard_checkpoint(observed.select(*columns) if columns else observed)
-    return out, {k: 0 if v is None else v for k, v in obs.get.items()}
 
 
 def undirected_simple(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -107,13 +99,6 @@ def symmetric(und: DataFrame) -> DataFrame:
     return und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
-
-
-def with_checkpoint_of(df: DataFrame, ckpt: DataFrame) -> DataFrame:
-    """``df`` (a lazy frame reading the ``hard_checkpoint`` result
-    ``ckpt``), made releasable: ``release(df)`` unpins ``ckpt``."""
-    df._graft_ckpt = ckpt._graft_ckpt  # type: ignore[attr-defined]
-    return df
 
 
 class loop_shuffle_partitions:
@@ -192,20 +177,88 @@ def scale_out(df: DataFrame, key_col: str | None = None) -> DataFrame:
 
 
 def release(df: DataFrame) -> None:
-    """Free the blocks of the checkpoint backing a ``hard_checkpoint`` or
-    ``with_checkpoint_of`` result: unpersist the checkpointed RDD its
-    LogicalRDD reads (the ``localCheckpoint`` Dataset is not in the
-    CacheManager, so ``Dataset.unpersist`` frees nothing). Any later read
-    of a frame over that checkpoint fails with
-    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``, so release only what nothing
-    reads any more."""
-    ck = getattr(df, "_graft_ckpt", None)
-    if ck is None:
-        return
+    """Free the blocks of every checkpoint a releasable frame reads (its
+    ``_graft_ckpt`` handles: a ``hard_checkpoint`` result, or a
+    :class:`checkpoint_scope` result): unpersist each checkpointed RDD (the
+    ``localCheckpoint`` Dataset is not in the CacheManager, so
+    ``Dataset.unpersist`` frees nothing). Any later read of a frame over
+    such a checkpoint fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``, so
+    release only what nothing reads any more."""
+    for ck in _handles(df):
+        _unpersist(ck)
+
+
+def _handles(df: DataFrame | None) -> tuple:
+    return getattr(df, "_graft_ckpt", ())
+
+
+def _unpersist(ck: DataFrame) -> None:
     try:
         ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
         pass  # private API unavailable (e.g. Spark Connect), as in hard_checkpoint
+
+
+class checkpoint_scope:
+    """Context manager: the one owner of the checkpoints an operator call
+    takes (:meth:`checkpoint`, :meth:`observed`) or adopts from a nested
+    operator's result (:meth:`own`). Superseded round state is freed with
+    :meth:`drop`; :meth:`result` hands the returned frame every checkpoint
+    it reads; on any exit the scope frees all the others. It takes no Spark
+    action (unpersisting is no job), so no plan or job count changes.
+    """
+
+    def __init__(self) -> None:
+        self._held: dict[int, DataFrame] = {}
+
+    def __enter__(self) -> "checkpoint_scope":
+        return self
+
+    def __exit__(self, *exc):
+        for ck in self._held.values():
+            _unpersist(ck)
+        self._held = None  # closed: a later own(), drop() or result() fails loudly
+        return False
+
+    def own(self, df: DataFrame) -> DataFrame:
+        """Hold the checkpoints ``df`` reads until the scope exits."""
+        for ck in _handles(df):
+            self._held[id(ck)] = ck
+        return df
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        """:func:`hard_checkpoint`, held by the scope."""
+        return self.own(hard_checkpoint(df))
+
+    def observed(self, df: DataFrame, *columns: str, **metrics: Column) -> tuple[DataFrame, dict]:
+        """:meth:`checkpoint` of ``df`` -> ``(frame, values)``: ``metrics``
+        (name -> aggregate Column over ``df``) are observed by the checkpoint
+        job itself, a fresh ``Observation`` per call (an empty input the
+        optimizer prunes runs no job and still reports them); a NULL
+        aggregate (a sum over no rows) reads as 0. ``columns`` (default:
+        all) are the state columns kept, so a column only a metric reads (a
+        round's previous label) is dropped before the data is pinned."""
+        obs = Observation()
+        observed = df.observe(obs, *(m.alias(k) for k, m in metrics.items()))
+        out = self.checkpoint(observed.select(*columns) if columns else observed)
+        return out, {k: 0 if v is None else v for k, v in obs.get.items()}
+
+    def drop(self, *dfs: DataFrame | None) -> None:
+        """Free superseded state now (None is skipped)."""
+        for df in dfs:
+            for ck in _handles(df):
+                self._held.pop(id(ck), None)
+            release(df)
+
+    def result(self, df: DataFrame, *reads: DataFrame) -> DataFrame:
+        """Mark ``df`` as the operator's result: it carries the handles of
+        its own and every ``reads`` frame's checkpoints (release(df) frees
+        them), and the scope no longer frees those on exit."""
+        keep = {id(ck): ck for r in (df, *reads) for ck in _handles(r)}
+        for k in keep:
+            self._held.pop(k, None)
+        df._graft_ckpt = tuple(keep.values())  # type: ignore[attr-defined]
+        return df
 
 
 class LocalGraph(NamedTuple):

@@ -34,14 +34,11 @@ from pyspark.sql import functions as F
 
 from graphrag_litex_spark.operators.iterutils import (
     DRIVER_THRESHOLD,
-    hard_checkpoint,
+    checkpoint_scope,
     local_frame,
     local_graph,
-    observed_checkpoint,
-    release,
     symmetric,
     undirected_simple,
-    with_checkpoint_of,
 )
 
 _SCHEMA = "vertex string, rank double"
@@ -140,60 +137,57 @@ def pagerank(
     # Both directions, partitioned by the join side once and pinned; the
     # per-iteration join then shuffles only the vertex-sized rank state.
     n_part = max(spark.sparkContext.defaultParallelism, 8)
-    adj = hard_checkpoint(
-        symmetric(undirected_simple(edges, src, dst)).repartition(n_part, "u")
-    )
-    deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    # Personalized reset: uniform over the seeds that exist in the graph.
-    # List seeds -> tiny broadcast in-list; DataFrame seeds -> hash join
-    # (AQE broadcasts when small). Unseeded, every vertex is a seed.
-    if seeds is None:
-        deg = deg.withColumn("__s", F.lit(1))
-    elif isinstance(seeds, DataFrame):
-        sdf = (
-            seeds.select(F.col(seeds.columns[0]).alias("u"))
-            .distinct()
-            .withColumn("__s", F.lit(1))
+    with checkpoint_scope() as scope:
+        adj = scope.checkpoint(
+            symmetric(undirected_simple(edges, src, dst)).repartition(n_part, "u")
         )
-        deg = deg.join(sdf, "u", "left").withColumn("__s", F.coalesce("__s", F.lit(0)))
-    else:
-        seed_set = sorted(set(seeds))
-        is_seed = F.col("u").isin(seed_set) if seed_set else F.lit(False)
-        deg = deg.withColumn("__s", is_seed.cast("int"))
-    # The degree table is read every round: pin it once, with N and the
-    # seed count (literals of the update) observed by its checkpoint job.
-    pinned, m = observed_checkpoint(deg, n=F.count(F.lit(1)), n_seed=F.sum("__s"))
-    if m["n_seed"] == 0:
-        release(adj)
-        release(pinned)
-        return local_frame(spark, [], ["vertex", "rank"], _SCHEMA)
-    if seeds is None:
-        base_col = F.lit((1.0 - damping) / m["n"])
-        init_col = F.lit(1.0 / m["n"])
-    else:
-        base_col = F.col("__s") * F.lit((1.0 - damping) / m["n_seed"])
-        init_col = F.col("__s") * F.lit(1.0 / m["n_seed"])
-    deg = pinned.select("u", "deg", base_col.alias("__base"))
-    ranks = hard_checkpoint(pinned.select("u", "deg", init_col.alias("rank")))
-    for _ in range(iters):
-        contrib = (
-            adj.join(ranks, "u")
-            .select(F.col("v"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("v")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        new_ranks = hard_checkpoint(
-            deg.join(contrib, deg["u"] == contrib["v"], "left")
-            .select(
-                "u",
-                "deg",
-                (F.col("__base") + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))).alias(
-                    "rank"
-                ),
+        deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+        # Personalized reset: uniform over the seeds that exist in the graph.
+        # List seeds -> tiny broadcast in-list; DataFrame seeds -> hash join
+        # (AQE broadcasts when small). Unseeded, every vertex is a seed.
+        if seeds is None:
+            deg = deg.withColumn("__s", F.lit(1))
+        elif isinstance(seeds, DataFrame):
+            sdf = (
+                seeds.select(F.col(seeds.columns[0]).alias("u"))
+                .distinct()
+                .withColumn("__s", F.lit(1))
             )
-        )
-        release(ranks)
-        ranks = new_ranks
-    release(adj)
-    release(pinned)
-    return with_checkpoint_of(ranks.select(F.col("u").alias("vertex"), "rank"), ranks)
+            deg = deg.join(sdf, "u", "left").withColumn("__s", F.coalesce("__s", F.lit(0)))
+        else:
+            seed_set = sorted(set(seeds))
+            is_seed = F.col("u").isin(seed_set) if seed_set else F.lit(False)
+            deg = deg.withColumn("__s", is_seed.cast("int"))
+        # The degree table is read every round: pin it once, with N and the
+        # seed count (literals of the update) observed by its checkpoint job.
+        pinned, m = scope.observed(deg, n=F.count(F.lit(1)), n_seed=F.sum("__s"))
+        if m["n_seed"] == 0:
+            return local_frame(spark, [], ["vertex", "rank"], _SCHEMA)
+        if seeds is None:
+            base_col = F.lit((1.0 - damping) / m["n"])
+            init_col = F.lit(1.0 / m["n"])
+        else:
+            base_col = F.col("__s") * F.lit((1.0 - damping) / m["n_seed"])
+            init_col = F.col("__s") * F.lit(1.0 / m["n_seed"])
+        deg = pinned.select("u", "deg", base_col.alias("__base"))
+        ranks = scope.checkpoint(pinned.select("u", "deg", init_col.alias("rank")))
+        for _ in range(iters):
+            contrib = (
+                adj.join(ranks, "u")
+                .select(F.col("v"), (F.col("rank") / F.col("deg")).alias("c"))
+                .groupBy("v")
+                .agg(F.sum("c").alias("in_sum"))
+            )
+            new_ranks = scope.checkpoint(
+                deg.join(contrib, deg["u"] == contrib["v"], "left")
+                .select(
+                    "u",
+                    "deg",
+                    (
+                        F.col("__base") + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
+                    ).alias("rank"),
+                )
+            )
+            scope.drop(ranks)
+            ranks = new_ranks
+        return scope.result(ranks.select(F.col("u").alias("vertex"), "rank"), ranks)

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphrag_litex_spark.operators.iterutils import hard_checkpoint, with_checkpoint_of
+from graphrag_litex_spark.operators.iterutils import checkpoint_scope
 
 
 def key_skew_profile(
@@ -46,27 +46,28 @@ def key_skew_profile(
     the input) aggregate; pass the result to ``iterutils.release`` after
     consuming it to free the checkpoint blocks early.
     """
-    counts = hard_checkpoint(
-        df.groupBy(F.col(key_col).alias("key")).agg(F.count(F.lit(1)).alias("n"))
-    )
-    # Grand total via a broadcast one-row cross join — NOT an empty-frame
-    # window, which would funnel every key row into a single partition.
-    totaled = counts.crossJoin(F.broadcast(counts.agg(F.sum("n").alias("total"))))
-    out = (
-        totaled.select(
-            "key",
-            "n",
-            F.round(F.col("n") / F.col("total"), 6).alias("share"),
-            F.greatest(
-                F.lit(1),
-                F.expr(f"(n * {target_partitions} + total - 1) div total"),
-            )
-            .cast("int")
-            .alias("suggested_salt"),
+    with checkpoint_scope() as scope:
+        counts = scope.checkpoint(
+            df.groupBy(F.col(key_col).alias("key")).agg(F.count(F.lit(1)).alias("n"))
         )
-        .orderBy(F.desc("n"), "key")
-        .limit(top_n)
-    )
-    # Hand the checkpoint handle to the caller: release(result) after the
-    # profile is consumed unpersists the cached aggregate.
-    return with_checkpoint_of(out, counts)
+        # Grand total via a broadcast one-row cross join — NOT an empty-frame
+        # window, which would funnel every key row into a single partition.
+        totaled = counts.crossJoin(F.broadcast(counts.agg(F.sum("n").alias("total"))))
+        out = (
+            totaled.select(
+                "key",
+                "n",
+                F.round(F.col("n") / F.col("total"), 6).alias("share"),
+                F.greatest(
+                    F.lit(1),
+                    F.expr(f"(n * {target_partitions} + total - 1) div total"),
+                )
+                .cast("int")
+                .alias("suggested_salt"),
+            )
+            .orderBy(F.desc("n"), "key")
+            .limit(top_n)
+        )
+        # The result carries the checkpoint handle: release(result) after the
+        # profile is consumed unpersists the cached aggregate.
+        return scope.result(out, counts)

@@ -325,49 +325,47 @@ def related_conversations(
     checkpoint blocks (long-lived sessions; same convention as
     `top_related_conversations` and the export jobs).
     """
-    from graphrag_litex_spark.operators.iterutils import hard_checkpoint, with_checkpoint_of
+    from graphrag_litex_spark.operators.iterutils import checkpoint_scope
 
-    ents = hard_checkpoint(
-        mentions_canon.select("conv_id", "canonical").distinct()
-    )
-    sizes = ents.groupBy("conv_id").agg(F.count(F.lit(1)).alias("n_ents"))
-    idx = ents
-    if max_entity_df is not None:
-        dfc = ents.groupBy("canonical").agg(F.count(F.lit(1)).alias("__df"))
-        idx = ents.join(
-            dfc.where(F.col("__df") <= max_entity_df).select("canonical"),
-            "canonical",
+    with checkpoint_scope() as scope:
+        ents = scope.checkpoint(
+            mentions_canon.select("conv_id", "canonical").distinct()
         )
-    pairs = (
-        idx.select("canonical", F.col("conv_id").alias("conv_a"))
-        .join(idx.select("canonical", F.col("conv_id").alias("conv_b")), "canonical")
-        .where(F.col("conv_a") < F.col("conv_b"))
-        .groupBy("conv_a", "conv_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
-    )
-    na = sizes.select(F.col("conv_id").alias("conv_a"), F.col("n_ents").alias("n_a"))
-    nb = sizes.select(F.col("conv_id").alias("conv_b"), F.col("n_ents").alias("n_b"))
-    out = (
-        pairs.join(na, "conv_a")
-        .join(nb, "conv_b")
-        .select(
-            "conv_a",
-            "conv_b",
-            F.col("n_shared").cast("long").alias("n_shared"),
-            F.col("n_a").cast("long").alias("n_a"),
-            F.col("n_b").cast("long").alias("n_b"),
-            F.expr("(n_shared * 1000000) div (n_a + n_b - n_shared)")
-            .cast("long")
-            .alias("jaccard_micro"),
+        sizes = ents.groupBy("conv_id").agg(F.count(F.lit(1)).alias("n_ents"))
+        idx = ents
+        if max_entity_df is not None:
+            dfc = ents.groupBy("canonical").agg(F.count(F.lit(1)).alias("__df"))
+            idx = ents.join(
+                dfc.where(F.col("__df") <= max_entity_df).select("canonical"),
+                "canonical",
+            )
+        pairs = (
+            idx.select("canonical", F.col("conv_id").alias("conv_a"))
+            .join(idx.select("canonical", F.col("conv_id").alias("conv_b")), "canonical")
+            .where(F.col("conv_a") < F.col("conv_b"))
+            .groupBy("conv_a", "conv_b")
+            .agg(F.count(F.lit(1)).alias("n_shared"))
+            .where(F.col("n_shared") >= min_shared)
         )
-    )
-    # The lazy result still reads the checkpointed index; hand its backing
-    # RDD to the caller so `iterutils.release(result)` can unpin it once
-    # consumed (the repo's checkpoint hygiene convention — see
-    # jobs/export_sft.py) instead of pinning executor storage for the
-    # session lifetime.
-    return with_checkpoint_of(out, ents)
+        na = sizes.select(F.col("conv_id").alias("conv_a"), F.col("n_ents").alias("n_a"))
+        nb = sizes.select(F.col("conv_id").alias("conv_b"), F.col("n_ents").alias("n_b"))
+        out = (
+            pairs.join(na, "conv_a")
+            .join(nb, "conv_b")
+            .select(
+                "conv_a",
+                "conv_b",
+                F.col("n_shared").cast("long").alias("n_shared"),
+                F.col("n_a").cast("long").alias("n_a"),
+                F.col("n_b").cast("long").alias("n_b"),
+                F.expr("(n_shared * 1000000) div (n_a + n_b - n_shared)")
+                .cast("long")
+                .alias("jaccard_micro"),
+            )
+        )
+        # The lazy result still reads the checkpointed index: it carries the
+        # handle, so `iterutils.release(result)` unpins it once consumed.
+        return scope.result(out, ents)
 
 
 def top_related_conversations(
@@ -386,51 +384,44 @@ def top_related_conversations(
     124,750/124,750 pairs). Same valves as the pair operator; the ranking
     window partitions by conv_id (neighbor lists are conv-bounded after
     ``min_shared``/``max_entity_df``, never corpus-proportional)."""
-    from graphrag_litex_spark.operators.iterutils import (
-        hard_checkpoint,
-        release,
-        with_checkpoint_of,
-    )
+    from graphrag_litex_spark.operators.iterutils import checkpoint_scope
 
-    # The pair table feeds both union branches; checkpoint so the
-    # inverted-index self-join runs once, not once per direction. The
-    # eager pair materialization fully consumes the inner entity-index
-    # checkpoint, so release it here rather than pinning it for the
-    # session (checkpoint hygiene: every pinned block has an owner).
-    inner = related_conversations(
-        mentions_canon, min_shared=min_shared, max_entity_df=max_entity_df
-    )
-    pairs = hard_checkpoint(inner)
-    release(inner)
-    sym = pairs.select(
-        F.col("conv_a").alias("conv_id"),
-        F.col("conv_b").alias("neighbor"),
-        "n_shared",
-        "jaccard_micro",
-    ).unionByName(
-        pairs.select(
-            F.col("conv_b").alias("conv_id"),
-            F.col("conv_a").alias("neighbor"),
+    with checkpoint_scope() as scope:
+        # The pair table feeds both union branches; checkpoint so the
+        # inverted-index self-join runs once, not once per direction. The
+        # eager pair materialization fully consumes the inner entity-index
+        # checkpoint, which the scope frees on exit.
+        inner = related_conversations(mentions_canon, min_shared, max_entity_df=max_entity_df)
+        pairs = scope.checkpoint(scope.own(inner))
+        sym = pairs.select(
+            F.col("conv_a").alias("conv_id"),
+            F.col("conv_b").alias("neighbor"),
             "n_shared",
             "jaccard_micro",
+        ).unionByName(
+            pairs.select(
+                F.col("conv_b").alias("conv_id"),
+                F.col("conv_a").alias("neighbor"),
+                "n_shared",
+                "jaccard_micro",
+            )
         )
-    )
-    w = Window.partitionBy("conv_id").orderBy(
-        F.col("jaccard_micro").desc(), F.col("neighbor").asc()
-    )
-    out = (
-        sym.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= top_k)
-        .select(
-            "conv_id",
-            "neighbor",
-            "n_shared",
-            "jaccard_micro",
-            F.col("rnk").cast("long").alias("rnk"),
+        w = Window.partitionBy("conv_id").orderBy(
+            F.col("jaccard_micro").desc(), F.col("neighbor").asc()
         )
-    )
-    # Callers release(result) once consumed — unpins the pair checkpoint.
-    return with_checkpoint_of(out, pairs)
+        out = (
+            sym.withColumn("rnk", F.row_number().over(w))
+            .where(F.col("rnk") <= top_k)
+            .select(
+                "conv_id",
+                "neighbor",
+                "n_shared",
+                "jaccard_micro",
+                F.col("rnk").cast("long").alias("rnk"),
+            )
+        )
+        # Callers release(result) once consumed — unpins the pair checkpoint.
+        return scope.result(out, pairs)
 
 
 # ---- SFT export: chat-template rendering + loss-span masks -----------------

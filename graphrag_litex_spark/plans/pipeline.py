@@ -39,6 +39,7 @@ import os
 import time
 from contextlib import contextmanager
 from dataclasses import asdict, dataclass
+from functools import cache, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,7 +56,12 @@ from graphrag_litex_spark.operators.extraction import (
     items_raw_claims,
     items_raw_edges,
 )
-from graphrag_litex_spark.operators.iterutils import DRIVER_THRESHOLD, local_frame
+from graphrag_litex_spark.operators.iterutils import (
+    DRIVER_THRESHOLD,
+    checkpoint_scope,
+    local_frame,
+    release,
+)
 from graphrag_litex_spark.operators.normalize_ops import norm_name_col
 
 PIPELINE_VERSION = 11
@@ -516,6 +522,29 @@ class KGPipeline:
     def _stage_path(self, name: str) -> str:
         return os.path.join(self.out_dir, name)
 
+    def _trusted(self, name: str, entry: dict | None, fingerprint: str) -> bool:
+        """Whether stage ``name`` may be read as it is on disk: its manifest
+        ``entry`` matches ``fingerprint`` and records the stage's schema,
+        and the stage directory holds its _SUCCESS marker. An entry without
+        a schema (written before entries carried one) is not trusted."""
+        return bool(
+            entry
+            and entry.get("fingerprint") == fingerprint
+            and entry.get("schema")
+            and os.path.exists(os.path.join(self._stage_path(name), "_SUCCESS"))
+        )
+
+    def _stage_entry(self, name: str, fingerprint: str, t0: float, schema) -> dict:
+        """The manifest entry of stage ``name``, just written with
+        ``schema``: its fingerprint, the seconds since ``t0``, the parquet
+        footer stats (no Spark job) and the schema."""
+        return {
+            "fingerprint": fingerprint,
+            "sec": round(time.time() - t0, 2),
+            **_parquet_stats(self._stage_path(name)),
+            "schema": schema.json(),
+        }
+
     def _materialize(
         self,
         name: str,
@@ -530,8 +559,9 @@ class KGPipeline:
         The stage is written, then read back with the schema it was written
         with, which the manifest entry also records: neither the read-back
         nor a later resume pays a schema-inference job. A resume trusts
-        only an entry that carries its schema, so an entry from a build
-        that did not record one rebuilds its stage once.
+        only an entry that carries its schema (``_trusted``), so an entry
+        from a build that did not record one rebuilds its stage once. The
+        checkpoints the built frame reads are released once it is written.
 
         ``est_rows`` sizes the write: graph-shaped stages (communities,
         stats, summaries) are node-proportional, not corpus-proportional, so
@@ -539,33 +569,22 @@ class KGPipeline:
         near-empty files; one partition per ~200k estimated rows."""
         path = self._stage_path(name)
         entry = manifest.get(name)
-        if (
-            resume
-            and entry
-            and entry.get("fingerprint") == fingerprint
-            and entry.get("schema")
-            and os.path.exists(os.path.join(path, "_SUCCESS"))
-        ):
+        if resume and self._trusted(name, entry, fingerprint):
             return _read_stage(self.spark, path, entry)
         t0 = time.time()
-        df = build()
+        df = built = build()
         if est_rows is not None:
             n_part = max(1, min(
                 self.spark.sparkContext.defaultParallelism, est_rows // 200_000 + 1
             ))
             df = df.coalesce(n_part)
         df.write.mode("overwrite").parquet(path)
+        release(built)  # the write was the last read of its checkpoints
         out = self.spark.read.schema(df.schema).parquet(path)
         # Footer metadata — no Spark job. Computed BEFORE taking the lock:
         # at a 10^5-file stage the walk takes seconds, and holding the lock
         # through it would serialize the concurrent stages' commits.
-        stats = _parquet_stats(path)
-        entry = {
-            "fingerprint": fingerprint,
-            "sec": round(time.time() - t0, 2),
-            **stats,
-            "schema": df.schema.json(),
-        }
+        entry = self._stage_entry(name, fingerprint, t0, df.schema)
         with self._manifest_lock:
             manifest[name] = entry
             self._save_manifest(manifest)
@@ -604,11 +623,7 @@ class KGPipeline:
             return 0  # idempotent: already ingested
         entry = manifest.get("extractions")
         path = self._stage_path("extractions")
-        if (
-            not entry
-            or entry.get("fingerprint") != self._input_fingerprint(extras)
-            or not os.path.exists(os.path.join(path, "_SUCCESS"))
-        ):
+        if not self._trusted("extractions", entry, self._input_fingerprint(extras)):
             raise ValueError(
                 "append requires an up-to-date extractions stage; run() first"
             )
@@ -632,12 +647,9 @@ class KGPipeline:
         # Commit: record the new input and the now-valid fingerprint.
         extras.append(new_path)
         manifest["extra_inputs"] = extras
-        manifest["extractions"] = {
-            "fingerprint": self._input_fingerprint(extras),
-            "sec": round(time.time() - t0, 2),
-            **_parquet_stats(path),
-            "schema": items.schema.json(),
-        }
+        manifest["extractions"] = self._stage_entry(
+            "extractions", self._input_fingerprint(extras), t0, items.schema
+        )
         self._save_manifest(manifest)  # downstream entries now stale -> rebuild
         return n_new
 
@@ -714,11 +726,7 @@ class KGPipeline:
             return 0  # idempotent: nothing new to forget
         entry = manifest.get("extractions")
         path = self._stage_path("extractions")
-        if (
-            not entry
-            or entry.get("fingerprint") != self._input_fingerprint(extras, old)
-            or not os.path.exists(os.path.join(path, "_SUCCESS"))
-        ):
+        if not self._trusted("extractions", entry, self._input_fingerprint(extras, old)):
             raise ValueError(
                 "forget requires an up-to-date extractions stage; run() first"
             )
@@ -777,12 +785,7 @@ class KGPipeline:
         shutil.rmtree(path)
         os.rename(tmp, path)
 
-        manifest["extractions"] = {
-            "fingerprint": new_fp,
-            "sec": round(time.time() - t0, 2),
-            **_parquet_stats(path),
-            "schema": kept.schema.json(),
-        }
+        manifest["extractions"] = self._stage_entry("extractions", new_fp, t0, kept.schema)
         self._save_manifest(manifest)  # downstream entries now stale -> rebuild
         return n_present
 
@@ -800,8 +803,6 @@ class KGPipeline:
             name, build, manifest, fp, resume, est_rows
         )
         results: dict[str, DataFrame] = {}
-        from functools import reduce
-
         from graphrag_litex_spark.sources.tables import load_input
 
         transcripts = reduce(
@@ -892,11 +893,6 @@ class KGPipeline:
 
         # S5/S6 linking + connected-components canonicalization (D6 + E3).
         def build_canon() -> DataFrame:
-            from graphrag_litex_spark.operators.iterutils import (
-                observed_checkpoint,
-                release,
-            )
-
             # norm_name was computed once at extraction-write time (JVM
             # expression); reuse it — recomputing normalization over every
             # mention row doubled this stage's scan cost. The distinct-names
@@ -904,53 +900,55 @@ class KGPipeline:
             # symmetrization, CC's initial labels): checkpoint it once so the
             # corpus-sized mentions scan + distinct shuffle run once, not
             # three times (at sf10 that is two full extra corpus scans).
-            names, n_names = observed_checkpoint(
-                results["mentions"]
-                .select("norm_name")
-                .where(F.col("norm_name") != "")
-                .distinct(),
-                n=F.count(F.lit(1)),
-            )
-            # Giant-block valve, auto-enabled from the distinct-name count
-            # (free: the checkpoint job itself reports it through the
-            # observation). At 10^12 turns the name table is the one place a
-            # single hot first-token block ("the ...") turns the candidate
-            # self-join quadratic; below the threshold exact first-token
-            # semantics are kept (identical to the single-process oracle).
-            max_block = (
-                linking.VALVE_BLOCK_SIZE
-                if n_names["n"] > linking.VALVE_NAMES
-                else None
-            )
-            if cfg.link_scorer == "embedding":
-                # "hash" / "prefix_ngram" built-ins, or any embedder
-                # registered via linking.register_link_embedder (the
-                # production sentence-transformer slot, C7).
-                embed_udf = linking.resolve_link_embedder(cfg.link_embedder)
-                pairs = linking.embedding_candidate_pairs(
-                    names,
-                    cfg.embed_sim_threshold,
-                    embed_udf=embed_udf,
-                    max_block_size=max_block,
-                )
-            else:
-                pairs = linking.candidate_pairs(
-                    names, cfg.sim_threshold, max_block_size=max_block
-                )
-            labels = connected_components(
-                names,
-                pairs,
-                id_col="norm_name",
-                max_iter=cfg.cc_max_iter,
-            )
             # CC's output is itself checkpointed (or driver-built), so the
-            # names cache can be dropped before the stage write.
-            release(names)
-            return labels.select(
-                "norm_name",
-                F.col("label").alias("canonical"),
-                F.sha2(F.col("label"), 256).substr(1, 32).alias("entity_id"),
-            )
+            # scope frees the names checkpoint before the stage write, and
+            # the stage write is the last read of CC's labels.
+            with checkpoint_scope() as scope:
+                names, n_names = scope.observed(
+                    results["mentions"]
+                    .select("norm_name")
+                    .where(F.col("norm_name") != "")
+                    .distinct(),
+                    n=F.count(F.lit(1)),
+                )
+                # Giant-block valve, auto-enabled from the distinct-name count
+                # (free: the checkpoint job itself reports it through the
+                # observation). At 10^12 turns the name table is the one place a
+                # single hot first-token block ("the ...") turns the candidate
+                # self-join quadratic; below the threshold exact first-token
+                # semantics are kept (identical to the single-process oracle).
+                max_block = (
+                    linking.VALVE_BLOCK_SIZE
+                    if n_names["n"] > linking.VALVE_NAMES
+                    else None
+                )
+                if cfg.link_scorer == "embedding":
+                    # "hash" / "prefix_ngram" built-ins, or any embedder
+                    # registered via linking.register_link_embedder (the
+                    # production sentence-transformer slot, C7).
+                    embed_udf = linking.resolve_link_embedder(cfg.link_embedder)
+                    pairs = linking.embedding_candidate_pairs(
+                        names,
+                        cfg.embed_sim_threshold,
+                        embed_udf=embed_udf,
+                        max_block_size=max_block,
+                    )
+                else:
+                    pairs = linking.candidate_pairs(
+                        names, cfg.sim_threshold, max_block_size=max_block
+                    )
+                labels = connected_components(
+                    names, pairs, id_col="norm_name", max_iter=cfg.cc_max_iter
+                )
+                scope.own(labels)
+                return scope.result(
+                    labels.select(
+                        "norm_name",
+                        F.col("label").alias("canonical"),
+                        F.sha2(F.col("label"), 256).substr(1, 32).alias("entity_id"),
+                    ),
+                    labels,
+                )
 
         results["canon_map"] = mat("canon_map", build_canon)
         if until == "canon_map":
@@ -1117,7 +1115,6 @@ class KGPipeline:
         self, results: dict, manifest: dict, mat, until: str | None, graph_rows: int
     ) -> dict[str, DataFrame]:
         cfg = self.config
-        from graphrag_litex_spark.operators.iterutils import hard_checkpoint, release
         from graphrag_litex_spark.querying.answer import EMBED_DIM, embed_summaries
 
         def warm_seed() -> DataFrame | None:
@@ -1139,9 +1136,11 @@ class KGPipeline:
         # Regime valve, decided from the manifest the build already wrote (no
         # Spark job): a graph whose nodes + edges fit under the community
         # valve builds all four tables driver-locally from one collect
-        # (comm_ops.graph_tail); larger graphs run the Spark operators.
+        # (comm_ops.graph_tail); larger graphs run the Spark operators. The
+        # scope owns what the stages share (the warm seed, the member
+        # degrees) while they run.
         state_rows = sum(manifest.get(s, {}).get("rows", 0) for s in ("nodes", "edges"))
-        _deg: dict[str, DataFrame] = {}
+        scope = checkpoint_scope()
         if state_rows <= DRIVER_THRESHOLD:
             tail: dict[str, DataFrame] = {}
 
@@ -1179,17 +1178,16 @@ class KGPipeline:
                     levels=cfg.levels,
                     min_size=cfg.min_community_size,
                     lpa_iters=cfg.lpa_iters,
-                    seed_labels=None if seed is None else hard_checkpoint(seed),
+                    seed_labels=None if seed is None else scope.checkpoint(seed),
                 )
 
             # The member-degree edge scan is computed ONCE and shared by
             # stats and summaries.
+            @cache
             def member_deg() -> DataFrame:
-                if "d" not in _deg:
-                    _deg["d"] = hard_checkpoint(
-                        comm_ops.member_edge_degrees(results["communities"], results["edges"])
-                    )
-                return _deg["d"]
+                return scope.checkpoint(
+                    comm_ops.member_edge_degrees(results["communities"], results["edges"])
+                )
 
             build = {
                 "communities": build_communities,
@@ -1209,7 +1207,7 @@ class KGPipeline:
                 "summary_embeddings": lambda: embed_summaries(results["summaries"]),
             }
 
-        try:
+        with scope:
             results["communities"] = mat("communities", build["communities"], graph_rows)
             results["community_stats"] = mat(
                 "community_stats", build["community_stats"], graph_rows
@@ -1226,9 +1224,6 @@ class KGPipeline:
             results["summary_embeddings"] = mat(
                 "summary_embeddings", build["summary_embeddings"], graph_rows
             )
-        finally:
-            if "d" in _deg:
-                release(_deg["d"])
         return results
 
 

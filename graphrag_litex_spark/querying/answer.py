@@ -42,10 +42,12 @@ def make_embed_udf(dim: int = EMBED_DIM):
     return F.pandas_udf(_batch, T.ArrayType(T.DoubleType()))
 
 
-def embed_summaries(summaries: DataFrame, dim: int = EMBED_DIM) -> DataFrame:
+def embed_summaries(summaries: DataFrame) -> DataFrame:
     """Materializable summary_embeddings table (the reference caches
-    embeddings per summary id, utils/embedding_utils.py:52-63)."""
-    return summaries.withColumn("embedding", make_embed_udf(dim)(F.col("full_text")))
+    embeddings per summary id, utils/embedding_utils.py:52-63), at the
+    ``EMBED_DIM`` the question embeddings have: ``cosine_col`` scores a
+    width mismatch NULL, not as an error."""
+    return summaries.withColumn("embedding", make_embed_udf(EMBED_DIM)(F.col("full_text")))
 
 
 def select_top_k(
@@ -53,14 +55,13 @@ def select_top_k(
     question: str,
     level: int = 0,
     k: int = 10,
-    dim: int = EMBED_DIM,
 ) -> DataFrame:
     """G1: top-k summaries by cosine vs the question embedding.
 
     The single question vector is a broadcast literal; ranking compiles to
     TakeOrderedAndProject (per-partition heaps, no global sort).
     """
-    qv = hash_embed(question, dim)
+    qv = hash_embed(question, EMBED_DIM)
     q = F.array(*[F.lit(float(v)) for v in qv])
     return (
         summary_embeddings.where(F.col("level") == level)
@@ -75,7 +76,6 @@ def select_top_k_batch(
     questions: list[str],
     level: int = 0,
     k: int = 10,
-    dim: int = EMBED_DIM,
 ) -> DataFrame:
     """D7 batch shape: top-k summaries for MANY questions in ONE pass
     (SURVEY.md D7 — "crossJoin for multi-question batch"; the reference
@@ -92,7 +92,7 @@ def select_top_k_batch(
     from pyspark.sql import Window
 
     spark = summary_embeddings.sparkSession
-    q_rows = [(i, q, hash_embed(q, dim)) for i, q in enumerate(questions)]
+    q_rows = [(i, q, hash_embed(q, EMBED_DIM)) for i, q in enumerate(questions)]
     qdf = spark.createDataFrame(
         q_rows, "question_id int, question string, _qv array<double>"
     )

@@ -1,8 +1,8 @@
 """The distributed graph loops' round discipline, on one fixed graph: each
 loop stays within its Spark job budget (a round is its checkpoint jobs and
-no separate convergence action), and the BFS loops release every
-checkpoint they took except the one their result reads; a distributed
-CC result's ``release`` frees the checkpoint it reads."""
+no separate convergence action), and each loop's checkpoint scope frees
+every checkpoint it took except the ones its result reads, which
+``release(result)`` frees — on return and on a ``max_iters`` error."""
 
 import warnings
 
@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from graphrag_litex_spark.operators import cc, iterutils
 from graphrag_litex_spark.operators import communities as C
+from graphrag_litex_spark.operators import dedup as D
 from graphrag_litex_spark.operators import graph_analytics as G
 from graphrag_litex_spark.operators import graph_ml as M
 from graphrag_litex_spark.operators import pagerank as P
@@ -133,8 +134,60 @@ def test_graph_loop_job_budget(spark, graph, loop):
 
 def _ckpt_rdds(df):
     """The ids of the checkpointed RDDs a releasable result reads."""
-    ck = getattr(df, "_graft_ckpt", None)
-    return set() if ck is None else {ck._jdf.queryExecution().analyzed().rdd().id()}
+    return {
+        ck._jdf.queryExecution().analyzed().rdd().id()
+        for ck in getattr(df, "_graft_ckpt", ())
+    }
+
+
+def _pinned(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def _assert_lifetime(spark, call, reads_checkpoints):
+    """Every checkpoint ``call`` takes is freed except the ones its result
+    reads: after ``call().collect()`` the only new persistent RDDs are the
+    result's ``_graft_ckpt`` handles (none for a result built on the
+    driver), and ``release(result)`` frees them."""
+    before = _pinned(spark)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)
+        result = call()
+        result.collect()
+    pinned = _pinned(spark) - before
+    assert pinned == _ckpt_rdds(result)
+    assert bool(pinned) == reads_checkpoints
+    iterutils.release(result)
+    assert not _pinned(spark) & pinned
+
+
+_TEXTS = [
+    "the quick brown fox jumps over the lazy dog near the river bank",
+    "spark dataframes run hash joins and shuffle exchanges in every round",
+]
+
+
+@pytest.mark.parametrize("name", sorted(_LOOP_JOBS) + ["keeper_map"])
+def test_checkpoint_lifetime(spark, graph, name):
+    """Checkpoint lifetime of every loop of ``_loops``, and of the dedup
+    keeper map over distributed CC (its pairs' MinHash checkpoint freed,
+    CC's labels handed to the result)."""
+    docs = local_frame(
+        spark,
+        [(i, f"{_TEXTS[i % 2]} {'z' * (i % 3 + 1)}") for i in range(12)],
+        ["doc_id", "text"],
+        "doc_id long, text string",
+    )
+    calls = {
+        **_loops(*graph),
+        "keeper_map": lambda: D.duplicate_keeper_map(
+            docs, jaccard_threshold=0.5, cc_driver_threshold=0
+        ),
+    }
+    # HyperANF and shortest_path build their results on the driver.
+    _assert_lifetime(
+        spark, calls[name], name not in ("neighborhood_function", "shortest_path")
+    )
 
 
 @pytest.mark.parametrize(
@@ -150,46 +203,27 @@ def _ckpt_rdds(df):
         ("shortest_path_absent_source", lambda e: G.shortest_path(e, "zz", "a0")),
     ],
 )
-def test_bfs_loops_release_every_checkpoint(spark, graph, monkeypatch, name, call):
-    """Every checkpoint a BFS loop takes has its blocks freed, except the
-    one its result reads (shortest_path's driver-built row and the
-    early-exit result read none): after the call, no other checkpointed
-    RDD is still in the SparkContext's persistent RDDs."""
-    taken = []  # held, so no checkpoint is garbage-collected mid-test
-    checkpoint = iterutils.hard_checkpoint
-
-    def tracked_checkpoint(df):
-        out = checkpoint(df)
-        taken.append(out)
-        return out
-
-    for mod in (iterutils, G):
-        monkeypatch.setattr(mod, "hard_checkpoint", tracked_checkpoint)
-    result = call(graph[0])
-    result.collect()
-    pinned = set(spark.sparkContext._jsc.getPersistentRDDs())
-    kept = set().union(*map(_ckpt_rdds, taken)) & pinned
-    assert len(taken) > 1
-    assert kept == _ckpt_rdds(result)
-    if name == "shortest_path":
-        assert result.first()["path_str"] == " -> ".join(f"v{i:02d}" for i in range(10))
-    elif name.startswith("shortest_path"):
-        assert result.first()["found"] is False
-
-
-def test_cc_release_frees_every_checkpoint(spark):
-    """Distributed CC on the 13-vertex chain: after the call and a
-    collect, only the checkpoint its result reads is still pinned, and
-    ``release(result)`` frees it."""
-    chain = [p for p in _PAIRS if p[0].startswith("v")]
-    edges = local_frame(spark, chain, ["src", "dst"], "src string, dst string")
-    verts = local_frame(
-        spark, [(f"v{i:02d}",) for i in range(13)], ["norm_name"], "norm_name string"
+def test_bfs_loops_release_every_checkpoint(spark, graph, name, call):
+    """The same lifetime check over the BFS loops' early exits; the empty
+    early-exit results and shortest_path's driver-built row read none."""
+    _assert_lifetime(
+        spark, lambda: call(graph[0]), name in ("hop_distances", "betweenness_approx")
     )
-    before = set(spark.sparkContext._jsc.getPersistentRDDs())
-    result = cc.connected_components(verts, edges, driver_threshold=0)
-    assert {r["label"] for r in result.collect()} == {"v00"}
-    pinned = set(spark.sparkContext._jsc.getPersistentRDDs()) - before
-    assert pinned and pinned == _ckpt_rdds(result)
-    iterutils.release(result)
-    assert not set(spark.sparkContext._jsc.getPersistentRDDs()) & pinned
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda e: G.k_core(e, 3, max_iters=1),
+        lambda e: G.k_truss(e, 4, max_iters=1, driver_threshold=0),
+    ],
+    ids=["k_core", "k_truss"],
+)
+def test_max_iters_error_frees_every_checkpoint(spark, graph, call):
+    """A peel that has not converged at ``max_iters`` raises, and leaves no
+    checkpoint pinned: the chain and the bridges peel in round 1, so the
+    fixpoint needs a second round."""
+    before = _pinned(spark)
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        call(graph[0])
+    assert not _pinned(spark) - before

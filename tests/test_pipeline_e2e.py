@@ -575,6 +575,56 @@ def test_stage_schemas_survive_resume_and_append(spark, corpus_sf0001, tmp_path)
     assert after == before
 
 
+def test_append_refuses_untrusted_extractions(spark, corpus_sf0001, tmp_path):
+    """An append reads the extractions stage only when a resume would
+    trust it: an entry without a recorded schema is refused, as a stale
+    entry is."""
+    import json
+    import os
+
+    from graphrag_litex_spark.plans.pipeline import KGPipeline
+
+    a_dir, b_dir, _ = _write_halves(corpus_sf0001["transcripts"], tmp_path)
+    out = str(tmp_path / "kg")
+    pipe = KGPipeline(spark, a_dir, out)
+    pipe.run(resume=False, until="extractions")
+    mpath = os.path.join(out, "_manifest.json")
+    good = json.load(open(mpath))
+    stale = json.loads(json.dumps(good))
+    stale["extractions"]["fingerprint"] = "stale"
+    no_schema = json.loads(json.dumps(good))
+    del no_schema["extractions"]["schema"]
+    for manifest in (stale, no_schema):
+        json.dump(manifest, open(mpath, "w"))
+        with pytest.raises(ValueError, match="up-to-date extractions stage"):
+            pipe.append_transcripts(b_dir)
+        assert json.load(open(mpath)) == manifest  # nothing appended
+
+
+def test_canon_map_stage_leaves_nothing_pinned(spark, corpus_sf0001, tmp_path, monkeypatch):
+    """With distributed CC the canon_map stage pins nothing once written:
+    the build's scope frees the distinct-names checkpoint, and
+    ``_materialize`` releases CC's labels after the stage write, their
+    last reader."""
+    from graphrag_litex_spark.operators import cc
+    from graphrag_litex_spark.plans import pipeline
+
+    calls = []
+
+    def distributed(*args, **kwargs):
+        calls.append(1)
+        return cc.connected_components(*args, **kwargs, driver_threshold=0)
+
+    monkeypatch.setattr(pipeline, "connected_components", distributed)
+    pinned = lambda: set(spark.sparkContext._jsc.getPersistentRDDs())  # noqa: E731
+    before = pinned()
+    res = pipeline.run_pipeline(
+        spark, corpus_sf0001["transcripts"], str(tmp_path / "kg"), resume=False, until="canon_map"
+    )
+    assert calls and res["canon_map"].count() > 0
+    assert not pinned() - before
+
+
 def test_concurrent_build_lock(spark, corpus_sf0001, tmp_path):
     """Two drivers building one out_dir interleave overwrite-mode stage
     writes into silent corruption; the advisory _BUILD_LOCK makes the second
