@@ -36,6 +36,7 @@ from graphrag_litex_spark.functions.bpe import (
     make_encoder,
     train_bpe,
 )
+from graphrag_litex_spark.operators.chunking import chunk_documents_windowed, chunk_windows
 from graphrag_litex_spark.operators.text_analysis import BPE_PRETOKEN_RE
 
 
@@ -76,6 +77,23 @@ def train_bpe_merges(
     return train_bpe([(r["pretoken"], r["count"]) for r in rows], n_merges)
 
 
+def _merged_tokenizer(merges: list[tuple[str, str]]):
+    """text -> merged byte tokens (latin-1 strings), for a UDF closure.
+
+    Lazy per-worker init: the closure dict is deserialized once per worker
+    process, so the encoder (ranks dict + its pretoken LRU) is built on
+    the first Arrow batch and REUSED across batches — rebuilding it per
+    batch would throw the hot-pretoken cache away every ~10k rows."""
+    _state: dict = {}
+
+    def tokenize(text: str) -> list[str]:
+        if "enc" not in _state:
+            _state["enc"] = make_encoder(merges)
+        return encode_text(text, _state["enc"], _pretokenize)
+
+    return tokenize
+
+
 def bpe_tokenize(
     df: DataFrame,
     merges: list[tuple[str, str]],
@@ -85,23 +103,23 @@ def bpe_tokenize(
     """Adds ``tokens_col`` (array of merged byte tokens, latin-1 strings)
     and ``<tokens_col>_count``. Lossless per row:
     ``concat(tokens).encode("latin-1") == text.encode("utf-8")``."""
-
-    # Lazy per-worker init: the closure dict is deserialized once per worker
-    # process, so the encoder (ranks dict + its pretoken LRU) is built on
-    # the first Arrow batch and REUSED across batches — rebuilding it per
-    # batch would throw the hot-pretoken cache away every ~10k rows.
-    _state: dict = {}
+    tokenize = _merged_tokenizer(merges)
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def enc(texts: pd.Series) -> pd.Series:
-        if "enc" not in _state:
-            _state["enc"] = make_encoder(merges)
-        encode_word = _state["enc"]
-        return texts.map(lambda t: encode_text(t, encode_word, _pretokenize))
+        return texts.map(tokenize)
 
     return df.withColumn(tokens_col, enc(F.col(text_col))).withColumn(
         f"{tokens_col}_count", F.size(tokens_col)
     )
+
+
+def _decode_span(toks: list[str]) -> str:
+    """A merged-token window -> its decoded byte span. Byte-exact except
+    where a window boundary splits a multi-byte UTF-8 char (a property
+    shared with tiktoken slice-decoding; replacement chars appear only at
+    such cuts)."""
+    return "".join(toks).encode("latin-1").decode("utf-8", errors="replace")
 
 
 def chunk_windows_bpe(
@@ -110,30 +128,14 @@ def chunk_windows_bpe(
     chunk_size: int = 600,
     overlap: int = 100,
 ) -> list[str]:
-    """B1 window kernel in MERGED-token units (reference
-    text_chunker.py:54-115 semantics: overlap clamp at :63, single chunk
-    when the document fits :89-92, Q1 tail fix). Chunk text is the decoded
-    byte span of its token window — byte-exact except where a window
-    boundary splits a multi-byte UTF-8 char (a property shared with
-    tiktoken slice-decoding; replacement chars appear only at such cuts).
-    """
-    toks = encode_text(text, encode_word, _pretokenize)
-    n = len(toks)
-    if n == 0:
-        return []
-    overlap = min(overlap, chunk_size // 2)
-    if n <= chunk_size:
-        return [text or ""]
-    out = []
-    start = 0
-    while start < n:
-        end = min(start + chunk_size, n)
-        span = "".join(toks[start:end]).encode("latin-1")
-        out.append(span.decode("utf-8", errors="replace"))
-        if end >= n:
-            break
-        start = end - overlap
-    return out
+    """B1 window kernel in MERGED-token units: chunking.chunk_windows
+    (reference text_chunker.py:54-115 semantics: overlap clamp at :63,
+    single chunk when the document fits :89-92, Q1 tail fix) over the
+    merged tokens, each chunk the decoded byte span of its window."""
+    return chunk_windows(
+        text, chunk_size, overlap,
+        lambda t: encode_text(t, encode_word, _pretokenize), _decode_span,
+    )
 
 
 def chunk_documents_bpe(
@@ -145,28 +147,9 @@ def chunk_documents_bpe(
     overlap: int = 100,
 ) -> DataFrame:
     """docs -> (source_id, n, chunk_id, text): one row per merged-token
-    window; same output shape as chunking.chunk_documents_windowed."""
-
-    _state: dict = {}  # per-worker encoder cache (see bpe_tokenize)
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def chunk_udf(texts: pd.Series) -> pd.Series:
-        if "enc" not in _state:
-            _state["enc"] = make_encoder(merges)
-        encode_word = _state["enc"]
-        return texts.map(
-            lambda t: chunk_windows_bpe(t, encode_word, chunk_size, overlap)
-        )
-
-    return (
-        docs.select(
-            F.col(id_col).cast("string").alias("source_id"),
-            F.posexplode(chunk_udf(F.col(text_col))).alias("n", "chunk"),
-        )
-        .select(
-            "source_id",
-            "n",
-            F.concat_ws("_", "source_id", "n").alias("chunk_id"),
-            F.col("chunk").alias("text"),
-        )
+    window (:func:`chunk_windows_bpe`); same output shape as
+    chunking.chunk_documents_windowed."""
+    return chunk_documents_windowed(
+        docs, id_col, text_col, chunk_size, overlap,
+        tokenizer=_merged_tokenizer(merges), joiner=_decode_span,
     )

@@ -61,28 +61,29 @@ def chunk_windows(
     chunk_size: int = 600,
     overlap: int = 100,
     tokenizer: Callable[[str], list[str]] | None = None,
-    joiner: str = " ",
+    joiner: str | Callable[[list[str]], str] = " ",
 ) -> list[str]:
     """Pure chunking kernel -> ordered chunk texts (chunk n = index n).
 
     Mirrors TextChunker.chunk_text with the Q1 tail fix; shared by the UDF
     and the unit tests/oracle. ``joiner`` glues a window's tokens back into
     chunk text: " " for bare-word tokenizers, "" for tokenizers whose
-    tokens carry their own whitespace (bpe_pretokenizer).
+    tokens carry their own whitespace (bpe_pretokenizer), or a function of
+    the window's tokens (bpe_ops decodes a merged-token window's bytes).
     """
     toks = tokenizer(text) if tokenizer else (text or "").split()
     n = len(toks)
     if n == 0:
         return []
+    glue = joiner if callable(joiner) else joiner.join
     overlap = min(overlap, chunk_size // 2)  # text_chunker.py:63
     if n <= chunk_size:
-        return [joiner.join(toks)]
-    step = chunk_size - overlap
+        return [glue(toks)]
     out = []
     start = 0
     while start < n:
         end = min(start + chunk_size, n)
-        out.append(joiner.join(toks[start:end]))
+        out.append(glue(toks[start:end]))
         if end >= n:  # Q1 fix: emit the final partial window, then stop
             break
         start = end - overlap
@@ -96,7 +97,7 @@ def chunk_documents_windowed(
     chunk_size: int = 600,
     overlap: int = 100,
     tokenizer: Callable[[str], list[str]] | None = None,
-    joiner: str = " ",
+    joiner: str | Callable[[list[str]], str] = " ",
 ) -> DataFrame:
     """docs -> (source_id, n, chunk_id, text): one row per token window."""
 

@@ -21,15 +21,24 @@ Scale notes:
   the anti-join against true triples shuffles on the triple key, and the
   per-(subj,pred) top-k window is bounded by the pool size. No step is
   quadratic in the entity count.
-- `random_walks`: each step is ONE frontier-sized hash-join against the
-  symmetric edge list (shuffle on the current node key) followed by a
-  map-side-combinable min_by aggregate; lineage is truncated with an eager
-  checkpoint every ``checkpoint_every`` steps (same loop discipline as
-  operators/cc.py / pagerank.py). Hot nodes cost one skewed join key per
-  step — AQE skew-split applies; walk state is O(#starts x walks_per_node).
+- `random_walks` and `node2vec_walks` run one walk loop (`_walks`): a
+  driver-local loop under the small-graph valve, else one distributed loop
+  whose state (start, walk_idx, prev, cur, nodes) advances one step per
+  round. A walker only supplies each candidate's md5 draw replicas. Per
+  step, `random_walks` runs ONE frontier-sized hash join against the
+  symmetric edge list (shuffle on the current node key); `node2vec_walks`
+  runs that join plus a second one against the edge list on (prev, dst)
+  (the distance-1 test, from step 2 on) and a <=max(w)-way replica
+  explode. Both end the step in a map-side-combinable min_by aggregate;
+  lineage is truncated with an eager checkpoint every ``checkpoint_every``
+  steps (same loop discipline as operators/cc.py / pagerank.py). Hot nodes
+  cost one skewed join key per step — AQE skew-split applies; walk state
+  is O(#starts x walks_per_node).
 """
 
 from __future__ import annotations
+
+from hashlib import md5
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -259,16 +268,141 @@ def ppmi_weights(
         return scope.result(out, pairs)
 
 
-def _md5_key(s: str) -> str:
-    import hashlib
-
-    return hashlib.md5(s.encode("utf-8")).hexdigest()
-
-
 _WALK_SCHEMA = (
     "start string, walk_idx int, nodes array<string>, path string, end_node string"
 )
 _WALK_COLS = ["start", "walk_idx", "nodes", "path", "end_node"]
+
+
+def _walks(
+    edges: DataFrame,
+    length: int,
+    walks_per_node: int,
+    src_col: str,
+    dst_col: str,
+    seed: str,
+    checkpoint_every: int,
+    sep: str,
+    driver_threshold: int,
+    local_draws,
+    draws,
+) -> DataFrame:
+    """The one walk loop of :func:`random_walks` and :func:`node2vec_walks`.
+
+    At step s the walk (start, walk_idx) at ``cur`` (having come from
+    ``prev``) moves to the candidate neighbor d with the smallest
+    md5(seed|start|walk_idx|s|d|r) over d's draw replicas r, ties broken
+    by d. A walker supplies only its replicas, once per regime:
+
+    - ``local_draws(nbr, prev, d, s)`` -> the replica ids of candidate d
+      (``nbr``: vertex -> set of neighbors; ``prev`` is None at step 1);
+    - ``draws(cand, sym, s)`` -> the candidate frame (start, walk_idx,
+      prev, cur, dst, nodes) with one row per replica in an ``_r`` column;
+      ``sym`` is the checkpointed step relation (src, dst).
+
+    A NULL replica drops out of the key (``concat_ws`` skips it, and so
+    does the driver-local key), so one NULL replica is the unbiased draw
+    md5(seed|start|walk_idx|s|d).
+
+    Adaptive driver-local regime (iterutils.local_graph): each distributed
+    step is a checkpointed join+agg job, pure scheduler overhead on a tiny
+    graph. The md5 rank keys are replicated bit-for-bit (lowercase hex
+    compared as ASCII == UTF8String binary order), so the walks are
+    row-identical — asserted at threshold 0 in tests.
+    """
+    if length < 1:
+        raise ValueError("length must be >= 1")
+    if walks_per_node < 1:
+        # sequence(0, walks_per_node - 1) would DESCEND for 0 (Spark
+        # infers step -1), silently emitting walk_idx 0 AND -1.
+        raise ValueError("walks_per_node must be >= 1")
+    g = local_graph(edges, src_col, dst_col, driver_threshold)
+    if g is not None:
+        nbr = {v: set(ns) for v, ns in g.adj.items()}
+        rows = []
+        for start in g.adj:
+            for widx in range(walks_per_node):
+                prev, cur, nodes = None, start, [start]
+                for step in range(1, length + 1):
+                    head = f"{seed}|{start}|{widx}|{step}|"
+                    _, nxt = min(
+                        (md5((head + d if r is None else f"{head}{d}|{r}").encode()).hexdigest(), d)
+                        for d in g.adj[cur]
+                        for r in local_draws(nbr, prev, d, step)
+                    )
+                    prev, cur = cur, nxt
+                    nodes.append(cur)
+                rows.append((start, widx, nodes, sep.join(nodes), cur))
+        return local_frame(edges.sparkSession, rows, _WALK_COLS, _WALK_SCHEMA)
+    # sym is re-joined every step, and seeds the state: checkpoint it first.
+    with checkpoint_scope() as scope:
+        sym = _walk_edges(scope, edges, src_col, dst_col)
+        state = (
+            sym.select(F.col("src").alias("start"))
+            .distinct()
+            .select(
+                "start",
+                F.explode(
+                    F.sequence(F.lit(0), F.lit(walks_per_node - 1))
+                ).alias("walk_idx"),
+            )
+            .select(
+                "start",
+                F.col("walk_idx").cast("int"),
+                F.lit(None).cast("string").alias("prev"),
+                F.col("start").alias("cur"),
+                F.array("start").alias("nodes"),
+            )
+        )
+        # Superseded STATE checkpoints are dropped as the loop advances —
+        # each eager checkpoint materializes, so its predecessor's blocks
+        # are dead weight.
+        prev_state = None
+        for step in range(1, length + 1):
+            cand = draws(state.join(sym.withColumnRenamed("src", "cur"), "cur"), sym, step)
+            pick = _h(
+                F.lit(seed),
+                "start",
+                F.col("walk_idx").cast("string"),
+                F.lit(str(step)),
+                "dst",
+                F.col("_r").cast("string"),
+            )
+            state = (
+                cand.groupBy("start", "walk_idx")
+                .agg(
+                    F.min_by("dst", pick).alias("cur"),
+                    # cur and nodes are functionally determined by (start,
+                    # walk_idx) at every step — all rows in the group agree,
+                    # max is just a deterministic way to say "the" value.
+                    F.max("cur").alias("prev"),
+                    F.max("nodes").alias("nodes"),
+                )
+                .select(
+                    "start",
+                    "walk_idx",
+                    "prev",
+                    "cur",
+                    F.concat("nodes", F.array("cur")).alias("nodes"),
+                )
+            )
+            if step % checkpoint_every == 0 and step < length:
+                state = scope.checkpoint(state)
+                scope.drop(prev_state)
+                prev_state = state
+        # Materialize the result; the scope then frees every loop intermediate
+        # (an edge-sized adjacency among them).
+        return scope.result(
+            scope.checkpoint(
+                state.select(
+                    "start",
+                    "walk_idx",
+                    "nodes",
+                    F.array_join("nodes", sep).alias("path"),
+                    F.col("cur").alias("end_node"),
+                )
+            )
+        )
 
 
 def random_walks(
@@ -301,100 +435,13 @@ def random_walks(
     returning — pass the result to ``iterutils.release`` after consuming
     it to free the last checkpoint's blocks too.
     """
-    if length < 1:
-        raise ValueError("length must be >= 1")
-    if walks_per_node < 1:
-        # sequence(0, walks_per_node - 1) would DESCEND for 0 (Spark
-        # infers step -1), silently emitting walk_idx 0 AND -1.
-        raise ValueError("walks_per_node must be >= 1")
-    # Adaptive driver-local walker (iterutils.local_graph): each
-    # distributed step is a checkpointed join+agg job, pure scheduler
-    # overhead on a tiny graph. The md5 rank keys are replicated
-    # bit-for-bit (lowercase hex compared as ASCII == UTF8String binary
-    # order), so the walks are row-identical — asserted at threshold 0 in
-    # tests.
-    g = local_graph(edges, src_col, dst_col, driver_threshold)
-    if g is not None:
-        rows = []
-        for start in g.adj:
-            for widx in range(walks_per_node):
-                cur, nodes = start, [start]
-                for step in range(1, length + 1):
-                    cur = min(
-                        g.adj[cur],
-                        key=lambda d: (
-                            _md5_key(f"{seed}|{start}|{widx}|{step}|{d}"),
-                            d,
-                        ),
-                    )
-                    nodes.append(cur)
-                rows.append((start, widx, nodes, sep.join(nodes), cur))
-        return local_frame(edges.sparkSession, rows, _WALK_COLS, _WALK_SCHEMA)
-    # sym is re-joined every step, and seeds the state: checkpoint it first.
-    with checkpoint_scope() as scope:
-        sym = _walk_edges(scope, edges, src_col, dst_col)
-        state = (
-            sym.select(F.col("src").alias("start"))
-            .distinct()
-            .select(
-                "start",
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(walks_per_node - 1))
-                ).alias("walk_idx"),
-            )
-            .select(
-                "start",
-                F.col("walk_idx").cast("int"),
-                F.col("start").alias("cur"),
-                F.array("start").alias("nodes"),
-            )
-        )
-        # Superseded STATE checkpoints are dropped as the loop advances —
-        # each eager checkpoint materializes, so its predecessor's blocks
-        # are dead weight.
-        prev_state = None
-        for step in range(1, length + 1):
-            cand = state.join(sym.withColumnRenamed("src", "cur"), "cur")
-            pick = _h(
-                F.lit(seed),
-                "start",
-                F.col("walk_idx").cast("string"),
-                F.lit(str(step)),
-                "dst",
-            )
-            state = (
-                cand.groupBy("start", "walk_idx")
-                .agg(
-                    F.min_by("dst", pick).alias("cur"),
-                    # nodes is functionally determined by (start, walk_idx) at
-                    # every step — all rows in the group agree, max is just a
-                    # deterministic way to say "the" value.
-                    F.max("nodes").alias("nodes"),
-                )
-                .select(
-                    "start",
-                    "walk_idx",
-                    "cur",
-                    F.concat("nodes", F.array("cur")).alias("nodes"),
-                )
-            )
-            if step % checkpoint_every == 0 and step < length:
-                state = scope.checkpoint(state)
-                scope.drop(prev_state)
-                prev_state = state
-        # Materialize the result; the scope then frees every loop intermediate
-        # (an edge-sized adjacency among them).
-        return scope.result(
-            scope.checkpoint(
-                state.select(
-                    "start",
-                    "walk_idx",
-                    "nodes",
-                    F.array_join("nodes", sep).alias("path"),
-                    F.col("cur").alias("end_node"),
-                )
-            )
-        )
+    # One NULL replica per candidate: the key is md5(seed|start|walk_idx|s|d).
+    return _walks(
+        edges, length, walks_per_node, src_col, dst_col, seed, checkpoint_every,
+        sep, driver_threshold,
+        local_draws=lambda nbr, prev, d, step: (None,),
+        draws=lambda cand, sym, step: cand.withColumn("_r", F.lit(None).cast("string")),
+    )
 
 
 def node2vec_walks(
@@ -438,124 +485,34 @@ def node2vec_walks(
     map-side-combinable min_by — no windows, no driver state; same
     checkpoint discipline as :func:`random_walks`.
     """
-    if length < 1:
-        raise ValueError("length must be >= 1")
-    if walks_per_node < 1:
-        raise ValueError("walks_per_node must be >= 1")
     if min(w_return, w_common, w_far) < 1:
         raise ValueError("weights must be >= 1 (scale the others up instead)")
-    # Adaptive driver-local walker (iterutils.local_graph) — replica-argmin
-    # replicated exactly (same md5 draw keys incl. the replica index; step 1
-    # carries replica 0 like the distributed single-replica explode).
-    # Asserted against the threshold-0 distributed loop in tests.
-    g = local_graph(edges, src_col, dst_col, driver_threshold)
-    if g is not None:
-        nbr = {v: set(ns) for v, ns in g.adj.items()}
-        rows = []
-        for start in g.adj:
-            for widx in range(walks_per_node):
-                prev, cur, nodes = None, start, [start]
-                for step in range(1, length + 1):
-                    best = None
-                    for d in g.adj[cur]:
-                        if step == 1:
-                            w = 1
-                        elif d == prev:
-                            w = w_return
-                        elif d in nbr[prev]:
-                            w = w_common
-                        else:
-                            w = w_far
-                        for r in range(w):
-                            key = (
-                                _md5_key(f"{seed}|{start}|{widx}|{step}|{d}|{r}"),
-                                d,
-                            )
-                            if best is None or key < best[0]:
-                                best = (key, d)
-                    prev, cur = cur, best[1]
-                    nodes.append(cur)
-                rows.append((start, widx, nodes, sep.join(nodes), cur))
-        return local_frame(edges.sparkSession, rows, _WALK_COLS, _WALK_SCHEMA)
-    with checkpoint_scope() as scope:
-        sym = _walk_edges(scope, edges, src_col, dst_col)
-        state = (
-            sym.select(F.col("src").alias("start"))
-            .distinct()
-            .select(
-                "start",
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(walks_per_node - 1))
-                ).alias("walk_idx"),
+
+    def local_draws(nbr, prev, d, step):
+        # Step 1 carries replica 0, like the distributed single-replica explode.
+        if step == 1:
+            return range(1)
+        if d == prev:
+            return range(w_return)
+        return range(w_common if d in nbr[prev] else w_far)
+
+    def draws(cand, sym, step):
+        if step == 1:
+            w = F.lit(1)
+        else:
+            # prev's neighborhood, keyed for the distance-1 probe.
+            prev_adj = sym.select(
+                F.col("src").alias("prev"), F.col("dst").alias("dst"), F.lit(True).alias("_d1")
             )
-            .select(
-                "start",
-                F.col("walk_idx").cast("int"),
-                F.lit(None).cast("string").alias("prev"),
-                F.col("start").alias("cur"),
-                F.array("start").alias("nodes"),
+            cand = cand.join(prev_adj, ["prev", "dst"], "left")
+            w = (
+                F.when(F.col("dst") == F.col("prev"), F.lit(w_return))
+                .when(F.col("_d1"), F.lit(w_common))
+                .otherwise(F.lit(w_far))
             )
-        )
-        # prev's neighborhood, keyed for the distance-1 probe.
-        prev_adj = sym.select(
-            F.col("src").alias("prev"), F.col("dst").alias("dst"), F.lit(True).alias("_d1")
-        )
-        prev_state = None
-        for step in range(1, length + 1):
-            cand = state.join(sym.withColumnRenamed("src", "cur"), "cur")
-            if step == 1:
-                w = F.lit(1)
-            else:
-                cand = cand.join(prev_adj, ["prev", "dst"], "left")
-                w = (
-                    F.when(F.col("dst") == F.col("prev"), F.lit(w_return))
-                    .when(F.col("_d1"), F.lit(w_common))
-                    .otherwise(F.lit(w_far))
-                )
-            cand = cand.select(
-                "start",
-                "walk_idx",
-                "cur",
-                "dst",
-                "nodes",
-                F.explode(F.sequence(F.lit(0), w - 1)).alias("_r"),
-            )
-            pick = _h(
-                F.lit(seed),
-                "start",
-                F.col("walk_idx").cast("string"),
-                F.lit(str(step)),
-                "dst",
-                F.col("_r").cast("string"),
-            )
-            state = (
-                cand.groupBy("start", "walk_idx")
-                .agg(
-                    F.min_by("dst", pick).alias("cur"),
-                    # cur/nodes are functionally determined by the group key.
-                    F.max("cur").alias("prev"),
-                    F.max("nodes").alias("nodes"),
-                )
-                .select(
-                    "start",
-                    "walk_idx",
-                    "prev",
-                    "cur",
-                    F.concat("nodes", F.array("cur")).alias("nodes"),
-                )
-            )
-            if step % checkpoint_every == 0 and step < length:
-                state = scope.checkpoint(state)
-                scope.drop(prev_state)
-                prev_state = state
-        return scope.result(
-            scope.checkpoint(
-                state.select(
-                    "start",
-                    "walk_idx",
-                    "nodes",
-                    F.array_join("nodes", sep).alias("path"),
-                    F.col("cur").alias("end_node"),
-                )
-            )
-        )
+        return cand.withColumn("_r", F.explode(F.sequence(F.lit(0), w - 1)))
+
+    return _walks(
+        edges, length, walks_per_node, src_col, dst_col, seed, checkpoint_every,
+        sep, driver_threshold, local_draws, draws,
+    )

@@ -38,8 +38,51 @@ def _desc_key(col: str = "description") -> F.Column:
     return F.concat(F.lpad(F.length(col).cast("string"), 6, "0"), F.col(col))
 
 
-def _salt(col: str, buckets: int) -> F.Column:
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(buckets))
+def _salted_merge(
+    rows: DataFrame,
+    keys: list[str],
+    partial_aggs,
+    final_aggs,
+    salt_buckets: int,
+    max_instances: int | None,
+) -> DataFrame:
+    """The node and edge merges' two-phase salted aggregation of rows
+    carrying (source_id, chunk_id) provenance: phase 1 groups on ``keys`` +
+    salt, phase 2 on ``keys``. ``partial_aggs(instances)`` (the bucket's
+    distinct instance set) and ``final_aggs(n_instances, instances)`` (the
+    exact distinct count, the capped sample) return a side's own
+    aggregates with the shared provenance columns in place, in output
+    order."""
+    cap = lambda c: F.slice(c, 1, max_instances) if max_instances else c  # noqa: E731
+    partial = (
+        rows.withColumn("instance", F.struct("source_id", "chunk_id"))
+        .withColumn("_salt", F.pmod(F.xxhash64(F.col("chunk_id")), F.lit(salt_buckets)))
+        .groupBy(*keys, "_salt")
+        .agg(*partial_aggs(F.collect_set("instance").alias("instances")))
+        # Cap each bucket's stored sample BEFORE the final shuffle: a
+        # hot key with millions of rows would otherwise ship its
+        # entire provenance set through the reduce even though only
+        # max_instances survive the final select. n_in_bucket records
+        # the true distinct count first, keeping n_instances exact
+        # (buckets are globally disjoint — see below).
+        .withColumn("n_in_bucket", F.size("instances"))
+        .withColumn("instances", cap(F.col("instances")))
+    )
+    # salt = hash(chunk_id), so a given (source_id, chunk_id) instance
+    # lands in exactly one salt bucket: the partial collect_sets are
+    # globally disjoint — exact distinct count by summing bucket set
+    # sizes, and flatten needs NO final distinct (an array_distinct
+    # over struct arrays is O(n²) and dominated the whole pipeline
+    # on hot entities before this was removed). The stored sample is
+    # capped WITHOUT sorting: array_sort over 100k+-element struct
+    # arrays for hot keys tripled the stage cost; instances are set
+    # semantics, sample order unspecified (counts stay exact).
+    return partial.groupBy(*keys).agg(
+        *final_aggs(
+            F.sum("n_in_bucket").alias("n_instances"),
+            cap(F.flatten(F.collect_list("instances"))).alias("instances"),
+        )
+    )
 
 
 def merge_nodes(
@@ -59,47 +102,30 @@ def merge_nodes(
     stage table). ``max_instances=None`` keeps everything (reference
     semantics, models/entity.py:55-57).
     """
-    cap = lambda c: F.slice(c, 1, max_instances) if max_instances else c  # noqa: E731
-    base = mentions.withColumn("instance", F.struct("source_id", "chunk_id"))
-    partial = (
-        base.withColumn("_salt", _salt("chunk_id", salt_buckets))
-        .groupBy("entity_id", "canonical", "_salt")
-        .agg(
+    final = _salted_merge(
+        mentions,
+        ["entity_id", "canonical"],
+        lambda instances: [
             F.min(F.when(F.col("norm_name") == F.col("canonical"), F.col("name"))).alias(
                 "name"
             ),
             F.min("type").alias("type"),
             F.max_by("description", _desc_key()).alias("description"),
-            F.collect_set("instance").alias("instances"),
+            instances,
             F.count(F.lit(1)).alias("n_mentions"),
-        )
-        # Cap each bucket's stored sample BEFORE the final shuffle: a
-        # hot entity with millions of mentions would otherwise ship its
-        # entire provenance set through the reduce even though only
-        # max_instances survive the final select. n_in_bucket records
-        # the true distinct count first, keeping n_instances exact
-        # (buckets are globally disjoint — see the final-agg comment).
-        .withColumn("n_in_bucket", F.size("instances"))
-        .withColumn("instances", cap(F.col("instances")))
-    )
-    final = partial.groupBy("entity_id", "canonical").agg(
-        # partial "name" is min over canonical-form mentions in the salt
-        # bucket (NULL when absent); min() skips NULLs on the final pass.
-        F.min("name").alias("name"),
-        F.min("type").alias("type"),
-        F.max_by("description", _desc_key()).alias("description"),
-        # salt = hash(chunk_id), so a given (source_id, chunk_id) instance
-        # lands in exactly one salt bucket: the partial collect_sets are
-        # globally disjoint — exact distinct count by summing bucket set
-        # sizes, and flatten needs NO final distinct (an array_distinct
-        # over struct arrays is O(n²) and dominated the whole pipeline
-        # on hot entities before this was removed). The stored sample is
-        # capped WITHOUT sorting: array_sort over 100k+-element struct
-        # arrays for hot keys tripled the stage cost; instances are set
-        # semantics, sample order unspecified (counts stay exact).
-        F.sum("n_in_bucket").alias("n_instances"),
-        cap(F.flatten(F.collect_list("instances"))).alias("instances"),
-        F.sum("n_mentions").alias("n_mentions"),
+        ],
+        lambda n_instances, instances: [
+            # partial "name" is min over canonical-form mentions in the salt
+            # bucket (NULL when absent); min() skips NULLs on the final pass.
+            F.min("name").alias("name"),
+            F.min("type").alias("type"),
+            F.max_by("description", _desc_key()).alias("description"),
+            n_instances,
+            instances,
+            F.sum("n_mentions").alias("n_mentions"),
+        ],
+        salt_buckets,
+        max_instances,
     )
     return final.select(
         "entity_id",
@@ -126,34 +152,24 @@ def merge_edges(
     Input columns: src_id, dst_id, src, dst, pred, strength, source_id,
     chunk_id.
     """
-    cap = lambda c: F.slice(c, 1, max_instances) if max_instances else c  # noqa: E731
-    base = canon_edges.where(F.col("strength") >= min_strength).withColumn(
-        "instance", F.struct("source_id", "chunk_id")
-    )
-    partial = (
-        base.withColumn("_salt", _salt("chunk_id", salt_buckets))
-        .groupBy("src_id", "dst_id", "src", "dst", "_salt")
-        .agg(
+    final = _salted_merge(
+        canon_edges.where(F.col("strength") >= min_strength),
+        ["src_id", "dst_id", "src", "dst"],
+        lambda instances: [
             F.max_by("pred", _desc_key("pred")).alias("pred"),
             F.sum("strength").alias("_s_sum"),
             F.count(F.lit(1)).alias("_s_cnt"),
-            F.collect_set("instance").alias("instances"),
-        )
-        # Cap BEFORE the final shuffle (same as merge_nodes): a hot edge
-        # would otherwise ship its full provenance set through the
-        # reduce; n_in_bucket keeps n_instances exact (buckets disjoint
-        # by salt = hash(chunk_id)).
-        .withColumn("n_in_bucket", F.size("instances"))
-        .withColumn("instances", cap(F.col("instances")))
-    )
-    final = partial.groupBy("src_id", "dst_id", "src", "dst").agg(
-        F.max_by("pred", _desc_key("pred")).alias("pred"),
-        (F.sum("_s_sum") / F.sum("_s_cnt")).alias("strength"),
-        # disjoint-by-salt: exact distinct count + no final distinct or
-        # sort needed (see merge_nodes).
-        F.sum("n_in_bucket").alias("n_instances"),
-        cap(F.flatten(F.collect_list("instances"))).alias("instances"),
-        F.sum("_s_cnt").alias("n_obs"),
+            instances,
+        ],
+        lambda n_instances, instances: [
+            F.max_by("pred", _desc_key("pred")).alias("pred"),
+            (F.sum("_s_sum") / F.sum("_s_cnt")).alias("strength"),
+            n_instances,
+            instances,
+            F.sum("_s_cnt").alias("n_obs"),
+        ],
+        salt_buckets,
+        max_instances,
     )
     return final.select(
         "src_id",

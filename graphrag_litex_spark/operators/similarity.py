@@ -244,6 +244,31 @@ def ivf_assign(
     return out.withColumn(score_col, best["s"]) if score_col else out
 
 
+def ivf_probes(cents: list[list[float]], query_vec: list[float], nprobe: int) -> list[int]:
+    """The ``nprobe`` inverted lists an IVF query scans: centroid ids by
+    cosine to the query, descending, ties by id. Pure driver arithmetic
+    over the tiny centroid table, in a fixed summation order; a zero-norm
+    side scores 0."""
+    q = [float(v) for v in query_vec]
+    nq = 0.0
+    for x in q:
+        nq = nq + x * x
+
+    def _cos(a: list[float]) -> float:
+        na = 0.0
+        for x in a:
+            na = na + x * x
+        den = na**0.5 * nq**0.5
+        if den == 0:
+            return 0.0
+        acc = 0.0
+        for x, y in zip(a, q):
+            acc = acc + x * y
+        return acc / den
+
+    return sorted(range(len(cents)), key=lambda c: (-_cos(cents[c]), c))[:nprobe]
+
+
 def ivf_topk(
     embeddings: DataFrame,
     query_vec: list[float],
@@ -271,26 +296,8 @@ def ivf_topk(
         return embeddings.select(
             F.col(id_col), F.lit(0.0).cast("double").alias("cosine")
         ).limit(0)
-    q = [float(v) for v in query_vec]
-
-    def _cos(a: list[float], b: list[float]) -> float:
-        na = 0.0
-        for v in a:
-            na = na + v * v
-        nb = 0.0
-        for v in b:
-            nb = nb + v * v
-        denom = na**0.5 * nb**0.5
-        if denom == 0:
-            return 0.0
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + x * y
-        return acc / denom
-
-    probes = sorted(range(len(cents)), key=lambda c: (-_cos(cents[c], q), c))[:nprobe]
     probed = ivf_assign(embeddings, cents, vec_col=vec_col).where(
-        F.col("_cid").isin([int(p) for p in probes])
+        F.col("_cid").isin(ivf_probes(cents, query_vec, nprobe))
     )
     return brute_force_topk(probed, query_vec, k, id_col, vec_col)
 
@@ -650,25 +657,8 @@ def ivf_pq_topk(
             F.col(id_col), F.lit(0.0).cast("double").alias("adist")
         ).limit(0)
     q = [float(x) for x in query_vec]
-
-    def _cos(a: list[float], b: list[float]) -> float:
-        na = 0.0
-        for x in a:
-            na = na + x * x
-        nb = 0.0
-        for x in b:
-            nb = nb + x * x
-        den = na**0.5 * nb**0.5
-        if den == 0:
-            return 0.0
-        s = 0.0
-        for x, y in zip(a, b):
-            s = s + x * y
-        return s / den
-
-    probes = sorted(range(len(cents)), key=lambda c: (-_cos(cents[c], q), c))[:nprobe]
     assigned = ivf_assign(embeddings, cents, vec_col=vec_col).where(
-        F.col("_cid").isin([int(c) for c in probes])
+        F.col("_cid").isin(ivf_probes(cents, q, nprobe))
     )
     codes = pq_encode(assigned, books, id_col=id_col, vec_col=vec_col)
     return pq_adc_topk(codes, q, books, k=k, id_col=id_col)

@@ -873,6 +873,16 @@ class KGPipeline:
         # NOT cached: five downstream stages each scan it once; zstd-decoding
         # 334MB beats building a multi-GB deserialized cache (measured: the
         # cache build tripled the first consumer's time and added GC churn).
+        if cfg.validate_ingest:
+            # An append extracts its batch before any gate runs, and a
+            # resume trusts the extractions stage as written: gate the items
+            # as well, so a conversation quarantined after its items were
+            # written reaches no downstream stage.
+            results["extractions"] = results["extractions"].join(
+                results["quarantine"].select(F.col("conv_id").alias("source_id")),
+                "source_id",
+                "left_anti",
+            )
         if until == "extractions":
             return results
 

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from graphrag_litex_spark.functions.normalize import hash_embed
+from graphrag_litex_spark.operators.iterutils import checkpoint_scope
 from graphrag_litex_spark.operators.similarity import cosine_col
 
 EMBED_DIM = 64
@@ -302,6 +303,39 @@ def answer_question(
     }
 
 
+def _question_seeds(canon_map: DataFrame, question: str) -> DataFrame:
+    """-> (vertex): the canonical entities whose normalized surface form
+    (3+ chars) occurs as a whole word in the normalized question, matched
+    RELATIONALLY against the canon map."""
+    from graphrag_litex_spark.functions.normalize import normalize_name
+
+    nq = f" {normalize_name(question)} "
+    return canon_map.where(
+        (F.length("norm_name") >= 3)
+        & (F.instr(F.lit(nq), F.concat(F.lit(" "), F.col("norm_name"), F.lit(" "))) > 0)
+    ).select(F.col("canonical").alias("vertex"))
+
+
+def _seeded_rank(kg: dict, seeds, k: int, damping: float, iters: int) -> DataFrame:
+    """Personalized PageRank over the merged edge graph from ``seeds``
+    (operators/pagerank.py, the same iterative hash-join loop) -> (name,
+    score) top-k, score rounded so ties break by name identically in every
+    engine. The result carries PageRank's checkpoint (distributed regime):
+    pass it to ``iterutils.release`` once consumed."""
+    from graphrag_litex_spark.operators.pagerank import pagerank
+
+    with checkpoint_scope() as scope:
+        pr = scope.own(
+            pagerank(kg["edges"].select("src", "dst"), seeds=seeds, damping=damping, iters=iters)
+        )
+        return scope.result(
+            pr.select(F.col("vertex").alias("name"), F.round("rank", 6).alias("score"))
+            .orderBy(F.col("score").desc(), F.col("name").asc())
+            .limit(k),
+            pr,
+        )
+
+
 def local_search(
     kg: dict,
     question: str,
@@ -320,28 +354,11 @@ def local_search(
     ties break by name identically in every engine.
 
     ``kg`` is the stage-frame dict from plans.pipeline.run_pipeline
-    (needs "canon_map" and "edges")."""
-    from graphrag_litex_spark.functions.normalize import normalize_name
-    from graphrag_litex_spark.operators.pagerank import pagerank
-
-    nq = f" {normalize_name(question)} "
-    seed_rows = (
-        kg["canon_map"]
-        .where(
-            (F.length("norm_name") >= 3)
-            & (F.instr(F.lit(nq), F.concat(F.lit(" "), F.col("norm_name"), F.lit(" "))) > 0)
-        )
-        .select("canonical")
-        .distinct()
-        .collect()
-    )
-    seeds = sorted(r["canonical"] for r in seed_rows)
-    pr = pagerank(kg["edges"].select("src", "dst"), seeds=seeds, damping=damping, iters=iters)
-    return (
-        pr.select(F.col("vertex").alias("name"), F.round("rank", 6).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("name").asc())
-        .limit(k)
-    )
+    (needs "canon_map" and "edges"). Pass the result to
+    ``iterutils.release`` once consumed."""
+    seed_rows = _question_seeds(kg["canon_map"], question).distinct().collect()
+    seeds = sorted(r["vertex"] for r in seed_rows)
+    return _seeded_rank(kg, seeds, k, damping, iters)
 
 
 def local_search_context(
@@ -357,25 +374,28 @@ def local_search_context(
 
     Shape: the ranked entity list is tiny (k rows) and broadcasts into the
     mention->canonical resolution join; the only corpus-sized shuffle is
-    the per-chunk aggregate."""
-    ranked = local_search(kg, question, k=k_entities)
-    ment = (
-        kg["mentions"]
-        .select("chunk_id", "norm_name")
-        .join(kg["canon_map"].select("norm_name", "canonical"), "norm_name")
-        .select("chunk_id", F.col("canonical").alias("name"))
-        .distinct()
-    )
-    return (
-        ment.join(F.broadcast(ranked), "name")
-        .groupBy("chunk_id")
-        .agg(
-            F.round(F.sum("score"), 6).alias("chunk_score"),
-            F.count(F.lit(1)).cast("long").alias("n_entities"),
+    the per-chunk aggregate. The result carries :func:`local_search`'s
+    checkpoint: pass it to ``iterutils.release`` once consumed."""
+    with checkpoint_scope() as scope:
+        ranked = scope.own(local_search(kg, question, k=k_entities))
+        ment = (
+            kg["mentions"]
+            .select("chunk_id", "norm_name")
+            .join(kg["canon_map"].select("norm_name", "canonical"), "norm_name")
+            .select("chunk_id", F.col("canonical").alias("name"))
+            .distinct()
         )
-        .orderBy(F.col("chunk_score").desc(), F.col("chunk_id").asc())
-        .limit(k_chunks)
-    )
+        return scope.result(
+            ment.join(F.broadcast(ranked), "name")
+            .groupBy("chunk_id")
+            .agg(
+                F.round(F.sum("score"), 6).alias("chunk_score"),
+                F.count(F.lit(1)).cast("long").alias("n_entities"),
+            )
+            .orderBy(F.col("chunk_score").desc(), F.col("chunk_id").asc())
+            .limit(k_chunks),
+            ranked,
+        )
 
 
 def drift_search(
@@ -397,10 +417,7 @@ def drift_search(
     Scale shape: only the community-id list (k_communities rows) reaches
     the driver; the member seed set — node-proportional — stays a
     DataFrame through the PPR reset join (operators/pagerank.py DataFrame
-    seeds)."""
-    from graphrag_litex_spark.functions.normalize import normalize_name
-    from graphrag_litex_spark.operators.pagerank import pagerank
-
+    seeds). Pass the result to ``iterutils.release`` once consumed."""
     top = select_top_k(
         embed_summaries(kg["summaries"]), question, level=level, k=k_communities
     )
@@ -412,20 +429,8 @@ def drift_search(
         .join(kg["canon_map"].select("entity_id", "canonical").distinct(), "entity_id")
         .select(F.col("canonical").alias("vertex"))
     )
-    nq = f" {normalize_name(question)} "
-    q_seeds = kg["canon_map"].where(
-        (F.length("norm_name") >= 3)
-        & (F.instr(F.lit(nq), F.concat(F.lit(" "), F.col("norm_name"), F.lit(" "))) > 0)
-    ).select(F.col("canonical").alias("vertex"))
-    seeds = members.unionByName(q_seeds).distinct()
-    pr = pagerank(
-        kg["edges"].select("src", "dst"), seeds=seeds, damping=damping, iters=iters
-    )
-    return (
-        pr.select(F.col("vertex").alias("name"), F.round("rank", 6).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("name").asc())
-        .limit(k)
-    )
+    seeds = members.unionByName(_question_seeds(kg["canon_map"], question)).distinct()
+    return _seeded_rank(kg, seeds, k, damping, iters)
 
 
 def rerank_by_overlap(

@@ -205,22 +205,6 @@ def append_index(
     return meta
 
 
-def _cosine(a: list[float], b: list[float]) -> float:
-    na = 0.0
-    for x in a:
-        na = na + x * x
-    nb = 0.0
-    for x in b:
-        nb = nb + x * x
-    den = na**0.5 * nb**0.5
-    if den == 0:
-        return 0.0
-    s = 0.0
-    for x, y in zip(a, b):
-        s = s + x * y
-    return s / den
-
-
 def query_index(
     spark: SparkSession,
     index_dir: str,
@@ -234,7 +218,7 @@ def query_index(
     ``rerank`` ADC candidates by exact cosine against the full vectors
     (``embeddings`` required); the candidate set is k-heap-sized, so the
     refinement join broadcasts."""
-    from graphrag_litex_spark.operators.similarity import pq_adc_topk
+    from graphrag_litex_spark.operators.similarity import ivf_probes, pq_adc_topk
 
     with open(os.path.join(index_dir, "meta.json")) as fh:
         meta = json.load(fh)
@@ -242,10 +226,7 @@ def query_index(
     # Candidate generation runs in the index's (possibly PCA'd) space;
     # exact re-rank below scores raw cosine on the full-precision vectors.
     q = _project_query(q_raw, meta)
-    probes = sorted(
-        range(len(meta["centroids"])),
-        key=lambda c: (-_cosine(meta["centroids"][c], q), c),
-    )[:nprobe]
+    probes = ivf_probes(meta["centroids"], q, nprobe)
     id_col = meta["id_col"]
     # dropDuplicates(id): a crash-retried append_index leaves byte-identical
     # duplicate code rows per id (see its docstring) which would crowd the
@@ -253,7 +234,7 @@ def query_index(
     # of the codes table, never the whole index.
     codes = (
         spark.read.parquet(os.path.join(index_dir, "codes"))
-        .where(F.col("_cid").isin([int(c) for c in probes]))
+        .where(F.col("_cid").isin(probes))
         .dropDuplicates([id_col])
     )
     cand = pq_adc_topk(codes, q, meta["codebooks"], k=max(k, rerank), id_col=id_col)

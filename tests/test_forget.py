@@ -12,6 +12,7 @@ import os
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from graphrag_litex_spark.plans.pipeline import KGPipeline, run_pipeline
 
@@ -178,6 +179,45 @@ def test_forget_quarantined_conversation_leaves_quarantine_stage(spark, tmp_path
     # the quarantine record itself is gone; the graph is untouched
     assert res2["quarantine"].count() == 0
     assert res2["triples"].count() == res["triples"].count()
+
+
+def test_append_of_corrupt_conversation_is_quarantined_everywhere(spark, tmp_path):
+    """An appended conversation with a duplicate turn_idx is extracted by
+    the append (it runs no gate), so the resumed build must gate the
+    extraction items too: the conversation is listed in the quarantine
+    stage and reaches no mention, node or triple."""
+    import datetime
+
+    import pandas as pd
+
+    from graphrag_litex_spark.plans.pipeline import PipelineConfig
+
+    ts = datetime.datetime(2025, 1, 1)
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    good = [
+        ("good", 0, "user", "Alice Johnson works at Acme Corp.", None, ts),
+        ("good", 1, "assistant", "Noted. Acme Corp acquired Initech.", None, ts),
+    ]
+    bad = [
+        ("bad", 0, "user", "Bob Stone met Carol Danvers.", None, ts),
+        ("bad", 0, "user", "Bob Stone met Carol Danvers again.", None, ts),
+    ]
+    src, extra = str(tmp_path / "tr"), str(tmp_path / "tr_append")
+    spark.createDataFrame(pd.DataFrame(good, columns=cols)).write.parquet(src)
+    spark.createDataFrame(pd.DataFrame(bad, columns=cols)).write.parquet(extra)
+
+    out = str(tmp_path / "kg")
+    cfg = PipelineConfig(validate_ingest=True)
+    run_pipeline(spark, src, out, config=cfg, resume=False, until="claims")
+    pipe = KGPipeline(spark, src, out, config=cfg)
+    assert pipe.append_transcripts(extra) == 2
+    res = pipe.run(resume=True, until="claims")
+
+    assert [r["conv_id"] for r in res["quarantine"].select("conv_id").collect()] == ["bad"]
+    assert res["mentions"].where(F.col("source_id") == "bad").count() == 0
+    names = {r["canonical_name"] for r in res["nodes"].select("canonical_name").collect()}
+    assert not {n for n in names if "bob" in n.lower() or "carol" in n.lower()}
+    assert {r["conv_id"] for r in res["triples"].select("conv_id").collect()} == {"good"}
 
 
 def test_stage_checksums_canonicalization_and_null_positions(spark, tmp_path):

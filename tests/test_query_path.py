@@ -286,3 +286,30 @@ def test_rerank_by_overlap_default_and_slot(spark):
     fake = F.pandas_udf(lambda s: s.str.len().astype("float64"), "double")
     top = rerank_by_overlap(df, q, k=1, scorer_udf=fake).collect()[0]
     assert top["chunk_id"] == "c1"  # longest text wins under the fake scorer
+
+
+@pytest.mark.parametrize(
+    "search", ["local_search", "local_search_context", "drift_search"]
+)
+def test_seeded_search_release_frees_rank_checkpoint(
+    spark, pipeline_sf0001, monkeypatch, search
+):
+    """Under distributed PageRank a query's result carries the rank
+    checkpoint it reads: after collect() + release nothing stays pinned."""
+    import warnings
+
+    from graphrag_litex_spark.operators import pagerank as P
+    from graphrag_litex_spark.operators.iterutils import release
+    from graphrag_litex_spark.querying import answer
+
+    real = P.pagerank
+    monkeypatch.setattr(
+        P, "pagerank", lambda *a, **kw: real(*a, **{**kw, "driver_threshold": 0})
+    )
+    baseline = set(spark.sparkContext._jsc.getPersistentRDDs())
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)
+        result = getattr(answer, search)(pipeline_sf0001, "who acquired acme corp")
+        assert result.collect()
+        release(result)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs()) == baseline
