@@ -38,7 +38,13 @@ def norm_col(a: Column) -> Column:
 
 
 def cosine_col(a: Column, b: Column) -> Column:
-    denom = norm_col(a) * norm_col(b)
+    return cosine_from_norms(a, b, norm_col(a), norm_col(b))
+
+
+def cosine_from_norms(a: Column, b: Column, a_norm: Column, b_norm: Column) -> Column:
+    """:func:`cosine_col` with the two norms given as columns, so a norm
+    shared by many pairs is computed once, not once per pair."""
+    denom = a_norm * b_norm
     return F.when(denom == 0, F.lit(0.0)).otherwise(dot_col(a, b) / denom)
 
 

@@ -24,14 +24,17 @@ irrelevant and determinism is required.
 
 from __future__ import annotations
 
+import json
+import math
+
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from graphrag_litex_spark.functions.normalize import hash_embed
 from graphrag_litex_spark.operators.iterutils import checkpoint_scope
-from graphrag_litex_spark.operators.similarity import cosine_col
+from graphrag_litex_spark.operators.similarity import cosine_from_norms, norm_col
 
 EMBED_DIM = 64
 
@@ -46,9 +49,52 @@ def make_embed_udf(dim: int = EMBED_DIM):
 def embed_summaries(summaries: DataFrame) -> DataFrame:
     """Materializable summary_embeddings table (the reference caches
     embeddings per summary id, utils/embedding_utils.py:52-63), at the
-    ``EMBED_DIM`` the question embeddings have: ``cosine_col`` scores a
+    ``EMBED_DIM`` the question embeddings have: the cosine scores a
     width mismatch NULL, not as an error."""
     return summaries.withColumn("embedding", make_embed_udf(EMBED_DIM)(F.col("full_text")))
+
+
+_QUESTIONS_SCHEMA = (
+    "array<struct<question_id:int,question:string,_qv:array<double>,_qnorm:double>>"
+)
+
+
+def _questions_literal(questions: list[str]) -> F.Column:
+    """The questions, their embeddings and their norms as ONE constant
+    ``array<struct<question_id, question, _qv, _qnorm>>``: ``from_json``
+    over one JSON string, which Catalyst folds to a literal at plan time
+    (no driver-built table, no broadcast). The literal holds |Q| * EMBED_DIM
+    doubles, the same order as the <= |Q| * k answer rows a batch collects.
+
+    ``_qnorm`` is :func:`~graphrag_litex_spark.operators.similarity.norm_col`
+    replayed in Python: the same left-to-right sum of squares from 0.0 and
+    a correctly rounded sqrt, so it is bit-identical to Spark's."""
+    rows = []
+    for i, q in enumerate(questions):
+        qv = hash_embed(q, EMBED_DIM)
+        sq = 0.0
+        for v in qv:
+            sq += v * v
+        rows.append({"question_id": i, "question": q, "_qv": qv, "_qnorm": math.sqrt(sq)})
+    return F.from_json(F.lit(json.dumps(rows)), _QUESTIONS_SCHEMA)
+
+
+def _scored(summary_embeddings: DataFrame, questions: list[str], level: int) -> DataFrame:
+    """Every (summary at ``level``, question) pair with its cosine ``score``
+    (rounded to 6 dp): the summary norm is computed once per summary row,
+    before the question literal is expanded per row with ``inline``.
+
+    -> (<summary cols>, question_id, question, score)
+    """
+    emb = F.col("embedding")
+    score = cosine_from_norms(emb, F.col("_qv"), F.col("_snorm"), F.col("_qnorm"))
+    return (
+        summary_embeddings.where(F.col("level") == level)
+        .withColumn("_snorm", norm_col(emb))
+        .select("*", F.inline(_questions_literal(questions)))
+        .withColumn("score", F.round(score, 6))
+        .drop("_snorm", "_qv", "_qnorm")
+    )
 
 
 def select_top_k(
@@ -59,14 +105,13 @@ def select_top_k(
 ) -> DataFrame:
     """G1: top-k summaries by cosine vs the question embedding.
 
-    The single question vector is a broadcast literal; ranking compiles to
-    TakeOrderedAndProject (per-partition heaps, no global sort).
+    Scored by the batch path's expression (a one-question literal);
+    ranking compiles to TakeOrderedAndProject (per-partition heaps, no
+    global sort), one Spark job.
     """
-    qv = hash_embed(question, EMBED_DIM)
-    q = F.array(*[F.lit(float(v)) for v in qv])
     return (
-        summary_embeddings.where(F.col("level") == level)
-        .withColumn("score", F.round(cosine_col(F.col("embedding"), q), 6))
+        _scored(summary_embeddings, [question], level)
+        .drop("question_id", "question")
         .orderBy(F.col("score").desc(), F.col("community_id").asc())
         .limit(k)
     )
@@ -82,33 +127,24 @@ def select_top_k_batch(
     (SURVEY.md D7 — "crossJoin for multi-question batch"; the reference
     answers questions one at a time, graphrag_lite_x.py:100-107).
 
-    The question-embedding table is tiny (embedded on the driver) and
-    broadcast; a broadcast nested-loop join scores every (summary,
-    question) pair JVM-side, then a per-question window keeps k. One
-    corpus-side scan regardless of |questions| — at scale this replaces
-    |Q| separate jobs (|Q| scans) with one.
+    The questions are one folded literal (:func:`_questions_literal`:
+    |Q| * EMBED_DIM doubles, the order of the <= |Q| * k rows a batch
+    collects), expanded per summary row, so every (summary, question) pair
+    is scored JVM-side with no join; a per-question ``row_number`` window
+    keeps k. It plans as a partial WindowGroupLimit, ONE hash exchange on
+    question_id and the final limit, so collecting it runs two Spark jobs
+    (the shuffle map stage and the result) and the work scales with the
+    number of summaries. One corpus-side scan regardless of |questions|.
 
-    -> (question_id, question, <summary cols>, score, rank)
+    -> (<summary cols>, question_id, question, score, rank)
     """
-    from pyspark.sql import Window
-
-    spark = summary_embeddings.sparkSession
-    q_rows = [(i, q, hash_embed(q, EMBED_DIM)) for i, q in enumerate(questions)]
-    qdf = spark.createDataFrame(
-        q_rows, "question_id int, question string, _qv array<double>"
-    )
-    scored = (
-        summary_embeddings.where(F.col("level") == level)
-        .crossJoin(F.broadcast(qdf))
-        .withColumn("score", F.round(cosine_col(F.col("embedding"), F.col("_qv")), 6))
-    )
     w = Window.partitionBy("question_id").orderBy(
         F.col("score").desc(), F.col("community_id").asc()
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        _scored(summary_embeddings, questions, level)
+        .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .drop("_qv")
     )
 
 
@@ -166,6 +202,23 @@ def map_answers_batch(selected_batch: DataFrame) -> DataFrame:
     ).where(F.col("answer") != "")
 
 
+def _answer_order(rows: list) -> list:
+    """Map rows in answer order: helpfulness descending, then community_id
+    (Python ``str`` order is Spark's UTF-8 byte order)."""
+    return sorted(rows, key=lambda r: (-r["helpfulness"], r["community_id"]))
+
+
+def _answer_dict(answer: str, rows: list) -> dict:
+    return {
+        "answer": answer,
+        "topics": [
+            {"topic": r["title"], "description": r["answer"], "helpfulness": r["helpfulness"]}
+            for r in rows
+        ],
+        "used_communities": [r["community_id"] for r in rows],
+    }
+
+
 def answer_questions(
     summaries: DataFrame,
     questions: list[str],
@@ -174,9 +227,11 @@ def answer_questions(
     summary_embeddings: DataFrame | None = None,
 ) -> list[dict]:
     """Batch query pipeline: every question retrieved, mapped, and reduced
-    in ONE Spark pass; the reduce collects <= |questions| * k tiny rows.
-    Returns one answer dict per input question (same shape as
-    :func:`answer_question`), preserving input order.
+    in ONE Spark pass (:func:`select_top_k_batch`: two Spark jobs, one hash
+    exchange); the reduce collects <= |questions| * k tiny rows and orders
+    them on the driver, so no global sort runs. Returns one answer dict per
+    input question (same shape as :func:`answer_question`), preserving
+    input order.
 
     ``summary_embeddings``: precomputed :func:`embed_summaries` output
     (e.g. the pipeline's materialized summary_embeddings stage) — passing
@@ -189,29 +244,13 @@ def answer_questions(
         else embed_summaries(summaries)
     )
     selected = select_top_k_batch(emb, questions, level=level, k=k)
-    mapped = map_answers_batch(selected).orderBy(
-        "question_id", F.col("helpfulness").desc(), F.col("community_id").asc()
-    )
     by_q: dict[int, list] = {}
-    for r in mapped.collect():
+    for r in map_answers_batch(selected).collect():
         by_q.setdefault(r["question_id"], []).append(r)
     out = []
-    for i, _q in enumerate(questions):
-        rows = by_q.get(i, [])
-        out.append(
-            {
-                "answer": " ".join(r["answer"] for r in rows),
-                "topics": [
-                    {
-                        "topic": r["title"],
-                        "description": r["answer"],
-                        "helpfulness": r["helpfulness"],
-                    }
-                    for r in rows
-                ],
-                "used_communities": [r["community_id"] for r in rows],
-            }
-        )
+    for i in range(len(questions)):
+        rows = _answer_order(by_q.get(i, []))
+        out.append(_answer_dict(" ".join(r["answer"] for r in rows), rows))
     return out
 
 
@@ -284,23 +323,14 @@ def answer_question(
         mapped = map_answers(selected, question)
     else:
         mapped = map_answers_llm(selected, question, answerer)
-    rows = mapped.orderBy(
-        F.col("helpfulness").desc(), F.col("community_id").asc()
-    ).collect()
+    rows = _answer_order(mapped.collect())
     if answerer is None:
         answer = " ".join(r["answer"] for r in rows)
     elif rows:
         answer = answerer.reduce(question, [r["answer"] for r in rows])
     else:
         answer = NO_ANSWER  # map_reduce.py:38-41 empty-result envelope
-    return {
-        "answer": answer,
-        "topics": [
-            {"topic": r["title"], "description": r["answer"], "helpfulness": r["helpfulness"]}
-            for r in rows
-        ],
-        "used_communities": [r["community_id"] for r in rows],
-    }
+    return _answer_dict(answer, rows)
 
 
 def _question_seeds(canon_map: DataFrame, question: str) -> DataFrame:
@@ -417,10 +447,10 @@ def drift_search(
     Scale shape: only the community-id list (k_communities rows) reaches
     the driver; the member seed set — node-proportional — stays a
     DataFrame through the PPR reset join (operators/pagerank.py DataFrame
-    seeds). Pass the result to ``iterutils.release`` once consumed."""
-    top = select_top_k(
-        embed_summaries(kg["summaries"]), question, level=level, k=k_communities
-    )
+    seeds). The summaries are ranked from the materialized
+    summary_embeddings stage, never re-embedded per call. Pass the result
+    to ``iterutils.release`` once consumed."""
+    top = select_top_k(kg["summary_embeddings"], question, level=level, k=k_communities)
     comm_ids = [r["community_id"] for r in top.select("community_id").collect()]
     members = (
         kg["communities"]
@@ -482,8 +512,6 @@ def rerank_by_overlap(
             )
             .drop("_i", "_u")
         )
-    from pyspark.sql import Window
-
     w = Window.orderBy(
         F.col("rerank_micro").desc(), F.col("chunk_id").asc()
     )

@@ -30,6 +30,20 @@ A bound stays, so a long-lived server's cache cannot grow without limit.
 The driver heap defaults to half the host's physical memory, capped at
 48g (``SPARK_DRIVER_MEMORY`` overrides it): a heap cap above RAM lets G1
 grow the JVM until the kernel kills it.
+
+PySpark's DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``,
+on by default) is off: with it on, every ``F.col`` and ``Column`` method
+captures its Python call site (4-5 extra py4j round trips and an attempted
+``import ipykernel`` per call), and the first such call imports IPython
+(about 0.3 s and 30+ MB of driver memory). Off, one answered question makes
+about half the py4j round trips. The trade-off: a Column error no longer
+names the Python file and line that built the expression; nothing in the
+package reads that context.
+
+The ``org.apache.spark.rdd.MapPartitionsRDD`` logger is set to ERROR: it
+writes one WARN per released local checkpoint ("RDD n was locally
+checkpointed ..."), which made up most of a build's WARN lines and buried
+the real ones.
 """
 
 from __future__ import annotations
@@ -42,6 +56,8 @@ from pyspark.sql import SparkSession
 # whole benchmark session. About 3x the session's working set.
 CODEGEN_CACHE_ENTRIES = 1000
 _CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+_DEBUGGING_CONF = "spark.python.sql.dataFrameDebugging.enabled"
+_CHECKPOINT_WARN_LOGGER = "org.apache.spark.rdd.MapPartitionsRDD"
 
 
 def default_driver_memory(phys_bytes: int | None = None) -> str:
@@ -85,11 +101,14 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.python.daemon.module", "graphrag_litex_spark.pydaemon")
         .config(_CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
+        .config(_DEBUGGING_CONF, "false")
     )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    log4j = spark._jvm.org.apache.logging.log4j
+    log4j.core.config.Configurator.setLevel(_CHECKPOINT_WARN_LOGGER, log4j.Level.ERROR)
     return spark
 
 
@@ -107,6 +126,7 @@ def job_session(app_name: str) -> SparkSession:
         return (
             SparkSession.builder.appName(app_name)
             .config(_CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
+            .config(_DEBUGGING_CONF, "false")
             .getOrCreate()
         )
     return get_spark(app_name)

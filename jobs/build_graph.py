@@ -150,7 +150,10 @@ def main(argv: list[str] | None = None) -> int:
     elif args.question and "summaries" in res:
         from graphrag_litex_spark.querying.answer import answer_question
 
-        ans = answer_question(res["summaries"], args.question, level=args.level, k=args.top_k)
+        ans = answer_question(
+            res["summaries"], args.question, level=args.level, k=args.top_k,
+            summary_embeddings=res.get("summary_embeddings"),
+        )
         print(json.dumps(ans, indent=2))
     return 0
 

@@ -154,7 +154,10 @@ def run_evaluation(
 
     # System 1: GraphRAG (KG pipeline + batch map/reduce answers).
     kg = run_pipeline(spark, transcripts_path, kg_out_dir, resume=True)
-    graph_answers = answer_questions(kg["summaries"], questions, level=level, k=top_k)
+    graph_answers = answer_questions(
+        kg["summaries"], questions, level=level, k=top_k,
+        summary_embeddings=kg["summary_embeddings"],
+    )
 
     # System 2: VectorRAG over the reassembled conversations.
     docs = transcripts_as_documents(kg["chunks"])

@@ -148,8 +148,26 @@ def test_table_identifier_ingestion(spark, corpus_sf0001, tmp_path):
     assert res["canon_map"].count() == 60
 
 
+# Question sets both paths must agree on: plain questions; questions whose
+# text must round-trip through the batch's JSON literal (quote, backslash,
+# newline, non-ASCII, an empty question); a level with no summaries; k
+# larger than the number of summaries at the level.
+_PLAIN = ["who acquired acme corp", "who uses quantumdb", "unrelated topic words"]
+_ADVERSARIAL = [
+    'who said "acme corp"?',
+    "back\\slash acme\\corp \\",
+    "line\nbreak\r\n quantumdb",
+    "Zoë uses quantumdb \u2603 \U0001F600",
+    "",
+]
+_BATCH_CASES = [(_PLAIN, 0, 2), (_ADVERSARIAL, 0, 2), (_PLAIN, 7, 2), (_PLAIN, 0, 10)]
+
+
 def test_batch_select_equals_single(summaries):
-    """select_top_k_batch == N independent select_top_k calls (D7 batch)."""
+    """select_top_k_batch == N independent select_top_k calls (D7 batch),
+    on community and score; every score equals ``cosine_col`` against the
+    question's own embedding, and every question string round-trips."""
+    from graphrag_litex_spark.operators.similarity import cosine_col
     from graphrag_litex_spark.querying.answer import (
         embed_summaries,
         select_top_k,
@@ -157,28 +175,40 @@ def test_batch_select_equals_single(summaries):
     )
 
     emb = embed_summaries(summaries)
-    questions = ["who acquired acme corp", "who uses quantumdb", "unrelated topic words"]
-    batch = select_top_k_batch(emb, questions, level=0, k=2).collect()
-    got = {}
-    for r in batch:
-        got.setdefault(r["question_id"], []).append((r["community_id"], r["score"]))
-    for i, q in enumerate(questions):
-        single = [
-            (r["community_id"], r["score"])
-            for r in select_top_k(emb, q, level=0, k=2).collect()
-        ]
-        assert got.get(i, []) == single, q
+    for questions, level, k in _BATCH_CASES:
+        at_level = emb.where(F.col("level") == level)
+        batch = select_top_k_batch(emb, questions, level=level, k=k).collect()
+        assert len(batch) == len(questions) * min(k, at_level.count())
+        got = {}
+        for r in batch:
+            assert r["question"] == questions[r["question_id"]]
+            got.setdefault(r["question_id"], []).append((r["community_id"], r["score"]))
+        for i, q in enumerate(questions):
+            single = [
+                (r["community_id"], r["score"])
+                for r in select_top_k(emb, q, level=level, k=k).collect()
+            ]
+            assert got.get(i, []) == single, (q, level, k)
+            qv = F.array(*[F.lit(v) for v in hash_embed(q)])
+            want = dict(
+                at_level.select(
+                    "community_id", F.round(cosine_col(F.col("embedding"), qv), 6)
+                ).collect()
+            )
+            assert single == [(c, want[c]) for c, _ in single], (q, level, k)
 
 
 def test_answer_questions_batch_equals_single(summaries):
     """answer_questions (one Spark pass) == answer_question per question."""
     from graphrag_litex_spark.querying.answer import answer_question, answer_questions
 
-    questions = ["who acquired acme corp", "who uses quantumdb"]
-    batch = answer_questions(summaries, questions, level=0, k=2)
-    singles = [answer_question(summaries, q, level=0, k=2) for q in questions]
-    assert batch == singles
-    assert batch[0]["used_communities"] and batch[0]["answer"]
+    assert answer_questions(summaries, []) == []
+    batches = []
+    for questions, level, k in _BATCH_CASES:
+        batches.append(answer_questions(summaries, questions, level=level, k=k))
+        singles = [answer_question(summaries, q, level=level, k=k) for q in questions]
+        assert batches[-1] == singles, (questions, level, k)
+    assert batches[0][0]["used_communities"] and batches[0][0]["answer"]
 
 
 def test_answer_questions_batch_equals_single_punctuated(summaries):
@@ -210,11 +240,13 @@ def test_answer_questions_batch_equals_single_punctuated(summaries):
 
 
 def test_precomputed_summary_embeddings_skip_embed_udf(
-    spark, summaries, tmp_path, monkeypatch
+    spark, summaries, pipeline_sf0001, tmp_path, monkeypatch
 ):
     """Query serving must not re-run the embedding UDF per question: with a
     precomputed summary_embeddings frame the plan is UDF-free and
-    embed_summaries is never called."""
+    embed_summaries is never called, by the global paths nor by
+    drift_search, which reads the pipeline's summary_embeddings stage."""
+    from graphrag_litex_spark.operators.iterutils import release
     from graphrag_litex_spark.querying import answer as A
 
     emb_path = str(tmp_path / "summary_embeddings")
@@ -244,6 +276,38 @@ def test_precomputed_summary_embeddings_skip_embed_udf(
         None, ["who acquired acme corp"], level=0, k=5, summary_embeddings=emb
     )
     assert got_batch[0]["used_communities"] == want["used_communities"]
+    drift = A.drift_search(pipeline_sf0001, "who acquired acme corp")
+    assert drift.collect()
+    release(drift)
+
+
+def test_query_path_job_and_plan_budget(spark, pipeline_sf0001):
+    """A question batch runs two Spark jobs (the one hash exchange's map
+    stage and the result): the questions are an inlined literal, not a
+    broadcast table, and answers are ordered on the driver, not by a
+    range-partitioned sort. A single question runs one job
+    (TakeOrderedAndProject). Job ids come from the DAGScheduler's counter."""
+    from graphrag_litex_spark.querying import answer as A
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    summ, emb = pipeline_sf0001["summaries"], pipeline_sf0001["summary_embeddings"]
+    questions = ["who acquired acme corp", "who uses quantumdb", "alice johnson"]
+
+    def jobs(call) -> int:
+        j0 = dag.nextJobId()
+        call()
+        return dag.nextJobId() - j0
+
+    A.answer_questions(summ, questions, summary_embeddings=emb)  # warm-up
+    assert jobs(lambda: A.answer_questions(summ, questions, summary_embeddings=emb)) <= 2
+    assert jobs(lambda: A.answer_question(summ, questions[0], summary_embeddings=emb)) == 1
+
+    batch = A.map_answers_batch(A.select_top_k_batch(emb, questions))
+    batch.collect()
+    plan = batch._jdf.queryExecution().executedPlan().executedPlan().toString()
+    for node in ("BroadcastNestedLoopJoin", "BroadcastExchange", "rangepartitioning"):
+        assert node not in plan, plan
+    assert plan.count("Exchange") == 1, plan
 
 
 def test_pipeline_materializes_summary_embeddings(pipeline_sf0001):

@@ -1,5 +1,5 @@
-"""Session defaults: the driver heap derivation (no JVM) and the jobs'
-session entry."""
+"""Session defaults: the driver heap derivation (no JVM), the settings
+``get_spark`` applies, and the jobs' session entry."""
 
 from graphrag_litex_spark.session import default_driver_memory, job_session
 
@@ -18,6 +18,15 @@ def test_default_driver_memory_is_half_of_ram_capped():
 def test_default_driver_memory_reads_this_host():
     gb = int(default_driver_memory().removesuffix("g"))
     assert 1 <= gb <= 48
+
+
+def test_get_spark_turns_off_call_sites_and_checkpoint_warns(spark):
+    """PySpark's per-Column call-site capture is off, and the logger that
+    warns once per released local checkpoint logs errors only."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    log4j = spark._jvm.org.apache.logging.log4j
+    logger = log4j.LogManager.getLogger("org.apache.spark.rdd.MapPartitionsRDD")
+    assert logger.getLevel().toString() == "ERROR"
 
 
 def test_job_session_joins_the_running_context(spark):
